@@ -5,7 +5,7 @@ The reference hard-wires one of five two-tier iterator plans
 every query kind compiles to a declarative DataFrame expression and Catalyst
 picks the physical strategy.  Scale notes per kind:
 
-* ``select``/``select-events`` — pure filter + sort; metric/tag/time
+* ``select``/``select-events`` — pure filter + the final sort; metric/tag/time
   predicates push down to the parquet scan (partition pruning when the
   table is laid out by metric/time bucket).
 * ``aggregate``/``group-aggregate`` — hash aggregate with map-side partial
@@ -15,6 +15,17 @@ picks the physical strategy.  Scale notes per kind:
   timestamp merge-join (operators/join.cpp:1-109) is a pivot: one shuffle
   on (tagset, ts), no N-way join.
 
+The final order-by (:func:`_finalize`) is sized by the result.  When the
+query has no ``limit``/``offset`` and Catalyst's size estimate of the
+unsorted result is at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+(the size AQE would coalesce into one reducer anyway), the result is
+sorted in ONE task: ``coalesce(1).sortWithinPartitions`` — no sampling
+job, no range exchange, one Spark job for a narrow select.  Larger or
+unknown-size results keep the global ``orderBy`` range sort; ``limit``
+queries keep TakeOrderedAndProject.  The reference builds order-by
+output the same way, with an in-process k-way merge of the per-series
+streams (operators/merge.h).
+
 Determinism: where the reference leaves ties unspecified (min_by over equal
 values, first/last over duplicate timestamps), we pin tie-breaks with
 struct-ordering (min/max over ``struct(value, ts)``) so results are stable
@@ -22,6 +33,8 @@ across engines — the DuckDB oracle mirrors the same rule.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -126,13 +139,20 @@ def _rekey_group_by(df: DataFrame, gb: GroupByTag) -> DataFrame:
     return df.withColumn("series", new_series).withColumn("tags", kept_tags)
 
 
-def _base_scan(df: DataFrame, q: Query, metrics: list[str]) -> DataFrame:
+def _base_scan(df: DataFrame, q: Query, metrics: list[str],
+               extra: Column | None = None) -> DataFrame:
+    """Metric, range, ``where`` and the caller's ``extra`` row predicate as
+    ONE filter: every DataFrame op is another analysis pass over the
+    growing plan, which is a visible share of a small query's latency."""
     pred = F.col("metric").isin(metrics) if len(metrics) > 1 else (
         F.col("metric") == metrics[0]
     )
-    out = df.filter(pred).filter(range_predicate(q.range, F.col("ts_ns")))
+    pred = pred & range_predicate(q.range, F.col("ts_ns"))
     if q.where is not None:
-        out = out.filter(where_predicate(q.where, F.col("tags")))
+        pred = pred & where_predicate(q.where, F.col("tags"))
+    if extra is not None:
+        pred = pred & extra
+    out = df.filter(pred)
     if q.group_by is not None:
         out = _rekey_group_by(out, q.group_by)
     return out
@@ -193,12 +213,14 @@ def agg_expr(func: str, value: str = "value", ts: str = "ts_ns") -> Column:
 
 
 def _build_select(df: DataFrame, q: Query) -> Result:
-    base = _base_scan(df, q, list(q.metrics))
+    vf_pred = None
     if q.filter is not None:
         # select has a single metric: the one (or shorthand) filter applies
         # to the value column
         for _, vf in q.filter.by_key:
-            base = base.filter(value_filter_predicate(vf, F.col("value")))
+            p = value_filter_predicate(vf, F.col("value"))
+            vf_pred = p if vf_pred is None else (vf_pred & p)
+    base = _base_scan(df, q, list(q.metrics), vf_pred)
     return Result(base.select("series", "ts_ns", "value"), ["value"], q)
 
 
@@ -260,6 +282,26 @@ _DECOMPOSABLE = frozenset({
 #: (see _partials_compress); -1 disables the probe entirely
 _AGG_PROBE_BYTES_CONF = "spark.akumuli.aggregate.probeBytes"
 _AGG_PROBE_BYTES_DEFAULT = 4 * 1024**3
+#: the probe reads a key sample worth about this many estimated input bytes
+_AGG_PROBE_SAMPLE_BYTES = 16 * 1024**2
+#: fixed hash seed of the probe's key sample, so the route is reproducible
+_AGG_PROBE_SEED = 0x5EED
+_AGG_PROBE_BUCKETS = 1 << 20
+
+
+def _estimated_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df``, or None when it is unknown:
+    Catalyst reports ~Long.MaxValue when statistics are unavailable
+    (in-memory relations), and a connect-mode session has no ``_jdf`` to
+    ask.  The estimate is taken on the analyzed plan: the same statistics
+    visitor the optimizer uses, at under 1 ms instead of the ~10 ms of an
+    optimizer run that the executed query repeats anyway (measured on a
+    narrow select, 4 cores)."""
+    try:
+        size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    except Exception:
+        return None
+    return None if size >= 1 << 62 else size
 
 
 def _partials_compress(base: DataFrame) -> bool:
@@ -276,44 +318,42 @@ def _partials_compress(base: DataFrame) -> bool:
     exchange trade to matter (``spark.akumuli.aggregate.probeBytes``,
     default 4 GiB — far above the local bench inputs, so bench plans
     and timings are untouched; set -1 to disable, 0 to always probe).
-    Routing never changes results: both paths compute the same
-    aggregates (up to the documented mean/sum ulp grouping)."""
+    Unknown size is not big: it keeps the measured-default two-level
+    path without a probe.  Routing never changes results: both paths
+    compute the same aggregates (up to the documented mean/sum ulp
+    grouping)."""
     try:
-        spark = base.sparkSession
-        thresh = int(spark.conf.get(
+        thresh = int(base.sparkSession.conf.get(
             _AGG_PROBE_BYTES_CONF, str(_AGG_PROBE_BYTES_DEFAULT)))
         if thresh < 0:
             return True
-        if thresh > 0:  # 0 = probe unconditionally (test hook)
-            size = int(
-                base._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes()
-            )
-            if size >= 1 << 62:
-                # Catalyst reports ~Long.MaxValue when statistics are
-                # unavailable (in-memory relations): unknown ≠ big —
-                # keep the measured default instead of paying a probe
-                return True
-            if size < thresh:
-                # small input: two-level measured faster (r14 A/B)
-                return True
-        row = (
-            base.select("metric", "tagstr", "ts_ns").limit(262_144)
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.approx_count_distinct(
-                    F.concat_ws(
-                        "\x00", "metric", "tagstr",
-                        F.col("ts_ns").cast("string"))
-                ).alias("__d"),
-            )
-            .first()
-        )
+        size = _estimated_bytes(base)
+        if thresh > 0 and (size is None or size < thresh):
+            # small input: two-level measured faster (r14 A/B)
+            return True
+        # The sample keeps WHOLE keys (a fixed-seed hash of the partial
+        # key picks them), so every duplicate of a kept key is kept and
+        # the sample's distinct/rows ratio estimates the input's.  A row
+        # sample would split duplicates and drift toward "unique" as it
+        # shrinks; a leading prefix would only see the first files, which
+        # on time-sorted data are not representative.  The 0-threshold
+        # test hook with unknown size reads everything.
+        key = F.xxhash64(F.lit(_AGG_PROBE_SEED), "metric", "tagstr", "ts_ns")
+        probe = base.select(key.alias("__k"))
+        frac = 1.0 if size is None else _AGG_PROBE_SAMPLE_BYTES / max(size, 1)
+        if frac < 1.0:
+            keep = int(frac * _AGG_PROBE_BUCKETS) + 1
+            probe = probe.filter(
+                F.pmod(F.col("__k"), F.lit(_AGG_PROBE_BUCKETS)) < keep)
+        row = probe.agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.approx_count_distinct("__k").alias("__d"),
+        ).first()
         # approx_count_distinct's default rsd is 5%: ratios near 1 mean
         # the partials would not compress — use the one-level path
         return bool(row["__n"]) and row["__d"] < 0.9 * row["__n"]
     except Exception:
-        # connect-mode session (no _jdf) or stats unavailable: keep the
+        # malformed threshold or failed probe job: keep the
         # measured-default two-level path
         return True
 
@@ -525,11 +565,8 @@ def _build_join(df: DataFrame, q: Query) -> Result:
     presence bitmap, join.h:40-47).
     """
     metrics = list(q.metrics)
-    base = _base_scan(df, q, metrics)
-    mf = _metric_filter_pred(q)
-    if mf is not None:
-        base = base.filter(mf)
-    base = base.withColumn("tagstr", _tagstr())
+    base = _base_scan(df, q, metrics, _metric_filter_pred(q)).withColumn(
+        "tagstr", _tagstr())
     # Conditional aggregation instead of .pivot(): pivot plans TWO
     # aggregations (groupBy(keys+metric) then PivotFirst over keys), i.e.
     # two hash exchanges; sum(when(metric=m, value)) per metric computes
@@ -597,15 +634,51 @@ _BUILDERS = {
 # ---------------------------------------------------------------------------
 
 
+#: Spark's own target size of one post-shuffle partition: AQE coalesces a
+#: range-sort exchange smaller than this into one reducer anyway
+_ADVISORY_BYTES_CONF = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@functools.lru_cache(maxsize=4)
+def _java_utils(jvm):
+    # one lookup per gateway: resolving the class walks the package path
+    # in five JVM round trips (~3 ms)
+    return jvm.org.apache.spark.network.util.JavaUtils
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when ``df``'s estimated size is known and at most
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, read as bytes
+    the way Spark reads it."""
+    size = _estimated_bytes(df)
+    if size is None:
+        return False
+    try:
+        spark = df.sparkSession
+        limit = _java_utils(spark._jvm).byteStringAsBytes(
+            spark.conf.get(_ADVISORY_BYTES_CONF))
+    except Exception:  # connect-mode session: no JVM handle
+        return False
+    return size <= int(limit)
+
+
 def _finalize(res: Result) -> DataFrame:
+    """Order-by, then offset/limit.  The sort strategy follows the result
+    size (see the module docstring): a result that fits one task is
+    sorted in that task; a large or unknown-size one takes the global
+    range sort; ``limit`` queries plan TakeOrderedAndProject."""
     q = res.query
     df = res.df
     if not res.presorted:
         ts = F.col("ts_ns").asc() if q.range.forward else F.col("ts_ns").desc()
         if q.order_by is OrderBy.TIME:
-            df = df.orderBy(ts, F.col("series").asc())
+            keys = [ts, F.col("series").asc()]
         else:
-            df = df.orderBy(F.col("series").asc(), ts)
+            keys = [F.col("series").asc(), ts]
+        if q.limit is None and not q.offset and _fits_one_task(df):
+            df = df.coalesce(1).sortWithinPartitions(*keys)
+        else:
+            df = df.orderBy(*keys)
     if q.offset:
         df = df.offset(q.offset)
     if q.limit is not None:

@@ -81,6 +81,31 @@ def test_aggregate_paths_agree_on_ns_unique(spark):
     assert one == two
 
 
+def test_aggregate_probe_key_sample_keeps_duplicates(spark, tmp_path,
+                                                      monkeypatch):
+    """The probe samples whole (metric, tagstr, ts_ns) keys with a fixed
+    seed, so every duplicate of a kept key stays in the sample: at a ~10%
+    sample a dup=2 input still routes two-level (a 10% row sample keeps
+    a row's twin one time in ten and would read the input as unique),
+    and an ns-unique input still routes one-level."""
+    from akumuli_spark.query import engine
+
+    def parquet(n_ts, dup):
+        path = str(tmp_path / f"m{n_ts}x{dup}")
+        _metrics_frame(spark, n_ts, dup).write.parquet(path)
+        return spark.read.parquet(path)
+
+    compress, unique = parquet(4000, 2), parquet(4000, 1)
+    monkeypatch.setattr(engine, "_AGG_PROBE_SAMPLE_BYTES",
+                        engine._estimated_bytes(unique) // 10)
+    spark.conf.set(_AGG_PROBE_BYTES_CONF, "0")  # always probe
+    try:
+        assert _is_two_level(execute_query(spark, _AGG_Q, compress))
+        assert not _is_two_level(execute_query(spark, _AGG_Q, unique))
+    finally:
+        spark.conf.unset(_AGG_PROBE_BYTES_CONF)
+
+
 def test_gopher_keep_collision_rejected(spark):
     from akumuli_spark.pipeline.quality import gopher_quality_flags
 
