@@ -15,7 +15,8 @@ picks the physical strategy.  Scale notes per kind:
   timestamp merge-join (operators/join.cpp:1-109) is a pivot: one shuffle
   on (tagset, ts), no N-way join.
 
-The final order-by (:func:`_finalize`) is sized by the result.  When the
+The final order-by (:func:`_finalize` through :func:`sort_by_size`, which
+the metadata queries share) is sized by the result.  When the
 query has no ``limit``/``offset`` and Catalyst's size estimate of the
 unsorted result is at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
 (the size AQE would coalesce into one reducer anyway), the result is
@@ -662,6 +663,15 @@ def _fits_one_task(df: DataFrame) -> bool:
     return size <= int(limit)
 
 
+def sort_by_size(df: DataFrame, *keys) -> DataFrame:
+    """``df`` sorted by ``keys``: in one task (``coalesce(1)
+    .sortWithinPartitions``: no sampling job, no range exchange) when it
+    fits one, else with the global range sort."""
+    if _fits_one_task(df):
+        return df.coalesce(1).sortWithinPartitions(*keys)
+    return df.orderBy(*keys)
+
+
 def _finalize(res: Result) -> DataFrame:
     """Order-by, then offset/limit.  The sort strategy follows the result
     size (see the module docstring): a result that fits one task is
@@ -675,8 +685,8 @@ def _finalize(res: Result) -> DataFrame:
             keys = [ts, F.col("series").asc()]
         else:
             keys = [F.col("series").asc(), ts]
-        if q.limit is None and not q.offset and _fits_one_task(df):
-            df = df.coalesce(1).sortWithinPartitions(*keys)
+        if q.limit is None and not q.offset:
+            df = sort_by_size(df, *keys)
         else:
             df = df.orderBy(*keys)
     if q.offset:

@@ -6,7 +6,9 @@ Spark-side the series universe is a dimension frame
 ``series_dim(series, metric, tags)`` (derived once from the data or
 maintained by the ingest stream); these queries are filters over it.  At
 scale the dim table is tiny relative to the data (cardinality of distinct
-series), so these run as broadcast-size scans.
+series), so these run as broadcast-size scans, and the final name sort
+follows the engine's size rule (:func:`~akumuli_spark.query.engine.sort_by_size`):
+a dimension that fits one task is sorted in it, with no range shuffle.
 
 Outputs are single-column ``name`` frames, matching the reference's
 MetadataQueryProcessor which emits one sample per matching *name*
@@ -17,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from akumuli_spark.query.engine import where_predicate
+from akumuli_spark.query.engine import sort_by_size, where_predicate
 from akumuli_spark.query.errors import QueryParseError
 from akumuli_spark.query.parser import _parse_where
 
@@ -35,14 +37,14 @@ def search(series_dim: DataFrame, query: dict) -> DataFrame:
         where = _parse_where(query)
         if where is not None:
             out = out.filter(where_predicate(where, F.col("tags")))
-        return out.select(F.col("series").alias("name")).orderBy("name")
+        return sort_by_size(out.select(F.col("series").alias("name")), "name")
     if metric.startswith("meta:names:"):
         metric = metric[len("meta:names:"):]
     out = series_dim.filter(F.col("metric") == metric)
     where = _parse_where(query)
     if where is not None:
         out = out.filter(where_predicate(where, F.col("tags")))
-    return out.select(F.col("series").alias("name")).orderBy("name")
+    return sort_by_size(out.select(F.col("series").alias("name")), "name")
 
 
 def suggest(series_dim: DataFrame, query: dict) -> DataFrame:
@@ -79,4 +81,4 @@ def suggest(series_dim: DataFrame, query: dict) -> DataFrame:
         )
     if prefix:
         out = out.filter(F.col("name").startswith(prefix))
-    return out.orderBy("name")
+    return sort_by_size(out, "name")
