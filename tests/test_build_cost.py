@@ -3,7 +3,8 @@ per-call call-site capture, so building a query plan makes only the py4j
 round trips the plan itself needs; errors keep their class and error
 condition.  Also the metadata side of the same cost: search/suggest sort
 a small dimension in one task, and a database builds its series
-dimension only when a metadata call first needs it."""
+dimension only when a metadata call first needs it (its reset on a
+Z-order refresh is pinned in test_zorder_database)."""
 
 from __future__ import annotations
 
@@ -13,13 +14,13 @@ import pandas as pd
 import py4j.clientserver
 import pytest
 from pyspark.errors import AnalysisException, ArithmeticException
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
-from akumuli_spark.api import open_database, open_zorder_database
+from akumuli_spark.api import open_database
 from akumuli_spark.query import engine
 from akumuli_spark.query.engine import execute_query
 from akumuli_spark.sources.layout import read_metrics_table, write_metrics_table
-from akumuli_spark.sources.zorder import zorder_metrics_table
 
 DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 NS = 10**9
@@ -52,19 +53,14 @@ SUGGESTS = [
 
 
 @pytest.fixture(scope="module")
-def frame(spark):
+def table(spark, tmp_path_factory):
     rows = [
         (f"{m} host={h}", m, T0 + i * STEP_NS, float(i % 50))
         for m in METRICS for h in HOSTS for i in range(N_POINTS)
     ]
     pdf = pd.DataFrame(rows, columns=["series", "metric", "ts_ns", "value"])
-    return spark.createDataFrame(pdf)
-
-
-@pytest.fixture(scope="module")
-def table(spark, frame, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("build_cost") / "table")
-    write_metrics_table(frame, path)
+    write_metrics_table(spark.createDataFrame(pdf), path)
     return read_metrics_table(spark, path)
 
 
@@ -92,6 +88,8 @@ def _round_trips(monkeypatch, build) -> int:
 
 def test_session_turns_off_call_site_capture(spark):
     assert spark.conf.get(DEBUGGING_CONF) == "false"
+    # the gate the call-site wrapper reads, cached once per process
+    assert is_debugging_enabled() is False
 
 
 @pytest.mark.parametrize("name", sorted(BUILD_BUDGET))
@@ -143,17 +141,3 @@ def test_series_dimension_built_on_first_metadata_call(spark, table):
         f"cpu host={h}" for h in HOSTS]
     assert db._series is db.series
 
-
-def test_zorder_refresh_resets_series_dimension(spark, frame, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("build_cost_z") / "metrics")
-    zorder_metrics_table(spark, frame, path, files_per_partition=1)
-    zdb = open_zorder_database(spark, path)
-    assert zdb._series is None
-    zdb.query(NARROW)  # resolves the where clause through the dimension
-    first = zdb._series
-    assert first is not None
-    zdb._snapshot_token = None  # as if the store had been republished
-    zdb._refresh()
-    assert zdb._series is None
-    assert zdb.stats() == {"n_series": 6, "n_metrics": 2}
-    assert zdb._series is not None and zdb._series is not first

@@ -219,6 +219,7 @@ def test_zdb_observes_appends_and_recluster(spark, tmp_path):
         "map_concat(tags, map('late', '1'))")), path)
     post = zdb.query(q).count()
     assert post > pre  # the held object sees the new snapshot
+    assert zdb._series is None  # the refresh dropped the cached dim
     assert zdb.stats()["n_series"] > pre_series  # new series in the dim
 
     # a re-cluster deletes every old file path; the held object must
