@@ -396,7 +396,9 @@ class ZorderDatabase(Database):
     # cadence is one object: erosion() names degraded buckets,
     # optimize() re-clusters them, vacuum() reclaims replaced/orphaned
     # files after the live-append grace — the next query() re-opens the
-    # post-maintenance snapshot automatically via the mtime token
+    # post-maintenance snapshot automatically via _store_token, the
+    # manifest's file-name listing (not an mtime, which aliases two
+    # publishes inside one timestamp tick)
     def erosion(self) -> DataFrame:
         from akumuli_spark.sources.zorder import zorder_erosion
 
@@ -499,14 +501,11 @@ class ZorderCatalog:
         already carry a layout contract (``_zmeta``) — registering a
         path that is not a z-store is a typo this catches immediately,
         not at first query."""
-        from akumuli_spark.sources.zorder import (
-            _read_corpus_zmeta, _read_zmeta,
-        )
+        from akumuli_spark.sources.zorder import _read_zmeta
 
-        if kind not in ("metrics", "events", "corpus"):
+        if kind not in ("metrics", "events"):
             raise ValueError(f"unknown store kind: {kind!r}")
-        meta = (_read_corpus_zmeta(self.spark, path) if kind == "corpus"
-                else _read_zmeta(self.spark, path))
+        meta = _read_zmeta(self.spark, path)
         if meta is None:
             raise ValueError(
                 f"no z-store layout contract at {path}: build the store "

@@ -1,7 +1,6 @@
 """Sessionization: group an event stream into per-user sessions separated
-by inactivity gaps — the batch form of what a training-data pipeline does
-to build interaction episodes (streaming form: ``session_window`` in
-Structured Streaming).
+by inactivity gaps — the batch form of ``session_window`` in Structured
+Streaming.
 
 Classic two-window formulation, fully JVM-side: a new session starts where
 the gap to the previous event exceeds ``gap``; the session id is the

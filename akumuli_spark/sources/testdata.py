@@ -37,8 +37,6 @@ TABLES = (
     "orders",
     "lineitem",
     "events",
-    "documents",
-    "embeddings",
 )
 
 
