@@ -501,11 +501,14 @@ class ZorderCatalog:
         already carry a layout contract (``_zmeta``) — registering a
         path that is not a z-store is a typo this catches immediately,
         not at first query."""
-        from akumuli_spark.sources.zorder import _read_zmeta
+        from akumuli_spark.sources.zorder import (
+            _read_corpus_zmeta, _read_zmeta,
+        )
 
-        if kind not in ("metrics", "events"):
+        if kind not in ("metrics", "events", "corpus"):
             raise ValueError(f"unknown store kind: {kind!r}")
-        meta = _read_zmeta(self.spark, path)
+        meta = (_read_corpus_zmeta(self.spark, path) if kind == "corpus"
+                else _read_zmeta(self.spark, path))
         if meta is None:
             raise ValueError(
                 f"no z-store layout contract at {path}: build the store "

@@ -22,8 +22,9 @@ config so cluster deployments can pick the recoverable trade:
   failing the job.  Spark's ContextCleaner unpersists it when the
   frame is garbage-collected, same lifetime story as localCheckpoint.
 
-PROVABLY TINY frames (per-series totals, bounded sketches) keep calling
-``localCheckpoint`` directly — their loss-and-fail blast radius is one cheap recompute of a small job, and
+PROVABLY TINY frames (band signatures, label frames, codebooks,
+bounded sketches) keep calling ``localCheckpoint`` directly — their
+loss-and-fail blast radius is one cheap recompute of a small job, and
 the checkpoint copy is what frees their (wide) upstream for GC.
 """
 

@@ -1,9 +1,10 @@
 """Approximate distinct counting via a deterministic HyperLogLog sketch.
 
 The reference's ``aggregate`` count is exact per-series (it never needs
-cardinality estimation single-node), but events analytics constantly
-asks for cardinalities — distinct users, hosts, sessions — where the
-exact ``count(distinct)`` shuffle of every distinct key IS the cost.  HyperLogLog (Flajolet et al. 2007, public) is the standard
+cardinality estimation single-node), but a 100 TB curation run constantly
+asks for cardinalities — distinct users, URLs, tokens, fingerprints —
+where the exact ``count(distinct)`` shuffle of every distinct key IS the
+cost.  HyperLogLog (Flajolet et al. 2007, public) is the standard
 answer: m = 2^b small registers replace the distinct-key shuffle, the
 error is ~1.04/sqrt(m), and registers merge by elementwise ``max``, so
 one sketch composes across partitions, days, and incremental loads.

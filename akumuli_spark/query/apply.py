@@ -975,7 +975,7 @@ def _node_spacesaver(res, node: ApplyNode, weighted: bool):
     # total's subquery re-ran the whole input scan).  The frame is one row
     # per series — O(cardinality), the operator's own output bound — so
     # the checkpoint is small at any scale; eager localCheckpoint (not
-    # persist): the checkpoint copy frees the wide upstream for GC.
+    # persist) for the same GC-release rationale as dedup.minhash_lsh_pairs.
     total = per_series.select(F.sum("value").alias("__total"))
     out = (
         per_series.crossJoin(F.broadcast(total))

@@ -1,6 +1,6 @@
 """Portable filesystem seam for the lakehouse stores.
 
-Every store in this package (the z-order metrics/events stores, the
+Every store in this package (the z-order metrics/corpus stores, the
 sketch store, the production layout committer) publishes through the
 same handful of filesystem primitives: atomic rename (the two-rename
 snapshot swap), recursive delete, staged-file move-in, orphan listing

@@ -42,14 +42,14 @@ a raw-computed partial by construction (register max is idempotent;
 the head/tail spans are disjoint from the aligned core, so bin sums
 cannot double-count).  The layout
 contract (bucket_ns, sketch parameters, column names) travels in a
-one-row ``{path}/meta`` table, like the z-order ``_zmeta``: a build/serve
+one-row ``{path}/meta`` table, the BM25-store pattern: a build/serve
 parameter mismatch mis-merges silently, so serving reads the stored
 contract, never module defaults.
 
-Growth contract (the repo's epoch-keyed store protocol): partials live
-under an ``epoch`` partition — the build is epoch 0, each append (or
-streaming micro-batch) its own epoch ≥ 1, written with dynamic
-partition overwrite so a RETRIED epoch replaces
+Growth contract (the repo's epoch-keyed store protocol, shared with the
+BM25 index): partials live under an ``epoch`` partition — the build is
+epoch 0, each append (or streaming micro-batch) its own epoch ≥ 1,
+written with dynamic partition overwrite so a RETRIED epoch replaces
 its own partials bit-for-bit (exactly-once without read-modify-write;
 histogram sums would double-count under blind re-appends, register
 maxes would merely tolerate them — the epoch key makes both safe).
@@ -208,7 +208,7 @@ def append_sketch_store(df: DataFrame, path: str, epoch: int) -> None:
 def compact_sketch_store(spark: SparkSession, path: str) -> None:
     """Fold all epochs back into epoch 0 — bounding the serve-time fold
     after many appends, the same economics as
-    :func:`akumuli_spark.sources.layout.compact_metrics_table`.  Each table
+    :func:`akumuli_spark.pipeline.text.compact_bm25_index`.  Each table
     is rewritten to a sibling and swapped in with the two-rename
     protocol; a crash mid-swap self-heals on the next serve
     (:func:`akumuli_spark.sources.layout.recover_compaction`).  Results

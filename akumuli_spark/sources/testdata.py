@@ -37,6 +37,8 @@ TABLES = (
     "orders",
     "lineitem",
     "events",
+    "documents",
+    "embeddings",
 )
 
 

@@ -607,7 +607,7 @@ def _cas_move_in(fs, tmp: str, path: str) -> None:
     behind: they publish through their own channels."""
     skip = (MANIFEST_DIR, META_DIR, LEDGER_DIR)
     root = path.rstrip("/")
-    fs.makedirs(root)  # fresh store: the root may not exist yet
+    fs.makedirs(root)  # fresh store: flat-layout files land at the root
     for rel in fs.walk_files(tmp):
         if rel.startswith(skip) or not rel.endswith(".parquet"):
             continue
@@ -620,13 +620,14 @@ def _cas_move_in(fs, tmp: str, path: str) -> None:
 
 def _carry_ledger_on_rebuild(spark: SparkSession, path: str,
                              tmp: str) -> None:
-    """A full rebuild (:func:`zorder_metrics_table` over an existing
-    store) resets every manifest row to epoch 0 — erasing the evidence
-    the exactly-once replay check relies on.  Before the swap, fold the
-    old store's committed epochs (manifest rows ≥ 1 ∪ its ledger) into
-    the NEW store's ``_zledger``, so a checkpointed caller replaying a
-    committed epoch after the rebuild stays a no-op (ADVICE r12: a
-    rebuild silently duplicated replayed rows)."""
+    """A full rebuild (:func:`zorder_metrics_table` /
+    :func:`zorder_corpus_table` over an existing store) resets every
+    manifest row to epoch 0 — erasing the evidence the exactly-once
+    replay check relies on.  Before the swap, fold the old store's
+    committed epochs (manifest rows ≥ 1 ∪ its ledger) into the NEW
+    store's ``_zledger``, so a checkpointed caller replaying a
+    committed epoch after the rebuild stays a no-op (ADVICE r12: the
+    corpus rebuild silently duplicated replayed documents)."""
     old_man = read_table_or_none(
         spark, _vtable_dir(get_fs(path), posixpath.join(path, MANIFEST_DIR))
     )
@@ -649,7 +650,9 @@ def _carry_ledger_on_rebuild(spark: SparkSession, path: str,
 def zorder_erosion(spark: SparkSession, path: str) -> DataFrame:
     """Per-(metric, ts_bucket) clustering-health report, derived purely
     from the manifest (metadata-sized scan, no data I/O) — the evidence
-    that triggers :func:`zorder_optimize`.
+    that triggers :func:`zorder_optimize`, the same role
+    ``ivf_drift`` plays for the ANN index
+    (akumuli_spark/pipeline/similarity.py).
 
     Columns:
 
@@ -1255,3 +1258,420 @@ def zorder_select(spark: SparkSession, path: str, metric: str | None = None,
     rest = [c for c in df.columns
             if c not in ("series", "metric", "ts_bucket")]
     return df.select("series", "metric", tags.alias("tags"), *rest)
+
+
+# ---------------------------------------------------------------------------
+# Corpus variant: the same clustering + manifest machinery for the
+# DOCUMENTS table — curation scans filter by language and length band,
+# two dimensions a single sort cannot serve
+# ---------------------------------------------------------------------------
+
+CORPUS_MANIFEST_DIR = "_zmanifest"
+
+
+def zorder_corpus_table(spark: SparkSession, docs: DataFrame, path: str,
+                        cat_col: str = "lang", num_col: str = "n_chars",
+                        files_total: int = 32, bits: int = ZBITS,
+                        cas_commit: bool | None = None) -> None:
+    """Cluster a document corpus along (categorical, numeric) — by
+    default (lang, n_chars) — and publish a per-file min/max manifest,
+    so the canonical curation scan shapes both skip files:
+
+    * ``lang = 'en'`` (a language slice for a monolingual pipeline);
+    * ``n_chars ∈ [lo, hi)`` (a length band for packing/quality gates);
+    * their conjunction, the usual gate.
+
+    The categorical dimension bins by rank over its (small) distinct
+    dim; the numeric by min-max scaling (one agg — n_chars-style
+    distributions are bounded; substitute quantile bins for heavy
+    tails).  Files are z-range partitions of the interleaved key, flat
+    (no partition dirs — language cardinality is too low and too skewed
+    for directory partitioning at corpus scale; the manifest carries
+    the pruning instead).  Publish is the same atomic two-rename swap
+    as the metrics store; the layout contract (cat_col, num_col, bits,
+    files_total) travels in ``{path}/_zmeta`` so appends reproduce it
+    and serves validate against it (the stored-contract rule).  A
+    rebuild IS the corpus store's OPTIMIZE: the table is flat, so the
+    scoped variant the metrics store needs has no sub-table unit here —
+    re-cluster when :func:`zorder_corpus_append` erosion costs more
+    than the one range-shuffle write.  A rebuild over an existing store
+    carries the committed append epochs into the new store's
+    ``_zledger`` (the rebuild resets manifest rows to epoch 0, so
+    without the carry a checkpointed caller replaying a committed epoch
+    would silently duplicate documents — ADVICE r12)."""
+    fs = get_fs(path)
+    cas = prefers_cas(path) if cas_commit is None else bool(cas_commit)
+    if _store_is_cas(fs, path, CORPUS_MANIFEST_DIR):
+        cas = True
+    tmp = f"{path}.compact-tmp"
+    fs.rmtree(tmp)
+    _write_corpus_clustered(docs, tmp, cat_col, num_col, files_total, bits)
+    _write_corpus_manifest(spark, tmp, cat_col, num_col)
+    meta_df = local_frame(spark,
+        [(ZORDER_LAYOUT_VERSION, cat_col, num_col, int(files_total),
+          int(bits))],
+        "layout_version int, cat_col string, num_col string, "
+        "files_total int, bits int",
+    )
+    if not cas:
+        meta_df.coalesce(1).write.mode("overwrite").parquet(
+            posixpath.join(tmp, META_DIR)
+        )
+        _carry_ledger_on_rebuild(spark, path, tmp)
+        swap_compact(fs, path)
+        return
+
+    # CAS build/rebuild — same protocol as zorder_metrics_table's CAS
+    # branch: epoch carry first, invisible move-in, one pointer commit
+    old_meta = _read_corpus_zmeta(spark, path)
+    if old_meta is not None and (
+        old_meta["cat_col"] != cat_col or old_meta["num_col"] != num_col
+        or old_meta["bits"] != int(bits)
+    ):
+        raise ValueError(
+            f"CAS rebuild at {path} cannot change layout parameters "
+            f"(stored {old_meta}); use a fresh path"
+        )
+    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+    try:
+        new_man = spark.read.parquet(
+            posixpath.join(tmp, CORPUS_MANIFEST_DIR))
+        new_man = local_frame(spark, new_man.collect(), new_man.schema)
+        _carry_committed_epochs_cas(spark, fs, path,
+                                    manifest_dir=CORPUS_MANIFEST_DIR)
+        _cas_move_in(fs, tmp, path)
+        if old_meta is None:
+            meta_df.coalesce(1).write.mode("overwrite").parquet(
+                posixpath.join(path, META_DIR)
+            )
+        _cas_publish_df(spark, fs, mpath, lambda cur: new_man)
+    finally:
+        fs.rmtree(tmp)
+
+
+def _write_corpus_clustered(docs: DataFrame, out_dir: str, cat_col: str,
+                            num_col: str, files_total: int,
+                            bits: int) -> None:
+    """The corpus clustering kernel shared by build and append: rank-bin
+    the categorical dim, min-max-bin the numeric, z-interleave,
+    range-partition into files."""
+    cap = 1 << bits
+    cat_bins = _ranked_bins(
+        docs.select(cat_col).distinct(), cat_col, "__cbin", bits
+    )
+    bounds = docs.agg(
+        F.min(num_col).alias("lo"), F.max(num_col).alias("hi")).first()
+    lo = 0 if bounds.lo is None else int(bounds.lo)
+    span = max(1, (0 if bounds.hi is None else int(bounds.hi)) - lo + 1)
+    binned = (
+        docs.join(F.broadcast(cat_bins), cat_col)
+        .withColumn(
+            "__nbin",
+            F.expr(f"(({num_col} - {lo}L) * {cap}L) div {span}L"),
+        )
+        .withColumn("__z", interleave_bits("__cbin", "__nbin", bits))
+    )
+    (
+        binned.repartitionByRange(max(1, files_total), "__z")
+        .sortWithinPartitions("__z")
+        .drop("__cbin", "__nbin", "__z")
+        .write.mode("overwrite").parquet(out_dir)
+    )
+
+
+def _read_corpus_zmeta(spark: SparkSession, path: str) -> dict | None:
+    from akumuli_spark.sources.layout import read_table_or_none
+
+    meta = read_table_or_none(spark, posixpath.join(path, META_DIR))
+    if meta is None or "cat_col" not in meta.columns:
+        return None  # pre-r12 corpus store (or a metrics store)
+    rows = meta.collect()  # one row — layout-sized
+    if not rows:
+        return None
+    r = rows[0].asDict()
+    if r["layout_version"] > ZORDER_LAYOUT_VERSION:
+        raise ValueError(
+            f"corpus z-store at {path} uses layout version "
+            f"{r['layout_version']}; this build reads "
+            f"≤ {ZORDER_LAYOUT_VERSION}"
+        )
+    return r
+
+
+def zorder_corpus_append(spark: SparkSession, docs: DataFrame, path: str,
+                         epoch: int | None = None,
+                         files_total: int | None = None) -> None:
+    """Grow the corpus store by one clustered batch with the metrics
+    store's snapshot protocol (a training corpus GROWS — previously the
+    only way to absorb new documents was a full rebuild): the batch is
+    clustered under the STORED contract, staged in a private sibling,
+    its files renamed in (invisible — reads serve the manifest), and
+    the merged manifest published with one two-rename swap.
+
+    Exactly-once via ``epoch`` (≥ 1; the manifest is the ledger, a
+    committed epoch's replay is a no-op); without one, replays
+    duplicate (pair with a checkpointed caller).  Appended files cover
+    their batch's (cat, num) rectangles only, eroding pruning over many
+    appends — the corpus OPTIMIZE is the flat rebuild
+    (:func:`zorder_corpus_table`); crashed-append orphans are reclaimed
+    by :func:`vacuum_zorder_corpus` after its grace.  ``files_total``
+    defaults to the stored build value — pass a smaller count for small
+    batches so appends don't shard into confetti.
+
+    Committed-ness consults the ``_zledger`` as well as the manifest:
+    a rebuild (:func:`zorder_corpus_table`) resets manifest epochs but
+    carries committed ones into the ledger, so a replay after OPTIMIZE
+    stays a no-op (ADVICE r12).  The publish step holds the store
+    publish lock — same linearizability contract as the metrics store."""
+    import uuid
+
+    fs = get_fs(path)
+    meta = _read_corpus_zmeta(spark, path)
+    if meta is None:
+        raise ValueError(
+            f"no corpus z-store layout contract at {path}: build with "
+            "zorder_corpus_table first (pre-contract stores must be "
+            "rebuilt)"
+        )
+    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+
+    cas = _store_is_cas(fs, path, CORPUS_MANIFEST_DIR)
+
+    def committed(epoch: int) -> bool:
+        if int(epoch) in _committed_epochs_ledger(spark, path):
+            return True
+        return bool(
+            spark.read.parquet(_vtable_dir(fs, mpath))
+            .filter(F.col("epoch") == int(epoch)).limit(1).count()
+        )
+
+    if epoch is not None:
+        if epoch < 1:
+            raise ValueError("epoch 0 is reserved for build/re-cluster")
+        if committed(epoch):
+            return
+    tmp = f"{path}.append-tmp-{uuid.uuid4().hex}"
+    try:
+        _write_corpus_clustered(
+            docs, tmp, meta["cat_col"], meta["num_col"],
+            files_total or meta["files_total"], meta["bits"],
+        )
+        _write_corpus_manifest(spark, tmp, meta["cat_col"],
+                               meta["num_col"], epoch=epoch)
+        new_rows = spark.read.parquet(posixpath.join(tmp, CORPUS_MANIFEST_DIR))
+        new_rows = local_frame(spark, new_rows.collect(), new_rows.schema)
+
+        if cas:
+            # lock-free, same protocol as the metrics store: invisible
+            # file move-in, then a conditional-PUT merge whose epoch
+            # check re-runs on every retry
+            _cas_move_in(fs, tmp, path)
+
+            def merge(cur):
+                if epoch is not None and committed(epoch):
+                    return None
+                return new_rows if cur is None else cur.unionByName(new_rows)
+
+            _cas_publish_df(spark, fs, mpath, merge)
+            return
+
+        with store_lock(fs, path) as heartbeat:
+            if epoch is not None and committed(epoch):
+                return  # lost a same-epoch publish race: exactly-once
+            for i, f in enumerate(fs.walk_files(tmp)):
+                if "/" not in f and f.endswith(".parquet"):
+                    # flat layout: data at the root
+                    if i % 64 == 0:
+                        heartbeat()
+                    fs.rename(posixpath.join(tmp, f),
+                              posixpath.join(path, f))
+
+            heartbeat()
+            recover_compaction(mpath)
+            merged = spark.read.parquet(mpath).unionByName(new_rows)
+            _publish_manifest(fs, merged, mpath)
+    finally:
+        fs.rmtree(tmp)
+
+
+def zorder_corpus_erosion(spark: SparkSession, path: str) -> DataFrame:
+    """Corpus twin of :func:`zorder_erosion` — one summary row from the
+    manifest (metadata-priced): ``files`` vs the contract's
+    ``files_total`` (how far appends have sharded past the built
+    layout), ``epochs`` (writer generations), and ``num_overlap`` —
+    Σ per-file numeric extent ÷ corpus numeric extent, the expected
+    files a point probe on the numeric axis must read.  The corpus
+    OPTIMIZE is the flat rebuild (:func:`zorder_corpus_table`); this
+    report is its evidence-driven trigger."""
+    meta = _read_corpus_zmeta(spark, path)
+    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+    man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
+    agg = man.agg(
+        F.count(F.lit(1)).alias("files"),
+        F.sum("rows").alias("rows"),
+        (F.countDistinct("epoch")
+         + F.max(F.col("epoch").isNull().cast("int"))).alias("epochs"),
+        F.coalesce(
+            F.sum(F.coalesce(
+                F.col("num_max") - F.col("num_min") + 1, F.lit(0)))
+            / (F.max("num_max") - F.min("num_min") + 1),
+            F.lit(0.0),
+        ).alias("num_overlap"),
+    )
+    built = meta["files_total"] if meta is not None else None
+    return agg.withColumn("files_built", F.lit(built).cast("int"))
+
+
+def vacuum_zorder_corpus(spark: SparkSession, path: str,
+                         grace_s: float = 86_400.0,
+                         now_s: float | None = None) -> int:
+    """Corpus twin of :func:`vacuum_zorder`: delete unlisted root data
+    files (crashed-append orphans, never visible to any read) and stale
+    ``.append-tmp-*`` staging siblings, sparing anything younger than
+    ``grace_s`` (a possibly-live append)."""
+    import time
+
+    fs = get_fs(path)
+    now = time.time() if now_s is None else now_s
+    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+    removed = 0
+    log = CasLog(fs, mpath)
+    if log.exists():
+        # snapshot retention, as in vacuum_zorder: protected set first
+        # (grace counts from supersession), expire the rest, spare
+        # files any protected snapshot still references
+        dirs = log.protected(3, grace_s, now_s=now)
+        removed += log.vacuum(keep=3, grace_s=grace_s, now_s=now)
+        llog = CasLog(fs, posixpath.join(path, LEDGER_DIR))
+        if llog.exists():
+            removed += llog.vacuum(keep=3, grace_s=grace_s, now_s=now)
+        listed = set()
+        for d in dirs:
+            listed |= {
+                r.file
+                for r in spark.read.parquet(d).select("file").collect()
+            }
+    else:
+        recover_compaction(mpath)
+        listed = {
+            r.file
+            for r in spark.read.parquet(mpath).select("file").collect()
+        }
+    for rel in fs.glob(path, "*.parquet"):
+        if rel not in listed:
+            f = posixpath.join(path, rel)
+            try:
+                if now - fs.getmtime(f) < grace_s:
+                    continue
+            except OSError:  # pragma: no cover - raced by its publisher
+                continue
+            fs.remove(f)
+            removed += 1
+    par = parent_dir(path)
+    base = posixpath.basename(path.rstrip("/"))
+    for rel in fs.glob(par, f"{base}.append-tmp-*"):
+        d = posixpath.join(par, rel)
+        try:
+            if now - fs.getmtime(d) < grace_s:
+                continue
+        except OSError:  # pragma: no cover - raced
+            continue
+        fs.rmtree(d)
+        removed += 1
+    return removed
+
+
+def _write_corpus_manifest(spark: SparkSession, table_dir: str,
+                           cat_col: str, num_col: str,
+                           epoch: int | None = 0) -> None:
+    from akumuli_spark.sources.layout import read_table_or_none
+
+    schema = (
+        f"file string, cat_min string, cat_max string, "
+        f"num_min long, num_max long, rows long, epoch long"
+    )
+    df = read_table_or_none(spark, table_dir)
+    probe = (
+        None if df is None
+        else df.select(F.input_file_name().alias("f")).first()
+    )
+    if probe is None:
+        local_frame(spark, [], schema).coalesce(1).write.mode(
+            "overwrite").parquet(posixpath.join(table_dir, CORPUS_MANIFEST_DIR))
+        return
+    (
+        df.withColumn("file", _rel_file_expr(probe.f, table_dir))
+        .groupBy("file")
+        .agg(
+            F.min(cat_col).cast("string").alias("cat_min"),
+            F.max(cat_col).cast("string").alias("cat_max"),
+            F.min(num_col).cast("long").alias("num_min"),
+            F.max(num_col).cast("long").alias("num_max"),
+            F.count(F.lit(1)).alias("rows"),
+        )
+        .withColumn("epoch", F.lit(epoch).cast("long"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(posixpath.join(table_dir, CORPUS_MANIFEST_DIR))
+    )
+
+
+def zorder_corpus_select(spark: SparkSession, path: str,
+                         cat: str | list[str] | None = None,
+                         num_lo: int | None = None,
+                         num_hi: int | None = None,
+                         cat_col: str = "lang", num_col: str = "n_chars",
+                         stats: dict | None = None) -> DataFrame:
+    """Manifest-pruned corpus read: categorical equality (or list) and
+    semi-open numeric band ``[num_lo, num_hi)``, residually re-applied
+    exactly.  Absent store answers None-shaped empty only through the
+    caller's schema — here it raises (a curation pipeline should not
+    silently produce zero docs from a typo'd path; the metrics store's
+    empty tolerance serves a different contract: queries over a
+    database that legitimately starts empty).  On stores carrying the
+    r12 layout contract, (cat_col, num_col) are validated against it —
+    a mismatched serve would prune on rectangles computed over the
+    WRONG columns and silently drop files."""
+    recover_compaction(path)
+    meta = _read_corpus_zmeta(spark, path)
+    if meta is not None and (
+        meta["cat_col"] != cat_col or meta["num_col"] != num_col
+    ):
+        raise ValueError(
+            f"corpus z-store at {path} is clustered on "
+            f"({meta['cat_col']}, {meta['num_col']}), not "
+            f"({cat_col}, {num_col}) — the manifest rectangles would "
+            "mis-prune; rebuild or pass the stored columns"
+        )
+    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+    man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
+
+    cond = F.lit(True)
+    if cat is not None:
+        wanted = [cat] if isinstance(cat, str) else list(cat)
+        hit = F.lit(False)
+        for c in wanted:
+            hit = hit | ((F.col("cat_min") <= c) & (F.lit(c) <= F.col("cat_max")))
+        cond = cond & hit
+    if num_lo is not None:
+        cond = cond & (F.col("num_max") >= num_lo)
+    if num_hi is not None:
+        cond = cond & (F.col("num_min") < num_hi)
+
+    total = man.count()
+    files = [r.file for r in man.filter(cond).select("file").collect()]
+    if stats is not None:
+        stats.update(files_total=total, files_selected=len(files))
+    if not files:
+        # schema from one unpruned file set is unavailable; the store
+        # always has ≥ 1 manifest row unless built empty — read the
+        # table root for schema, filter to nothing
+        return spark.read.parquet(path).limit(0)
+    df = spark.read.parquet(*[posixpath.join(path, f) for f in files])
+    if cat is not None:
+        wanted = [cat] if isinstance(cat, str) else list(cat)
+        df = df.filter(F.col(cat_col).isin(wanted))
+    if num_lo is not None:
+        df = df.filter(F.col(num_col) >= num_lo)
+    if num_hi is not None:
+        df = df.filter(F.col(num_col) < num_hi)
+    return df

@@ -1,5 +1,5 @@
-"""Continuous sketch rollup: an arriving event stream grows the
-persisted mergeable-sketch store
+"""Continuous sketch rollup — the analytics twin of ``streaming.bm25``:
+an arriving event stream grows the persisted mergeable-sketch store
 (:mod:`akumuli_spark.sources.sketch_store`) one epoch-keyed partial
 batch per micro-batch, so distinct-count and quantile serving over any
 bucket-aligned range is exact after every batch and never re-scans the

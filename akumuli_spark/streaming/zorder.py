@@ -15,7 +15,7 @@ orphans for ``vacuum_zorder``.
 
 Per-batch files erode pruning over time (each covers its batch's
 rectangles); schedule ``zorder_metrics_table`` re-clusters as the
-OPTIMIZE cadence, exactly like compaction on the layout and sketch
+OPTIMIZE cadence, exactly like compaction on the layout and BM25
 stores.  One stream per store — restarted checkpoints restart epoch
 ids, so re-cluster first (epoch rows fold to 0) before re-pointing a
 new stream.

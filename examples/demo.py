@@ -1,5 +1,6 @@
 """End-to-end demo of akumuli_spark: ingest RESP data through Structured
-Streaming, open a Database, and run the reference's query language.
+Streaming, open a Database, and run the reference's query language plus
+the training-data operators.
 
     python examples/demo.py
 """
@@ -14,9 +15,11 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from akumuli_spark import get_spark, open_database  # noqa: E402
 from akumuli_spark.output.format import to_csv  # noqa: E402
+from akumuli_spark.pipeline import dedup  # noqa: E402
 from akumuli_spark.sources.testdata import (  # noqa: E402
     app_metrics_view,
     events_view,
+    load_table,
 )
 from akumuli_spark.streaming.ingest import (  # noqa: E402
     parsed_stream_from_files,
@@ -68,6 +71,11 @@ def main() -> None:
     print("\ntop-3 series by time-weighted purchase volume:")
     for r in res.collect():
         print(f"  {r['series']}: {r['value']:.1f}")
+
+    # -- 3. training-data operators ------------------------------------------
+    docs = load_table(spark, SF_DIR, "documents")
+    pairs = dedup.minhash_lsh_pairs(docs, n=5, threshold=0.8)
+    print("\nminhash-LSH near-duplicate pairs (jaccard ≥ 0.8):", pairs.count())
     spark.stop()
 
 

@@ -144,6 +144,28 @@ def main() -> None:
         print(f"select-events week slice: {ev_rows} rows, scanned "
               f"{est['files_selected']}/{est['files_total']} event files")
 
+        # bucketed co-located join: zero-Exchange docs ⋈ embeddings
+        from akumuli_spark.sources.bucketed import bucket_table, bucketed_join
+        from akumuli_spark.sources.testdata import load_table
+
+        bucket_table(load_table(spark, SF_DIR, "documents"),
+                     "demo_bdocs", os.path.join(work, "bdocs"), 8)
+        bucket_table(
+            load_table(spark, SF_DIR, "embeddings").withColumnRenamed(
+                "vec_id", "doc_id"),
+            "demo_bembs", os.path.join(work, "bembs"), 8)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            j = bucketed_join(spark, "demo_bdocs", "demo_bembs")
+            n_ex = j._jdf.queryExecution().executedPlan().toString() \
+                .count("Exchange")
+            print(f"bucketed docs⋈embeddings: {j.count()} rows, "
+                  f"{n_ex} Exchange nodes in the plan")
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+            spark.sql("DROP TABLE IF EXISTS demo_bdocs")
+            spark.sql("DROP TABLE IF EXISTS demo_bembs")
+
         # -- sketch rollups: batch bootstrap + streamed growth -----------
         store = os.path.join(work, "rollups")
         ev = load_table(spark, SF_DIR, "events")

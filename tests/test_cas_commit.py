@@ -32,7 +32,11 @@ from akumuli_spark.sources.fs import (
 )
 from akumuli_spark.sources.zorder import (
     vacuum_zorder,
+    vacuum_zorder_corpus,
     zorder_append,
+    zorder_corpus_append,
+    zorder_corpus_select,
+    zorder_corpus_table,
     zorder_metrics_table,
     zorder_optimize,
     zorder_retention,
@@ -496,3 +500,36 @@ def test_cas_rebuild_keeps_replay_and_rejects_param_drift(spark, tmp_path):
     with pytest.raises(ValueError, match="layout parameters"):
         zorder_metrics_table(spark, both, path, bucket_ns=2 * DAY,
                              files_per_partition=4)
+
+
+def test_corpus_lifecycle_cas(spark, tmp_path):
+    path = str(tmp_path / "corpcas")
+    docs = spark.createDataFrame(
+        [(f"d{i}", ["en", "de", "fr"][i % 3], 100 + 37 * (i % 11))
+         for i in range(120)],
+        "doc_id string, lang string, n_chars int",
+    )
+    zorder_corpus_table(spark, docs, path, files_total=8, cas_commit=True)
+    got = zorder_corpus_select(spark, path, cat="en")
+    assert sorted(r.doc_id for r in got.collect()) == sorted(
+        r.doc_id for r in docs.filter("lang = 'en'").collect())
+
+    extra = spark.createDataFrame(
+        [(f"x{i}", "en", 500 + i) for i in range(30)],
+        "doc_id string, lang string, n_chars int",
+    )
+    zorder_corpus_append(spark, extra, path, epoch=1)
+    zorder_corpus_append(spark, extra, path, epoch=1)  # replay no-op
+    assert zorder_corpus_select(spark, path, cat="en").count() == (
+        docs.filter("lang = 'en'").count() + 30)
+
+    stats = {}
+    band = zorder_corpus_select(spark, path, num_lo=500, num_hi=540,
+                                stats=stats)
+    assert stats["files_selected"] < stats["files_total"]
+    assert band.count() == 30  # x0..x29 (500..529); base corpus tops at 470
+
+    assert vacuum_zorder_corpus(spark, path, grace_s=10**9) == 0
+    vacuum_zorder_corpus(spark, path, grace_s=0.0)
+    assert zorder_corpus_select(spark, path, cat="en").count() == (
+        docs.filter("lang = 'en'").count() + 30)

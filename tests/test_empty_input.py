@@ -1,21 +1,38 @@
-"""Empty-input totality: registry entries must serve zero rows — not
-crash — on schema-correct empty tables (an empty partition, a store
-before first ingest, a filter that matched nothing upstream are all
-routine at scale).  ``tools/robustness_sweep.py`` runs all 102 entries
-this way: none crashes, and all but two return zero rows (events_funnel
-reports its three steps with zero users, join_interval_anti one total
-row).  This test pins representatives of the select, group-aggregate
-and apply families."""
+"""Empty-corpus totality: every registry entry must serve zero rows —
+not crash — on schema-correct empty tables (an empty partition, a
+corpus before first ingest, a filter that matched nothing upstream are
+all routine at scale).  A full 148-entry sweep ran green in round 8;
+this test pins the six entries that USED to crash (driver-side argmax
+collect on an empty vocab; schema inference over an empty partitioned
+lists dir) plus representatives of each family."""
 
 from __future__ import annotations
 
 import pytest
 
 from akumuli_spark import registry
-from akumuli_spark.sources.testdata import TABLES
 from tests.conftest import SF_DIR
 
-ENTRIES = ["select_fwd", "group_aggregate", "apply_ewma"]
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+
+#: previously crashed: IndexError (bpe argmax) / UNABLE_TO_INFER_SCHEMA
+#: (empty partitioned lists dir); the rest are family representatives
+ENTRIES = [
+    "bpe_train_merges", "bpe_tokenize_counts",
+    "ann_ivf_indexed", "ann_ivf_append",
+    "dedup_semantic_indexed", "dedup_semantic_incremental",
+    "select_fwd", "group_aggregate", "apply_ewma", "dedup_minhash_lsh",
+    "ann_ivf_batch", "dedup_embedding_lsh_multi", "text_quality",
+    # r10: empty corpus schedules zero write tasks, so the observed
+    # quantization-stats row must fall back to (0, 0.0) instead of
+    # asserting in Observation.get; BM25 serve must answer zero rows
+    # from an index over nothing (both paths + growth + fusion)
+    "text_bm25_indexed", "text_bm25_indexed_df", "text_bm25_append",
+    "retrieval_hybrid_rrf", "retrieval_hybrid_rrf_indexed",
+    "multimodal_image_dhash_payload",
+    "text_phrase_match", "text_phrase_indexed",
+]
 
 
 @pytest.fixture(scope="module")

@@ -439,7 +439,7 @@ def test_classifier_score_crafted(spark):
 
 
 def test_sessionization(spark, duck):
-    from akumuli_spark.pipeline import sessions
+    from akumuli_spark.operators import sessions
     from akumuli_spark.sources.testdata import load_table
     gap = 6 * 3600 * 10**9
     ev = load_table(spark, SF_DIR, "events")
@@ -2024,7 +2024,7 @@ def test_event_transitions_crafted(spark):
     transitions never cross users, probs sum to 1 per from_type."""
     from datetime import datetime
 
-    from akumuli_spark.pipeline.sessions import event_transitions
+    from akumuli_spark.operators.sessions import event_transitions
 
     t = datetime(2024, 1, 1)
     t2 = datetime(2024, 1, 1, 0, 1)
@@ -2141,7 +2141,7 @@ def test_session_sequences_crafted(spark):
     event_id; duration is last-minus-first."""
     from datetime import datetime, timedelta
 
-    from akumuli_spark.pipeline.sessions import session_sequences
+    from akumuli_spark.operators.sessions import session_sequences
 
     t0 = datetime(2024, 1, 1)
     mk = lambda eid, mins, et: (eid, t0 + timedelta(minutes=mins), 1, et, 0.0, "")

@@ -7,7 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from akumuli_spark.pipeline import cluster, dedup, pii, sessions, text
+from akumuli_spark.operators import sessions
+from akumuli_spark.pipeline import cluster, dedup, pii, text
 from akumuli_spark.sources.testdata import load_table
 from tests.conftest import SF_DIR, assert_matches_oracle
 

@@ -695,6 +695,241 @@ def test_apply_nodes_total_over_junk(ap):
         pass
 
 
+# ---------------------------------------------------------------------------
+# BPE training vs a pure-Python reference (VERDICT r7-style mini-evaluator
+# pattern: hypothesis corpora, ~20-line independent implementation)
+# ---------------------------------------------------------------------------
+
+
+def _ref_bpe(texts: list[str], n_merges: int):
+    """Independent BPE reference: symbol tuples, Counter pair counts,
+    greedy left-to-right non-overlapping merge — the semantics
+    bpe_train's separator-framed replace implements."""
+    from collections import Counter
+
+    words = Counter()
+    for t in texts:
+        for w in t.lower().split(" "):
+            if w:
+                words[w] += 1
+    vocab: dict[tuple, int] = Counter()
+    for w, c in words.items():
+        vocab[tuple(w) + ("</w>",)] += c
+    merges = []
+    for step in range(1, n_merges + 1):
+        pairs = Counter()
+        for seq, c in vocab.items():
+            for i in range(len(seq) - 1):
+                pairs[(seq[i], seq[i + 1])] += c
+        if not pairs:
+            break
+        (a, b), cnt = min(
+            pairs.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+        )
+        merges.append((step, a, b, cnt))
+        nxt: dict[tuple, int] = Counter()
+        for seq, c in vocab.items():
+            out, i = [], 0
+            while i < len(seq):
+                if i + 1 < len(seq) and seq[i] == a and seq[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(seq[i])
+                    i += 1
+            nxt[tuple(out)] += c
+        vocab = nxt
+    return merges
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    texts=st.lists(
+        st.lists(
+            st.text(alphabet="abc", min_size=1, max_size=4),
+            min_size=1, max_size=5,
+        ).map(" ".join),
+        min_size=1, max_size=4,
+    ),
+    n_merges=st.integers(min_value=1, max_value=4),
+)
+def test_bpe_train_matches_reference(spark, texts, n_merges):
+    from akumuli_spark.pipeline.text import bpe_train
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = [tuple(r) for r in bpe_train(docs, n_merges=n_merges).collect()]
+    assert got == _ref_bpe(texts, n_merges)
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    texts=st.lists(
+        st.lists(
+            st.text(alphabet="abc", min_size=1, max_size=4),
+            min_size=1, max_size=5,
+        ).map(" ".join),
+        min_size=1, max_size=3,
+    ),
+    n_merges=st.integers(min_value=1, max_value=3),
+)
+def test_bpe_tokenize_matches_reference(spark, texts, n_merges):
+    """Per-doc post-merge symbol counts vs the reference: train with
+    _ref_bpe, apply its merges greedily, count symbols per doc."""
+    from akumuli_spark.pipeline.text import bpe_tokenize
+
+    merges = [(a, b) for _, a, b, _ in _ref_bpe(texts, n_merges)]
+
+    def apply_merges(w: str) -> int:
+        seq = list(w) + ["</w>"]
+        for a, b in merges:
+            out, i = [], 0
+            while i < len(seq):
+                if i + 1 < len(seq) and seq[i] == a and seq[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(seq[i])
+                    i += 1
+            seq = out
+        return len(seq)
+
+    want = {}
+    for i, t in enumerate(texts):
+        words = [w for w in t.lower().split(" ") if w]
+        if words:
+            want[i] = (len(words), sum(apply_merges(w) for w in words))
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_symbols"])
+        for r in bpe_tokenize(docs, n_merges=n_merges).collect()
+    }
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    n_nodes=st.integers(min_value=1, max_value=24),
+    edges=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=23),
+                  st.integers(min_value=0, max_value=23)),
+        max_size=30,
+    ),
+)
+def test_connected_components_matches_union_find(spark, n_nodes, edges):
+    """Min-label propagation + pointer jumping vs a 10-line union-find
+    on hypothesis graphs (self-loops, duplicates, nodes out of range
+    filtered like the operator's caller would)."""
+    from akumuli_spark.pipeline.cluster import connected_components
+
+    edges = [(a, b) for a, b in edges if a < n_nodes and b < n_nodes and a != b]
+    parent = list(range(n_nodes))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # canonical label = min node id in the component
+    want = {}
+    comp_min = {}
+    for v in range(n_nodes):
+        r = find(v)
+        comp_min[r] = min(comp_min.get(r, v), v)
+    for v in range(n_nodes):
+        want[v] = comp_min[find(v)]
+
+    nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
+    pairs = spark.createDataFrame(
+        edges or [(0, 0)], "doc_a long, doc_b long"
+    )
+    if not edges:
+        pairs = pairs.limit(0)
+    got = {
+        r["id"]: r["comp"]
+        for r in connected_components(nodes, pairs).collect()
+    }
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    token_counts=st.lists(st.integers(min_value=0, max_value=40),
+                          min_size=1, max_size=25),
+    budget=st.integers(min_value=1, max_value=64),
+)
+def test_pack_sequences_matches_next_fit(spark, token_counts, budget):
+    """Single-stratum single-shard packing vs the reference next-fit:
+    docs in id order, a doc that would overflow the budget opens a new
+    pack (oversized docs still get their own pack)."""
+    from akumuli_spark.pipeline.cluster import pack_sequences
+
+    docs = spark.createDataFrame(
+        [(i, "en", " ".join(["w"] * max(n, 1)) if n > 0 else "")
+         for i, n in enumerate(token_counts)],
+        "doc_id long, lang string, text string",
+    )
+    # the operator counts split-on-space tokens: "" -> [""] -> 1 token
+    eff = [n if n > 0 else 1 for n in token_counts]
+    want, running, pid = {}, 0, 0
+    for i, t in enumerate(eff):
+        if running and running + t > budget:
+            pid += 1
+            running = 0
+        running += t
+        want[i] = pid
+    got = {
+        r["doc_id"]: r["pack_id"]
+        for r in pack_sequences(docs, budget=budget, n_shards=1).collect()
+    }
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from("ab"), min_size=1, max_size=12)
+        .map(lambda ws: " ".join(ws)),
+        min_size=2, max_size=6,
+    ),
+    n=st.integers(min_value=2, max_value=3),
+)
+def test_span_coverage_matches_set_reference(spark, texts, n):
+    """Positioned-shingle join vs the direct definition: a position is
+    covered iff some n-gram window containing it also appears in
+    another document."""
+    from akumuli_spark.pipeline.dedup import duplicated_span_coverage
+
+    toks = [t.split(" ") for t in texts]
+    grams = {}
+    for d, ws in enumerate(toks):
+        for i in range(len(ws) - n + 1):
+            grams.setdefault(" ".join(ws[i:i + n]), set()).add(d)
+    want = {}
+    for d, ws in enumerate(toks):
+        cov = set()
+        for i in range(len(ws) - n + 1):
+            if len(grams[" ".join(ws[i:i + n])]) >= 2:
+                cov.update(range(i, i + n))
+        want[d] = (len(ws), len(cov))
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["n_tokens"], r["n_cov"])
+        for r in duplicated_span_coverage(docs, n=n).collect()
+    }
+    assert got == want
+
+
 @settings(max_examples=8, deadline=None)
 @given(
     events=st.lists(
@@ -812,6 +1047,76 @@ def test_transitions_match_reference(spark, events):
     assert got == want
 
 
+@settings(max_examples=6, deadline=None)
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from("abc"), min_size=2, max_size=8)
+        .map(" ".join),
+        min_size=2, max_size=8,
+    ),
+    threshold=st.sampled_from([0.3, 0.5, 0.8]),
+)
+def test_minhash_lsh_matches_reference(spark, texts, threshold):
+    """The whole MinHash/LSH pipeline vs a direct Python replay:
+    md5-derived shingle hashes, k affine minhashes, banded candidate
+    generation, exact-Jaccard verification — emitted pairs must equal
+    {banded-colliding pairs with true Jaccard >= t} exactly."""
+    import hashlib
+
+    from akumuli_spark.pipeline.dedup import (
+        MINHASH_BANDS, MINHASH_K, MINHASH_P, _minhash_params,
+        minhash_lsh_pairs,
+    )
+
+    n = 2
+    shingles = {}
+    for d, t in enumerate(texts):
+        ws = t.split(" ")
+        shingles[d] = {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+    params = _minhash_params()
+    sigs = {}
+    for d, ss in shingles.items():
+        if not ss:
+            continue
+        xs = [
+            int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % MINHASH_P
+            for s in ss
+        ]
+        sigs[d] = [
+            min((a * x + b) % MINHASH_P for x in xs) for a, b in params
+        ]
+    rows = MINHASH_K // MINHASH_BANDS
+    buckets = {}
+    for d, sig in sigs.items():
+        for b in range(MINHASH_BANDS):
+            key = (b, tuple(sig[b * rows:(b + 1) * rows]))
+            buckets.setdefault(key, set()).add(d)
+    cands = set()
+    for ds in buckets.values():
+        for a in ds:
+            for b in ds:
+                if a < b:
+                    cands.add((a, b))
+    want = {}
+    for a, b in cands:
+        inter = len(shingles[a] & shingles[b])
+        union = len(shingles[a]) + len(shingles[b]) - inter
+        j = inter / union
+        if j >= threshold:
+            want[(a, b)] = j
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in minhash_lsh_pairs(docs, n=n, threshold=threshold).collect()
+    }
+    assert set(got) == set(want)
+    for k in got:
+        assert abs(got[k] - want[k]) < 1e-12
+
+
 @settings(max_examples=8, deadline=None)
 @given(
     rows=st.lists(
@@ -896,6 +1201,120 @@ def test_interval_join_matches_reference(spark, samples, intervals, bucket_ns):
     assert got == want
 
 
+@settings(max_examples=6, deadline=None)
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from("abc"), min_size=2, max_size=8)
+        .map(" ".join),
+        min_size=2, max_size=8,
+    ),
+    max_hamming=st.sampled_from([1, 3, 7]),
+)
+def test_simhash_matches_reference(spark, texts, max_hamming):
+    """The whole SimHash pipeline vs a direct Python replay: 60-bit
+    md5-feature vote signature, pigeonhole candidate chunks derived
+    from the radius (smallest divisor of 60 above max_hamming — the
+    simhash_pairs contract since chunk-count derivation landed; the
+    replay's original fixed-4-chunk model MISSED legitimate pairs at
+    hamming 4..7 and failed only when hypothesis finally drew one),
+    hamming verification on the signatures."""
+    import hashlib
+
+    from akumuli_spark.pipeline.dedup import SIMHASH_BITS, simhash_pairs
+
+    n = 2
+    feats = {}
+    for d, t in enumerate(texts):
+        ws = t.split(" ")
+        feats[d] = {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+    sigs = {}
+    for d, ss in feats.items():
+        if not ss:
+            continue
+        hs = [
+            int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in ss
+        ]
+        sig = 0
+        for j in range(SIMHASH_BITS):
+            ones = sum((h >> j) & 1 for h in hs)
+            if 2 * ones > len(hs):
+                sig |= 1 << j
+        sigs[d] = sig
+    n_chunks = next(
+        c for c in range(max_hamming + 1, SIMHASH_BITS + 1)
+        if SIMHASH_BITS % c == 0
+    )
+    cb = SIMHASH_BITS // n_chunks
+    mask = (1 << cb) - 1
+    want = {}
+    for a in sigs:
+        for b in sigs:
+            if a >= b:
+                continue
+            collide = any(
+                (sigs[a] >> (c * cb)) & mask == (sigs[b] >> (c * cb)) & mask
+                for c in range(n_chunks)
+            )
+            ham = bin(sigs[a] ^ sigs[b]).count("1")
+            if collide and ham <= max_hamming:
+                want[(a, b)] = ham
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = {
+        (r["doc_a"], r["doc_b"]): r["hamming"]
+        for r in simhash_pairs(docs, n=n, max_hamming=max_hamming).collect()
+    }
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    corpus=st.lists(
+        st.lists(st.sampled_from("abcd"), min_size=1, max_size=10)
+        .map(" ".join),
+        min_size=1, max_size=8,
+    ),
+    bench=st.lists(
+        st.lists(st.sampled_from("abcd"), min_size=1, max_size=6)
+        .map(" ".join),
+        min_size=1, max_size=4,
+    ),
+    min_overlap=st.integers(min_value=1, max_value=3),
+)
+def test_decontamination_matches_reference(spark, corpus, bench, min_overlap):
+    """Benchmark-overlap flagging vs direct DISTINCT-shingle set math
+    (n_shared counts the doc's distinct shingles that hit the benchmark
+    set — word_shingles de-duplicates per doc)."""
+    from akumuli_spark.pipeline.dedup import benchmark_contamination
+
+    n = 2
+    def sh(t):
+        ws = t.split(" ")
+        return {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+
+    bench_set = set().union(*(sh(t) for t in bench)) if bench else set()
+    want = {}
+    for d, t in enumerate(corpus):
+        k = len(sh(t) & bench_set)
+        if k >= min_overlap:
+            want[d] = k
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
+    )
+    bdf = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(bench)], "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: r["n_shared"]
+        for r in benchmark_contamination(
+            docs, bdf, n=n, min_overlap=min_overlap
+        ).collect()
+    }
+    assert got == want
+
+
 @settings(max_examples=8, deadline=None)
 @given(
     rows=st.lists(
@@ -952,6 +1371,39 @@ def test_fill_gaps_matches_reference(spark, rows, step, mode):
         for r in fill_gaps(df, anchor_ns=0, step_ns=step, mode=mode).collect()
     }
     assert got == want
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    ids=st.lists(st.integers(min_value=0, max_value=10**6),
+                 min_size=1, max_size=30, unique=True),
+    rates=st.fixed_dictionaries({
+        "en": st.floats(min_value=0.0, max_value=1.0),
+        "de": st.floats(min_value=0.0, max_value=1.0),
+    }),
+)
+def test_stratified_sample_matches_md5_replay(spark, ids, rates):
+    """Deterministic hash-Bernoulli sampling replayed directly:
+    u = md5(str(id))[:8]/2^32, kept iff u < rate(stratum) — plus the
+    nested-samples property (raising a rate never drops a row)."""
+    import hashlib
+
+    from akumuli_spark.pipeline.cluster import stratified_sample
+
+    def u(i):
+        return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) / 2**32
+
+    strata = {i: ("en" if i % 2 == 0 else "de") for i in ids}
+    want = {i for i in ids if u(i) < rates[strata[i]]}
+    docs = spark.createDataFrame(
+        [(i, strata[i], "t") for i in ids],
+        "doc_id long, lang string, text string",
+    )
+    got = {r["doc_id"] for r in stratified_sample(docs, rates).collect()}
+    assert got == want
+    bigger = {k: min(1.0, v + 0.25) for k, v in rates.items()}
+    got2 = {r["doc_id"] for r in stratified_sample(docs, bigger).collect()}
+    assert got <= got2  # nested samples
 
 
 @settings(max_examples=8, deadline=None)

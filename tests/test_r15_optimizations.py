@@ -1,9 +1,11 @@
 """Round-15 optimization pins: internals-equivalence and plan-shape
-guards for the r15 changes (two-level-aggregate probe guard,
-corpus_checkpoint disk mode, EWMA partition batching)."""
+guards for the r15 changes (two-level-aggregate probe guard, gopher
+keep-collision guard, corpus_checkpoint disk mode, EWMA partition
+batching, JPEG packed-LUT Huffman decode)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from akumuli_spark.query.engine import (
@@ -102,6 +104,21 @@ def test_aggregate_probe_key_sample_keeps_duplicates(spark, tmp_path,
         assert not _is_two_level(execute_query(spark, _AGG_Q, unique))
     finally:
         spark.conf.unset(_AGG_PROBE_BYTES_CONF)
+
+
+def test_gopher_keep_collision_rejected(spark):
+    from akumuli_spark.pipeline.quality import gopher_quality_flags
+
+    docs = spark.createDataFrame(
+        [(1, "some text here", 5)], "doc_id long, text string, n_words long"
+    )
+    with pytest.raises(ValueError, match="collide"):
+        gopher_quality_flags(docs, "n_words")
+    with pytest.raises(ValueError, match="collide"):
+        gopher_quality_flags(docs, "doc_id")
+    # "text" stays special-cased and passes through
+    out = gopher_quality_flags(docs.drop("n_words"), "text")
+    assert "text" in out.columns and out.count() == 1
 
 
 def test_corpus_checkpoint_disk_mode(spark):
@@ -284,3 +301,42 @@ def test_local_frame_single_partition_same_rows(spark):
     # empty rows round-trip with a string schema
     empty = local_frame(spark, [], schema)
     assert empty.count() == 0 and empty.schema == df.schema
+
+
+def test_jpeg_huff_lut_matches_canonical_walk():
+    """The packed 16-bit-peek LUT must decode every possible 16-bit
+    prefix exactly like the T.81 bit-by-bit canonical walk."""
+    from akumuli_spark.pipeline.multimodal import (
+        _JPEG_AC_LUM,
+        _JPEG_DC_LUM,
+        _jpeg_huff_lut,
+    )
+
+    for counts, syms in (_JPEG_DC_LUM, _JPEG_AC_LUM):
+        lut = _jpeg_huff_lut(counts, syms)
+        # canonical (length, code) → sym as the old reader built it
+        dec = {}
+        code, k = 0, 0
+        for length in range(1, 17):
+            for _ in range(counts[length - 1]):
+                dec[(length, code)] = syms[k]
+                code += 1
+                k += 1
+            code <<= 1
+
+        def walk(idx16):
+            c = 0
+            for length in range(1, 17):
+                c = (c << 1) | ((idx16 >> (16 - length)) & 1)
+                s = dec.get((length, c))
+                if s is not None:
+                    return s, length
+            return None
+
+        for idx in range(65536):
+            v = lut[idx]
+            expect = walk(idx)
+            if expect is None:
+                assert v == 0, idx
+            else:
+                assert (v >> 5, v & 31) == expect, idx

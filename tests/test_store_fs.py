@@ -22,7 +22,11 @@ from akumuli_spark.sources.fs import (
 from akumuli_spark.sources.zorder import (
     MANIFEST_DIR,
     vacuum_zorder,
+    vacuum_zorder_corpus,
     zorder_append,
+    zorder_corpus_append,
+    zorder_corpus_select,
+    zorder_corpus_table,
     zorder_erosion,
     zorder_metrics_table,
     zorder_optimize,
@@ -107,6 +111,29 @@ def test_metrics_lifecycle_over_file_uri(spark, tmp_path):
                                now_ns=2 * DAY + 1)
     assert dropped >= 1
     assert zorder_select(spark, path, ts_to=DAY).count() == 0
+
+
+def test_corpus_lifecycle_over_file_uri(spark, tmp_path):
+    path = "file://" + str(tmp_path / "corpus")
+    docs = spark.createDataFrame(
+        [(i, ["en", "de", "fr"][i % 3], 100 + i, f"doc {i}")
+         for i in range(90)],
+        "doc_id long, lang string, n_chars long, body string",
+    )
+    zorder_corpus_table(spark, docs, path, files_total=6)
+    st = {}
+    en = zorder_corpus_select(spark, path, cat="en", stats=st)
+    assert en.count() == 30 and st["files_selected"] <= st["files_total"]
+
+    extra = spark.createDataFrame(
+        [(1000 + i, "en", 500 + i, f"new {i}") for i in range(10)],
+        "doc_id long, lang string, n_chars long, body string",
+    )
+    zorder_corpus_append(spark, extra, path, epoch=1, files_total=2)
+    assert zorder_corpus_select(spark, path, cat="en").count() == 40
+    zorder_corpus_append(spark, extra, path, epoch=1)  # replay no-op
+    assert zorder_corpus_select(spark, path, cat="en").count() == 40
+    assert vacuum_zorder_corpus(spark, path, grace_s=0) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -202,6 +229,29 @@ def test_erosion_total_over_null_stats_rows(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # rebuild carries committed epochs into the ledger (ADVICE r12 low)
 # ---------------------------------------------------------------------------
+
+def test_corpus_rebuild_keeps_replay_exactly_once(spark, tmp_path):
+    path = str(tmp_path / "corpus_rebuild")
+    docs = spark.createDataFrame(
+        [(i, "en", 100 + i, f"doc {i}") for i in range(40)],
+        "doc_id long, lang string, n_chars long, body string",
+    )
+    zorder_corpus_table(spark, docs, path, files_total=4)
+    extra = spark.createDataFrame(
+        [(100 + i, "en", 500 + i, f"x {i}") for i in range(5)],
+        "doc_id long, lang string, n_chars long, body string",
+    )
+    zorder_corpus_append(spark, extra, path, epoch=1, files_total=1)
+    assert zorder_corpus_select(spark, path, cat="en").count() == 45
+    # OPTIMIZE = full rebuild over the current contents
+    current = spark.read.parquet(path)
+    current = spark.createDataFrame(current.collect(), current.schema)
+    zorder_corpus_table(spark, current, path, files_total=4)
+    assert zorder_corpus_select(spark, path, cat="en").count() == 45
+    # a checkpointed caller replaying the committed epoch: still a no-op
+    zorder_corpus_append(spark, extra, path, epoch=1)
+    assert zorder_corpus_select(spark, path, cat="en").count() == 45
+
 
 def test_metrics_rebuild_keeps_replay_exactly_once(spark, tmp_path):
     path = str(tmp_path / "metrics_rebuild")

@@ -1,8 +1,6 @@
-"""Sessionization and event-sequence operators (operators/sessions.py):
-the batch gap rule against its DuckDB oracle, crafted tie-break cases,
-and the `session_window` Structured-Streaming form the sessions module
-names as the streaming counterpart of the batch gap rule — verified
-equivalent on gap-unambiguous data."""
+"""Streaming sessionization: the `session_window` Structured-Streaming
+form the sessions module names as the streaming counterpart of the
+batch gap-rule — verified equivalent on gap-unambiguous data."""
 
 from __future__ import annotations
 
@@ -10,15 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from akumuli_spark.operators.sessions import (
-    event_transitions,
-    session_sequences,
-    session_stats,
-    session_stats_sql,
-    sessionize,
-)
-from akumuli_spark.sources.testdata import load_table
-from tests.conftest import SF_DIR, assert_matches_oracle
+from akumuli_spark.operators.sessions import sessionize
 
 GAP_S = 10
 
@@ -86,77 +76,3 @@ def test_streaming_session_window_matches_batch_gap_rule(spark, tmp_path):
     )
     assert got_counts == want_counts
     assert len(got_counts) == 7  # 3 + 1 + 3 sessions
-
-
-def test_sessionization(spark, duck):
-    gap = 6 * 3600 * 10**9
-    ev = load_table(spark, SF_DIR, "events")
-    out = session_stats(ev, gap)
-    assert_matches_oracle(out, duck, session_stats_sql(gap))
-    # invariant: sessions of one user don't overlap and gaps exceed `gap`
-    rows = sorted(
-        [(r["user_id"], r["session_id"], r["start_ns"], r["end_ns"])
-         for r in out.collect()]
-    )
-    for (u1, s1, _, e1), (u2, s2, b2, _) in zip(rows, rows[1:]):
-        if u1 == u2:
-            assert s2 == s1 + 1
-            assert b2 - e1 > gap
-
-
-def test_event_transitions_crafted(spark):
-    """Two users with timestamp ties: sequence order is (ts, event_id),
-    transitions never cross users, probs sum to 1 per from_type."""
-    from datetime import datetime
-
-    t = datetime(2024, 1, 1)
-    t2 = datetime(2024, 1, 1, 0, 1)
-    rows = [
-        # user 1: a -> b -> b (tie at t2 broken by event_id 2 < 3)
-        (1, t, 1, "a", 0.0, ""),
-        (3, t2, 1, "b", 0.0, ""),
-        (2, t2, 1, "b", 0.0, ""),
-        # user 2: b -> a (no cross-user a->b link from user 1's tail)
-        (4, t, 2, "b", 0.0, ""),
-        (5, t2, 2, "a", 0.0, ""),
-    ]
-    ev = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {
-        (r["from_type"], r["to_type"]): (r["n_transitions"], r["prob"])
-        for r in event_transitions(ev).collect()
-    }
-    assert got == {
-        ("a", "b"): (1, 1.0),
-        ("b", "b"): (1, 0.5),
-        ("b", "a"): (1, 0.5),
-    }
-
-
-def test_session_sequences_crafted(spark):
-    """Two sessions split by the gap; ties inside a session order by
-    event_id; duration is last-minus-first."""
-    from datetime import datetime, timedelta
-
-    t0 = datetime(2024, 1, 1)
-    mk = lambda eid, mins, et: (eid, t0 + timedelta(minutes=mins), 1, et, 0.0, "")
-    rows = [
-        mk(1, 0, "view"),
-        mk(3, 1, "click"),   # tie at +1min with event 2:
-        mk(2, 1, "view"),    # event_id 2 < 3 → view before click
-        mk(4, 500, "purchase"),  # > gap → new session
-    ]
-    ev = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {
-        (r["user_id"], r["session_id"]): (r["seq"], r["n_events"], r["duration_ns"])
-        for r in session_sequences(ev, gap_ns=3600 * 10**9).collect()
-    }
-    assert got[(1, 1)] == ("view>view>click", 3, 60 * 10**9)
-    assert got[(1, 2)] == ("purchase", 1, 0)

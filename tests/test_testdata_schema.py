@@ -143,15 +143,51 @@ def test_dtype_branch_is_plan_time(spark, both_paths):
     assert "unix_micros" in us_sql
 
 
-def test_events_props_contract(spark):
-    """Pin the events.props shape the events_props_json entry depends
-    on, so a testdata regeneration that changes it fails HERE with a
-    clear message instead of as an opaque oracle hash mismatch: props is
-    a JSON object with a numeric $.k (the oracle extracts it typed)."""
+def test_pipeline_table_contracts(spark):
+    """Pin the driver-table shapes the pipeline operators depend on, so
+    a testdata regeneration that changes them fails HERE with a clear
+    message instead of as an opaque oracle hash mismatch.
+
+    * documents: ids unique; text non-null ASCII (the PII/multimodal
+      oracles equate DuckDB length() with byte length — r6's BMP-oracle
+      lesson, generalized); lang in the marker-lexicon universe.
+    * embeddings: ids unique; fixed dimension; no null/NaN components
+      (sign-LSH and cosine paths assume finite floats).
+    * events: props is a JSON object with a numeric $.k (the
+      events_props_json oracle extracts it typed).
+    """
+    import math
+    import os
+
     from pyspark.sql import functions as F
 
+    from akumuli_spark.pipeline.text import LANG_MARKERS
     from akumuli_spark.sources.testdata import load_table
     from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    n = docs.count()
+    assert docs.select("doc_id").distinct().count() == n
+    assert docs.filter(F.col("text").isNull()).count() == 0
+    non_ascii = docs.filter(
+        F.length(F.col("text")) != F.octet_length(F.col("text"))
+    ).count()
+    assert non_ascii == 0, (
+        "documents.text is no longer pure ASCII — the PII/multimodal "
+        "oracles' length()==octet_length() assumption breaks"
+    )
+    langs = {r["lang"] for r in docs.select("lang").distinct().collect()}
+    assert langs <= set(LANG_MARKERS), langs
+
+    embs = load_table(spark, SF_DIR, "embeddings")
+    m = embs.count()
+    assert embs.select("vec_id").distinct().count() == m
+    dims = embs.select(F.size("embedding").alias("d")).distinct().collect()
+    assert [r["d"] for r in dims] == [64], "embedding dimension changed"
+    bad = embs.filter(
+        F.exists("embedding", lambda x: x.isNull() | F.isnan(x))
+    ).count()
+    assert bad == 0, "null/NaN embedding components"
 
     events = load_table(spark, SF_DIR, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("double")

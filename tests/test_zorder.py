@@ -274,6 +274,64 @@ def test_retention_is_manifest_first_and_zero_scan(spark, tmp_path):
     assert 0 < st["files_selected"] < st["files_total"]
 
 
+# ---------------------------------------------------------------------------
+# Corpus variant: (lang, n_chars) clustering for curation scans
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def corpus_store(spark, tmp_path_factory):
+    from akumuli_spark.sources.testdata import load_table
+    from akumuli_spark.sources.zorder import zorder_corpus_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    path = str(tmp_path_factory.mktemp("zcorpus") / "docs")
+    zorder_corpus_table(spark, docs, path, files_total=16)
+    return path, docs
+
+
+def test_corpus_lang_slice_matches_and_prunes(spark, corpus_store):
+    from akumuli_spark.sources.zorder import zorder_corpus_select
+
+    path, docs = corpus_store
+    st: dict = {}
+    out = zorder_corpus_select(spark, path, cat="en", stats=st)
+    got = sorted(r.doc_id for r in out.collect())
+    exp = sorted(r.doc_id for r in docs.filter("lang = 'en'").collect())
+    assert got == exp and got
+    assert st["files_selected"] < st["files_total"]
+
+
+def test_corpus_length_band_matches_and_prunes(spark, corpus_store):
+    from akumuli_spark.sources.zorder import zorder_corpus_select
+
+    path, docs = corpus_store
+    st: dict = {}
+    out = zorder_corpus_select(spark, path, num_lo=100, num_hi=160,
+                               stats=st)
+    got = sorted(r.doc_id for r in out.collect())
+    exp = sorted(r.doc_id for r in docs.filter(
+        "n_chars >= 100 AND n_chars < 160").collect())
+    assert got == exp and got
+    assert st["files_selected"] < st["files_total"]
+
+
+def test_corpus_conjunction_gate(spark, corpus_store):
+    from akumuli_spark.sources.zorder import zorder_corpus_select
+
+    path, docs = corpus_store
+    st: dict = {}
+    out = zorder_corpus_select(spark, path, cat=["en", "fr"],
+                               num_lo=120, num_hi=200, stats=st)
+    got = sorted(r.doc_id for r in out.collect())
+    exp = sorted(r.doc_id for r in docs.filter(
+        "lang IN ('en','fr') AND n_chars >= 120 AND n_chars < 200"
+    ).collect())
+    assert got == exp and got
+    assert st["files_selected"] < st["files_total"]
+
+
 def test_vacuum_grace_spares_fresh_orphans_reclaims_old(spark, tmp_path):
     """The Delta-style retention grace: unlisted files younger than
     ``grace_s`` are a possibly-live append's unpublished files and are
@@ -472,6 +530,96 @@ def test_wide_series_list_uses_join_path_same_answer(spark, store):
                  if s in set(wanted) and DAY <= t < 2 * DAY)
     assert got == exp and got
     assert 0 < st["files_selected"] <= st["files_total"]
+
+
+def test_corpus_append_equals_fresh_build(spark, tmp_path):
+    """Corpus growth (r12): build(a) + append(b) serves exactly
+    build(a ∪ b)'s docs; the gate still prunes; a committed epoch's
+    replay is a no-op; vacuum (grace 0) reclaims a crashed append's
+    orphans; a mismatched serve column is refused by the stored
+    contract."""
+    import glob
+    import shutil
+
+    from akumuli_spark.sources.testdata import load_table
+    from akumuli_spark.sources.zorder import (
+        vacuum_zorder_corpus,
+        zorder_corpus_append,
+        zorder_corpus_select,
+        zorder_corpus_table,
+    )
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    a = docs.filter("doc_id % 3 != 0")
+    b = docs.filter("doc_id % 3 = 0")
+    path = str(tmp_path / "docs")
+    zorder_corpus_table(spark, a, path, files_total=8)
+    zorder_corpus_append(spark, b, path, epoch=1, files_total=4)
+
+    st: dict = {}
+    out = zorder_corpus_select(spark, path, cat="en", num_lo=100,
+                               num_hi=250, stats=st)
+    got = sorted(r.doc_id for r in out.collect())
+    exp = sorted(r.doc_id for r in docs.filter(
+        "lang = 'en' AND n_chars >= 100 AND n_chars < 250").collect())
+    assert got == exp and got
+    assert st["files_selected"] < st["files_total"]
+    assert zorder_corpus_select(spark, path).count() == docs.count()
+
+    # epoch replay: no new rows, no new files
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    zorder_corpus_append(spark, b, path, epoch=1)
+    assert sorted(glob.glob(os.path.join(path, "*.parquet"))) == files
+    assert zorder_corpus_select(spark, path).count() == docs.count()
+
+    # crashed append: manifest rolled back -> orphans invisible, vacuumed
+    mpath = os.path.join(path, "_zmanifest")
+    saved = str(tmp_path / "msaved")
+    shutil.copytree(mpath, saved)
+    zorder_corpus_append(spark, b.limit(40), path, epoch=2)
+    shutil.rmtree(mpath)
+    shutil.copytree(saved, mpath)
+    assert zorder_corpus_select(spark, path).count() == docs.count()
+    assert vacuum_zorder_corpus(spark, path, grace_s=0) > 0
+    assert zorder_corpus_select(spark, path).count() == docs.count()
+
+    # the stored contract refuses a mis-columned serve
+    with pytest.raises(ValueError, match="clustered on"):
+        zorder_corpus_select(spark, path, cat_col="source")
+    # append without a contract refused (pre-r12 store shape)
+    bare = str(tmp_path / "bare")
+    docs.limit(10).write.parquet(bare)
+    with pytest.raises(ValueError, match="contract"):
+        zorder_corpus_append(spark, b, bare, epoch=1)
+
+
+def test_corpus_erosion_report(spark, tmp_path):
+    """Appends raise files/epochs/num_overlap; a rebuild (the corpus
+    OPTIMIZE) resets the report to the built layout."""
+    from akumuli_spark.sources.testdata import load_table
+    from akumuli_spark.sources.zorder import (
+        zorder_corpus_append,
+        zorder_corpus_erosion,
+        zorder_corpus_table,
+    )
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    path = str(tmp_path / "docs")
+    zorder_corpus_table(spark, docs.filter("doc_id % 2 = 0"), path,
+                        files_total=8)
+    base = zorder_corpus_erosion(spark, path).first().asDict()
+    assert base["epochs"] == 1 and base["files_built"] == 8
+    zorder_corpus_append(spark, docs.filter("doc_id % 2 = 1"), path,
+                         epoch=1, files_total=8)
+    grown = zorder_corpus_erosion(spark, path).first().asDict()
+    assert grown["epochs"] == 2
+    assert grown["files"] > base["files"]
+    assert grown["num_overlap"] > base["num_overlap"]
+    zorder_corpus_table(spark, docs, path, files_total=8)  # the OPTIMIZE
+    rebuilt = zorder_corpus_erosion(spark, path).first().asDict()
+    assert rebuilt["epochs"] == 1 and rebuilt["files"] <= 8
 
 
 def test_optimize_wide_selection_join_path_and_max_buckets(

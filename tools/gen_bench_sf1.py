@@ -7,7 +7,10 @@ sit at ~1, i.e. per-query fixed overhead dominates.  This tool derives a
 * ``lineitem`` rows replicated 10× (the only table the headline metrics
   view reads) — same time range, 10× rows per (series, ts);
 * every other table copied byte-compatible (same Spark writer), so the
-  events-based entries run unchanged at their sf0.1 size.
+  text/dedup/ANN/multimodal headline entries run unchanged at their
+  sf0.1 size — those already show real compute (scaling 1.45–1.83) and
+  replicating documents would manufacture quadratic cross-replica
+  near-duplicate blowup, distorting what they measure.
 
 Derived at run time from /root/testdata (read-only source, never
 modified); the output is a bench INPUT, not a cached result.

@@ -86,25 +86,78 @@ def main() -> None:
     qs = registry.queries()
     failures = 0
     # HEADLINE plus scale-sensitive queries the bench doesn't time
-    audited = [*HEADLINE,
-               "apply_anomaly_ewma_sketch", "apply_frequent_items_sketch",
-               "apply_heavy_hitters_sketch", "candlesticks",
-               "events_props_json", "events_funnel", "events_retention",
+    audited = [*HEADLINE, "ann_ivf_topk", "ann_lsh_topk",
+               "decontaminate_ngram", "sample_stratified",
+               "apply_anomaly_ewma_sketch",
+               "apply_frequent_items_sketch", "apply_heavy_hitters_sketch",
+               "multimodal_decode_bmp", "multimodal_decode_jpeg",
+               "multimodal_decode_png", "multimodal_decode_wav",
+               "text_repetition", "corpus_report", "curate_corpus",
+               "candlesticks",
+               "pii_signals", "pii_scrub", "dedup_span_coverage",
+               "corpus_shuffle", "events_props_json", "vocab_topk",
+               "corpus_length_quantiles", "ann_ivf_indexed", "events_funnel",
+               "events_retention", "text_normalize", "dedup_containment",
                "group_aggregate_filled", "top_series_per_bucket",
                "lttb_downsample", "join_asof", "join_asof_tolerance",
                "apply_counter_rate", "group_aggregate_percentiles",
-               "value_histogram", "metrics_correlation",
-               "events_active_users", "events_distinct_users_hll",
-               "join_interval", "events_transitions",
-               "metrics_correlation_lagged", "events_quantiles_sketch",
-               "session_sequences", "join_interval_anti",
-               "metrics_tag_rollup", "zorder_select_time_slice",
-               "zorder_group_aggregate", "zorder_database_select_where",
-               "sketch_store_distinct_range",
-               "sketch_store_quantiles_range", "group_aggregate_tiered",
+               "text_perplexity", "value_histogram", "metrics_correlation",
+               "events_active_users", "kmeans_lloyd_step",
+               "bpe_pair_counts", "dedup_semantic", "text_classifier_score",
+               "sample_quota", "sample_mixture_plan",
+               "dedup_semantic_clusters", "dedup_semantic_indexed",
+               "events_distinct_users_hll", "text_distinct_tokens_hll",
+               "text_tfidf_topk", "join_interval",
+               "multimodal_resize", "multimodal_frame_sample",
+               "dedup_exact_keep_best", "events_transitions",
+               "text_dsir_weights", "metrics_correlation_lagged",
+               "text_entropy", "events_quantiles_sketch",
+               "session_sequences", "multimodal_features",
+               "join_interval_anti", "text_dsir_resample",
+               "pack_materialize", "ann_ivf_append",
+               "dedup_minhash_incremental", "dedup_simhash_incremental",
+               "multimodal_decode_dirty", "ann_ivf_batch",
+               "dedup_embedding_lsh_multi", "metrics_tag_rollup",
+               "bpe_tokenize_counts",
+               "text_gopher_quality", "text_line_repetition",
+               "dedup_paragraphs", "ann_pq_topk", "ann_ivfadc",
+               "dedup_scrub_spans", "ann_ivfadc_indexed",
+               "ann_ivfadc_append", "dedup_bloom_probe",
+               "decontaminate_fuzzy", "curate_gopher_paragraphs",
+               "ann_pq_refined", "sample_cluster_balanced",
+               "export_manifest", "dedup_lines_within_doc",
+               "dedup_clusters_keep_best",
+               "dedup_simhash_h9", "dedup_substring_spans",
+               "dedup_scrub_substring", "dedup_substring_within",
+               "dedup_scrub_substring_keepfirst", "text_bm25_topk",
+               "multimodal_image_dhash", "multimodal_image_near_dup",
+               "multimodal_audio_fingerprint", "multimodal_audio_near_dup",
+               "multimodal_decode_avi", "multimodal_decode_webp",
+               "multimodal_video_frame_sample",
+               "multimodal_video_fingerprint", "mine_triplets",
+               "multimodal_image_dedup_incremental", "text_bm25_indexed",
+               "text_bm25_indexed_df", "text_bm25_append",
+               "retrieval_hybrid_rrf", "multimodal_image_dhash_payload",
+               "retrieval_hybrid_rrf_indexed", "text_phrase_match",
+               "text_phrase_indexed",
+               "zorder_select_time_slice", "zorder_group_aggregate",
+               "zorder_database_select_where", "zorder_corpus_gate",
+               "sketch_store_distinct_range", "sketch_store_quantiles_range",
+               "group_aggregate_tiered", "bucketed_join_docs_embeddings",
                "zorder_optimize_select", "sketch_store_distinct_tiered",
-               "sketch_store_quantiles_tiered", "zorder_uri_append_select",
-               "zorder_cas_lifecycle_select", "zorder_catalog_routed_select"]
+               "sketch_store_quantiles_tiered",
+               "curate_embedding_gate_bucketed",
+               "multimodal_image_dhash_payload_jpeg_progressive",
+               # (multimodal_decode_report is oracle- and robustness-
+               # gated but not plan-audited: its plan is MapInPandas →
+               # two-phase hash agg with no JVM expression stage, so
+               # the codegen-span heuristic has nothing to check)
+               "zorder_uri_append_select",
+               "multimodal_decode_gif",
+               "multimodal_image_dhash_payload_gif",
+               "multimodal_image_dhash_payload_png_variants",
+               "zorder_cas_lifecycle_select",
+               "zorder_catalog_routed_select"]
     for name in audited:
         ok, detail = audit_one(name, qs[name](spark, sf_dir))
         print(f"{'OK  ' if ok else 'FAIL'} {name}: {detail}")
@@ -206,8 +259,51 @@ def main() -> None:
     failures += n_sfail
     shutil.rmtree(spath, ignore_errors=True)
 
-    # + layout_select, 2 zorder probes, 2 sketch serves
-    print(f"\n{len(audited) + 5 - failures} ok, {failures} failing")
+    # bucketed co-located join: zero Exchange nodes when both sides are
+    # same-bucketed (broadcast disabled — at corpus scale neither side
+    # broadcasts, which is the regime bucketing exists for)
+    from akumuli_spark.registry import _bucketed_tables
+    from akumuli_spark.sources.bucketed import bucketed_join
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        from akumuli_spark.sources.bucketed import curate_embedding_gate
+
+        lt, rt = _bucketed_tables(spark, sf_dir)
+        for label, bdf in (
+            ("bucketed_join", bucketed_join(spark, lt, rt)),
+            # the consuming pipeline op must stay zero-Exchange
+            # END-TO-END: co-located join + narrow codegen gates
+            ("curate_embedding_gate",
+             curate_embedding_gate(spark, lt, rt,
+                                   n_chars_lo=100, n_chars_hi=300)),
+        ):
+            bplan = bdf._jdf.queryExecution().executedPlan().toString()
+            n_ex = bplan.count("Exchange")
+            ok = n_ex == 0
+            print(f"{'OK  ' if ok else 'FAIL'} {label}: "
+                  f"Exchanges={n_ex} (need 0)")
+            failures += 0 if ok else 1
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+    # BM25 serving: static term-bucket pruning must reach BOTH scans —
+    # postings AND dfreq (VERDICT r9 Next #2) — on the literal-list path
+    # and on the DataFrame-query path (bounded distinct-bucket collect)
+    n_bm25_fail = 0
+    for entry in ("text_bm25_indexed", "text_bm25_indexed_df"):
+        bplan = plan_of(qs[entry](spark, sf_dir))
+        pruned_scans = sum(
+            "term_bucket" in seg[:250]
+            for seg in bplan.split("PartitionFilters")[1:]
+        )
+        ok = pruned_scans >= 2
+        print(f"{'OK  ' if ok else 'FAIL'} {entry}_pruning: "
+              f"bucket-pruned scans={pruned_scans} (need postings+dfreq)")
+        n_bm25_fail += 0 if ok else 1
+    failures += n_bm25_fail
+
+    print(f"\n{len(audited) + 9 - failures} ok, {failures} failing")
     sys.exit(1 if failures else 0)
 
 

@@ -1,12 +1,18 @@
-"""Totality sweep: run EVERY registry entry against schema-correct
-zero-row tables (an empty partition, a store before first ingest, an
-upstream filter that matched nothing) and report crashes.
+"""Totality sweeps: run EVERY registry entry against degenerate inputs
+and report crashes.  Two modes:
 
-Every entry must return a DataFrame whose count() succeeds; a raised
-stage is a failure.  ``tests/test_empty_input.py`` pins a
-representative subset; this tool is the full-surface sweep.
+* ``empty`` — schema-correct zero-row tables (an empty partition, a
+  corpus before first ingest, an upstream filter that matched nothing);
+* ``dirty`` — real sf0.001 tables with dirty rows appended: NULL text,
+  empty text, whitespace text, NULL embedding, zero-length embedding.
 
-Usage: python tools/robustness_sweep.py [empty] [src_sf_dir]
+Every entry must return a DataFrame whose count() succeeds — dropped
+rows, empty results, or typed corrupt rows are all fine; a raised stage
+is a failure.  ``tests/test_empty_input.py`` / ``test_dirty_input.py``
+pin the historically-failing subsets; this tool is the full-surface
+sweep (run per round, log committed under ``logs/``).
+
+Usage: python tools/robustness_sweep.py [empty|dirty] [src_sf_dir]
 """
 
 from __future__ import annotations
@@ -20,7 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from akumuli_spark import registry  # noqa: E402
 from akumuli_spark.session import get_spark  # noqa: E402
-from akumuli_spark.sources.testdata import TABLES  # noqa: E402
+
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
 
 
 def build_empty(spark, src: str) -> str:
@@ -31,14 +39,32 @@ def build_empty(spark, src: str) -> str:
     return dst
 
 
+def build_dirty(spark, src: str) -> str:
+    dst = tempfile.mkdtemp(prefix="akumuli_sweep_dirty_")
+    for t in TABLES:
+        if t in ("documents", "embeddings"):
+            continue
+        (spark.read.parquet(f"{src}/{t}.parquet")
+         .write.mode("overwrite").parquet(f"{dst}/{t}.parquet"))
+    docs = spark.read.parquet(f"{src}/documents.parquet")
+    docs.unionByName(spark.createDataFrame(
+        [(900001, None, None, "dirty", 0),
+         (900002, "", "en", "dirty", 0),
+         (900003, "   ", "en", "dirty", 3)], docs.schema
+    )).write.mode("overwrite").parquet(f"{dst}/documents.parquet")
+    embs = spark.read.parquet(f"{src}/embeddings.parquet")
+    embs.unionByName(spark.createDataFrame(
+        [(900001, None, None), (900002, [], 7)], embs.schema
+    )).write.mode("overwrite").parquet(f"{dst}/embeddings.parquet")
+    return dst
+
+
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "empty"
-    if mode != "empty":
-        sys.exit(f"unknown mode {mode!r}; the only sweep is 'empty'")
+    mode = sys.argv[1] if len(sys.argv) > 1 else "dirty"
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     spark = get_spark(f"robustness-sweep-{mode}")
     spark.sparkContext.setLogLevel("ERROR")
-    dst = build_empty(spark, src)
+    dst = build_empty(spark, src) if mode == "empty" else build_dirty(spark, src)
     qs = registry.queries()
     fails = []
     for name in sorted(qs):
