@@ -14,13 +14,12 @@ Public entry points:
 """
 
 from akumuli_spark.session import get_spark
-from akumuli_spark.query.engine import execute_query, execute_events_query
+from akumuli_spark.query.engine import execute_query
 from akumuli_spark.api import Database, open_database
 
 __all__ = [
     "get_spark",
     "execute_query",
-    "execute_events_query",
     "Database",
     "open_database",
 ]

@@ -3,6 +3,12 @@ surface (/root/reference/akumulid/httpserver.cpp:43-52,123-154): one object
 exposing the query, search, suggest, stats, and function-names endpoints
 over a bound pair of metrics/events frames.
 
+``Database.query`` is the one query router: parse, then an attached
+rollup (cold tier from partials, hot tier raw), else the engine.  A
+store-backed subclass changes two hooks, not the router:
+``_refresh`` re-opens a moved store before each request and ``_frames``
+hands the engine file-pruned frames (:class:`ZorderDatabase`).
+
 The reference serves these over MHD; here the *functions* are the API (the
 driver checks capabilities, not transports) — wrap them in any HTTP layer
 if a wire protocol is needed.
@@ -18,7 +24,6 @@ from akumuli_spark.query import metadata
 from akumuli_spark.query import rollup as rollup_mod
 from akumuli_spark.query.apply import _NODES
 from akumuli_spark.query.engine import execute_query
-from akumuli_spark.query.errors import QueryParseError
 from akumuli_spark.query.parser import parse_query
 from akumuli_spark.query.plan import AGG_FUNCS, Query, QueryKind
 from akumuli_spark.sources.testdata import series_dim
@@ -106,100 +111,71 @@ class Database:
         # buckets at the high end
         if q.where or q.group_by or q.apply or not q.range.forward:
             return None
-        funcs = list(q.agg_funcs[0][1])
-        servable = [
-            (rollup, step_ns)
-            for rollup, step_ns, complete_ns in self._rollups
-            # freshness: never serve a range this rollup doesn't cover yet
-            if (complete_ns is None or q.range.end_ns <= complete_ns)
-            and rollup_mod.can_serve(
-                q.range.begin_ns, q.range.end_ns, q.step_ns, step_ns, funcs,
-            )
-        ]
-        if not servable:
-            return self._try_tiered(q, funcs)
-        # coarsest wins: fewest partial rows combined per output bucket
-        rollup, base_step_ns = max(servable, key=lambda rs: rs[1])
-        src = rollup.filter(
-            F.expr("split_part(series, ' ', 1)").isin(list(q.metrics))
-        )
-        out = rollup_mod.group_aggregate_from_rollup(
-            src, q.range.begin_ns, q.range.end_ns, q.step_ns, funcs,
-            base_step_ns,
-        )
-        if q.filter is not None:  # HAVING on output components
-            out = engine_mod._having(out, q.filter, {f: f for f in funcs})
-        return engine_mod._finalize(engine_mod.Result(out, funcs, q))
+        return self._try_tiered(q, list(q.agg_funcs[0][1]))
 
     def _try_tiered(self, q: Query, funcs: list[str]) -> DataFrame | None:
-        """Tiered fallback when no attached rollup covers the FULL range:
-        a rollup that is aligned for the query but complete only through
-        its high-water bound serves the cold prefix ``[begin, boundary)``
-        from partials, and the hot suffix ``[boundary, end)`` runs the
-        ordinary raw path — ``boundary`` is the last step edge at or
-        below the bound, so no bin straddles the tiers
-        (query/rollup.py::group_aggregate_tiered is the standalone
-        composition; this is its router integration).  A streaming
-        deployment therefore keeps dashboard queries partial-served even
-        while the rollup lags the raw table, instead of falling off the
-        fast path entirely the moment the range passes the watermark.
-        Global limit/offset need a total order across tiers, so those
-        queries take the direct path."""
-        import dataclasses
-
-        from akumuli_spark.query.plan import QueryRange
-
-        if q.limit is not None or q.offset:
-            return None
+        """Serve ``q`` from the best attached rollup, or None.  A rollup
+        covers ``[begin, boundary)``: ``end`` when it is complete through
+        the range, else the last step edge at or below its
+        ``complete_through_ns``, so no bin straddles the tiers; the hot
+        suffix runs raw over :meth:`_frames` (``rollup.serve_tiers``).
+        Most cold coverage wins, so full coverage always does, and the
+        coarsest base step breaks ties: fewest partials per bucket.  A
+        streaming rollup that lags the raw table thus keeps serving.
+        Global limit/offset need one order across tiers, so those
+        queries split no range."""
         begin, end, step = q.range.begin_ns, q.range.end_ns, q.step_ns
-        candidates = []
-        for rollup, base_ns, complete_ns in self._rollups:
+        best = None
+        for rollup, base_ns, complete_ns in self._rollups or ():
             if complete_ns is None or complete_ns >= end:
-                continue  # full coverage was already tried (or none)
-            boundary = begin + ((complete_ns - begin) // step) * step
-            if not begin < boundary < end:
+                boundary = end
+            elif q.limit is not None or q.offset:
                 continue
-            if rollup_mod.can_serve(begin, boundary, step, base_ns, funcs):
-                candidates.append((boundary, base_ns, rollup))
-        if not candidates:
+            else:
+                boundary = begin + ((complete_ns - begin) // step) * step
+                if boundary <= begin:
+                    continue
+            if (rollup_mod.can_serve(begin, boundary, step, base_ns, funcs)
+                    and (best is None or (boundary, base_ns) > best[:2])):
+                best = (boundary, base_ns, rollup)
+        if best is None:
             return None
-        # most cold coverage wins; coarsest base breaks ties
-        boundary, base_ns, rollup = max(candidates, key=lambda c: c[:2])
-        src = rollup.filter(
-            F.expr("split_part(series, ' ', 1)").isin(list(q.metrics))
-        )
-        cold = rollup_mod.group_aggregate_from_rollup(
-            src, begin, boundary, step, funcs, base_ns,
-        )
-        if q.filter is not None:  # HAVING is per-bucket: same on each tier
-            cold = engine_mod._having(cold, q.filter, {f: f for f in funcs})
-        hot = execute_query(
-            self.spark,
-            dataclasses.replace(q, range=QueryRange(boundary, end)),
-            self.metrics, self.events,
-        )
-        return engine_mod._finalize(
-            engine_mod.Result(cold.unionByName(hot), funcs, q)
-        )
+        boundary, base_ns, rollup = best
+        out = rollup_mod.serve_tiers(self.spark, q, rollup, base_ns,
+                                     boundary, self._frames)
+        return engine_mod._finalize(engine_mod.Result(out, funcs, q))
+
+    # -- per-request hooks: a store-backed subclass re-opens its snapshot
+    # and prunes the frames it hands the engine ---------------------------
+    def _refresh(self) -> None:
+        """Re-read the bound tables if they moved; frames never move."""
+
+    def _frames(self, q: Query) -> tuple[DataFrame, DataFrame | None]:
+        """The ``(metrics, events)`` frames the engine runs ``q`` over."""
+        return self.metrics, self.events
 
     # -- POST /api/query ---------------------------------------------------
     def query(self, query_json: dict) -> DataFrame:
+        self._refresh()
         q = parse_query(query_json) if isinstance(query_json, dict) else query_json
         fast = self._try_rollup(q)
         if fast is not None:
             return fast
-        return execute_query(self.spark, q, self.metrics, self.events)
+        return execute_query(self.spark, q, *self._frames(q))
 
     # -- POST /api/search --------------------------------------------------
     def search(self, query_json: dict) -> DataFrame:
+        self._refresh()
         return metadata.search(self.series, query_json)
 
     # -- POST /api/suggest -------------------------------------------------
     def suggest(self, query_json: dict) -> DataFrame:
+        self._refresh()
         return metadata.suggest(self.series, query_json)
 
     # -- GET /api/stats ----------------------------------------------------
     def stats(self) -> dict:
+        self._refresh()
         return {
             "n_series": self.series.count(),
             "n_metrics": self.series.select("metric").distinct().count(),
@@ -224,23 +200,25 @@ def open_database(spark: SparkSession, metrics: DataFrame,
 class ZorderDatabase(Database):
     """A database whose metrics live in a Z-ordered store
     (:mod:`akumuli_spark.sources.zorder`): every query prunes FILES via
-    the store's manifest before the engine plan runs — metric + scan
-    interval directly, and a ``where`` clause by first resolving its tag
-    predicate to concrete series names against the series dimension (a
-    dictionary-sized collect, the same cardinality search/suggest
-    already materialize).  The engine then applies its exact predicates
-    on the pruned scan, so results are identical to the plain database —
-    pinned by tests and by the ``zorder_database_*`` oracle entries.
+    the store's manifest before the engine plan runs (the
+    :meth:`Database._frames` hook; :meth:`Database._refresh` re-opens a
+    moved store first) — metric + scan interval directly, and a
+    ``where`` clause by first resolving its tag predicate to concrete
+    series names against the series dimension (a dictionary-sized
+    collect, the same cardinality search/suggest already materialize).
+    The engine then applies its exact predicates on the pruned scan, so
+    results are identical to the plain database — pinned by tests and
+    by the ``zorder_database_*`` oracle entries.
 
     This is the reference's two-level descent re-created at lake scale:
     the inverted index resolves series ids, the per-series trees bound
     the leaf range (seriesparser.h:74-140 + nbtree.h); here the dim
     resolves series names and the manifest rectangles bound the files.
-    Events queries and the metadata endpoints are unaffected (the store
-    holds metrics only)."""
+    Select-events prunes the same way when the events live in a second
+    z-store (``events_zorder_path``)."""
 
     #: pruning evidence of the LAST query routed through the store —
-    #: {"files_total": N, "files_selected": M} summed over its metrics
+    #: {"files_total": N, "files_selected": M} over all its metrics
     last_prune_stats: dict | None = None
 
     #: above this many where-matched series, file pruning falls back to
@@ -252,58 +230,56 @@ class ZorderDatabase(Database):
     def __init__(self, spark: SparkSession, zorder_path: str,
                  events: DataFrame | None = None,
                  events_zorder_path: str | None = None):
-        from akumuli_spark.sources.zorder import EVENTS_SCHEMA, zorder_select
-
+        if events is not None and events_zorder_path is not None:
+            raise ValueError("pass events OR events_zorder_path, not both")
+        super().__init__(spark, None, events)
         self._zpath = zorder_path
         self._ez_path = events_zorder_path
-        self._ext_events = events
-        if events_zorder_path is not None:
-            if events is not None:
-                raise ValueError(
-                    "pass events OR events_zorder_path, not both")
-            events = zorder_select(spark, events_zorder_path,
-                                   empty_schema=EVENTS_SCHEMA)
-        super().__init__(spark, zorder_select(spark, zorder_path), events)
-        self._snapshot_token = self._store_token()
+        self._snapshot_token = None
+        self._refresh()
 
     def _store_token(self) -> tuple:
-        """Cheap change detector: the manifest dir is REPLACED by rename
-        on every publish (append/optimize/retention), each time carrying
-        freshly-uuid-named part files — so the seam's ``change_token``
-        (the sorted file-name listing) flips on every publish.  An
+        """Cheap change detector per store: the current manifest
+        snapshot dir (:func:`~akumuli_spark.sources.zorder._vtable_dir`,
+        the CAS pointer log's newest snapshot or the swap-published
+        ``_zmanifest``) and the seam's ``change_token`` of it, the
+        sorted file-name listing.  Every publish either names a new
+        snapshot dir or swaps in freshly-uuid-named part files, so the
+        token flips on every publish in both commit modes.  An
         mtime-based token would alias two publishes landing within one
         coarse (1 s) filesystem timestamp tick and silently serve the
-        older file list (ADVICE r12).  Metadata stat, no Spark job."""
+        older file list (ADVICE r12).  Metadata reads, no Spark job."""
         import posixpath
 
         from akumuli_spark.sources.fs import get_fs
-        from akumuli_spark.sources.zorder import MANIFEST_DIR
+        from akumuli_spark.sources.zorder import MANIFEST_DIR, _vtable_dir
 
         def one(p):
-            return get_fs(p).change_token(posixpath.join(p, MANIFEST_DIR))
+            fs = get_fs(p)
+            snap = _vtable_dir(fs, posixpath.join(p, MANIFEST_DIR))
+            return snap, fs.change_token(snap)
 
         return (one(self._zpath),
                 one(self._ez_path) if self._ez_path else None)
 
     def _refresh(self) -> None:
-        """Re-open the snapshot if the store moved since the last query.
-        A ZorderDatabase held across streaming appends (the exact usage
-        streaming/zorder.py advertises) would otherwise serve a frozen
-        file list — missing series first seen in later batches, and
-        breaking with FileNotFound after a re-cluster deletes the baked
-        paths (ADVICE r11).  Queries between publishes pay one stat."""
+        """Re-open the snapshot if the store moved since the last
+        request.  A ZorderDatabase held across streaming appends (the
+        exact usage streaming/zorder.py advertises) would otherwise serve
+        a frozen file list — missing series first seen in later batches,
+        and breaking with FileNotFound after a re-cluster deletes the
+        baked paths (ADVICE r11).  Requests between publishes pay the
+        token's metadata reads; attached rollups stay attached."""
+        from akumuli_spark.sources.zorder import EVENTS_SCHEMA, zorder_select
+
         token = self._store_token()
         if token == self._snapshot_token:
             return
-        from akumuli_spark.sources.zorder import EVENTS_SCHEMA, zorder_select
-
-        events = self._ext_events
+        self.metrics = zorder_select(self.spark, self._zpath)
         if self._ez_path is not None:
-            events = zorder_select(self.spark, self._ez_path,
-                                   empty_schema=EVENTS_SCHEMA)
-        Database.__init__(
-            self, self.spark, zorder_select(self.spark, self._zpath), events
-        )
+            self.events = zorder_select(self.spark, self._ez_path,
+                                        empty_schema=EVENTS_SCHEMA)
+        self._series = None
         self._snapshot_token = token
 
     def _resolve_series(self, q: Query) -> list[str] | None:
@@ -327,68 +303,35 @@ class ZorderDatabase(Database):
             return None
         return matched
 
-    def _pruned_events(self, q: Query) -> DataFrame | None:
-        """select-events through the events z-store, same pruning path
-        as metrics (event metric = '!name' partitions, manifest file
-        skips, where → series)."""
-        from akumuli_spark.sources.zorder import EVENTS_SCHEMA, zorder_select
+    def _frames(self, q: Query) -> tuple[DataFrame, DataFrame | None]:
+        """Metrics queries read the metrics store, select-events the
+        events store (event metric = '!name' partitions), each pruned by
+        :meth:`_pruned`; events bound as a frame pass through."""
+        from akumuli_spark.sources.zorder import EVENTS_SCHEMA
 
+        if q.kind is not QueryKind.SELECT_EVENTS:
+            return self._pruned(self._zpath, None, q), self.events
         if self._ez_path is None:
-            return None
+            return self.metrics, self.events
+        return self.metrics, self._pruned(self._ez_path, EVENTS_SCHEMA, q)
+
+    def _pruned(self, path: str, empty_schema, q: Query) -> DataFrame:
+        """One manifest-pruned read of the store at ``path`` for all of
+        ``q``'s metrics (metric prunes partition dirs at the manifest
+        level too), with ``where`` resolved to series names; lo/hi
+        normalize the backward orientation to the scanned interval —
+        the engine re-applies its own exact predicates on top."""
+        from akumuli_spark.sources.zorder import zorder_select
+
         st: dict = {}
         out = zorder_select(
-            self.spark, self._ez_path, metric=q.metrics[0],
+            self.spark, path, metric=list(q.metrics),
             series=self._resolve_series(q),
             ts_from=q.range.lo_ns, ts_to=q.range.hi_ns,
-            empty_schema=EVENTS_SCHEMA, stats=st,
+            empty_schema=empty_schema, stats=st,
         )
         self.last_prune_stats = st
         return out
-
-    def _pruned_frame(self, q: Query) -> DataFrame | None:
-        from akumuli_spark.sources.zorder import zorder_select
-
-        if q.kind is QueryKind.SELECT_EVENTS:
-            return None  # routed through _pruned_events instead
-        series = self._resolve_series(q)
-        # one manifest-pruned select per metric (metric prunes partition
-        # dirs at the manifest level too); lo/hi normalize the backward
-        # orientation to the scanned interval — the engine re-applies
-        # its own exact range predicate on top
-        agg: dict = {"files_total": 0, "files_selected": 0}
-        frames = []
-        for m in q.metrics:
-            st: dict = {}
-            frames.append(zorder_select(
-                self.spark, self._zpath, metric=m,
-                series=series, ts_from=q.range.lo_ns, ts_to=q.range.hi_ns,
-                stats=st,
-            ))
-            # every per-metric call sees the same whole-store manifest;
-            # selected files are disjoint across metrics, so they sum
-            agg["files_total"] = st["files_total"]
-            agg["files_selected"] += st["files_selected"]
-        self.last_prune_stats = agg
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    def query(self, query_json: dict) -> DataFrame:
-        self._refresh()
-        q = parse_query(query_json) if isinstance(query_json, dict) else query_json
-        fast = self._try_rollup(q)
-        if fast is not None:
-            return fast
-        if q.kind is QueryKind.SELECT_EVENTS:
-            ev = self._pruned_events(q)
-            if ev is not None:
-                return execute_query(self.spark, q, self.metrics, ev)
-            return execute_query(self.spark, q, self.metrics, self.events)
-        frame = self._pruned_frame(q)
-        if frame is None:
-            return execute_query(self.spark, q, self.metrics, self.events)
-        return execute_query(self.spark, q, frame, self.events)
 
     # -- maintenance endpoints (the OPTIMIZE/VACUUM loop) ---------------
     #
@@ -415,20 +358,6 @@ class ZorderDatabase(Database):
         from akumuli_spark.sources.zorder import vacuum_zorder
 
         return vacuum_zorder(self.spark, self._zpath, grace_s=grace_s)
-
-    # the metadata endpoints read the derived dim — same staleness
-    # exposure as query(), same fix
-    def search(self, query_json: dict) -> DataFrame:
-        self._refresh()
-        return super().search(query_json)
-
-    def suggest(self, query_json: dict) -> DataFrame:
-        self._refresh()
-        return super().suggest(query_json)
-
-    def stats(self) -> dict:
-        self._refresh()
-        return super().stats()
 
 
 def open_zorder_database(spark: SparkSession, zorder_path: str,

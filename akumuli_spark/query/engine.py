@@ -718,9 +718,3 @@ def execute_query(
     if q.apply:
         res = apply_mod.apply_pipeline(res, q, allow_irregular=allow_irregular)
     return _finalize(res)
-
-
-def execute_events_query(
-    spark: SparkSession, query: dict | Query, events: DataFrame
-) -> DataFrame:
-    return execute_query(spark, query, metrics=events, events=events)

@@ -18,9 +18,14 @@ max=max(max), mean=Σsum/Σcount.  Functions that need raw points
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, functions as F
 
+from akumuli_spark.query import engine
 from akumuli_spark.query.errors import QueryValidationError
+from akumuli_spark.query.parser import parse_query
+from akumuli_spark.query.plan import Query, QueryRange, parse_duration_ns
 
 #: funcs servable from {count, sum, min, max} partials
 SERVABLE = {"count", "sum", "min", "max", "mean"}
@@ -146,9 +151,6 @@ def group_aggregate_tiered(
     (:func:`can_serve`).  Empty bins are omitted by both tiers, the
     engine's contract.
     """
-    from akumuli_spark.query.engine import execute_query
-    from akumuli_spark.query.plan import parse_duration_ns
-
     step_ns = parse_duration_ns(step)
     if not begin_ns < boundary_ns < end_ns:
         raise QueryValidationError("need begin < boundary < end")
@@ -158,12 +160,34 @@ def group_aggregate_tiered(
             "(a straddling bin would need raw rows the cold tier no "
             "longer has)"
         )
-    cold = group_aggregate_from_rollup(
-        rollup.filter(F.expr("split_part(series, ' ', 1)") == metric),
-        begin_ns, boundary_ns, step_ns, funcs, base_step_ns,
-    )
-    hot = execute_query(spark, {
+    q = parse_query({
         "group-aggregate": {"metric": metric, "step": step, "func": funcs},
-        "range": {"from": boundary_ns, "to": end_ns},
-    }, raw_frame)
-    return cold.unionByName(hot)
+        "range": {"from": begin_ns, "to": end_ns},
+    })
+    return serve_tiers(spark, q, rollup, base_step_ns, boundary_ns,
+                       lambda _hot: (raw_frame, None))
+
+
+def serve_tiers(spark, q: Query, rollup: DataFrame, base_step_ns: int,
+                boundary_ns: int, frames) -> DataFrame:
+    """The one composition of a rollup-served group-aggregate ``q``:
+    the cold span ``[begin, boundary)`` combined from ``rollup``
+    partials of ``q``'s metrics, HAVING applied per bucket, unioned
+    with the hot span ``[boundary, end)`` run raw through the engine
+    over ``frames(hot_query) -> (metrics, events)``.  ``boundary ==
+    end`` is full coverage: no hot tier.  The result is not ordered;
+    the caller finalizes it."""
+    funcs = list(q.agg_funcs[0][1])
+    end_ns = q.range.end_ns
+    cold = group_aggregate_from_rollup(
+        rollup.filter(
+            F.expr("split_part(series, ' ', 1)").isin(list(q.metrics))
+        ),
+        q.range.begin_ns, boundary_ns, q.step_ns, funcs, base_step_ns,
+    )
+    if q.filter is not None:  # HAVING is per bucket: same on each tier
+        cold = engine._having(cold, q.filter, {f: f for f in funcs})
+    if boundary_ns == end_ns:
+        return cold
+    hot = dataclasses.replace(q, range=QueryRange(boundary_ns, end_ns))
+    return cold.unionByName(engine.execute_query(spark, hot, *frames(hot)))

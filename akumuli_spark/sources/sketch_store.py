@@ -251,7 +251,7 @@ def _range_tiers(meta: dict, ts_from: int, ts_to: int,
     """Split ``[ts_from, ts_to)`` into the bucket-aligned CORE (served
     from stored partials) and the misaligned head/tail spans (served
     from a raw fact frame) — the same tiering the group-aggregate
-    router applies past a rollup's watermark (api.py::_try_tiered).
+    router applies past a rollup's watermark (query/rollup.py::serve_tiers).
     Returns ``(core_lo_bucket, core_hi_bucket, raw_spans)`` with the
     core empty (lo >= hi) when no whole bucket fits.
 

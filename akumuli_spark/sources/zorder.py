@@ -1151,7 +1151,8 @@ def _write_manifest(spark: SparkSession, table_dir: str,
     )
 
 
-def zorder_select(spark: SparkSession, path: str, metric: str | None = None,
+def zorder_select(spark: SparkSession, path: str,
+                  metric: str | list[str] | None = None,
                   series: str | list[str] | None = None,
                   ts_from: int | None = None, ts_to: int | None = None,
                   stats: dict | None = None,
@@ -1171,8 +1172,10 @@ def zorder_select(spark: SparkSession, path: str, metric: str | None = None,
     — same contract as ``range`` in :mod:`akumuli_spark.query.engine`).
     An absent store answers empty (the shared empty-store tolerance);
     a store without a manifest is a contract violation and raises.
-    ``stats``, when passed, receives ``files_total``/``files_selected``
-    — the pruning evidence tests and the plan audit assert on.
+    ``metric`` and ``series`` each take one name or a list, so a
+    multi-metric query reads the manifest once.  ``stats``, when passed,
+    receives ``files_total``/``files_selected`` — the pruning evidence
+    tests and the plan audit assert on.
     """
     recover_compaction(path)
     # absent/empty stores answer in the caller's frame shape — metrics
@@ -1188,12 +1191,13 @@ def zorder_select(spark: SparkSession, path: str, metric: str | None = None,
     # raises if the manifest is missing entirely: broken store
     man = spark.read.parquet(_vtable_dir(fs, mpath))
 
-    wanted = None
-    if series is not None:
-        wanted = [series] if isinstance(series, str) else list(series)
+    def names(x):
+        return None if x is None else [x] if isinstance(x, str) else list(x)
+
+    metrics, wanted = names(metric), names(series)
     cond = F.lit(True)
-    if metric is not None:
-        cond = cond & (F.col("metric") == metric)
+    if metrics is not None:
+        cond = cond & F.col("metric").isin(metrics)
     if wanted is not None and len(wanted) <= _SERIES_EXPR_CAP:
         hit = F.lit(False)
         for s in wanted:
@@ -1231,8 +1235,8 @@ def zorder_select(spark: SparkSession, path: str, metric: str | None = None,
         spark.read.option("basePath", path)
         .parquet(*[posixpath.join(path, f) for f in files])
     )
-    if metric is not None:
-        df = df.filter(F.col("metric") == metric)
+    if metrics is not None:
+        df = df.filter(F.col("metric").isin(metrics))
     if wanted is not None:
         if len(wanted) <= _SERIES_EXPR_CAP:
             df = df.filter(F.col("series").isin(wanted))

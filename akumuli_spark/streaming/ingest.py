@@ -27,7 +27,6 @@ time-ordered NB+tree leaves).
 
 from __future__ import annotations
 
-import contextlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -114,12 +113,10 @@ class HighWaterState:
     ``CURRENT``-file ``os.replace`` flip gave, but through the portable
     filesystem seam, so a URI-addressed checkpoint (``hdfs://``,
     ``s3a://``) works identically (VERDICT r13: streaming was the one
-    store path still making raw POSIX calls).  Pre-r14 marks dirs (a
-    ``CURRENT`` pointer file naming an ``epoch-*`` dir) are read as a
-    fallback and garbage-collected once the pointer log is established.
+    store path still making raw POSIX calls).  A pre-r14 marks dir (a
+    ``CURRENT`` pointer file naming an ``epoch-*`` dir) has no pointer
+    log, so it is re-seeded once from the sink like a lost side table.
     """
-
-    CURRENT = "CURRENT"  # legacy (pre-r14) pointer-file name
 
     def __init__(self, marks_dir: str | None = None) -> None:
         self.marks_dir = marks_dir
@@ -138,20 +135,8 @@ class HighWaterState:
         """Path of the committed epoch dir, or None if never committed
         (also None for a pre-pointer-layout dir: its stale parquet is
         simply re-seeded from the sink once — self-healing by design)."""
-        fs = self._fs()
-        log = self._log(fs)
-        if log.exists():
-            _v, cur = log.current()
-            if cur is not None:
-                return cur
-        # legacy layout: one-line CURRENT file naming an epoch-* dir
-        try:
-            name = fs.read_bytes(
-                posixpath.join(self.marks_dir, self.CURRENT)
-            ).decode("ascii", "replace").strip()
-        except OSError:
-            return None
-        return posixpath.join(self.marks_dir, name) if name else None
+        log = self._log()
+        return log.current()[1] if log.exists() else None
 
     def _read(self, spark: SparkSession) -> DataFrame | None:
         cur = self._current_epoch_dir()
@@ -201,15 +186,6 @@ class HighWaterState:
         # keep current + previous; reclaim older versions immediately
         # (grace 0: single writer, and readers at most one commit behind)
         log.vacuum(keep=2, grace_s=0.0)
-        # legacy (pre-r14) layout: drop the CURRENT file and epoch-*
-        # dirs once the pointer log carries two generations of its own
-        if len(log.entries()) >= 2:
-            cur_ptr = posixpath.join(self.marks_dir, self.CURRENT)
-            if fs.exists(cur_ptr):
-                with contextlib.suppress(OSError):
-                    fs.remove(cur_ptr)
-            for rel in fs.glob(self.marks_dir, "epoch-*"):
-                fs.rmtree(posixpath.join(self.marks_dir, rel))
 
     # -- batch API --------------------------------------------------------
 

@@ -521,10 +521,11 @@ def main() -> None:
         "curation": curation,
         "sf": sf,
     }
-    # Full detail goes to a committed file: the driver keeps only the
-    # TAIL of stdout, and by round 8 the single-line JSON (19 headline +
-    # 58 curation timings + plan hashes + layout section) had grown past
-    # that window, truncating the headline total that is printed first —
+    # Full detail goes to a file (git-ignored, so a run leaves the
+    # checkout clean): a caller may keep only the TAIL of stdout, and by
+    # round 8 the single-line JSON (19 headline + 58 curation timings +
+    # plan hashes + layout section) had grown past that window,
+    # truncating the headline total that is printed first —
     # BENCH_r08.json came back `parsed: null` (VERDICT r8 Next #1).
     import hashlib
 

@@ -22,6 +22,7 @@ import posixpath
 import pytest
 from pyspark.sql import functions as F
 
+from akumuli_spark.api import open_zorder_database
 from akumuli_spark.sources.fs import (
     CasLog,
     LocalStoreFS,
@@ -417,6 +418,7 @@ def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
     zorder_metrics_table(spark, df, path, bucket_ns=DAY,
                          files_per_partition=4, cas_commit=True)
     assert _vals(zorder_select(spark, path)) == _vals(df)
+    held = open_zorder_database(spark, path)  # held across every publish
 
     stats = {}
     one = zorder_select(spark, path, metric="m.cpu",
@@ -457,6 +459,17 @@ def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
     removed = vacuum_zorder(spark, path, grace_s=0.0, snapshots_keep=1)
     assert removed > 0
     assert _vals(zorder_select(spark, path)) == _vals(kept)
+
+    # the database opened after the build follows the pointer log: hosts
+    # first seen in a later append resolve in where and in the dim
+    fresh = _metrics(spark, n_series=8, t0=5 * DAY).filter(
+        F.col("series") >= "m.cpu host=06")
+    zorder_append(spark, fresh, path, epoch=8)
+    q = {"select": "m.cpu", "range": {"from": 0, "to": 10 * DAY},
+         "where": {"host": "07"}}
+    assert _vals(held.query(q)) == _vals(
+        fresh.filter(F.col("series") == "m.cpu host=07"))
+    assert held.stats()["n_series"] == 8
 
 
 def test_cas_optimize_carries_concurrent_append(spark, tmp_path):

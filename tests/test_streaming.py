@@ -302,32 +302,6 @@ def test_marks_epoch_retention_keeps_one_generation(spark, tmp_path):
     assert hw.marks == {"s1": 3}
 
 
-def test_marks_legacy_current_layout_migrates(spark, tmp_path):
-    """A pre-pointer-log marks dir (one-line CURRENT file naming an
-    epoch-* parquet dir) is read as a fallback — no re-seed scan — and
-    garbage-collected once the pointer log carries two generations."""
-    from akumuli_spark.streaming.ingest import HighWaterState
-
-    marks_dir = tmp_path / "marks"
-    marks_dir.mkdir()
-    legacy = spark.createDataFrame([("s1", 42)], "series string, __hw long")
-    legacy.write.mode("overwrite").parquet(str(marks_dir / "epoch-old"))
-    (marks_dir / "CURRENT").write_text("epoch-old")
-
-    hw = HighWaterState(str(marks_dir))
-    assert hw.marks == {"s1": 42}  # legacy read, no seed
-    assert hw.seed_scans == 0
-
-    hw.advance(spark, spark.createDataFrame(
-        [("s1", 100)], "series string, ts_ns long"))
-    assert hw.marks == {"s1": 100}
-    hw.advance(spark, spark.createDataFrame(
-        [("s2", 7)], "series string, ts_ns long"))
-    assert hw.marks == {"s1": 100, "s2": 7}
-    leftovers = set(os.listdir(str(marks_dir)))
-    assert "CURRENT" not in leftovers and "epoch-old" not in leftovers
-
-
 def test_marks_lifecycle_over_file_uri(spark, tmp_path):
     """The streaming marks table over a ``file://`` URI through
     HadoopStoreFS — the last store path that made raw POSIX calls until

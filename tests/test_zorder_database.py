@@ -186,6 +186,8 @@ def test_zdb_composes_with_rollup_tiering(spark, tmp_path):
         "range": {"from": E0, "to": E0 + 28 * DAY},
     }
     served = sorted(map(tuple, zdb.query(qjson).collect()))
+    st = zdb.last_prune_stats  # the hot tier read the pruned z-store
+    assert st and st["files_selected"] < st["files_total"]
     direct = sorted(map(tuple, open_database(spark, frame)
                         .query(qjson).collect()))
     assert len(served) == len(direct) and served
