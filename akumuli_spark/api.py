@@ -239,25 +239,21 @@ class ZorderDatabase(Database):
         self._refresh()
 
     def _store_token(self) -> tuple:
-        """Cheap change detector per store: the current manifest
-        snapshot dir (:func:`~akumuli_spark.sources.zorder._vtable_dir`,
-        the CAS pointer log's newest snapshot or the swap-published
-        ``_zmanifest``) and the seam's ``change_token`` of it, the
-        sorted file-name listing.  Every publish either names a new
-        snapshot dir or swaps in freshly-uuid-named part files, so the
-        token flips on every publish in both commit modes.  An
-        mtime-based token would alias two publishes landing within one
-        coarse (1 s) filesystem timestamp tick and silently serve the
-        older file list (ADVICE r12).  Metadata reads, no Spark job."""
+        """Cheap change detector per store: the current (version,
+        snapshot dir) of its manifest's pointer log
+        (:class:`~akumuli_spark.sources.fs.CasLog`), the store's one
+        snapshot token.  Every publish claims a higher version, so the
+        token flips on every publish, however close together (an
+        mtime-based token aliased two publishes inside one coarse
+        filesystem timestamp tick — ADVICE r12).  Metadata reads, no
+        Spark job."""
         import posixpath
 
-        from akumuli_spark.sources.fs import get_fs
-        from akumuli_spark.sources.zorder import MANIFEST_DIR, _vtable_dir
+        from akumuli_spark.sources.fs import CasLog, get_fs
+        from akumuli_spark.sources.zorder import MANIFEST_DIR
 
         def one(p):
-            fs = get_fs(p)
-            snap = _vtable_dir(fs, posixpath.join(p, MANIFEST_DIR))
-            return snap, fs.change_token(snap)
+            return CasLog(get_fs(p), posixpath.join(p, MANIFEST_DIR)).current()
 
         return (one(self._zpath),
                 one(self._ez_path) if self._ez_path else None)
@@ -340,8 +336,7 @@ class ZorderDatabase(Database):
     # optimize() re-clusters them, vacuum() reclaims replaced/orphaned
     # files after the live-append grace — the next query() re-opens the
     # post-maintenance snapshot automatically via _store_token, the
-    # manifest's file-name listing (not an mtime, which aliases two
-    # publishes inside one timestamp tick)
+    # manifest pointer log's version
     def erosion(self) -> DataFrame:
         from akumuli_spark.sources.zorder import zorder_erosion
 
@@ -378,7 +373,7 @@ class ZorderCatalog:
     conditional-PUT pointer log (:class:`akumuli_spark.sources.fs.
     CasLog`), so REGISTRATION IS LOCK-FREE AND SAFE ON ANY FILESYSTEM:
     two concurrent ``register`` calls linearize on the pointer create
-    and the loser re-merges — the same protocol the CAS z-store publish
+    and the loser re-merges — the same protocol every z-store publish
     uses, reused rather than re-invented.
 
     Each row carries the store's layout contract (bucket_ns / bits /

@@ -4699,12 +4699,12 @@ _register_pipeline(
 
 
 def _zorder_cas_path(spark: SparkSession, sf: str) -> str:
-    """The grown-store lifecycle under the CONDITIONAL-PUT commit
-    protocol (r14): build with ``cas_commit=True`` over a ``file://``
-    URI, epoch-keyed append + exactly-once replay, then the
-    auto-selected scoped OPTIMIZE — all publishes are CasLog pointer
-    commits (sources/fs.py), zero locks, zero renames of the manifest,
-    the protocol an S3/GCS deployment runs.  Cached per process."""
+    """The grown-store lifecycle over a ``file://`` URI (the Hadoop
+    filesystem route an S3/GCS deployment also takes): build,
+    epoch-keyed append + exactly-once replay, then the auto-selected
+    scoped OPTIMIZE — every publish a CasLog pointer commit
+    (sources/fs.py), zero locks, zero renames of the manifest.  Cached
+    per process."""
     key = f"cas:{sf}"
     if key not in _ZORDER_CACHE:
         import atexit
@@ -4724,11 +4724,11 @@ def _zorder_cas_path(spark: SparkSession, sf: str) -> str:
         split = T96 + 90 * 86_400 * NS
         zorder_metrics_table(
             spark, mv.filter(F.col("ts_ns") < split), path,
-            bucket_ns=_YEAR_NS, files_per_partition=4, cas_commit=True,
+            bucket_ns=_YEAR_NS, files_per_partition=4,
         )
         batch = mv.filter(F.col("ts_ns") >= split)
         zorder_append(spark, batch, path, epoch=1)
-        zorder_append(spark, batch, path, epoch=1)  # replay: no-op (CAS)
+        zorder_append(spark, batch, path, epoch=1)  # replay: no-op
         # re-cluster the eroded buckets through the CAS carry-forward
         # merge; an EMPTY corpus erodes nothing and optimizes 0 buckets
         zorder_optimize(spark, path)
@@ -4746,10 +4746,9 @@ def _zorder_cas_select(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("series", "ts_ns", "value")
 
 
-# Same probe again over a CAS-committed store (pointer-log manifest,
-# the object-store protocol): a double-landed replay epoch, a row lost
-# in the optimize's CAS carry-forward, or a stale snapshot resolution
-# in _vtable_dir would all show against the flat oracle.
+# Same probe again over a file:// store: a double-landed replay epoch,
+# a row lost in the optimize's carry-forward merge, or a stale snapshot
+# resolution in _vtable_dir would all show against the flat oracle.
 _register_pipeline(
     "zorder_cas_lifecycle_select",
     _zorder_cas_select,

@@ -2,9 +2,10 @@
 
 Every store in this package (the z-order metrics/corpus stores, the
 sketch store, the production layout committer) publishes through the
-same handful of filesystem primitives: atomic rename (the two-rename
-snapshot swap), recursive delete, staged-file move-in, orphan listing
-by glob, and an mtime-based vacuum grace.  Until r13 those were
+same handful of filesystem primitives: conditional create (the pointer
+log), atomic rename (the two-rename snapshot swap the non-z-order
+stores use), recursive delete, staged-file move-in, orphan listing by
+glob, and an mtime-based vacuum grace.  Until r13 those were
 hardwired to POSIX ``os``/``shutil``/``glob`` calls — correct on a
 local disk, nonsensical on the object stores a 100 TB deployment
 actually lives on (S3 has no rename; HDFS renames differ in edge
@@ -32,13 +33,10 @@ and a caller opts into the portable path simply by addressing the
 store with a URI (the lifecycle tests run the full build/append/
 optimize/vacuum cycle over ``file://`` URIs through the Hadoop route).
 
-The module also hosts :func:`store_lock`, the single-writer mutex the
-z-store publish step takes (mutual exclusion via exclusive-create,
-atomic on POSIX and HDFS; lease-based theft bounds a crashed holder;
-the holder's identity is an OWNER TOKEN written into the lock file, so
-release and heartbeat verify ownership instead of trusting the path),
-:func:`swap_compact`, the shared two-rename publish protocol, and
-:class:`CasLog`, the conditional-PUT pointer-log committer.
+The module also hosts :func:`swap_compact`, the two-rename publish the
+layout, sketch, membership and index stores share, and :class:`CasLog`,
+the conditional-PUT pointer-log committer every z-store metadata table
+publishes through.
 
 Object-store honesty: on S3/GCS, "rename" is copy+delete, so the
 two-rename swap is NOT an atomic publish there.  The production commit
@@ -51,11 +49,11 @@ monotonic sequence number; the highest pointer is the current
 snapshot, a lost create is a CAS conflict the writer resolves by
 re-reading and re-merging (Delta's ``_delta_log`` protocol, restated
 over the seam).  Data files never need an atomic move — they are
-invisible until a manifest version names them.  Stores opt in per
-scheme (:func:`prefers_cas`) or explicitly at build time; the rename
-committer remains the POSIX/HDFS default.  :class:`MemoryStoreFS` is
-the fault-injecting fake that pins the protocol's crash/conflict
-matrix in pytest without a real object store.
+invisible until a manifest version names them.  The z-stores, the
+z-store catalog and the ingest marks table commit this way on every
+filesystem.  :class:`MemoryStoreFS` is the fault-injecting fake that
+pins the protocol's crash/conflict matrix in pytest without a real
+object store.
 """
 
 from __future__ import annotations
@@ -108,25 +106,9 @@ class StoreFilesystem:
         """Modification time, epoch seconds (raises OSError if gone)."""
         raise NotImplementedError
 
-    def touch_mtime(self, path: str, now_s: float | None = None) -> bool:
-        """Reset ``path``'s mtime to now (or ``now_s``).  The z-store
-        uses this to re-age files *replaced* by OPTIMIZE so the vacuum
-        grace counts from replacement, not original write (a reader
-        holding the pre-optimize snapshot must outlive the grace —
-        Delta's deletion-timestamp semantics).  Missing path → no-op
-        returning True on EVERY implementation (the file is already
-        vacuumed/trashed — not a clock failure; a concurrent retention
-        racing the re-age loop must not masquerade as a
-        setTimes-unsupported filesystem).  Returns False only when the
-        filesystem cannot set times (object stores) so callers can
-        refuse or fall back instead of silently losing the grace
-        semantics (VERDICT r13 Wrong #1)."""
-        raise NotImplementedError
-
     def create_exclusive(self, path: str, data: bytes = b"") -> bool:
         """Atomically create a file (with optional content); False if
-        it already exists.  The mutual-exclusion primitive behind
-        :func:`store_lock` and the conditional-PUT primitive behind
+        it already exists.  The conditional-PUT primitive behind
         :class:`CasLog` — on S3/GCS this maps to ``If-None-Match``."""
         raise NotImplementedError
 
@@ -150,23 +132,13 @@ class StoreFilesystem:
         raise NotImplementedError
 
     def write_bytes(self, path: str, data: bytes) -> None:
-        """Overwrite-write a small file (lock heartbeats, pointer
+        """Overwrite-write a small file (pointer and marker
         files).  As atomic as the filesystem allows: POSIX goes through
         a same-directory temp + ``os.replace``; Hadoop uses
         ``create(overwrite)``; a reader never sees a torn payload on
         POSIX/HDFS and callers treat unreadable/short content as
         "absent" everywhere else."""
         raise NotImplementedError
-
-    def change_token(self, path: str):
-        """Hashable snapshot token for a published table directory, or
-        None when absent.  Implemented as the sorted file-name listing:
-        every publish swaps in a directory of freshly-uuid-named part
-        files, so the token flips on every publish regardless of
-        filesystem timestamp granularity (two publishes within one
-        mtime tick would alias an mtime-based token — ADVICE r12)."""
-        raise NotImplementedError
-
 
 class LocalStoreFS(StoreFilesystem):
     """POSIX implementation — the pre-seam behavior, verbatim."""
@@ -209,18 +181,6 @@ class LocalStoreFS(StoreFilesystem):
 
     def getmtime(self, path):
         return os.path.getmtime(path)
-
-    def touch_mtime(self, path, now_s=None):
-        try:
-            if now_s is None:
-                os.utime(path, None)
-            else:
-                os.utime(path, (now_s, now_s))
-            return True
-        except FileNotFoundError:
-            return True  # already vacuumed/trashed: no-op, not a failure
-        except OSError:
-            return False
 
     def create_exclusive(self, path, data=b""):
         try:
@@ -269,13 +229,6 @@ class LocalStoreFS(StoreFilesystem):
         finally:
             with contextlib.suppress(OSError):
                 os.unlink(tmp)
-
-    def change_token(self, path):
-        try:
-            return tuple(sorted(os.listdir(path)))
-        except OSError:
-            return None
-
 
 class HadoopStoreFS(StoreFilesystem):
     """``org.apache.hadoop.fs.FileSystem``-backed implementation over
@@ -363,22 +316,6 @@ class HadoopStoreFS(StoreFilesystem):
             raise OSError(f"no such path: {path}")
         return fs.getFileStatus(self._p(path)).getModificationTime() / 1000.0
 
-    def touch_mtime(self, path, now_s=None):
-        fs = self._fs(path)
-        try:
-            if not fs.exists(self._p(path)):
-                return True  # already vacuumed: nothing to re-age
-            ms = int((time.time() if now_s is None else now_s) * 1000)
-            before = fs.getFileStatus(self._p(path)).getModificationTime()
-            fs.setTimes(self._p(path), ms, -1)
-            # some FileSystems (S3A historically) no-op setTimes rather
-            # than throw — verify the time actually moved so callers
-            # can refuse instead of silently losing the vacuum grace
-            after = fs.getFileStatus(self._p(path)).getModificationTime()
-            return after == ms or after != before
-        except Exception:
-            return False
-
     def create_exclusive(self, path, data=b""):
         fs = self._fs(path)
         try:
@@ -395,10 +332,10 @@ class HadoopStoreFS(StoreFilesystem):
             stream.close()
             return True
         except Exception:
-            # we WON the create but the content write died: an
-            # ownerless empty file would stall every other writer for
-            # a full lease (it looks like a held lock / burned slot) —
-            # clean up our own partial claim before reporting failure
+            # we WON the create but the content write died: an empty
+            # pointer would stall every other writer for a full burn
+            # grace (it looks like an in-flight claim) — clean up our
+            # own partial claim before reporting failure
             with contextlib.suppress(Exception):
                 stream.close()
             with contextlib.suppress(Exception):
@@ -411,9 +348,9 @@ class HadoopStoreFS(StoreFilesystem):
             stream = fs.open(self._p(path))
         except Exception as exc:
             # missing/raced-away files surface as the interface's
-            # OSError, not a gateway exception — callers (the lock's
-            # ownership check, CasLog.current, legacy pointer fallback)
-            # treat "unreadable" as "absent"
+            # OSError, not a gateway exception — callers
+            # (CasLog.current, legacy pointer fallback) treat
+            # "unreadable" as "absent"
             raise OSError(f"cannot open {path}: {exc}") from None
         try:
             data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(
@@ -432,15 +369,6 @@ class HadoopStoreFS(StoreFilesystem):
         finally:
             stream.close()
 
-    def change_token(self, path):
-        fs = self._fs(path)
-        if not fs.exists(self._p(path)):
-            return None
-        return tuple(sorted(
-            s.getPath().getName() for s in fs.listStatus(self._p(path))
-        ))
-
-
 class MemoryStoreFS(StoreFilesystem):
     """In-memory fake with OBJECT-STORE semantics, for protocol tests:
 
@@ -450,10 +378,7 @@ class MemoryStoreFS(StoreFilesystem):
     * ``create_exclusive`` is an atomic conditional PUT (what S3
       ``If-None-Match`` / GCS generation-match give you) — the ONE
       primitive :class:`CasLog` correctness rests on;
-    * ``touch_mtime`` honors :attr:`settimes_supported` so tests can
-      model stores where ``setTimes`` silently no-ops (the r13 verdict's
-      silently-stealable-heartbeat scenario);
-    * the clock is injectable (:meth:`advance`) so lease expiry and
+    * the clock is injectable (:meth:`advance`) so burn graces and
       vacuum grace are tested without sleeping.
 
     ``on_op(op, path)`` is called at the top of every primitive; a test
@@ -469,7 +394,6 @@ class MemoryStoreFS(StoreFilesystem):
         self._dirs: set[str] = set()
         self._mu = threading.Lock()
         self._now = 1_000.0
-        self.settimes_supported = True
         self.on_op = None
 
     # -- test controls ----------------------------------------------------
@@ -603,18 +527,6 @@ class MemoryStoreFS(StoreFilesystem):
                 raise OSError(f"no such path: {p}")
             return max(times) if times else self._now
 
-    def touch_mtime(self, path, now_s=None):
-        if not self.settimes_supported:
-            return False  # S3A-style silent setTimes no-op, surfaced
-        p = self._norm(path)
-        with self._mu:
-            if p in self._files:
-                self._files[p] = (
-                    self._files[p][0],
-                    self._now if now_s is None else now_s,
-                )
-        return True
-
     def create_exclusive(self, path, data=b""):
         p = self._norm(path)
         self._hook("create_exclusive", p)
@@ -636,37 +548,6 @@ class MemoryStoreFS(StoreFilesystem):
         self._hook("write_bytes", p)
         with self._mu:
             self._files[p] = (bytes(data), self._now)
-
-    def change_token(self, path):
-        p = self._norm(path)
-        with self._mu:
-            pre = p + "/"
-            names = {
-                f[len(pre):].split("/", 1)[0]
-                for f in self._files if f.startswith(pre)
-            }
-            if not names and p not in self._dirs and p not in self._files:
-                return None
-            return tuple(sorted(names))
-
-
-#: URI schemes whose filesystems have no atomic rename — stores there
-#: publish through :class:`CasLog` (conditional PUT) instead of the
-#: two-rename swap
-CAS_SCHEMES = frozenset({
-    "s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss",
-    "cos", "swift",
-})
-
-
-def prefers_cas(path: str) -> bool:
-    """True when ``path``'s scheme names an object store — the stores
-    default to the conditional-PUT manifest committer there, because
-    the two-rename swap is copy+delete (non-atomic) on those systems."""
-    if "://" not in path:
-        return False
-    return urlparse(path).scheme.lower() in CAS_SCHEMES
-
 
 def get_fs(path: str, spark=None) -> StoreFilesystem:
     """Resolve the filesystem for a store path: a ``scheme://`` URI
@@ -720,194 +601,6 @@ def swap_compact(fs: StoreFilesystem, path: str,
         fs.rename(tmp, path)
 
 
-#: default publish-lock lease: a holder silent for this long is
-#: presumed crashed and its lock is broken (publishes are
-#: metadata-sized — seconds, not minutes)
-LOCK_LEASE_S = 300.0
-
-
-class LockLostError(RuntimeError):
-    """The publish lock was broken out from under a live holder (the
-    holder stalled past its lease and a waiter legitimately stole it).
-    Raised by the lock's ``heartbeat()`` so the holder ABORTS its
-    publish instead of racing the thief — the merge it was about to
-    write was computed against a snapshot the new holder may already
-    have replaced."""
-
-
-@contextlib.contextmanager
-def store_lock(fs: StoreFilesystem, path: str,
-               lease_s: float = LOCK_LEASE_S,
-               timeout_s: float | None = None,
-               poll_s: float = 0.05,
-               clock=time.time, sleep=time.sleep):
-    """Single-writer mutex for a store's PUBLISH step (manifest merge +
-    swap + staged-file move-in).  Before r13 the z-store assumed one
-    maintenance writer, but appends are a *different* writer class —
-    an append publishing into a bucket that ``zorder_optimize`` had
-    already selected lost its manifest rows in the optimize's merged
-    publish (the batch silently vanished; VERDICT r12).  Serializing
-    only the metadata-sized publish step keeps clustering writes fully
-    parallel while making append/optimize/retention linearizable.
-
-    Implementation — exclusive-create of ``{path}.lock`` carrying a
-    unique OWNER TOKEN; holders silent longer than ``lease_s`` are
-    presumed crashed and broken.  Ownership is verified on every
-    privileged action (ADVICE r13: a path-only lock let a resumed
-    stale holder delete its thief's lock):
-
-    * ``heartbeat()`` — yielded to the holder — first READS the lock
-      and compares the token: a mismatch (or a missing lock) means the
-      lease was broken, and it raises :class:`LockLostError` so the
-      holder aborts instead of publishing over the thief.  A match is
-      refreshed by REWRITING the lock as ``{token}:{beat}`` with an
-      incremented beat counter — a plain write, advancing both mtime
-      and content on any writable filesystem, with no dependence on
-      ``setTimes`` (which S3A historically no-ops; VERDICT r13 Wrong
-      #1 — the silent-heartbeat scenario is now impossible by
-      construction, pinned by the ``settimes_supported=False`` fake
-      test).
-    * release claims the lock via rename to a private tombstone, then
-      verifies the token and restores on mismatch — a stale holder
-      never unlocks its successor, and the verify-then-remove pair
-      cannot race a thief's create (the rename IS the claim).
-    * acquisition re-verifies ownership one poll after the create: a
-      stale-broken holder that paused between its ownership read and
-      its heartbeat write can overwrite a fresh lock, and the settle
-      check makes the new claimant back off instead of running two
-      holders (residual window: that pause exceeding ``poll_s`` on top
-      of the already-expired lease).
-
-    Breaking a stale lease is ATOMIC and heartbeat-safe: the breaker
-    snapshots the lock's CONTENT at the staleness probe, RENAMES the
-    stale lock to a unique tombstone (one of N concurrent breakers
-    wins), then compares the tombstone's content to the snapshot — any
-    heartbeat that landed in between changed the beat counter, so the
-    breaker renames the lock BACK and keeps waiting (ADVICE r13
-    TOCTOU).  Content, not mtime: an object-store "rename" is a copy
-    that resets timestamps, so mtime after the rename proves nothing.
-
-    ``timeout_s`` defaults to ``lease_s + 120`` — a default-configured
-    waiter always outlives a crashed holder's lease instead of raising
-    before it is allowed to break it.  Raises :class:`TimeoutError`
-    past the deadline — a publish is seconds of metadata work, so a
-    longer wait means a stuck-but-alive peer.
-
-    On object stores exclusive-create maps to a conditional PUT and the
-    break-rename is copy+delete (two breakers can transiently both
-    proceed) — the lock there is an EFFICIENCY device only; manifest
-    correctness rests on the :class:`CasLog` commit, which is why the
-    z-store routes object-store publishes through CAS.  ``clock`` and
-    ``sleep`` are injectable for tests."""
-    import uuid
-
-    lock = f"{path}.lock"
-    token = uuid.uuid4().hex.encode("ascii")
-    beats = [0]
-    if timeout_s is None:
-        timeout_s = lease_s + 120.0
-    deadline = clock() + timeout_s
-
-    def _owned() -> bool:
-        try:
-            return fs.read_bytes(lock).split(b":", 1)[0] == token
-        except OSError:
-            return False
-
-    while True:
-        if fs.create_exclusive(lock, token + b":0"):
-            # settle re-verify: a stale-broken holder that paused
-            # BETWEEN its ownership read and its heartbeat write can
-            # overwrite this fresh lock (the read-then-write window is
-            # microseconds, but a GC pause stretches it) — one poll
-            # later the overwrite has landed if it ever will, and we
-            # back off instead of running two holders
-            sleep(poll_s)
-            if _owned():
-                break
-            continue
-        probe = age = None
-        try:
-            age = clock() - fs.getmtime(lock)
-            probe = fs.read_bytes(lock)
-        except OSError:
-            pass  # released between attempts, or transiently unreadable:
-            # fall through to the deadline check + poll (a persistent
-            # read failure must time out, never busy-spin)
-        if age is not None and probe is not None and age > lease_s:
-            # stale holder: claim the break atomically via rename —
-            # only one breaker's rename succeeds; everyone then
-            # re-races the exclusive create
-            tomb = f"{lock}.stale-{uuid.uuid4().hex}"
-            try:
-                fs.rename(lock, tomb)
-            except OSError:
-                continue  # another breaker won, or the holder released
-            # TOCTOU re-check: a heartbeat between our probe and the
-            # rename changed the beat counter — holder is alive, put
-            # the lock back.  Content compare, not mtime: object-store
-            # rename is a copy that resets timestamps.
-            try:
-                alive = fs.read_bytes(tomb) != probe
-            except OSError:
-                # tombstone unreadable (transient I/O — its name is
-                # ours alone, nobody else removes it): restore the
-                # lock rather than leave it vanished + a leaked tomb
-                with contextlib.suppress(OSError):
-                    fs.rename(tomb, lock)
-                continue
-            if alive:
-                try:
-                    fs.rename(tomb, lock)
-                except OSError:
-                    # someone already created a new lock: the live
-                    # holder's next heartbeat sees the token mismatch
-                    # and aborts — mutual exclusion holds, the raced
-                    # holder loses (crash-equivalent)
-                    with contextlib.suppress(OSError):
-                        fs.remove(tomb)
-            else:
-                with contextlib.suppress(OSError):
-                    fs.remove(tomb)
-            continue
-        if clock() > deadline:
-            raise TimeoutError(
-                f"store publish lock busy > {timeout_s}s: {lock}"
-            )
-        sleep(poll_s)
-
-    def heartbeat() -> None:
-        if not _owned():
-            raise LockLostError(
-                f"publish lock lost (lease broken while stalled): {lock}"
-            )
-        beats[0] += 1
-        fs.write_bytes(lock, token + b":%d" % beats[0])
-
-    try:
-        yield heartbeat
-    finally:
-        # release ONLY what we own, ATOMICALLY: rename the lock to a
-        # private tombstone (claims it — a bare read-then-remove could
-        # delete a thief's lock created in between; ADVICE r13), verify
-        # the token, and restore if it turned out to be someone else's
-        tomb = f"{lock}.rel-{uuid.uuid4().hex}"
-        try:
-            fs.rename(lock, tomb)
-        except OSError:
-            pass  # already broken away: nothing of ours to release
-        else:
-            owned = False
-            with contextlib.suppress(OSError):
-                owned = fs.read_bytes(tomb).split(b":", 1)[0] == token
-            if owned:
-                with contextlib.suppress(OSError):
-                    fs.remove(tomb)
-            else:
-                with contextlib.suppress(OSError):
-                    fs.rename(tomb, lock)
-
-
 # ---------------------------------------------------------------------------
 # Conditional-PUT pointer-log committer (the object-store manifest commit)
 # ---------------------------------------------------------------------------
@@ -932,7 +625,7 @@ class CasLog:
     pointer object — a conditional PUT.  Losing the create is a CAS
     CONFLICT: some other writer owns N+1, so the merge is stale; the
     caller re-reads and re-merges (:func:`~akumuli_spark.sources.
-    zorder._publish_manifest` loops exactly this way).  Readers take
+    zorder._cas_publish_df` loops exactly this way).  Readers take
     the highest readable pointer — always a complete, immutable
     snapshot.  Crash matrix:
 

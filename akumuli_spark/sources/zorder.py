@@ -34,43 +34,36 @@ one stats scan), priced exactly like ``OPTIMIZE``.
 
 The manifest lives INSIDE the table directory (underscore-prefixed, so
 plain ``spark.read.parquet(path)`` of the data ignores it) and records
-paths RELATIVE to that directory — the build-then-two-rename swap
-(:func:`akumuli_spark.sources.layout.recover_compaction` protocol)
-therefore publishes data and manifest atomically, and the store stays
-relocatable.
+paths RELATIVE to that directory, so the store stays relocatable.
 
 Visibility contract (the Delta/Iceberg snapshot model): the manifest is
 the source of truth for which files a read sees.  :func:`zorder_append`
 lands a clustered batch as NEW files first (invisible — readers still
-serve the previous snapshot), then publishes the merged manifest with
-one two-rename swap; a reader therefore always sees an entire append or
-none of it.  A crash between the file move and the manifest publish
-leaves orphan data files that are invisible forever — harmless to
-correctness, reclaimed by :func:`vacuum_zorder` (the ``VACUUM``
-analogue), which deletes exactly the data files the manifest does not
-list.  The layout parameters an append must reproduce (bucket_ns, bits)
-travel in a one-row ``{path}/_zmeta`` table — the stored-contract rule
-every growing store in this repo follows: a build/append parameter
-mismatch would mis-bucket partitions silently.
+serve the previous snapshot), then publishes the merged manifest as one
+new snapshot; a reader therefore always sees an entire append or none
+of it.  A crash between the file move and the manifest publish leaves
+orphan data files that are invisible forever — harmless to correctness,
+reclaimed by :func:`vacuum_zorder` (the ``VACUUM`` analogue).  The
+layout parameters an append must reproduce (bucket_ns, bits) travel in
+a one-row ``{path}/_zmeta`` table — the stored-contract rule every
+growing store in this repo follows: a build/append parameter mismatch
+would mis-bucket partitions silently.
 
-Commit modes: on POSIX/HDFS the manifest publishes via the two-rename
-swap under the store publish lock (linearizable, atomic rename).  On
-object stores (``s3a://``, ``gs://``, … — no atomic rename) the store
-publishes through the conditional-PUT pointer log
-(:class:`akumuli_spark.sources.fs.CasLog`): every manifest version is
-an immutable snapshot directory named by a pointer object created
-if-absent, writers resolve conflicts by re-reading and re-merging, and
-NO LOCK is needed for correctness (appends/optimize/retention
-linearize on the pointer create itself).  The mode is chosen at build
-time (``cas_commit``, defaulting by scheme via
-:func:`~akumuli_spark.sources.fs.prefers_cas`) and detected on every
-later write from the store itself (the pointer log's existence), so
-mixed-writer deployments cannot disagree.  Under CAS there is no
-mtime re-aging either: readers are protected by SNAPSHOT RETENTION —
-:func:`vacuum_zorder` keeps the newest K manifest versions plus
-everything younger than the grace, and only deletes data files no
-retained snapshot references (Delta's VACUUM contract restated without
-``setTimes``).
+Commit protocol: every metadata table of a store (``_zmanifest``,
+``_zmeta``, ``_zledger``) publishes through the conditional-PUT pointer
+log (:class:`akumuli_spark.sources.fs.CasLog`) on every filesystem —
+local paths, ``file://``/``hdfs://`` and object stores alike.  Each
+version is an immutable snapshot directory named by a pointer object
+created if-absent; writers resolve conflicts by re-reading and
+re-merging, so appends, optimize, retention and rebuilds linearize on
+the pointer create itself and NO LOCK is needed.  The pointer log's
+current version is the store's one snapshot token.  Readers are
+protected by SNAPSHOT RETENTION: :func:`vacuum_zorder` keeps the newest
+K manifest versions plus everything superseded less than the grace ago,
+and deletes only data files no retained snapshot references (Delta's
+VACUUM contract).  A store written before the pointer log existed (bare
+``_zmanifest``/``_zmeta``/``_zledger`` dirs) serves from those dirs, and
+its first publish seeds version 1 from them.
 """
 
 from __future__ import annotations
@@ -81,10 +74,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from akumuli_spark.smallframe import local_frame
-from akumuli_spark.sources.fs import (
-    CasLog, get_fs, parent_dir, prefers_cas, store_lock, strip_scheme,
-    swap_compact,
-)
+from akumuli_spark.sources.fs import CasLog, get_fs, parent_dir, strip_scheme
 from akumuli_spark.sources.layout import (
     DAY_NS, read_table_or_none, recover_compaction,
 )
@@ -100,6 +90,12 @@ MANIFEST_DIR = "_zmanifest"
 META_DIR = "_zmeta"
 LEDGER_DIR = "_zledger"
 ZORDER_LAYOUT_VERSION = 1
+
+#: the one-row ``_zmeta`` layout contract of each store kind
+_META_SCHEMA = ("layout_version int, bucket_ns long, bits int, "
+                "files_per_partition int")
+_CORPUS_META_SCHEMA = ("layout_version int, cat_col string, "
+                       "num_col string, files_total int, bits int")
 
 ENGINE_SCHEMA = T.StructType([
     T.StructField("series", T.StringType()),
@@ -197,8 +193,7 @@ def _series_bins(metrics: DataFrame, bits: int) -> DataFrame:
 def zorder_metrics_table(spark: SparkSession, metrics: DataFrame, path: str,
                          bucket_ns: int = DAY_NS,
                          files_per_partition: int = 8,
-                         bits: int = ZBITS,
-                         cas_commit: bool | None = None) -> None:
+                         bits: int = ZBITS) -> None:
     """(Re)cluster the long metrics frame into a Z-ordered store at
     ``path`` and publish its file-stats manifest — the ``OPTIMIZE
     ZORDER BY (series, ts_ns)`` maintenance job.
@@ -208,89 +203,105 @@ def zorder_metrics_table(spark: SparkSession, metrics: DataFrame, path: str,
     partitioned into ``files_per_partition`` files, so every file covers
     a tight rectangle in (series, time) — BOTH a series-equality and a
     time-slice predicate then skip most files via the manifest's
-    per-file natural-column min/max.  Rebuild over an existing store
-    swaps via the two-rename protocol and self-heals through
-    :func:`akumuli_spark.sources.layout.recover_compaction`.
+    per-file natural-column min/max.
 
-    ``cas_commit`` selects the publish protocol: None (default) picks
-    by scheme — object stores get the conditional-PUT pointer log, the
-    rest the two-rename swap (see the module docstring's commit-modes
-    paragraph).  An existing CAS store stays CAS regardless (the store,
-    not the caller, owns the protocol).  A CAS rebuild keeps the stored
-    layout contract — changing (bucket_ns, bits, files_per_partition)
-    requires a fresh path, because the old snapshot's partition dirs
-    remain live for retained readers.
+    A rebuild over an existing store stages the new files in a private
+    sibling, moves them in (invisible), and flips the store to them with
+    one pointer-log publish of the manifest (see :func:`_publish_build`);
+    the replaced files age out through :func:`vacuum_zorder`'s snapshot
+    retention.  ``bits`` and ``files_per_partition`` only shape the
+    clustering (the manifest's natural min/max keep every read exact),
+    so a rebuild may change them; ``bucket_ns`` fixes the partition and
+    retention unit, so changing it needs a fresh path.
     """
-    fs = get_fs(path)
-    cas = prefers_cas(path) if cas_commit is None else bool(cas_commit)
-    if _store_is_cas(fs, path):
-        cas = True
-    tmp = f"{path}.compact-tmp"
-    fs.rmtree(tmp)
-    _write_clustered(metrics, tmp, bucket_ns, files_per_partition, bits)
-    _write_manifest(spark, tmp)
-    meta_df = local_frame(spark,
-        [(ZORDER_LAYOUT_VERSION, int(bucket_ns), int(bits),
-          int(files_per_partition))],
-        "layout_version int, bucket_ns long, bits int, "
-        "files_per_partition int",
-    )
-    if not cas:
-        meta_df.coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(tmp, META_DIR)
-        )
-        _carry_ledger_on_rebuild(spark, path, tmp)
-        swap_compact(fs, path)
-        return
-
-    # CAS build/rebuild: no whole-dir swap exists on an object store.
-    # New data files move in (invisible), the committed-epoch carry
-    # publishes BEFORE the manifest (a replay in the window must stay a
-    # no-op), and one pointer commit flips the snapshot to the rebuilt
-    # file set; replaced files age out via snapshot retention.
+    meta = {"layout_version": ZORDER_LAYOUT_VERSION,
+            "bucket_ns": int(bucket_ns), "bits": int(bits),
+            "files_per_partition": int(files_per_partition)}
     old_meta = _read_zmeta(spark, path)
-    if old_meta is not None and (
-        old_meta["bucket_ns"] != int(bucket_ns)
-        or old_meta["bits"] != int(bits)
-        or old_meta["files_per_partition"] != int(files_per_partition)
-    ):
+    _refuse_layout_drift(path, old_meta, meta, ("bucket_ns",))
+
+    def write(tmp: str) -> None:
+        _write_clustered(metrics, tmp, bucket_ns, files_per_partition, bits)
+        _write_manifest(spark, tmp)
+
+    _publish_build(spark, path, meta, _META_SCHEMA, old_meta, write)
+
+
+def _refuse_layout_drift(path: str, old: dict | None, new: dict,
+                         fixed: tuple[str, ...]) -> None:
+    """A rebuild keeps the stored values of the ``fixed`` contract keys
+    — the old snapshot's files stay live for retained readers, so a
+    new partition unit (or clustering columns) needs a fresh path."""
+    if old is not None and any(old[k] != new[k] for k in fixed):
         raise ValueError(
-            f"CAS rebuild at {path} cannot change layout parameters "
-            f"(stored {old_meta}); use a fresh path"
+            f"rebuild at {path} cannot change layout parameters "
+            f"{', '.join(fixed)} (stored {old}); use a fresh path"
         )
+
+
+def _publish_build(spark: SparkSession, path: str, meta: dict,
+                   meta_schema: str, old_meta: dict | None, write) -> None:
+    """The one build/rebuild protocol both z-stores share.  ``write(tmp)``
+    writes the clustered data and its manifest into a private staging
+    sibling; then the old store's committed epochs fold into the ledger
+    BEFORE the manifest publishes (a rebuild resets manifest epochs to 0,
+    and a replay in that window must stay a no-op), the new data files
+    move in (invisible), a changed layout contract publishes ``_zmeta``,
+    and one manifest publish flips readers to the rebuilt file set."""
+    fs = get_fs(path)
+    tmp = _stage_dir(path)
     try:
-        new_man = spark.read.parquet(posixpath.join(tmp, MANIFEST_DIR))
-        new_man = local_frame(spark, new_man.collect(), new_man.schema)
-        _carry_committed_epochs_cas(spark, fs, path)
-        _cas_move_in(fs, tmp, path)
-        if old_meta is None:
-            meta_df.coalesce(1).write.mode("overwrite").parquet(
-                posixpath.join(path, META_DIR)
-            )
+        write(tmp)
+        new_man = _staged_manifest(spark, tmp)
+        _carry_committed_epochs(spark, fs, path)
+        _move_in(fs, tmp, path)
+        if old_meta != meta:
+            row = local_frame(spark, [tuple(meta.values())], meta_schema)
+            _cas_publish_df(spark, fs, posixpath.join(path, META_DIR),
+                            lambda cur: row)
         _cas_publish_df(spark, fs, posixpath.join(path, MANIFEST_DIR),
                         lambda cur: new_man)
     finally:
         fs.rmtree(tmp)
 
 
-def _carry_committed_epochs_cas(spark: SparkSession, fs, path: str,
-                                manifest_dir: str = MANIFEST_DIR) -> None:
-    """CAS twin of :func:`_carry_ledger_on_rebuild`: fold the old
-    store's committed epochs (manifest rows ≥ 1 ∪ ledger) into the
-    ledger BEFORE the rebuilt manifest publishes — the rebuild resets
-    manifest epochs to 0, and a checkpointed caller replaying a
-    committed epoch in (or after) that window must stay a no-op."""
-    mpath = posixpath.join(path, manifest_dir)
+def _stage_dir(path: str) -> str:
+    """A private staging sibling for one writer (build, append,
+    optimize); a hard-crashed writer's leftover is reclaimed by
+    :func:`vacuum_zorder` after its grace."""
+    import uuid
+
+    return f"{path}.append-tmp-{uuid.uuid4().hex}"
+
+
+def _staged_manifest(spark: SparkSession, tmp: str) -> DataFrame:
+    """The staged batch's manifest rows, materialized driver-side BEFORE
+    the files move out from under the lazy plan — manifest-sized (one
+    row per new file)."""
+    rows = spark.read.parquet(posixpath.join(tmp, MANIFEST_DIR))
+    return local_frame(spark, rows.collect(), rows.schema)
+
+
+def _carry_committed_epochs(spark: SparkSession, fs, path: str) -> None:
+    """Fold the old store's committed epochs (manifest rows ≥ 1 ∪
+    ledger) into the ledger BEFORE a rebuilt manifest publishes — the
+    rebuild resets manifest epochs to 0, and a checkpointed caller
+    replaying a committed epoch in (or after) that window must stay a
+    no-op (ADVICE r12: the corpus rebuild silently duplicated replayed
+    documents)."""
+    mpath = posixpath.join(path, MANIFEST_DIR)
     old_man = read_table_or_none(spark, _vtable_dir(fs, mpath))
-    committed: set[int] = set()
     if old_man is not None and "epoch" in old_man.columns:
-        committed |= {
-            r.epoch for r in old_man.select("epoch").distinct().collect()
-            if r.epoch is not None and r.epoch >= 1
-        }
-    committed |= _committed_epochs_ledger(spark, path)
-    if committed:
-        _ledger_add(spark, path, committed, cas=True)
+        _ledger_add(spark, path, _appended_epochs(old_man))
+
+
+def _appended_epochs(man: DataFrame) -> set[int]:
+    """The append epochs (≥ 1) a manifest frame's rows carry —
+    manifest-sized collect."""
+    return {
+        r.epoch for r in man.select("epoch").distinct().collect()
+        if r.epoch is not None and r.epoch >= 1
+    }
 
 
 def _write_clustered(metrics: DataFrame, out_dir: str, bucket_ns: int,
@@ -328,12 +339,11 @@ def _write_clustered(metrics: DataFrame, out_dir: str, bucket_ns: int,
 
 
 def _read_zmeta(spark: SparkSession, path: str) -> dict | None:
-    from akumuli_spark.sources.layout import read_table_or_none
-
-    meta = read_table_or_none(spark, posixpath.join(path, META_DIR))
-    if meta is None:
-        return None
-    rows = meta.collect()  # one row — layout-sized, never data-sized
+    """The store's layout contract row, or None for a path that was
+    never built (one row — layout-sized, never data-sized)."""
+    meta = read_table_or_none(
+        spark, _vtable_dir(get_fs(path), posixpath.join(path, META_DIR)))
+    rows = [] if meta is None else meta.collect()
     if not rows:
         return None
     r = rows[0].asDict()
@@ -354,11 +364,11 @@ def zorder_append(spark: SparkSession, metrics: DataFrame,
     dirs silently), staged in a private sibling, its per-file stats
     computed there, and only then:
 
-    1. data files move into the table (os.rename per file, names carry
-       the writer's job UUID — no collisions, readers cannot see a
-       partial file).  They are INVISIBLE: reads serve the manifest.
-    2. the merged manifest (old rows ∪ new rows) publishes via the
-       two-rename swap — the snapshot flips atomically from
+    1. data files move into the table (names carry the writer's job
+       UUID — no collisions).  They are INVISIBLE: reads serve the
+       manifest.
+    2. the merged manifest (current rows ∪ new rows) publishes as one
+       pointer-log version — the snapshot flips atomically from
        pre-append to post-append.
 
     Retry contract: a crash BEFORE step 2 leaves invisible orphan files
@@ -373,19 +383,15 @@ def zorder_append(spark: SparkSession, metrics: DataFrame,
     Without an epoch, at-least-once replay duplicates rows — pair with
     a checkpointed caller.  Appended files cover their batch's
     (series, time) rectangles only; re-cluster with
-    :func:`zorder_metrics_table` when accumulated appends erode pruning
+    :func:`zorder_optimize` when accumulated appends erode pruning
     (the OPTIMIZE cadence).
 
-    Concurrency: the clustering write runs unserialized (each append
-    stages in a private sibling), but the PUBLISH step (file move-in +
-    manifest merge/swap) holds the store publish lock — two appends, or
-    an append vs :func:`zorder_optimize`/:func:`zorder_retention`, merge
-    manifests linearizably instead of last-writer-wins dropping the
-    other's rows.  The epoch replay check re-runs inside the lock, so
-    two concurrent replays of the same epoch commit exactly once."""
-    import uuid
-
-    fs = get_fs(path)
+    Concurrency: no lock.  The clustering write runs in a private
+    sibling; the publish merges against the CURRENT snapshot and
+    re-merges on every pointer-create conflict, so two appends, or an
+    append vs :func:`zorder_optimize`/:func:`zorder_retention`, never
+    drop each other's rows.  The epoch check re-runs inside the merge,
+    so two concurrent replays of one epoch commit exactly once."""
     meta = _read_zmeta(spark, path)
     if meta is None:
         raise ValueError(
@@ -393,82 +399,61 @@ def zorder_append(spark: SparkSession, metrics: DataFrame,
             "zorder_metrics_table first (pre-meta stores must be rebuilt)"
         )
 
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    cas = _store_is_cas(fs, path)
+    def write(tmp: str) -> None:
+        _write_clustered(metrics, tmp, meta["bucket_ns"],
+                         meta["files_per_partition"], meta["bits"])
+        _write_manifest(spark, tmp, epoch=epoch)
 
-    def committed(epoch: int) -> bool:
+    _append_batch(spark, path, epoch, write)
+
+
+def _append_batch(spark: SparkSession, path: str, epoch: int | None,
+                  write) -> None:
+    """The one append protocol both z-stores share: ``write(tmp)``
+    writes the clustered batch and its manifest into a private staging
+    sibling; the files move in (invisible) and one pointer-log publish
+    merges the batch's manifest rows into the current snapshot."""
+    fs = get_fs(path)
+    mpath = posixpath.join(path, MANIFEST_DIR)
+
+    def committed(man: DataFrame | None) -> bool:
         # committed = present in the manifest OR folded away by a later
-        # optimize/retention (the _zledger keeps history truthful after
-        # a rewrite erases the epoch's manifest rows)
+        # optimize/retention/rebuild (the _zledger keeps history
+        # truthful after a rewrite erases the epoch's manifest rows)
         if int(epoch) in _committed_epochs_ledger(spark, path):
             return True
-        return bool(
-            spark.read.parquet(_vtable_dir(fs, mpath))
-            .filter(F.col("epoch") == int(epoch)).limit(1).count()
-        )
+        return man is not None and bool(
+            man.filter(F.col("epoch") == int(epoch)).limit(1).count())
 
     if epoch is not None:
         if epoch < 1:
             raise ValueError("epoch 0 is reserved for build/re-cluster")
-        if committed(epoch):  # replayed batch: already landed
+        # replayed batch: already landed
+        if committed(spark.read.parquet(_vtable_dir(fs, mpath))):
             return
-    tmp = f"{path}.append-tmp-{uuid.uuid4().hex}"
+    tmp = _stage_dir(path)
     try:
-        _write_clustered(metrics, tmp, meta["bucket_ns"],
-                         meta["files_per_partition"], meta["bits"])
-        _write_manifest(spark, tmp, epoch=epoch)
-        new_rows = spark.read.parquet(posixpath.join(tmp, MANIFEST_DIR))
-        # materialize driver-side BEFORE the files move out from under
-        # the lazy plan — manifest-sized (one row per new file)
-        new_rows = local_frame(spark,
-            new_rows.collect(), new_rows.schema
-        )
+        write(tmp)
+        new_rows = _staged_manifest(spark, tmp)
+        _move_in(fs, tmp, path)
 
-        if cas:
-            # lock-free append: files are invisible until a snapshot
-            # names them, and the pointer create is the linearization
-            # point — the epoch check re-runs inside the merge on every
-            # CAS retry, so two replays of one epoch commit exactly once
-            _cas_move_in(fs, tmp, path)
+        def merge(cur):
+            if epoch is not None and committed(cur):
+                return None  # lost a same-epoch race: exactly-once
+            return new_rows if cur is None else cur.unionByName(new_rows)
 
-            def merge(cur):
-                if epoch is not None and committed(epoch):
-                    return None  # lost a same-epoch race: exactly-once
-                return new_rows if cur is None else cur.unionByName(new_rows)
-
-            _cas_publish_df(spark, fs, mpath, merge)
-            return
-
-        with store_lock(fs, path) as heartbeat:
-            if epoch is not None and committed(epoch):
-                return  # lost a same-epoch publish race: exactly-once
-            for i, rel in enumerate(fs.walk_files(tmp)):
-                if rel.startswith(MANIFEST_DIR) or rel.startswith(META_DIR):
-                    continue
-                if not rel.endswith(".parquet"):
-                    continue  # _SUCCESS etc. stay behind
-                if i % 64 == 0:
-                    heartbeat()  # a live slow move-in must not be stolen
-                dst = posixpath.join(path, rel)
-                fs.makedirs(posixpath.dirname(dst))
-                fs.rename(posixpath.join(tmp, rel), dst)
-
-            heartbeat()
-            recover_compaction(mpath)
-            merged = spark.read.parquet(mpath).unionByName(new_rows)
-            _publish_manifest(fs, merged, mpath)
+        _cas_publish_df(spark, fs, mpath, merge)
     finally:
         fs.rmtree(tmp)
 
 
 def _committed_epochs_ledger(spark: SparkSession, path: str) -> set[int]:
     """Epochs whose manifest rows no longer exist because a maintenance
-    op (optimize/retention) rewrote or dropped their files.  The ledger
-    keeps the exactly-once append replay check truthful across rewrites:
-    committed-ness is a fact about history, not about which files
-    currently carry the rows.  Absent ledger (pre-r12 store) = empty."""
-    from akumuli_spark.sources.layout import read_table_or_none
-
+    op (optimize/retention/rebuild) rewrote or dropped their files.  The
+    ledger keeps the exactly-once append replay check truthful across
+    rewrites: committed-ness is a fact about history, not about which
+    files currently carry the rows.  Absent ledger (pre-r12 store) =
+    empty."""
     lp = posixpath.join(path, LEDGER_DIR)
     led = read_table_or_none(spark, _vtable_dir(get_fs(path), lp))
     if led is None:
@@ -476,79 +461,45 @@ def _committed_epochs_ledger(spark: SparkSession, path: str) -> set[int]:
     return {r.epoch for r in led.select("epoch").collect()}
 
 
-def _ledger_add(spark: SparkSession, path: str, epochs: set[int],
-                cas: bool | None = None) -> None:
+def _ledger_add(spark: SparkSession, path: str, epochs: set[int]) -> None:
     """Record ``epochs`` as committed-but-no-longer-in-manifest.
     Ledger size is bounded by the number of appends ever folded away —
-    metadata-sized.  Publishes with the store's commit protocol: the
-    two-rename swap, or (CAS stores) the same conditional-PUT pointer
-    log as the manifest, with the union re-merged on every retry."""
+    metadata-sized.  Publishes through the same pointer log as the
+    manifest, with the union re-merged on every retry."""
     if not epochs:
         return
-    fs = get_fs(path)
-    lp = posixpath.join(path, LEDGER_DIR)
-    if cas is None:
-        cas = _store_is_cas(fs, path) or CasLog(fs, lp).exists()
-    if cas:
-        want = {int(e) for e in epochs}
+    want = {int(e) for e in epochs}
 
-        def merge(cur):
-            have = (
-                set() if cur is None
-                else {r.epoch for r in cur.select("epoch").collect()}
-            )
-            if want <= have:
-                return None
-            return local_frame(spark,
-                [(int(e),) for e in sorted(have | want)], "epoch long"
-            )
+    def merge(cur):
+        have = (
+            set() if cur is None
+            else {r.epoch for r in cur.select("epoch").collect()}
+        )
+        if want <= have:
+            return None
+        return local_frame(spark,
+            [(int(e),) for e in sorted(have | want)], "epoch long"
+        )
 
-        _cas_publish_df(spark, fs, lp, merge)
-        return
-    merged = sorted(_committed_epochs_ledger(spark, path) | set(epochs))
-    tmp = f"{lp}.compact-tmp"
-    fs.rmtree(tmp)
-    local_frame(spark,
-        [(int(e),) for e in merged], "epoch long"
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap_compact(fs, lp)
-
-
-def _publish_manifest(fs, manifest: DataFrame, mpath: str) -> None:
-    """Write the (metadata-sized) manifest frame to the sibling tmp and
-    swap it in — the shared two-rename publish every snapshot flip
-    (append, optimize, retention) goes through in RENAME mode.  The
-    plan is executed by the tmp write while ``mpath`` is still live, so
-    a lazily-read input over the current manifest is safe.  CAS-mode
-    stores publish through :func:`_cas_publish_df` instead."""
-    mtmp = f"{mpath}.compact-tmp"
-    fs.rmtree(mtmp)
-    manifest.coalesce(1).write.mode("overwrite").parquet(mtmp)
-    swap_compact(fs, mpath)
+    _cas_publish_df(spark, get_fs(path), posixpath.join(path, LEDGER_DIR),
+                    merge)
 
 
 def _vtable_dir(fs, tpath: str) -> str:
     """Resolve the CURRENT readable location of a versioned metadata
-    table (manifest / ledger): the highest CAS snapshot directory when
-    the table publishes through the pointer log, else the table path
-    itself after healing a possibly-crashed two-rename swap.  Every
-    metadata read in this module routes through here, so one store can
-    be served by either commit mode with no caller changes."""
-    log = CasLog(fs, tpath)
-    if log.exists():
-        _v, cur = log.current()
-        if cur is not None:
-            return cur
+    table (manifest / meta / ledger): the pointer log's current
+    snapshot directory, or — for a table written before the pointer
+    log existed — the bare table dir (:func:`_bare_dir`).  Every
+    metadata read in this module routes through here."""
+    _v, cur = CasLog(fs, tpath).current()
+    return cur if cur is not None else _bare_dir(tpath)
+
+
+def _bare_dir(tpath: str) -> str:
+    """The pre-pointer-log location of a metadata table: the bare dir,
+    healed first of a two-rename swap an older writer crashed in."""
     recover_compaction(tpath)
     return tpath
-
-
-def _store_is_cas(fs, path: str,
-                  manifest_dir: str = MANIFEST_DIR) -> bool:
-    """A store is CAS-committed iff its manifest has a pointer log —
-    one metadata probe, decided by the store itself rather than by the
-    caller (mixed writers must agree on the commit protocol)."""
-    return CasLog(fs, posixpath.join(path, manifest_dir)).exists()
 
 
 def _cas_publish_df(spark, fs, tpath: str, merge_fn,
@@ -570,14 +521,18 @@ def _cas_publish_df(spark, fs, tpath: str, merge_fn,
     variant letting a stale merge land ABOVE a rival's commit and
     silently erase its manifest rows.  Exactly-once append semantics
     hold because the epoch check re-runs inside ``merge_fn`` on every
-    retry.  Returns True when a version was committed, False when
-    ``merge_fn`` declined."""
+    retry.  With an empty log, the current table is the bare dir a
+    store written before the pointer log left (:func:`_bare_dir`), so
+    version 1 carries its rows forward.  Returns True when a version
+    was committed, False when ``merge_fn`` declined."""
     import random
     import time
 
     log = CasLog(fs, tpath)
     for attempt in range(retries):
         v_cur, cur_dir = log.current()
+        if cur_dir is None and fs.exists(_bare_dir(tpath)):
+            cur_dir = tpath
         cur = None if cur_dir is None else spark.read.parquet(cur_dir)
         out = merge_fn(cur)
         if out is None:
@@ -598,13 +553,13 @@ def _cas_publish_df(spark, fs, tpath: str, merge_fn,
     )
 
 
-def _cas_move_in(fs, tmp: str, path: str) -> None:
-    """Move a staged batch's DATA files into the table (CAS mode, no
-    lock): names carry the writing job's UUID so there are no
-    collisions, and the files stay invisible until a manifest snapshot
-    names them — an object store's non-atomic copy+delete "rename" is
-    therefore safe here.  Metadata subdirs (manifest/meta/ledger) stay
-    behind: they publish through their own channels."""
+def _move_in(fs, tmp: str, path: str) -> None:
+    """Move a staged batch's DATA files into the table: names carry the
+    writing job's UUID so there are no collisions, and the files stay
+    invisible until a manifest snapshot names them — an object store's
+    non-atomic copy+delete "rename" is therefore safe here.  Metadata
+    subdirs (manifest/meta/ledger) stay behind: they publish through
+    their own pointer logs."""
     skip = (MANIFEST_DIR, META_DIR, LEDGER_DIR)
     root = path.rstrip("/")
     fs.makedirs(root)  # fresh store: flat-layout files land at the root
@@ -616,35 +571,6 @@ def _cas_move_in(fs, tmp: str, path: str) -> None:
         if d != root:
             fs.makedirs(d)
         fs.rename(posixpath.join(tmp, rel), dst)
-
-
-def _carry_ledger_on_rebuild(spark: SparkSession, path: str,
-                             tmp: str) -> None:
-    """A full rebuild (:func:`zorder_metrics_table` /
-    :func:`zorder_corpus_table` over an existing store) resets every
-    manifest row to epoch 0 — erasing the evidence the exactly-once
-    replay check relies on.  Before the swap, fold the old store's
-    committed epochs (manifest rows ≥ 1 ∪ its ledger) into the NEW
-    store's ``_zledger``, so a checkpointed caller replaying a
-    committed epoch after the rebuild stays a no-op (ADVICE r12: the
-    corpus rebuild silently duplicated replayed documents)."""
-    old_man = read_table_or_none(
-        spark, _vtable_dir(get_fs(path), posixpath.join(path, MANIFEST_DIR))
-    )
-    committed: set[int] = set()
-    if old_man is not None and "epoch" in old_man.columns:
-        committed |= {
-            r.epoch for r in old_man.select("epoch").distinct().collect()
-            if r.epoch is not None and r.epoch >= 1
-        }
-    committed |= _committed_epochs_ledger(spark, path)
-    if not committed:
-        return
-    local_frame(spark,
-        [(int(e),) for e in sorted(committed)], "epoch long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        posixpath.join(tmp, LEDGER_DIR)
-    )
 
 
 def zorder_erosion(spark: SparkSession, path: str) -> DataFrame:
@@ -715,10 +641,11 @@ def zorder_optimize(spark: SparkSession, path: str,
        the build, staged in a private sibling: O(selected buckets), not
        O(table).
     3. One merged manifest (other buckets' rows untouched, selected
-       buckets' rows replaced) publishes via the two-rename swap —
+       buckets' rows replaced) publishes as one pointer-log version —
        readers see the whole optimize or none of it.
-    4. Replaced data files become invisible orphans, reclaimed by
-       :func:`vacuum_zorder` after its grace (Delta's OPTIMIZE→VACUUM
+    4. Replaced data files stay readable through the retained older
+       snapshots and are reclaimed by :func:`vacuum_zorder` once no
+       retained snapshot references them (Delta's OPTIMIZE→VACUUM
        split) — deleting them inline would race a reader that collected
        its file list from the pre-optimize snapshot.
 
@@ -731,26 +658,16 @@ def zorder_optimize(spark: SparkSession, path: str,
     select`` oracle entry and the erosion test).
 
     Concurrent appends are safe (VERDICT r12 Wrong #1): the publish
-    step holds the store publish lock and merges against a FRESH
-    manifest read, carrying forward every row whose file was not in the
-    replaced set — an append that landed into a *selected* bucket
-    between selection and publish keeps its rows (its files simply miss
-    this optimize; the next erosion pass picks them up).  Replaced
-    data files get their mtime reset BEFORE the publish, while they
-    are still manifest-listed (a listed file is un-vacuumable
-    regardless of mtime), so :func:`vacuum_zorder`'s grace counts from
-    ~replacement with no orphaned-at-original-mtime window for a
-    concurrent vacuum to race (ADVICE r12/r13); a reader holding the
-    pre-optimize snapshot outlives the grace as documented.  On CAS
-    stores both the lock and the re-aging are unnecessary: the
-    carry-forward merge re-runs on every conditional-PUT retry, and
-    vacuum's snapshot retention protects readers.  ``_race_hook`` is a
+    merges against the FRESHEST snapshot on every pointer-create retry,
+    carrying forward every row whose file was not in the replaced set —
+    an append that landed into a *selected* bucket between selection
+    and publish keeps its rows (its files simply miss this optimize;
+    the next erosion pass picks them up).  ``_race_hook`` is a
     test-only seam invoked between clustering and the publish."""
     fs = get_fs(path)
     meta = _read_zmeta(spark, path)
     if meta is None:
         raise ValueError(f"no z-store layout contract at {path}")
-    cas = _store_is_cas(fs, path)
     mpath = posixpath.join(path, MANIFEST_DIR)
     man = spark.read.parquet(_vtable_dir(fs, mpath))
 
@@ -786,25 +703,19 @@ def zorder_optimize(spark: SparkSession, path: str,
     old_files = [r.file for r in target.select("file").collect()]
     if not old_files:
         return 0
-    folded_epochs = {
-        r.epoch for r in target.select("epoch").distinct().collect()
-        if r.epoch is not None and r.epoch >= 1
-    }
+    folded_epochs = _appended_epochs(target)
 
     subset = (
         spark.read.option("basePath", path)
         .parquet(*[posixpath.join(path, f) for f in old_files])
         .drop("ts_bucket")  # _write_clustered re-derives it from ts_ns
     )
-    import uuid
-
-    tmp = f"{path}.append-tmp-{uuid.uuid4().hex}"
+    tmp = _stage_dir(path)
     try:
         _write_clustered(subset, tmp, meta["bucket_ns"],
                          meta["files_per_partition"], meta["bits"])
         _write_manifest(spark, tmp, epoch=0)
-        new_rows = spark.read.parquet(posixpath.join(tmp, MANIFEST_DIR))
-        new_rows = local_frame(spark, new_rows.collect(), new_rows.schema)
+        new_rows = _staged_manifest(spark, tmp)
 
         if _race_hook is not None:  # test-only: interleave a writer here
             _race_hook()
@@ -820,64 +731,13 @@ def zorder_optimize(spark: SparkSession, path: str,
             ))
             return fresh.join(fdf, "file", "left_anti")
 
-        if cas:
-            # lock-free: the carry-forward merge re-runs against the
-            # freshest snapshot on every CAS retry, so a concurrent
-            # append can never be dropped; replaced files stay readable
-            # through retained snapshots (no mtime re-aging — vacuum's
-            # snapshot retention is the reader grace on object stores)
-            _cas_move_in(fs, tmp, path)
-            _ledger_add(spark, path, folded_epochs, cas=True)
-            _cas_publish_df(
-                spark, fs, mpath,
-                lambda cur: new_rows if cur is None
-                else _keep_rows(cur).unionByName(new_rows),
-            )
-            return len(buckets)
-
-        # re-age the replaced files BEFORE the publish, while they are
-        # still manifest-listed (vacuum cannot reap a listed file
-        # regardless of mtime), so there is NO window where they sit
-        # orphaned at their original mtime for a concurrent vacuum to
-        # reap from under a pre-optimize reader (ADVICE r13).  Outside
-        # the lock: listed-ness is the protection, and a wide optimize
-        # would otherwise hold the lock for thousands of remote RPCs.
-        aged_failed = 0
-        for f in old_files:
-            if not fs.touch_mtime(posixpath.join(path, f)):
-                aged_failed += 1
-        if aged_failed:
-            import warnings
-
-            warnings.warn(
-                f"zorder_optimize: setTimes failed on {aged_failed} "
-                f"replaced files at {path}; vacuum's grace will count "
-                "from their ORIGINAL write time — run vacuum with a "
-                "grace longer than the store's full age, or use a "
-                "CAS-committed store (snapshot retention needs no "
-                "setTimes)", RuntimeWarning, stacklevel=2,
-            )
-
-        with store_lock(fs, path) as heartbeat:
-            for i, rel in enumerate(fs.walk_files(tmp)):
-                if rel.startswith(MANIFEST_DIR) or rel.startswith(META_DIR):
-                    continue
-                if not rel.endswith(".parquet"):
-                    continue
-                if i % 64 == 0:
-                    heartbeat()  # wide optimize: keep the lease alive
-                dst = posixpath.join(path, rel)
-                fs.makedirs(posixpath.dirname(dst))
-                fs.rename(posixpath.join(tmp, rel), dst)
-
-            heartbeat()
-            _ledger_add(spark, path, folded_epochs)
-            heartbeat()
-            recover_compaction(mpath)
-            _publish_manifest(
-                fs, _keep_rows(spark.read.parquet(mpath))
-                .unionByName(new_rows), mpath,
-            )
+        _move_in(fs, tmp, path)
+        _ledger_add(spark, path, folded_epochs)
+        _cas_publish_df(
+            spark, fs, mpath,
+            lambda cur: new_rows if cur is None
+            else _keep_rows(cur).unionByName(new_rows),
+        )
     finally:
         fs.rmtree(tmp)
     return len(buckets)
@@ -885,200 +745,129 @@ def zorder_optimize(spark: SparkSession, path: str,
 
 def zorder_retention(spark: SparkSession, path: str, keep_ns: int,
                      now_ns: int) -> int:
-    """Volume-recycling analogue for the z-store, manifest-first so it
-    is crash-safe at every step: expired ``ts_bucket`` partitions
-    (bucket < (now − keep) div bucket_ns, same cutoff rule as
-    ``layout.enforce_retention``) are first REMOVED FROM THE MANIFEST —
-    one two-rename publish, after which their files are invisible
-    orphans — and only then deleted as whole directories, zero data
-    scan.  A crash between the two steps just leaves orphans for
-    :func:`vacuum_zorder`.  The manifest rewrite holds the store
-    publish lock (a concurrent append's merge would otherwise resurrect
-    expired rows or lose its own).  Returns the number of dropped
-    partition dirs."""
-    import uuid
-
-    fs = get_fs(path)
+    """Volume-recycling analogue for the z-store, manifest-only:
+    expired ``ts_bucket`` partitions (bucket < (now − keep) div
+    bucket_ns, same cutoff rule as ``layout.enforce_retention``) leave
+    the manifest in one pointer-log publish, zero data scan.  Their
+    files and partition dirs become invisible orphans, and the space
+    comes back when :func:`vacuum_zorder` reclaims them after snapshot
+    expiry (a reader holding a pre-retention snapshot may still be
+    reading them).  The merge re-runs on every pointer-create conflict,
+    so a concurrent backfill append linearizes — whichever commits
+    second sees the other.  Epochs whose only manifest rows expire are
+    recorded in the ledger first, so their replay stays a no-op.
+    Returns the number of expired (metric, ts_bucket) partitions."""
     meta = _read_zmeta(spark, path)
     if meta is None:
         raise ValueError(f"no z-store layout contract at {path}")
     cutoff = (now_ns - keep_ns) // meta["bucket_ns"]
-    mpath = posixpath.join(path, MANIFEST_DIR)
+    dropped = [0]
 
-    if _store_is_cas(fs, path):
-        # manifest-only retention: one conditional-PUT publish removes
-        # the expired rows (the merge re-runs on conflict, so a
-        # concurrent backfill append linearizes — whichever commits
-        # second sees the other); the files and partition dirs become
-        # orphans reclaimed by vacuum after snapshot expiry — object
-        # stores have no atomic rename-to-trash, and deferred deletion
-        # is the honest protocol there
-        dropped = [0]
+    def merge(cur):
+        dropped[0] = 0  # recomputed per retry: a rival may have already
+        # expired these rows, and a stale count from a losing attempt
+        # must not be reported (r14 review)
+        if cur is None:
+            return None
+        exp = cur.filter(F.col("ts_bucket") < cutoff)
+        buckets = exp.select("metric", "ts_bucket").distinct().count()
+        if buckets == 0:
+            return None
+        _ledger_add(spark, path, _appended_epochs(exp))
+        dropped[0] = buckets
+        return cur.filter(F.col("ts_bucket") >= cutoff)
 
-        def merge(cur):
-            dropped[0] = 0  # recomputed per CAS retry: a rival may have
-            # already expired these rows, and a stale count from a
-            # losing attempt must not be reported (r14 review)
-            if cur is None:
-                return None
-            exp = cur.filter(F.col("ts_bucket") < cutoff)
-            buckets = exp.select("metric", "ts_bucket").distinct().count()
-            if buckets == 0:
-                return None
-            _ledger_add(spark, path, {
-                r.epoch
-                for r in exp.select("epoch").distinct().collect()
-                if r.epoch is not None and r.epoch >= 1
-            }, cas=True)
-            dropped[0] = buckets
-            return cur.filter(F.col("ts_bucket") >= cutoff)
-
-        _cas_publish_df(spark, fs, mpath, merge)
-        return dropped[0]
-
-    # per-run unique trash dir: two retention runs (or a crashed one's
-    # successor) must never rmtree a trash dir the other is still
-    # renaming into (ADVICE r13); crashed leftovers are reclaimed by
-    # vacuum's .trash-* sweep after the grace
-    trash = f"{path}.trash-{uuid.uuid4().hex}"
-    with store_lock(fs, path) as heartbeat:
-        recover_compaction(mpath)
-        expired = spark.read.parquet(mpath).filter(
-            F.col("ts_bucket") < cutoff)
-        # epochs whose only manifest rows expire must stay "committed"
-        # for the append replay check — record them in the ledger FIRST
-        # (a crash in between leaves the epoch in both, harmless OR)
-        _ledger_add(spark, path, {
-            r.epoch for r in expired.select("epoch").distinct().collect()
-            if r.epoch is not None and r.epoch >= 1
-        })
-        heartbeat()
-        kept = spark.read.parquet(mpath).filter(F.col("ts_bucket") >= cutoff)
-        _publish_manifest(fs, kept, mpath)
-
-        # directory sweep INSIDE the lock: a concurrent backfill append
-        # could otherwise publish files into an expired bucket between
-        # the manifest rewrite and this sweep, and the sweep would
-        # delete files the merged manifest references (manifest rows
-        # pointing at nothing).  Under the lock the sweep sees exactly
-        # the post-rewrite store; a later backfill lands whole and the
-        # NEXT retention run evicts it by the same cutoff rule.
-        fs.makedirs(trash)
-        dropped = 0
-        for i, rel in enumerate(fs.glob(path, "metric=*/ts_bucket=*")):
-            try:
-                bucket = int(posixpath.basename(rel).split("=", 1)[1])
-            except ValueError:  # pragma: no cover - foreign dirs alone
-                continue
-            if bucket < cutoff:
-                if dropped % 64 == 0:
-                    heartbeat()
-                fs.rename(posixpath.join(path, rel),
-                          posixpath.join(trash, uuid.uuid4().hex))
-                dropped += 1
-    fs.rmtree(trash)  # unreferenced after the sweep: no lock needed
-    return dropped
+    _cas_publish_df(spark, get_fs(path), posixpath.join(path, MANIFEST_DIR),
+                    merge)
+    return dropped[0]
 
 
 def vacuum_zorder(spark: SparkSession, path: str,
                   grace_s: float = 86_400.0,
                   now_s: float | None = None,
                   snapshots_keep: int = 3) -> int:
-    """Delete data files the manifest does not list — orphans from an
-    append that crashed before its manifest publish.  They were never
-    visible to any read, so deletion cannot change a result.  Also
-    reclaims stale append STAGING dirs (``{path}.append-tmp-*``
-    siblings a hard crash left behind — their contents were never
-    published, so they are pure disk leak).  Returns the number of
-    files + staging dirs removed.
+    """Reclaim the store's space: expired manifest snapshots, data files
+    no retained snapshot lists, empty partition dirs, and stale staging
+    dirs.  Returns the number of snapshot dirs + files + staging dirs
+    removed.
+
+    SNAPSHOT RETENTION (Delta/Iceberg's VACUUM model): manifest versions
+    beyond the newest ``snapshots_keep`` and superseded more than
+    ``grace_s`` ago are expired first (each was the entire visible
+    table for some reader), and a data file is an orphan only if NO
+    retained snapshot references it.  That covers every way a file
+    stops being live: files replaced by :func:`zorder_optimize` or a
+    rebuild, expired buckets dropped by :func:`zorder_retention` (whose
+    space comes back here, not at retention time), and files of an
+    append that crashed before its publish.  ``ts_bucket`` partition
+    dirs left empty are swept too.
 
     Concurrency: an IN-FLIGHT append's files are orphans until its
     publish, so deleting every unlisted file would race a live writer.
-    Delta's answer is a retention grace, adopted here: only files (and
-    staging dirs) whose mtime is older than ``grace_s`` (default 24 h)
-    are deleted — safe to schedule alongside appends as long as no
-    single append takes longer than the grace.  Files replaced by
-    :func:`zorder_optimize` have their mtime reset at replacement, so
-    the grace protects a reader holding the pre-optimize snapshot for
-    its full duration (ADVICE r12).  Pass ``grace_s=0`` to reclaim
+    Only files, empty dirs and staging dirs (``{path}.append-tmp-*``
+    siblings) whose mtime is older than ``grace_s`` (default 24 h) are
+    deleted — safe to schedule alongside appends as long as no single
+    append takes longer than the grace.  Pass ``grace_s=0`` (with
+    ``snapshots_keep=1`` to drop every older snapshot) to reclaim
     everything immediately (single-maintenance-writer mode).  ``now_s``
-    defaults to the wall clock; tests inject it.
+    defaults to the wall clock; tests inject it."""
+    return _vacuum(spark, path, "metric=*/ts_bucket=*/*.parquet",
+                   grace_s, now_s, snapshots_keep)
 
-    CAS stores add SNAPSHOT RETENTION (Delta/Iceberg's VACUUM model):
-    manifest versions beyond the newest ``snapshots_keep`` and older
-    than the grace are expired first (each was the entire visible
-    table for some reader), and a data file is an orphan only if NO
-    retained snapshot references it — which is also how files replaced
-    by OPTIMIZE age out without any ``setTimes`` support.  Empty
-    ts_bucket partition dirs left by a CAS retention are swept once
-    their files are gone."""
+
+def _vacuum(spark: SparkSession, path: str, data_glob: str,
+            grace_s: float, now_s: float | None, keep: int) -> int:
+    """The vacuum both z-stores share; ``data_glob`` matches the
+    store's data files relative to ``path``."""
     import time
 
     fs = get_fs(path)
     now = time.time() if now_s is None else now_s
     mpath = posixpath.join(path, MANIFEST_DIR)
-    removed = 0
     log = CasLog(fs, mpath)
-    if log.exists():
-        # the protected set FIRST (the keep newest + everything
-        # superseded < grace ago — grace counts from supersession, a
-        # reader may be serving any of them), then expire the rest,
-        # then union the protected snapshots' file refs: a data file is
-        # an orphan only if NO protected snapshot references it
-        dirs = log.protected(snapshots_keep, grace_s, now_s=now)
-        removed += log.vacuum(keep=snapshots_keep, grace_s=grace_s,
-                              now_s=now)
-        llog = CasLog(fs, posixpath.join(path, LEDGER_DIR))
-        if llog.exists():
-            removed += llog.vacuum(keep=snapshots_keep, grace_s=grace_s,
-                                   now_s=now)
-        listed = set()
-        for d in dirs:
-            listed |= {
-                r.file
-                for r in spark.read.parquet(d).select("file").collect()
-            }
-    else:
-        recover_compaction(mpath)
-        listed = {
-            r.file
-            for r in spark.read.parquet(mpath).select("file").collect()
+    # the protected set FIRST (the keep newest + everything superseded
+    # < grace ago — grace counts from supersession, a reader may be
+    # serving any of them), then expire the rest, then union the
+    # protected snapshots' file refs: a data file is an orphan only if
+    # NO protected snapshot references it.  A store written before the
+    # pointer log has no snapshots yet: its bare manifest is the one.
+    dirs = log.protected(keep, grace_s, now_s=now) or {_bare_dir(mpath)}
+    removed = sum(
+        CasLog(fs, posixpath.join(path, t)).vacuum(
+            keep=keep, grace_s=grace_s, now_s=now)
+        for t in (MANIFEST_DIR, META_DIR, LEDGER_DIR)
+    )
+    listed = set()
+    for d in dirs:
+        listed |= {
+            r.file for r in spark.read.parquet(d).select("file").collect()
         }
-    for rel in fs.glob(path, "metric=*/ts_bucket=*/*.parquet"):
-        if rel not in listed:
-            f = posixpath.join(path, rel)
-            try:
-                if now - fs.getmtime(f) < grace_s:
-                    continue  # possibly a live append's unpublished file
-            except OSError:  # pragma: no cover - raced by its publisher
-                continue
+
+    def aged(p: str) -> bool:
+        try:
+            return now - fs.getmtime(p) >= grace_s
+        except OSError:  # pragma: no cover - raced by its writer
+            return False
+
+    for rel in fs.glob(path, data_glob):
+        f = posixpath.join(path, rel)
+        # an unlisted file inside the grace may be a live append's
+        if rel not in listed and aged(f):
             fs.remove(f)
             removed += 1
-    if log.exists():
-        # partition dirs whose files are all gone (CAS retention never
-        # renames dirs away) — only empty dirs older than the grace go,
-        # so a just-created dir whose append is about to move files in
-        # is never swept from under the writer
-        for rel in fs.glob(path, "metric=*/ts_bucket=*"):
-            d = posixpath.join(path, rel)
-            if fs.walk_files(d):
-                continue
-            try:
-                if now - fs.getmtime(d) < grace_s:
-                    continue
-            except OSError:  # pragma: no cover - raced
-                continue
+    # partition dirs whose files are all gone (retention never deletes
+    # dirs) — only empty dirs older than the grace go, so a just-created
+    # dir whose append is about to move files in is never swept from
+    # under the writer
+    for rel in fs.glob(path, "metric=*/ts_bucket=*"):
+        d = posixpath.join(path, rel)
+        if not fs.walk_files(d) and aged(d):
             fs.rmtree(d)
     par = parent_dir(path)
     base = posixpath.basename(path.rstrip("/"))
-    for pattern in (f"{base}.append-tmp-*", f"{base}.trash-*"):
-        for rel in fs.glob(par, pattern):
-            d = posixpath.join(par, rel)
-            try:
-                if now - fs.getmtime(d) < grace_s:
-                    continue
-            except OSError:  # pragma: no cover - raced
-                continue
+    for rel in fs.glob(par, f"{base}.append-tmp-*"):
+        d = posixpath.join(par, rel)
+        if aged(d):
             fs.rmtree(d)
             removed += 1
     return removed
@@ -1117,8 +906,6 @@ def _write_manifest(spark: SparkSession, table_dir: str,
     :func:`zorder_append` checks for exactly-once growth.  Costs one
     stats-only scan of the freshly written table — the same
     collect-statistics pass ``OPTIMIZE`` runs."""
-    from akumuli_spark.sources.layout import read_table_or_none
-
     manifest_schema = (
         "file string, metric string, ts_bucket long, series_min string, "
         "series_max string, ts_min long, ts_max long, rows long, "
@@ -1151,6 +938,16 @@ def _write_manifest(spark: SparkSession, table_dir: str,
     )
 
 
+def _prune(man: DataFrame, cond: Column) -> tuple[int, list[str]]:
+    """(manifest files, files whose rectangles meet ``cond``) from ONE
+    Spark job — the total is the pruning evidence ``stats`` reports."""
+    r = man.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_list(F.when(cond, F.col("file"))).alias("files"),
+    ).first()
+    return r.n, list(r.files)
+
+
 def zorder_select(spark: SparkSession, path: str,
                   metric: str | list[str] | None = None,
                   series: str | list[str] | None = None,
@@ -1164,8 +961,8 @@ def zorder_select(spark: SparkSession, path: str,
     only the surviving relative paths are collected.  The residual exact
     predicates are then applied to the pruned scan — the manifest is an
     over-approximation by construction, never a source of truth for row
-    membership, so a stale-free read needs no locking: the swap is
-    atomic and data+manifest publish together.
+    membership, so a stale-free read needs no locking: every snapshot
+    is immutable and names only files moved in before it published.
 
     ``ts_from``/``ts_to`` follow the engine's semi-open ``[from, to)``
     (queryprocessor framework, /root/reference/libakumuli/query_processing
@@ -1177,7 +974,7 @@ def zorder_select(spark: SparkSession, path: str,
     receives ``files_total``/``files_selected`` — the pruning evidence
     tests and the plan audit assert on.
     """
-    recover_compaction(path)
+    recover_compaction(path)  # a rebuild by an older writer crashed mid-swap
     # absent/empty stores answer in the caller's frame shape — metrics
     # by default, the events shape (body payload) via empty_schema
     empty = local_frame(spark, [], empty_schema or ENGINE_SCHEMA)
@@ -1187,8 +984,9 @@ def zorder_select(spark: SparkSession, path: str,
             stats.update(files_total=0, files_selected=0)
         return empty
     mpath = posixpath.join(path, MANIFEST_DIR)
-    # resolve the current snapshot (CAS pointer log or healed swap dir);
-    # raises if the manifest is missing entirely: broken store
+    # resolve the current snapshot (pointer log, or the bare dir of a
+    # store written before it); raises if the manifest is missing
+    # entirely: broken store
     man = spark.read.parquet(_vtable_dir(fs, mpath))
 
     def names(x):
@@ -1208,8 +1006,6 @@ def zorder_select(spark: SparkSession, path: str,
     if ts_to is not None:
         cond = cond & (F.col("ts_min") < ts_to)
 
-    total = man.count()
-    pruned = man.filter(cond)
     wanted_df = None
     if wanted is not None and len(wanted) > _SERIES_EXPR_CAP:
         # wide series list: a Python OR-arm per series would blow up the
@@ -1219,13 +1015,16 @@ def zorder_select(spark: SparkSession, path: str,
         wanted_df = local_frame(spark,
             [(s,) for s in wanted], "__wanted_series string"
         )
-        pruned = pruned.join(
+        pruned = man.filter(cond).join(
             F.broadcast(wanted_df),
             (F.col("series_min") <= F.col("__wanted_series"))
             & (F.col("__wanted_series") <= F.col("series_max")),
             "left_semi",
         )
-    files = [r.file for r in pruned.select("file").collect()]
+        total = man.count()
+        files = [r.file for r in pruned.select("file").collect()]
+    else:
+        total, files = _prune(man, cond)
     if stats is not None:
         stats.update(files_total=total, files_selected=len(files))
     if not files:
@@ -1270,13 +1069,9 @@ def zorder_select(spark: SparkSession, path: str,
 # two dimensions a single sort cannot serve
 # ---------------------------------------------------------------------------
 
-CORPUS_MANIFEST_DIR = "_zmanifest"
-
-
 def zorder_corpus_table(spark: SparkSession, docs: DataFrame, path: str,
                         cat_col: str = "lang", num_col: str = "n_chars",
-                        files_total: int = 32, bits: int = ZBITS,
-                        cas_commit: bool | None = None) -> None:
+                        files_total: int = 32, bits: int = ZBITS) -> None:
     """Cluster a document corpus along (categorical, numeric) — by
     default (lang, n_chars) — and publish a per-file min/max manifest,
     so the canonical curation scan shapes both skip files:
@@ -1291,66 +1086,33 @@ def zorder_corpus_table(spark: SparkSession, docs: DataFrame, path: str,
     tails).  Files are z-range partitions of the interleaved key, flat
     (no partition dirs — language cardinality is too low and too skewed
     for directory partitioning at corpus scale; the manifest carries
-    the pruning instead).  Publish is the same atomic two-rename swap
-    as the metrics store; the layout contract (cat_col, num_col, bits,
-    files_total) travels in ``{path}/_zmeta`` so appends reproduce it
-    and serves validate against it (the stored-contract rule).  A
-    rebuild IS the corpus store's OPTIMIZE: the table is flat, so the
-    scoped variant the metrics store needs has no sub-table unit here —
-    re-cluster when :func:`zorder_corpus_append` erosion costs more
-    than the one range-shuffle write.  A rebuild over an existing store
-    carries the committed append epochs into the new store's
-    ``_zledger`` (the rebuild resets manifest rows to epoch 0, so
-    without the carry a checkpointed caller replaying a committed epoch
-    would silently duplicate documents — ADVICE r12)."""
-    fs = get_fs(path)
-    cas = prefers_cas(path) if cas_commit is None else bool(cas_commit)
-    if _store_is_cas(fs, path, CORPUS_MANIFEST_DIR):
-        cas = True
-    tmp = f"{path}.compact-tmp"
-    fs.rmtree(tmp)
-    _write_corpus_clustered(docs, tmp, cat_col, num_col, files_total, bits)
-    _write_corpus_manifest(spark, tmp, cat_col, num_col)
-    meta_df = local_frame(spark,
-        [(ZORDER_LAYOUT_VERSION, cat_col, num_col, int(files_total),
-          int(bits))],
-        "layout_version int, cat_col string, num_col string, "
-        "files_total int, bits int",
-    )
-    if not cas:
-        meta_df.coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(tmp, META_DIR)
-        )
-        _carry_ledger_on_rebuild(spark, path, tmp)
-        swap_compact(fs, path)
-        return
-
-    # CAS build/rebuild — same protocol as zorder_metrics_table's CAS
-    # branch: epoch carry first, invisible move-in, one pointer commit
+    the pruning instead).  Publish is the metrics store's build
+    protocol (:func:`_publish_build`); the layout contract (cat_col,
+    num_col, bits, files_total) travels in ``{path}/_zmeta`` so appends
+    reproduce it and serves validate against it (the stored-contract
+    rule).  A rebuild IS the corpus store's OPTIMIZE: the table is flat,
+    so the scoped variant the metrics store needs has no sub-table unit
+    here — re-cluster when :func:`zorder_corpus_append` erosion costs
+    more than the one range-shuffle write.  A rebuild may change
+    ``bits`` and ``files_total`` (they only shape clustering) but not
+    ``cat_col``/``num_col``, which fix what the manifest rectangles
+    bound.  A rebuild over an existing store carries the committed
+    append epochs into the ``_zledger`` (the rebuild resets manifest
+    rows to epoch 0, so without the carry a checkpointed caller
+    replaying a committed epoch would silently duplicate documents —
+    ADVICE r12)."""
+    meta = {"layout_version": ZORDER_LAYOUT_VERSION, "cat_col": cat_col,
+            "num_col": num_col, "files_total": int(files_total),
+            "bits": int(bits)}
     old_meta = _read_corpus_zmeta(spark, path)
-    if old_meta is not None and (
-        old_meta["cat_col"] != cat_col or old_meta["num_col"] != num_col
-        or old_meta["bits"] != int(bits)
-    ):
-        raise ValueError(
-            f"CAS rebuild at {path} cannot change layout parameters "
-            f"(stored {old_meta}); use a fresh path"
-        )
-    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
-    try:
-        new_man = spark.read.parquet(
-            posixpath.join(tmp, CORPUS_MANIFEST_DIR))
-        new_man = local_frame(spark, new_man.collect(), new_man.schema)
-        _carry_committed_epochs_cas(spark, fs, path,
-                                    manifest_dir=CORPUS_MANIFEST_DIR)
-        _cas_move_in(fs, tmp, path)
-        if old_meta is None:
-            meta_df.coalesce(1).write.mode("overwrite").parquet(
-                posixpath.join(path, META_DIR)
-            )
-        _cas_publish_df(spark, fs, mpath, lambda cur: new_man)
-    finally:
-        fs.rmtree(tmp)
+    _refuse_layout_drift(path, old_meta, meta, ("cat_col", "num_col"))
+
+    def write(tmp: str) -> None:
+        _write_corpus_clustered(docs, tmp, cat_col, num_col, files_total,
+                                bits)
+        _write_corpus_manifest(spark, tmp, cat_col, num_col)
+
+    _publish_build(spark, path, meta, _CORPUS_META_SCHEMA, old_meta, write)
 
 
 def _write_corpus_clustered(docs: DataFrame, out_dir: str, cat_col: str,
@@ -1384,21 +1146,9 @@ def _write_corpus_clustered(docs: DataFrame, out_dir: str, cat_col: str,
 
 
 def _read_corpus_zmeta(spark: SparkSession, path: str) -> dict | None:
-    from akumuli_spark.sources.layout import read_table_or_none
-
-    meta = read_table_or_none(spark, posixpath.join(path, META_DIR))
-    if meta is None or "cat_col" not in meta.columns:
+    r = _read_zmeta(spark, path)
+    if r is None or "cat_col" not in r:
         return None  # pre-r12 corpus store (or a metrics store)
-    rows = meta.collect()  # one row — layout-sized
-    if not rows:
-        return None
-    r = rows[0].asDict()
-    if r["layout_version"] > ZORDER_LAYOUT_VERSION:
-        raise ValueError(
-            f"corpus z-store at {path} uses layout version "
-            f"{r['layout_version']}; this build reads "
-            f"≤ {ZORDER_LAYOUT_VERSION}"
-        )
     return r
 
 
@@ -1409,8 +1159,8 @@ def zorder_corpus_append(spark: SparkSession, docs: DataFrame, path: str,
     store's snapshot protocol (a training corpus GROWS — previously the
     only way to absorb new documents was a full rebuild): the batch is
     clustered under the STORED contract, staged in a private sibling,
-    its files renamed in (invisible — reads serve the manifest), and
-    the merged manifest published with one two-rename swap.
+    its files moved in (invisible — reads serve the manifest), and the
+    merged manifest published as one pointer-log version, lock-free.
 
     Exactly-once via ``epoch`` (≥ 1; the manifest is the ledger, a
     committed epoch's replay is a no-op); without one, replays
@@ -1425,11 +1175,7 @@ def zorder_corpus_append(spark: SparkSession, docs: DataFrame, path: str,
     Committed-ness consults the ``_zledger`` as well as the manifest:
     a rebuild (:func:`zorder_corpus_table`) resets manifest epochs but
     carries committed ones into the ledger, so a replay after OPTIMIZE
-    stays a no-op (ADVICE r12).  The publish step holds the store
-    publish lock — same linearizability contract as the metrics store."""
-    import uuid
-
-    fs = get_fs(path)
+    stays a no-op (ADVICE r12)."""
     meta = _read_corpus_zmeta(spark, path)
     if meta is None:
         raise ValueError(
@@ -1437,65 +1183,16 @@ def zorder_corpus_append(spark: SparkSession, docs: DataFrame, path: str,
             "zorder_corpus_table first (pre-contract stores must be "
             "rebuilt)"
         )
-    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
 
-    cas = _store_is_cas(fs, path, CORPUS_MANIFEST_DIR)
-
-    def committed(epoch: int) -> bool:
-        if int(epoch) in _committed_epochs_ledger(spark, path):
-            return True
-        return bool(
-            spark.read.parquet(_vtable_dir(fs, mpath))
-            .filter(F.col("epoch") == int(epoch)).limit(1).count()
-        )
-
-    if epoch is not None:
-        if epoch < 1:
-            raise ValueError("epoch 0 is reserved for build/re-cluster")
-        if committed(epoch):
-            return
-    tmp = f"{path}.append-tmp-{uuid.uuid4().hex}"
-    try:
+    def write(tmp: str) -> None:
         _write_corpus_clustered(
             docs, tmp, meta["cat_col"], meta["num_col"],
             files_total or meta["files_total"], meta["bits"],
         )
         _write_corpus_manifest(spark, tmp, meta["cat_col"],
                                meta["num_col"], epoch=epoch)
-        new_rows = spark.read.parquet(posixpath.join(tmp, CORPUS_MANIFEST_DIR))
-        new_rows = local_frame(spark, new_rows.collect(), new_rows.schema)
 
-        if cas:
-            # lock-free, same protocol as the metrics store: invisible
-            # file move-in, then a conditional-PUT merge whose epoch
-            # check re-runs on every retry
-            _cas_move_in(fs, tmp, path)
-
-            def merge(cur):
-                if epoch is not None and committed(epoch):
-                    return None
-                return new_rows if cur is None else cur.unionByName(new_rows)
-
-            _cas_publish_df(spark, fs, mpath, merge)
-            return
-
-        with store_lock(fs, path) as heartbeat:
-            if epoch is not None and committed(epoch):
-                return  # lost a same-epoch publish race: exactly-once
-            for i, f in enumerate(fs.walk_files(tmp)):
-                if "/" not in f and f.endswith(".parquet"):
-                    # flat layout: data at the root
-                    if i % 64 == 0:
-                        heartbeat()
-                    fs.rename(posixpath.join(tmp, f),
-                              posixpath.join(path, f))
-
-            heartbeat()
-            recover_compaction(mpath)
-            merged = spark.read.parquet(mpath).unionByName(new_rows)
-            _publish_manifest(fs, merged, mpath)
-    finally:
-        fs.rmtree(tmp)
+    _append_batch(spark, path, epoch, write)
 
 
 def zorder_corpus_erosion(spark: SparkSession, path: str) -> DataFrame:
@@ -1508,7 +1205,7 @@ def zorder_corpus_erosion(spark: SparkSession, path: str) -> DataFrame:
     OPTIMIZE is the flat rebuild (:func:`zorder_corpus_table`); this
     report is its evidence-driven trigger."""
     meta = _read_corpus_zmeta(spark, path)
-    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+    mpath = posixpath.join(path, MANIFEST_DIR)
     man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
     agg = man.agg(
         F.count(F.lit(1)).alias("files"),
@@ -1529,67 +1226,17 @@ def zorder_corpus_erosion(spark: SparkSession, path: str) -> DataFrame:
 def vacuum_zorder_corpus(spark: SparkSession, path: str,
                          grace_s: float = 86_400.0,
                          now_s: float | None = None) -> int:
-    """Corpus twin of :func:`vacuum_zorder`: delete unlisted root data
-    files (crashed-append orphans, never visible to any read) and stale
-    ``.append-tmp-*`` staging siblings, sparing anything younger than
-    ``grace_s`` (a possibly-live append)."""
-    import time
-
-    fs = get_fs(path)
-    now = time.time() if now_s is None else now_s
-    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
-    removed = 0
-    log = CasLog(fs, mpath)
-    if log.exists():
-        # snapshot retention, as in vacuum_zorder: protected set first
-        # (grace counts from supersession), expire the rest, spare
-        # files any protected snapshot still references
-        dirs = log.protected(3, grace_s, now_s=now)
-        removed += log.vacuum(keep=3, grace_s=grace_s, now_s=now)
-        llog = CasLog(fs, posixpath.join(path, LEDGER_DIR))
-        if llog.exists():
-            removed += llog.vacuum(keep=3, grace_s=grace_s, now_s=now)
-        listed = set()
-        for d in dirs:
-            listed |= {
-                r.file
-                for r in spark.read.parquet(d).select("file").collect()
-            }
-    else:
-        recover_compaction(mpath)
-        listed = {
-            r.file
-            for r in spark.read.parquet(mpath).select("file").collect()
-        }
-    for rel in fs.glob(path, "*.parquet"):
-        if rel not in listed:
-            f = posixpath.join(path, rel)
-            try:
-                if now - fs.getmtime(f) < grace_s:
-                    continue
-            except OSError:  # pragma: no cover - raced by its publisher
-                continue
-            fs.remove(f)
-            removed += 1
-    par = parent_dir(path)
-    base = posixpath.basename(path.rstrip("/"))
-    for rel in fs.glob(par, f"{base}.append-tmp-*"):
-        d = posixpath.join(par, rel)
-        try:
-            if now - fs.getmtime(d) < grace_s:
-                continue
-        except OSError:  # pragma: no cover - raced
-            continue
-        fs.rmtree(d)
-        removed += 1
-    return removed
+    """Corpus twin of :func:`vacuum_zorder` (same snapshot retention,
+    keeping the newest 3 snapshots): delete root data files no retained
+    snapshot lists and stale ``.append-tmp-*`` staging siblings,
+    sparing anything younger than ``grace_s`` (a possibly-live
+    append)."""
+    return _vacuum(spark, path, "*.parquet", grace_s, now_s, 3)
 
 
 def _write_corpus_manifest(spark: SparkSession, table_dir: str,
                            cat_col: str, num_col: str,
                            epoch: int | None = 0) -> None:
-    from akumuli_spark.sources.layout import read_table_or_none
-
     schema = (
         f"file string, cat_min string, cat_max string, "
         f"num_min long, num_max long, rows long, epoch long"
@@ -1601,7 +1248,7 @@ def _write_corpus_manifest(spark: SparkSession, table_dir: str,
     )
     if probe is None:
         local_frame(spark, [], schema).coalesce(1).write.mode(
-            "overwrite").parquet(posixpath.join(table_dir, CORPUS_MANIFEST_DIR))
+            "overwrite").parquet(posixpath.join(table_dir, MANIFEST_DIR))
         return
     (
         df.withColumn("file", _rel_file_expr(probe.f, table_dir))
@@ -1615,7 +1262,7 @@ def _write_corpus_manifest(spark: SparkSession, table_dir: str,
         )
         .withColumn("epoch", F.lit(epoch).cast("long"))
         .coalesce(1).write.mode("overwrite")
-        .parquet(posixpath.join(table_dir, CORPUS_MANIFEST_DIR))
+        .parquet(posixpath.join(table_dir, MANIFEST_DIR))
     )
 
 
@@ -1635,7 +1282,7 @@ def zorder_corpus_select(spark: SparkSession, path: str,
     r12 layout contract, (cat_col, num_col) are validated against it —
     a mismatched serve would prune on rectangles computed over the
     WRONG columns and silently drop files."""
-    recover_compaction(path)
+    recover_compaction(path)  # a rebuild by an older writer crashed mid-swap
     meta = _read_corpus_zmeta(spark, path)
     if meta is not None and (
         meta["cat_col"] != cat_col or meta["num_col"] != num_col
@@ -1646,7 +1293,7 @@ def zorder_corpus_select(spark: SparkSession, path: str,
             f"({cat_col}, {num_col}) — the manifest rectangles would "
             "mis-prune; rebuild or pass the stored columns"
         )
-    mpath = posixpath.join(path, CORPUS_MANIFEST_DIR)
+    mpath = posixpath.join(path, MANIFEST_DIR)
     man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
 
     cond = F.lit(True)
@@ -1661,8 +1308,7 @@ def zorder_corpus_select(spark: SparkSession, path: str,
     if num_hi is not None:
         cond = cond & (F.col("num_min") < num_hi)
 
-    total = man.count()
-    files = [r.file for r in man.filter(cond).select("file").collect()]
+    total, files = _prune(man, cond)
     if stats is not None:
         stats.update(files_total=total, files_selected=len(files))
     if not files:

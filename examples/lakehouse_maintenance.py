@@ -107,8 +107,8 @@ def main() -> None:
         yr = 365 * DAY
         t98 = parse_timestamp_ns("19981231T000000")
         dropped = zorder_retention(spark, zpath, keep_ns=2 * yr, now_ns=t98)
-        print(f"append published atomically; retention dropped {dropped} "
-              f"partition dirs (zero scan)")
+        print(f"append published atomically; retention expired {dropped} "
+              f"partitions (zero scan; vacuum frees their files)")
 
         # the r12 maintenance loop: evidence-driven scoped OPTIMIZE —
         # the erosion report (manifest-only) names the buckets appends
@@ -124,10 +124,11 @@ def main() -> None:
         n_eroded = eroded.count()
         t = time.time()
         n_opt = zorder_optimize(spark, zpath)
-        reclaimed = vacuum_zorder(spark, zpath, grace_s=0)
+        reclaimed = vacuum_zorder(spark, zpath, grace_s=0, snapshots_keep=1)
         print(f"erosion report: {n_eroded} eroded buckets; scoped "
               f"optimize re-clustered {n_opt} in {time.time() - t:.1f}s; "
-              f"vacuum reclaimed {reclaimed} replaced files")
+              f"vacuum reclaimed {reclaimed} replaced/expired files "
+              f"and snapshots")
 
         # events in their own z-store: select-events file-pruned too
         from akumuli_spark.sources.testdata import events_view

@@ -86,3 +86,19 @@ def assert_matches_oracle(spark_df, duck_con, sql: str, *, rtol=1e-9, atol=1e-9)
                 check_names=False,
                 obj=f"column {c!r}",
             )
+
+
+def drop_newest_snapshot(path: str, table: str = "_zmanifest") -> None:
+    """Roll one z-store metadata table back a version, as if the writer
+    of its newest snapshot crashed before creating the pointer: remove
+    the newest pointer and the snapshot dir it names.  Data files the
+    writer moved in stay on disk, unlisted."""
+    import posixpath
+
+    from akumuli_spark.sources.fs import CasLog, get_fs
+
+    fs = get_fs(path)
+    log = CasLog(fs, posixpath.join(path, table))
+    version, snapshot = log.current()
+    fs.rmtree(snapshot)
+    fs.remove(posixpath.join(log.log_dir, f"{version:020d}{log.PTR_SUFFIX}"))

@@ -1,18 +1,13 @@
-"""The conditional-PUT commit protocol (akumuli_spark.sources.fs.CasLog)
-and the object-store honesty fixes from VERDICT/ADVICE r13:
+"""The conditional-PUT commit protocol (akumuli_spark.sources.fs.CasLog),
+the one protocol every z-store publishes through:
 
 * protocol tests on :class:`MemoryStoreFS` — an in-memory fake with
   OBJECT-STORE semantics (copy+delete rename, atomic conditional-PUT
-  create, injectable clock, optional setTimes support) and fault hooks,
-  pinning the CAS-conflict / crash-between-steps / double-publish
-  matrix without Spark;
-* owner-token lock honesty — release/heartbeat verify ownership, a
-  heartbeat needs no ``setTimes``, the lease-break TOCTOU restores a
-  live holder's lock;
+  create, injectable clock) and fault hooks, pinning the CAS-conflict /
+  crash-between-steps / double-publish matrix without Spark;
 * the full z-store lifecycle (build → append/replay → optimize →
-  retention → vacuum → select) over CAS commits, both on a bare local
-  path (``cas_commit=True``) and over a ``file://`` URI through
-  HadoopStoreFS.
+  retention → vacuum → select) and the rebuild contract, both on a
+  bare local path and over a ``file://`` URI through HadoopStoreFS.
 """
 
 from __future__ import annotations
@@ -26,18 +21,18 @@ from akumuli_spark.api import open_zorder_database
 from akumuli_spark.sources.fs import (
     CasLog,
     LocalStoreFS,
-    LockLostError,
     MemoryStoreFS,
-    prefers_cas,
-    store_lock,
+    get_fs,
 )
 from akumuli_spark.sources.zorder import (
+    MANIFEST_DIR,
     vacuum_zorder,
     vacuum_zorder_corpus,
     zorder_append,
     zorder_corpus_append,
     zorder_corpus_select,
     zorder_corpus_table,
+    zorder_erosion,
     zorder_metrics_table,
     zorder_optimize,
     zorder_retention,
@@ -193,14 +188,6 @@ def test_cas_vacuum_grace_counts_from_supersession():
     assert not fs.exists(old_dir)
 
 
-def test_touch_mtime_missing_path_is_not_a_clock_failure(tmp_path):
-    """Missing path → True on every seam impl: a concurrent retention
-    racing the optimize re-age loop must not masquerade as a
-    setTimes-unsupported filesystem (r14 review)."""
-    assert LocalStoreFS().touch_mtime(str(tmp_path / "gone")) is True
-    assert MemoryStoreFS().touch_mtime("s3a://b/gone") is True
-
-
 def test_cas_rename_nonatomicity_is_harmless():
     """MemoryStoreFS renames are copy+delete; a crash mid-rename leaves
     partial state — which the manifest protocol never observes, because
@@ -299,75 +286,6 @@ def test_cas_dead_burn_skipped_after_grace_but_inflight_wins():
     assert log.current() == (4, log.dir_for(rival))
 
 
-# ---------------------------------------------------------------------------
-# owner-token lock honesty (VERDICT r13 Wrong #1, ADVICE r13)
-# ---------------------------------------------------------------------------
-
-
-def _clocked(fs, **kw):
-    return store_lock(fs, "s3a://bucket/store", clock=fs.now,
-                      sleep=lambda s: fs.advance(s), **kw)
-
-
-def test_lock_heartbeat_without_settimes():
-    """The heartbeat rewrites lock CONTENT, so it works where setTimes
-    silently no-ops — the r13 silently-stealable scenario is gone."""
-    fs = MemoryStoreFS()
-    fs.settimes_supported = False
-    with _clocked(fs, lease_s=10) as hb:
-        lock = "s3a://bucket/store.lock"
-        m0 = fs.getmtime(lock)
-        c0 = fs.read_bytes(lock)
-        fs.advance(5)
-        hb()
-        assert fs.getmtime(lock) > m0
-        assert fs.read_bytes(lock) != c0  # beat counter advanced
-
-
-def test_stale_holder_release_spares_thief_and_surfaces_loss():
-    """ADVICE r13 (medium): a holder that stalls past its lease, loses
-    the lock, then resumes must (a) get LockLostError from heartbeat and
-    (b) NOT delete the new holder's lock on release."""
-    fs = MemoryStoreFS()
-    ctx = _clocked(fs, lease_s=10)
-    hb1 = ctx.__enter__()
-    fs.advance(11)  # holder stalls past the lease
-    with _clocked(fs, lease_s=10) as hb2:
-        with pytest.raises(LockLostError):
-            hb1()
-        ctx.__exit__(None, None, None)  # stale release: must not unlock
-        assert fs.exists("s3a://bucket/store.lock")
-        hb2()  # thief is unaffected
-    assert not fs.exists("s3a://bucket/store.lock")
-
-
-def test_lease_break_toctou_restores_live_holder():
-    """ADVICE r13 (low): a heartbeat landing between a breaker's probe
-    and its rename must NOT lose the holder the lock — the breaker
-    compares tombstone content and renames it back."""
-    fs = MemoryStoreFS()
-    ctx = _clocked(fs, lease_s=5)
-    hb = ctx.__enter__()
-    fs.advance(6)  # mtime is stale …
-
-    fired = [False]
-
-    def beat_during_break(op, path):
-        if op == "rename_copy" and not fired[0]:
-            fired[0] = True
-            fs.on_op = None
-            hb()  # … but the holder is alive: beat lands mid-break
-
-    fs.on_op = beat_during_break
-    with pytest.raises(TimeoutError):
-        c2 = _clocked(fs, lease_s=5, timeout_s=3)
-        c2.__enter__()
-    assert fired[0]
-    hb()  # holder still owns the (restored) lock
-    ctx.__exit__(None, None, None)
-    assert not fs.exists("s3a://bucket/store.lock")
-
-
 def test_local_rename_refuses_existing_file_destination(tmp_path):
     """ADVICE r13 (low): both seam impls honor one semantic — an
     existing destination FILE refuses instead of silently clobbering."""
@@ -381,15 +299,8 @@ def test_local_rename_refuses_existing_file_destination(tmp_path):
     assert open(b).read() == b  # untouched
 
 
-def test_prefers_cas_by_scheme():
-    assert prefers_cas("s3a://bucket/p") and prefers_cas("gs://b/p")
-    assert not prefers_cas("/local/path")
-    assert not prefers_cas("file:///local/path")
-    assert not prefers_cas("hdfs://nn/path")
-
-
 # ---------------------------------------------------------------------------
-# z-store lifecycle over CAS commits (Spark end to end)
+# z-store lifecycle over the pointer log (Spark end to end)
 # ---------------------------------------------------------------------------
 
 
@@ -409,6 +320,17 @@ def _vals(df):
                   for r in df.select("series", "ts_ns", "value").collect())
 
 
+
+
+def _data_files(path):
+    return set(get_fs(path).glob(path, "metric=*/ts_bucket=*/*.parquet"))
+
+
+def _current_files(spark, path):
+    _v, cur = CasLog(get_fs(path), posixpath.join(path, MANIFEST_DIR)).current()
+    return {r.file for r in spark.read.parquet(cur).select("file").collect()}
+
+
 @pytest.mark.parametrize("scheme", ["posix", "file_uri"])
 def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
     path = str(tmp_path / "zcas")
@@ -416,7 +338,7 @@ def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
         path = "file://" + path
     df = _metrics(spark)
     zorder_metrics_table(spark, df, path, bucket_ns=DAY,
-                         files_per_partition=4, cas_commit=True)
+                         files_per_partition=4)
     assert _vals(zorder_select(spark, path)) == _vals(df)
     held = open_zorder_database(spark, path)  # held across every publish
 
@@ -433,15 +355,24 @@ def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
     batch = _metrics(spark, t0=4 * DAY, bump=0.5)
     zorder_append(spark, batch, path, epoch=7)
     zorder_append(spark, batch, path, epoch=7)
-    both = df.unionByName(batch)
+    # an epoch-keyed append overlapping the built buckets, so erosion
+    # sees a second writer generation
+    overlap = _metrics(spark, n_series=2, pts=10, t0=12, bump=0.25)
+    zorder_append(spark, overlap, path, epoch=1)
+    zorder_append(spark, overlap, path, epoch=1)
+    both = df.unionByName(batch).unionByName(overlap)
     assert _vals(zorder_select(spark, path)) == _vals(both)
 
-    # optimize re-clusters appended buckets; serving unchanged
-    assert zorder_optimize(spark, path) >= 0
+    # erosion sees the append generation; optimize re-clusters the
+    # eroded buckets; serving unchanged
+    assert zorder_erosion(spark, path).filter(
+        F.col("epochs") >= 2).count() >= 1
+    assert zorder_optimize(spark, path) >= 1
     assert _vals(zorder_select(spark, path)) == _vals(both)
 
-    # replay after optimize folded the epoch away: still a no-op
+    # replays after optimize folded the epochs away: still no-ops
     zorder_append(spark, batch, path, epoch=7)
+    zorder_append(spark, overlap, path, epoch=1)
     assert _vals(zorder_select(spark, path)) == _vals(both)
 
     # retention drops old buckets manifest-first (no dir deletes)
@@ -451,13 +382,16 @@ def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
     cutoff = (now_ns - 3 * DAY) // DAY
     kept = both.filter(F.expr(f"ts_ns div {DAY}L") >= cutoff)
     assert _vals(zorder_select(spark, path)) == _vals(kept)
+    assert zorder_select(spark, path, ts_to=cutoff * DAY).count() == 0
 
     # vacuum with snapshot retention: nothing a retained snapshot
-    # references goes; aggressive keep=1/grace=0 reclaims the rest and
-    # the current snapshot still serves exactly
+    # references goes; aggressive keep=1/grace=0 reclaims the rest
+    # (replaced and expired files alike) and the current snapshot
+    # still serves exactly
     assert vacuum_zorder(spark, path, grace_s=10**9) == 0
     removed = vacuum_zorder(spark, path, grace_s=0.0, snapshots_keep=1)
     assert removed > 0
+    assert _data_files(path) == _current_files(spark, path)
     assert _vals(zorder_select(spark, path)) == _vals(kept)
 
     # the database opened after the build follows the pointer log: hosts
@@ -473,14 +407,14 @@ def test_metrics_lifecycle_cas(spark, tmp_path, scheme):
 
 
 def test_cas_optimize_carries_concurrent_append(spark, tmp_path):
-    """The r12 race, CAS edition: an append that publishes between an
-    optimize's selection and its pointer commit survives — the merge
-    re-runs against the freshest snapshot on every CAS retry."""
+    """An append that publishes between an optimize's selection and its
+    pointer commit survives — the merge re-runs against the freshest
+    snapshot on every CAS retry."""
     path = str(tmp_path / "zrace")
     df = _metrics(spark)
     zorder_metrics_table(spark, df, path, bucket_ns=DAY,
-                         files_per_partition=4, cas_commit=True)
-    # append into the SAME buckets as the build so erosion (≥ 2 writer
+                         files_per_partition=4)
+    # append into the SAME buckets as the build so erosion (>= 2 writer
     # generations per bucket) selects them for the optimize
     first = _metrics(spark, t0=0, bump=0.25)
     zorder_append(spark, first, path, epoch=1)
@@ -498,21 +432,37 @@ def test_cas_rebuild_keeps_replay_and_rejects_param_drift(spark, tmp_path):
     path = str(tmp_path / "zreb")
     df = _metrics(spark)
     zorder_metrics_table(spark, df, path, bucket_ns=DAY,
-                         files_per_partition=4, cas_commit=True)
+                         files_per_partition=4)
     batch = _metrics(spark, t0=4 * DAY, bump=0.5)
     zorder_append(spark, batch, path, epoch=3)
     both = df.unionByName(batch)
 
-    # rebuild (same params): serving identical, epoch carried to ledger
-    zorder_metrics_table(spark, both, path, bucket_ns=DAY,
+    # rebuild (same params) from the store's own rows: serving
+    # identical, epoch carried to the ledger
+    current = zorder_select(spark, path)
+    current = spark.createDataFrame(current.collect(), current.schema)
+    zorder_metrics_table(spark, current, path, bucket_ns=DAY,
                          files_per_partition=4)
-    assert _vals(zorder_select(spark, path)) == _vals(both)
+    st4: dict = {}
+    assert _vals(zorder_select(spark, path, stats=st4)) == _vals(both)
     zorder_append(spark, batch, path, epoch=3)  # replay: still no-op
     assert _vals(zorder_select(spark, path)) == _vals(both)
 
+    # files_per_partition only shapes clustering: a rebuild may change
+    # it, and the replay check still holds across it
+    st1: dict = {}
+    zorder_metrics_table(spark, both, path, bucket_ns=DAY,
+                         files_per_partition=1)
+    assert _vals(zorder_select(spark, path, stats=st1)) == _vals(both)
+    assert st1["files_total"] < st4["files_total"]
+    zorder_append(spark, batch, path, epoch=3)  # replay: still no-op
+    assert _vals(zorder_select(spark, path)) == _vals(both)
+
+    # bucket_ns fixes the partition and retention unit: refused
     with pytest.raises(ValueError, match="layout parameters"):
         zorder_metrics_table(spark, both, path, bucket_ns=2 * DAY,
                              files_per_partition=4)
+    assert _vals(zorder_select(spark, path)) == _vals(both)
 
 
 def test_corpus_lifecycle_cas(spark, tmp_path):
@@ -522,16 +472,18 @@ def test_corpus_lifecycle_cas(spark, tmp_path):
          for i in range(120)],
         "doc_id string, lang string, n_chars int",
     )
-    zorder_corpus_table(spark, docs, path, files_total=8, cas_commit=True)
-    got = zorder_corpus_select(spark, path, cat="en")
+    zorder_corpus_table(spark, docs, path, files_total=8)
+    st = {}
+    got = zorder_corpus_select(spark, path, cat="en", stats=st)
     assert sorted(r.doc_id for r in got.collect()) == sorted(
         r.doc_id for r in docs.filter("lang = 'en'").collect())
+    assert st["files_selected"] <= st["files_total"]
 
     extra = spark.createDataFrame(
         [(f"x{i}", "en", 500 + i) for i in range(30)],
         "doc_id string, lang string, n_chars int",
     )
-    zorder_corpus_append(spark, extra, path, epoch=1)
+    zorder_corpus_append(spark, extra, path, epoch=1, files_total=2)
     zorder_corpus_append(spark, extra, path, epoch=1)  # replay no-op
     assert zorder_corpus_select(spark, path, cat="en").count() == (
         docs.filter("lang = 'en'").count() + 30)
@@ -542,7 +494,8 @@ def test_corpus_lifecycle_cas(spark, tmp_path):
     assert stats["files_selected"] < stats["files_total"]
     assert band.count() == 30  # x0..x29 (500..529); base corpus tops at 470
 
+    # a fresh store has no orphans at any grace
     assert vacuum_zorder_corpus(spark, path, grace_s=10**9) == 0
-    vacuum_zorder_corpus(spark, path, grace_s=0.0)
+    assert vacuum_zorder_corpus(spark, path, grace_s=0.0) == 0
     assert zorder_corpus_select(spark, path, cat="en").count() == (
         docs.filter("lang = 'en'").count() + 30)

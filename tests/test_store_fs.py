@@ -1,9 +1,10 @@
-"""The portable filesystem seam (akumuli_spark.sources.fs): the full
-z-store lifecycle over ``file://`` URIs through HadoopStoreFS (proving
-the stores run on any Hadoop-reachable filesystem, not just local
-POSIX), the optimize-vs-append publish race (VERDICT r12 Wrong #1),
-the vacuum grace on replaced files (ADVICE r12), erosion totality over
-NULL-stats manifest rows, and the rebuild epoch-ledger carry."""
+"""The portable filesystem seam (akumuli_spark.sources.fs) under the
+z-store: scheme dispatch, the optimize-vs-append publish race on local
+and ``file://`` paths (VERDICT r12 Wrong #1), the vacuum grace on
+replaced files (ADVICE r12), erosion totality over NULL-stats manifest
+rows, the rebuild epoch-ledger carry, the snapshot token, stores
+written before the pointer log, and the full lifecycle over ``file://``
+URIs (HadoopStoreFS end to end)."""
 
 from __future__ import annotations
 
@@ -13,14 +14,17 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from akumuli_spark.api import open_zorder_database
 from akumuli_spark.sources.fs import (
+    CasLog,
     HadoopStoreFS,
     LocalStoreFS,
     get_fs,
-    store_lock,
 )
 from akumuli_spark.sources.zorder import (
     MANIFEST_DIR,
+    _cas_publish_df,
+    _vtable_dir,
     vacuum_zorder,
     vacuum_zorder_corpus,
     zorder_append,
@@ -102,8 +106,9 @@ def test_metrics_lifecycle_over_file_uri(spark, tmp_path):
     zorder_append(spark, batch, path, epoch=1)
     assert zorder_select(spark, path).count() == n_after
 
-    # vacuum reclaims the replaced files; serving unchanged
-    assert vacuum_zorder(spark, path, grace_s=0) > 0
+    # vacuum reclaims the replaced files once no retained snapshot
+    # lists them; serving unchanged
+    assert vacuum_zorder(spark, path, grace_s=0, snapshots_keep=1) > 0
     assert _vals(zorder_select(spark, path)) == before
 
     # retention drops the oldest day; manifest and dirs agree
@@ -162,20 +167,23 @@ def test_optimize_carries_concurrent_append(spark, tmp_path, scheme):
     assert zorder_optimize(spark, path, _race_hook=interleave) >= 1
     assert state["after_append"] == n_before + 7
     # the interleaved batch survives the optimize publish…
-    assert zorder_select(spark, path).count() == n_before + 7
+    everything = _metrics(spark).unionByName(seed).unionByName(racer)
+    assert _vals(zorder_select(spark, path)) == _vals(everything)
     # …its epoch stays committed…
     zorder_append(spark, racer, path, epoch=2)
     assert zorder_select(spark, path).count() == n_before + 7
     # …and vacuum does not reap its (manifest-listed) files
-    vacuum_zorder(spark, path, grace_s=0)
+    vacuum_zorder(spark, path, grace_s=0, snapshots_keep=1)
     assert zorder_select(spark, path).count() == n_before + 7
 
 
 def test_vacuum_grace_counts_from_replacement(spark, tmp_path):
-    """Files replaced by optimize are re-aged at replacement: a vacuum
-    inside the grace window right after an optimize must NOT delete the
-    just-replaced files (a reader holding the pre-optimize snapshot may
-    still be reading them) — ADVICE r12 medium."""
+    """The grace of files replaced by optimize counts from their
+    replacement (the supersession of the last snapshot listing them):
+    a vacuum inside the grace window right after an optimize must NOT
+    delete the just-replaced files, even keeping only one snapshot (a
+    reader holding the pre-optimize snapshot may still be reading
+    them) — ADVICE r12 medium."""
     path = str(tmp_path / "graced")
     zorder_metrics_table(spark, _metrics(spark), path, bucket_ns=DAY,
                          files_per_partition=4)
@@ -183,16 +191,19 @@ def test_vacuum_grace_counts_from_replacement(spark, tmp_path):
     pre_files = [f for f in fs.glob(path, "metric=*/ts_bucket=*/*.parquet")]
     zorder_append(spark, _metrics(spark, n_series=1, pts=5), path, epoch=1)
     assert zorder_optimize(spark, path) >= 1
+    man = spark.read.parquet(_vtable_dir(fs, posixpath.join(path, MANIFEST_DIR)))
+    listed = {r.file for r in man.select("file").collect()}
+    replaced = [f for f in pre_files if f not in listed]
+    assert replaced
     # grace vacuum immediately after optimize: replaced files survive
-    # (their mtime was reset at replacement; original write mtime would
-    # already be older than this 1s grace on a slower build)
-    removed = vacuum_zorder(spark, path, grace_s=3600.0)
+    removed = vacuum_zorder(spark, path, grace_s=3600.0, snapshots_keep=1)
     still = set(fs.glob(path, "metric=*/ts_bucket=*/*.parquet"))
-    replaced = [f for f in pre_files if f in still]
-    assert removed == 0 and replaced  # every orphan is inside its grace
+    assert removed == 0 and set(replaced) <= still  # inside their grace
     # once the grace elapses (simulated clock) they are reclaimed
     assert vacuum_zorder(spark, path, grace_s=3600.0,
-                         now_s=time.time() + 7200) > 0
+                         now_s=time.time() + 7200, snapshots_keep=1) > 0
+    assert not set(replaced) & set(
+        fs.glob(path, "metric=*/ts_bucket=*/*.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -203,8 +214,9 @@ def test_erosion_total_over_null_stats_rows(spark, tmp_path):
     path = str(tmp_path / "nullstats")
     zorder_metrics_table(spark, _metrics(spark), path, bucket_ns=DAY,
                          files_per_partition=2)
+    fs = get_fs(path)
     mpath = posixpath.join(path, MANIFEST_DIR)
-    man = spark.read.parquet(mpath)
+    man = spark.read.parquet(_vtable_dir(fs, mpath))
     man = spark.createDataFrame(man.collect(), man.schema)
     crafted = man.unionByName(
         man.limit(1).select(
@@ -217,8 +229,7 @@ def test_erosion_total_over_null_stats_rows(spark, tmp_path):
             F.lit(None).cast("long").alias("epoch"),
         )
     )
-    get_fs(path).rmtree(mpath)
-    crafted.coalesce(1).write.mode("overwrite").parquet(mpath)
+    _cas_publish_df(spark, fs, mpath, lambda cur: crafted)
     rep = zorder_erosion(spark, path)
     rows = {(r.metric, r.ts_bucket): r for r in rep.collect()}
     assert all(r.time_overlap is not None for r in rows.values())
@@ -251,6 +262,14 @@ def test_corpus_rebuild_keeps_replay_exactly_once(spark, tmp_path):
     # a checkpointed caller replaying the committed epoch: still a no-op
     zorder_corpus_append(spark, extra, path, epoch=1)
     assert zorder_corpus_select(spark, path, cat="en").count() == 45
+    # files_total only shapes clustering: a rebuild may change it; the
+    # clustering columns fix what the manifest bounds: refused
+    zorder_corpus_table(spark, current, path, files_total=2)
+    zorder_corpus_append(spark, extra, path, epoch=1)
+    assert zorder_corpus_select(spark, path, cat="en").count() == 45
+    with pytest.raises(ValueError, match="layout parameters"):
+        zorder_corpus_table(spark, current, path, num_col="doc_id")
+    assert zorder_corpus_select(spark, path, cat="en").count() == 45
 
 
 def test_metrics_rebuild_keeps_replay_exactly_once(spark, tmp_path):
@@ -271,55 +290,85 @@ def test_metrics_rebuild_keeps_replay_exactly_once(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# publish lock + snapshot change token
+# one snapshot token; stores written before the pointer log
 # ---------------------------------------------------------------------------
 
-def test_store_lock_mutual_exclusion_and_lease(tmp_path):
-    fs = LocalStoreFS()
-    p = str(tmp_path / "locked")
-    with store_lock(fs, p, timeout_s=5):
-        with pytest.raises(TimeoutError):
-            with store_lock(fs, p, timeout_s=0.2):
-                pass
-    # released on exit; a crashed holder's stale lock is broken —
-    # with DEFAULT timeout too (the default must exceed the lease, or
-    # a default-configured waiter raises before it may break)
-    fs.create_exclusive(p + ".lock")
-    fs.touch_mtime(p + ".lock", time.time() - 10_000)
-    with store_lock(fs, p):
-        pass
-    assert not fs.exists(p + ".lock")
-
-
-def test_store_lock_heartbeat_prevents_theft(tmp_path):
-    """A live-but-slow holder that heartbeats cannot have its lease
-    stolen: the heartbeat refreshes the lock mtime, so a waiter keeps
-    seeing a fresh lease (code-review r13: optimize's publish loop can
-    legitimately outlive a static lease on a remote store)."""
-    fs = LocalStoreFS()
-    p = str(tmp_path / "hb")
-    with store_lock(fs, p, lease_s=300, timeout_s=5) as heartbeat:
-        # simulate a long-running holder whose lease WOULD be stale...
-        fs.touch_mtime(p + ".lock", time.time() - 10_000)
-        heartbeat()  # ...but it is alive and says so
-        with pytest.raises(TimeoutError):
-            with store_lock(fs, p, lease_s=300, timeout_s=0.3):
-                pass
-
-
 def test_change_token_flips_per_publish_not_per_mtime(spark, tmp_path):
-    """The snapshot token is the manifest file-name listing, so two
-    publishes inside one coarse mtime tick still flip it (ADVICE r12:
-    an mtime token aliased them and served a stale file list)."""
+    """The snapshot token is the manifest pointer log's version, so it
+    flips on every append, optimize and retention publish — also two
+    publishes inside one coarse mtime tick (ADVICE r12: an mtime token
+    aliased them and served a stale file list) — and no timestamp
+    moves it."""
+    import os
+
     path = str(tmp_path / "tok")
     zorder_metrics_table(spark, _metrics(spark, n_series=2, pts=10), path,
                          bucket_ns=DAY, files_per_partition=1)
-    fs = get_fs(path)
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    t1 = fs.change_token(mpath)
+    zdb = open_zorder_database(spark, path)
+    tokens = [zdb._store_token()]
     zorder_append(spark, _metrics(spark, n_series=1, pts=3, t0=5), path)
-    t2 = fs.change_token(mpath)
-    # force IDENTICAL mtimes on the manifest dir across the publish:
-    # the token must still differ (it is name-based, not mtime-based)
-    fs.touch_mtime(mpath, 1_000_000.0)
-    assert t1 != t2 and t2 == fs.change_token(mpath)
+    tokens.append(zdb._store_token())
+    zorder_append(spark, _metrics(spark, n_series=1, pts=3, t0=7), path)
+    tokens.append(zdb._store_token())
+    assert zorder_optimize(spark, path) >= 1
+    tokens.append(zdb._store_token())
+    assert zorder_retention(spark, path, keep_ns=DAY,
+                            now_ns=2 * DAY + 1) >= 1
+    tokens.append(zdb._store_token())
+    assert len(set(tokens)) == len(tokens)
+    # force IDENTICAL mtimes on every pointer and snapshot: the token is
+    # version-based, so it neither changes nor aliases
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            os.utime(os.path.join(root, name), (1_000_000.0, 1_000_000.0))
+    assert zdb._store_token() == tokens[-1]
+
+
+def _to_bare_layout(path):
+    """Rewrite a store into the layout of writers that predate the
+    pointer log: each metadata table's current snapshot as a bare
+    ``_zmanifest``/``_zmeta``/``_zledger`` dir, no commit logs."""
+    import shutil
+
+    fs = get_fs(path)
+    for table in ("_zmanifest", "_zmeta", "_zledger"):
+        tpath = posixpath.join(path, table)
+        _v, cur = CasLog(fs, tpath).current()
+        shutil.copytree(cur, tpath)
+        for rel in fs.glob(path, f"{table}.*"):
+            fs.rmtree(posixpath.join(path, rel))
+
+
+def test_store_written_before_pointer_log_serves_and_grows(spark, tmp_path):
+    path = str(tmp_path / "legacy")
+    base = _metrics(spark)
+    zorder_metrics_table(spark, base, path, bucket_ns=DAY,
+                         files_per_partition=2)
+    folded = _metrics(spark, n_series=1, pts=5, t0=13)
+    zorder_append(spark, folded, path, epoch=5)
+    assert zorder_optimize(spark, path) >= 1  # epoch 5 → the ledger
+    _to_bare_layout(path)
+    fs = get_fs(path)
+    assert not fs.glob(path, "*.commits")
+    old = base.unionByName(folded)
+
+    # serves: direct select and through the database facade
+    assert _vals(zorder_select(spark, path)) == _vals(old)
+    q = {"select": "m.cpu", "range": {"from": 0, "to": 4 * DAY},
+         "where": {"host": "00"}}
+    assert _vals(open_zorder_database(spark, path).query(q)) == _vals(
+        old.filter(F.col("series") == "m.cpu host=00"))
+    # vacuum keeps every file the bare manifest lists
+    vacuum_zorder(spark, path, grace_s=0)
+    assert _vals(zorder_select(spark, path)) == _vals(old)
+
+    # the first publish seeds version 1 from the bare dirs: the append
+    # keeps every old row, and replays (of it, and of the epoch the
+    # bare ledger holds) are no-ops
+    batch = _metrics(spark, n_series=2, pts=6, t0=3 * DAY)
+    zorder_append(spark, batch, path, epoch=1)
+    grown = old.unionByName(batch)
+    assert _vals(zorder_select(spark, path)) == _vals(grown)
+    zorder_append(spark, batch, path, epoch=1)
+    zorder_append(spark, folded, path, epoch=5)
+    assert _vals(zorder_select(spark, path)) == _vals(grown)

@@ -1,6 +1,7 @@
 """Z-order clustered store: interleave correctness, query equivalence
-vs the raw frame, file-skipping evidence on BOTH dimensions, swap/crash
-tolerance, and the empty/absent-store contract."""
+vs the raw frame, file-skipping evidence on BOTH dimensions, crash
+tolerance of the pointer-log publish, and the empty/absent-store
+contract."""
 
 from __future__ import annotations
 
@@ -10,11 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from akumuli_spark.sources.zorder import (
-    MANIFEST_DIR,
     interleave_bits,
     zorder_metrics_table,
     zorder_select,
 )
+from tests.conftest import drop_newest_snapshot
 
 DAY = 86_400 * 10**9
 N_SERIES = 32
@@ -109,6 +110,56 @@ def test_tags_reconstructed_from_series_grammar(spark, store):
     assert row.tags == {"host": "07"}
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted in its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_narrow_select_prunes_in_one_manifest_job(spark, store):
+    """``files_total`` and the kept file list come from ONE aggregate
+    over the manifest: a narrow select costs exactly the manifest read,
+    that aggregate and the pruned read's own setup — no separate
+    ``count`` — and its stats match the manifest."""
+    from akumuli_spark.sources.fs import get_fs
+    from akumuli_spark.sources.zorder import MANIFEST_DIR, _vtable_dir
+
+    path, rows = store
+    snapshot = _vtable_dir(get_fs(path), os.path.join(path, MANIFEST_DIR))
+    man = spark.read.parquet(snapshot)
+    kept = [r.file for r in man.filter(
+        (F.col("series_min") <= "m.cpu host=03")
+        & (F.col("series_max") >= "m.cpu host=03")
+        & (F.col("ts_max") >= DAY) & (F.col("ts_min") < 2 * DAY)
+    ).collect()]
+    st: dict = {}
+
+    def select():
+        zorder_select(spark, path, metric="m.cpu", series="m.cpu host=03",
+                      ts_from=DAY, ts_to=2 * DAY, stats=st)
+
+    select()  # warm per-process caches before counting
+    n_select = _jobs(spark, select)
+    n_read = _jobs(spark, lambda: spark.read.option("basePath", path).parquet(
+        *[os.path.join(path, f) for f in kept]))
+    n_man = _jobs(spark, lambda: spark.read.parquet(snapshot))
+    n_agg = _jobs(spark, lambda: man.agg(F.count(F.lit(1))).first())
+    assert n_select == n_man + n_agg + n_read
+    assert st == {"files_total": man.count(), "files_selected": len(kept)}
+    assert 0 < len(kept) < man.count()
+
+
 def test_absent_store_answers_empty(spark, tmp_path):
     st: dict = {}
     out = zorder_select(spark, str(tmp_path / "never-built"), stats=st)
@@ -128,21 +179,26 @@ def test_store_without_manifest_raises(spark, tmp_path):
 
 
 def test_rebuild_swaps_atomically_and_crash_heals(spark, store, tmp_path):
-    """Rebuild over an existing store goes through the two-rename swap;
-    a crash window between the renames self-heals on next read."""
-    import shutil
-
+    """Rebuild over an existing store (changing files_per_partition,
+    which only shapes clustering) flips readers with one pointer-log
+    publish; a crash before that pointer leaves the pre-rebuild
+    snapshot serving whole."""
     df, rows = _frame(spark)
     path = str(tmp_path / "swap")
     zorder_metrics_table(spark, df, path, bucket_ns=DAY, files_per_partition=4)
+    st4: dict = {}
+    zorder_select(spark, path, stats=st4)
     zorder_metrics_table(spark, df, path, bucket_ns=DAY, files_per_partition=8)
-    assert zorder_select(spark, path).count() == len(rows)
-    # simulate the crash: table renamed away, complete tmp left behind
-    shutil.copytree(path, path + ".compact-tmp")
-    os.rename(path, path + ".compact-old")
+    st8: dict = {}
+    assert zorder_select(spark, path, stats=st8).count() == len(rows)
+    assert st8["files_total"] > st4["files_total"]
+    # simulate the crash: rebuilt files moved in, pointer never created
+    drop_newest_snapshot(path)
+    st: dict = {}
     out = zorder_select(spark, path, metric="m.cpu", series="m.cpu host=01")
-    assert out.count() == PTS  # healed roll-forward, data+manifest whole
-    assert os.path.exists(os.path.join(path, MANIFEST_DIR))
+    assert out.count() == PTS  # pre-rebuild snapshot, data+manifest whole
+    assert zorder_select(spark, path, stats=st).count() == len(rows)
+    assert st["files_total"] == st4["files_total"]
 
 
 def test_zero_row_build_publishes_empty_manifest(spark, tmp_path):
@@ -194,16 +250,10 @@ def test_append_is_snapshot_isolated(spark, tmp_path):
     zorder_metrics_table(spark, a, path, bucket_ns=DAY, files_per_partition=4)
     pre = zorder_select(spark, path).count()
 
-    # simulate the crash window: run the append but restore the OLD
-    # manifest afterwards — files in place, publish never happened
-    import shutil
-
-    mpath = os.path.join(path, "_zmanifest")
-    saved = str(tmp_path / "manifest_saved")
-    shutil.copytree(mpath, saved)
+    # simulate the crash window: run the append but drop its manifest
+    # pointer afterwards — files in place, publish never happened
     zorder_append(spark, b, path)
-    shutil.rmtree(mpath)
-    shutil.copytree(saved, mpath)
+    drop_newest_snapshot(path)
 
     assert zorder_select(spark, path).count() == pre  # orphans invisible
     n_files = len(glob.glob(os.path.join(path, "metric=*", "ts_bucket=*",
@@ -253,9 +303,9 @@ def test_epoch_keyed_append_replay_is_noop(spark, tmp_path):
 
 
 def test_retention_is_manifest_first_and_zero_scan(spark, tmp_path):
-    """Expired buckets leave the manifest first (atomic publish), then
-    their dirs drop; in-window serving is untouched and the cutoff
-    bucket itself survives."""
+    """Expired buckets leave the manifest in one atomic publish (their
+    files go at vacuum time); in-window serving is untouched and the
+    cutoff bucket itself survives."""
     from akumuli_spark.sources.zorder import zorder_retention
 
     df, rows = _frame(spark)  # 4 days of data
@@ -339,10 +389,15 @@ def test_vacuum_grace_spares_fresh_orphans_reclaims_old(spark, tmp_path):
     crash left as siblings — previously a permanent disk leak) are
     reclaimed.  Makes vacuum safe to cron alongside appends."""
     import glob
-    import shutil
     import time
 
-    from akumuli_spark.sources.zorder import vacuum_zorder, zorder_append
+    from akumuli_spark.sources.fs import get_fs
+    from akumuli_spark.sources.zorder import (
+        MANIFEST_DIR,
+        _vtable_dir,
+        vacuum_zorder,
+        zorder_append,
+    )
 
     df, _ = _frame(spark)
     a = df.filter(F.col("ts_ns") < 2 * DAY)
@@ -352,12 +407,9 @@ def test_vacuum_grace_spares_fresh_orphans_reclaims_old(spark, tmp_path):
     pre = zorder_select(spark, path).count()
 
     # crashed append: files landed, manifest publish rolled back
-    mpath = os.path.join(path, "_zmanifest")
-    saved = str(tmp_path / "msaved")
-    shutil.copytree(mpath, saved)
     zorder_append(spark, b, path)
-    shutil.rmtree(mpath)
-    shutil.copytree(saved, mpath)
+    drop_newest_snapshot(path)
+    mpath = _vtable_dir(get_fs(path), os.path.join(path, MANIFEST_DIR))
     orphans = [
         f for f in glob.glob(
             os.path.join(path, "metric=*", "ts_bucket=*", "*.parquet"))
@@ -539,7 +591,6 @@ def test_corpus_append_equals_fresh_build(spark, tmp_path):
     orphans; a mismatched serve column is refused by the stored
     contract."""
     import glob
-    import shutil
 
     from akumuli_spark.sources.testdata import load_table
     from akumuli_spark.sources.zorder import (
@@ -574,12 +625,8 @@ def test_corpus_append_equals_fresh_build(spark, tmp_path):
     assert zorder_corpus_select(spark, path).count() == docs.count()
 
     # crashed append: manifest rolled back -> orphans invisible, vacuumed
-    mpath = os.path.join(path, "_zmanifest")
-    saved = str(tmp_path / "msaved")
-    shutil.copytree(mpath, saved)
     zorder_corpus_append(spark, b.limit(40), path, epoch=2)
-    shutil.rmtree(mpath)
-    shutil.copytree(saved, mpath)
+    drop_newest_snapshot(path)
     assert zorder_corpus_select(spark, path).count() == docs.count()
     assert vacuum_zorder_corpus(spark, path, grace_s=0) > 0
     assert zorder_corpus_select(spark, path).count() == docs.count()

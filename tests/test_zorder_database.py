@@ -199,10 +199,11 @@ def test_zdb_composes_with_rollup_tiering(spark, tmp_path):
 
 def test_zdb_observes_appends_and_recluster(spark, tmp_path):
     """A ZorderDatabase held across store publishes re-opens its
-    snapshot per query (manifest mtime token): appended series show up
-    in query/search/stats, and a full re-cluster that deletes the old
-    file paths does not break the held object (ADVICE r11)."""
-    from akumuli_spark.sources.zorder import zorder_append
+    snapshot per query (pointer-log version token): appended series show
+    up in query/search/stats, and a full re-cluster that replaces every
+    file path (here also changing files_per_partition) does not break
+    the held object (ADVICE r11)."""
+    from akumuli_spark.sources.zorder import vacuum_zorder, zorder_append
 
     frame = app_metrics_view(spark, SF_DIR)
     early = frame.filter(F.col("ts_ns") < E0 + 10 * DAY)
@@ -224,10 +225,11 @@ def test_zdb_observes_appends_and_recluster(spark, tmp_path):
     assert zdb._series is None  # the refresh dropped the cached dim
     assert zdb.stats()["n_series"] > pre_series  # new series in the dim
 
-    # a re-cluster deletes every old file path; the held object must
-    # re-open, not FileNotFound on the baked list
+    # a re-cluster (+ vacuum) deletes every old file path; the held
+    # object must re-open, not FileNotFound on the baked list
     zorder_metrics_table(spark, frame, path, bucket_ns=7 * DAY,
                          files_per_partition=8)
+    vacuum_zorder(spark, path, grace_s=0, snapshots_keep=1)
     assert zdb.query(q).count() == frame.filter(
         "metric = 'app.click'").count()
 

@@ -1,29 +1,27 @@
-"""Lock-contention scale smoke (VERDICT r13 Next #5): N concurrent
-epoch appenders + 1 concurrent scoped OPTIMIZE against ONE rename-mode
-z-store, measuring how long each writer waits to ACQUIRE the publish
-lock — the serialization cost the single-writer publish step adds at a
-realistic append cadence.  The store publish is metadata-sized work, so
-the claim to verify is "lock serialization costs ~nothing"; the smoke
-records acquire-wait percentiles and proves zero rows were lost.
-
-Also runs the SAME workload against a CAS-committed store (pointer-log
-publishes, no lock) and records the publish retry counts — the
-contention story of the object-store protocol.
+"""Publish-contention scale smoke (VERDICT r13 Next #5): N concurrent
+epoch appenders + 1 concurrent scoped OPTIMIZE against ONE z-store,
+all publishing through the conditional-PUT pointer log (no lock).  It
+records the publish retry count (pointer creates lost to a rival), the
+append latency percentiles and the wall time, and proves zero rows
+were lost.
 
 Usage: python tools/lock_smoke.py [out_json]  (default
-logs/lock_smoke_r14.json); uses a throwaway tmp store, ~2 min.
+logs/lock_smoke_r14.json); uses a throwaway tmp store, ~5 min on a
+4-vCPU host.
 """
 
 from __future__ import annotations
 
-import contextlib
 import json
+import os
 import sys
 import tempfile
 import threading
 import time
 
 from pyspark.sql import SparkSession, functions as F
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_APPENDERS = 8
 APPENDS_EACH = 5
@@ -49,7 +47,7 @@ def batch(spark, lo, hi, tag):
     )
 
 
-def run_mode(spark, cas: bool) -> dict:
+def run(spark) -> dict:
     import akumuli_spark.sources.fs as fsmod
     from akumuli_spark.sources.zorder import (
         zorder_append, zorder_metrics_table, zorder_optimize, zorder_select,
@@ -58,20 +56,9 @@ def run_mode(spark, cas: bool) -> dict:
     base = tempfile.mkdtemp(prefix="akumuli_lock_smoke_")
     path = base + "/metrics"
 
-    # instrument: record every store_lock acquire wait (rename mode)
-    waits: list[float] = []
-    real_lock = fsmod.store_lock
-
-    @contextlib.contextmanager
-    def timed_lock(*a, **kw):
-        t0 = time.perf_counter()
-        with real_lock(*a, **kw) as hb:
-            waits.append(time.perf_counter() - t0)
-            yield hb
-
-    # and every CAS publish retry (cas mode)
+    # instrument: count every publish attempt that lost its pointer
+    # create to a rival
     retries = [0]
-    import akumuli_spark.sources.zorder as zmod
     real_commit = fsmod.CasLog.try_commit
 
     def counted_commit(self, version, vname):
@@ -81,13 +68,11 @@ def run_mode(spark, cas: bool) -> dict:
         return ok
 
     fsmod.CasLog.try_commit = counted_commit
-    zmod.store_lock = timed_lock
     try:
         zorder_metrics_table(
             spark, batch(spark, 0, 200_000, 0), path,
-            bucket_ns=DAY_NS, files_per_partition=4, cas_commit=cas,
+            bucket_ns=DAY_NS, files_per_partition=4,
         )
-        waits.clear()
 
         t_start = time.perf_counter()
         errors: list[str] = []
@@ -135,7 +120,6 @@ def run_mode(spark, cas: bool) -> dict:
         expected = 200_000 + N_APPENDERS * APPENDS_EACH * ROWS_PER_APPEND
         got = zorder_select(spark, path, metric="cpu").count()
         return {
-            "mode": "cas" if cas else "rename_lock",
             "appenders": N_APPENDERS,
             "appends_total": N_APPENDERS * APPENDS_EACH,
             "rows_per_append": ROWS_PER_APPEND,
@@ -144,10 +128,6 @@ def run_mode(spark, cas: bool) -> dict:
             "wall_s": round(total_s, 3),
             "append_s_p50": round(pct(append_s, 0.50) or 0, 4),
             "append_s_p95": round(pct(append_s, 0.95) or 0, 4),
-            "lock_wait_p50_s": round(pct(waits, 0.50) or 0, 5),
-            "lock_wait_p95_s": round(pct(waits, 0.95) or 0, 5),
-            "lock_wait_max_s": round(max(waits), 5) if waits else 0,
-            "lock_acquires": len(waits),
             "cas_retries": retries[0],
             "rows_expected": expected,
             "rows_got": got,
@@ -155,7 +135,6 @@ def run_mode(spark, cas: bool) -> dict:
             "errors": errors,
         }
     finally:
-        zmod.store_lock = real_lock
         fsmod.CasLog.try_commit = real_commit
         import shutil
 
@@ -172,8 +151,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    report = {"smoke": "lock_contention",
-              "modes": [run_mode(spark, cas=False), run_mode(spark, cas=True)]}
+    report = {"smoke": "publish_contention", **run(spark)}
     with open(out_path, "w") as fh:
         json.dump(report, fh, indent=1)
     print(json.dumps(report, indent=1))
