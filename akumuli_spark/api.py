@@ -223,8 +223,8 @@ class ZorderDatabase(Database):
 
     #: above this many where-matched series, file pruning falls back to
     #: metric+time only and the tag predicate runs as the engine's
-    #: ordinary column filter — a 10⁵-series collect + predicate would
-    #: bottleneck on driver memory and plan compile, not data
+    #: ordinary column filter — a 10⁵-series collect of matched names
+    #: would bottleneck on driver memory, not data
     WIDE_WHERE_CAP = 1000
 
     def __init__(self, spark: SparkSession, zorder_path: str,
@@ -238,37 +238,24 @@ class ZorderDatabase(Database):
         self._snapshot_token = None
         self._refresh()
 
-    def _store_token(self) -> tuple:
-        """Cheap change detector per store: the current (version,
-        snapshot dir) of its manifest's pointer log
-        (:class:`~akumuli_spark.sources.fs.CasLog`), the store's one
-        snapshot token.  Every publish claims a higher version, so the
-        token flips on every publish, however close together (an
-        mtime-based token aliased two publishes inside one coarse
-        filesystem timestamp tick — ADVICE r12).  Metadata reads, no
-        Spark job."""
-        import posixpath
-
-        from akumuli_spark.sources.fs import CasLog, get_fs
-        from akumuli_spark.sources.zorder import MANIFEST_DIR
-
-        def one(p):
-            return CasLog(get_fs(p), posixpath.join(p, MANIFEST_DIR)).current()
-
-        return (one(self._zpath),
-                one(self._ez_path) if self._ez_path else None)
-
     def _refresh(self) -> None:
         """Re-open the snapshot if the store moved since the last
         request.  A ZorderDatabase held across streaming appends (the
         exact usage streaming/zorder.py advertises) would otherwise serve
         a frozen file list — missing series first seen in later batches,
         and breaking with FileNotFound after a re-cluster deletes the
-        baked paths (ADVICE r11).  Requests between publishes pay the
-        token's metadata reads; attached rollups stay attached."""
-        from akumuli_spark.sources.zorder import EVENTS_SCHEMA, zorder_select
+        baked paths (ADVICE r11).  The token is each store's current
+        manifest snapshot dir, which every publish renames, however
+        close together (an mtime token aliased two publishes inside one
+        coarse timestamp tick — ADVICE r12); requests between publishes
+        pay its metadata reads, no Spark job.  Attached rollups stay
+        attached."""
+        from akumuli_spark.sources.zorder import (
+            EVENTS_SCHEMA, manifest_dir, zorder_select,
+        )
 
-        token = self._store_token()
+        token = (manifest_dir(self._zpath),
+                 self._ez_path and manifest_dir(self._ez_path))
         if token == self._snapshot_token:
             return
         self.metrics = zorder_select(self.spark, self._zpath)
@@ -335,8 +322,8 @@ class ZorderDatabase(Database):
     # cadence is one object: erosion() names degraded buckets,
     # optimize() re-clusters them, vacuum() reclaims replaced/orphaned
     # files after the live-append grace — the next query() re-opens the
-    # post-maintenance snapshot automatically via _store_token, the
-    # manifest pointer log's version
+    # post-maintenance snapshot automatically: _refresh sees a new
+    # manifest snapshot dir
     def erosion(self) -> DataFrame:
         from akumuli_spark.sources.zorder import zorder_erosion
 

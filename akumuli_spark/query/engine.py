@@ -280,9 +280,8 @@ _DECOMPOSABLE = frozenset({
 
 #: inputs whose optimizer-estimated size exceeds this many bytes get a
 #: cheap cardinality probe before the two-level decomposition plans
-#: (see _partials_compress); -1 disables the probe entirely
-_AGG_PROBE_BYTES_CONF = "spark.akumuli.aggregate.probeBytes"
-_AGG_PROBE_BYTES_DEFAULT = 4 * 1024**3
+#: (see _partials_compress)
+_AGG_PROBE_BYTES = 4 * 1024**3
 #: the probe reads a key sample worth about this many estimated input bytes
 _AGG_PROBE_SAMPLE_BYTES = 16 * 1024**2
 #: fixed hash seed of the probe's key sample, so the route is reproducible
@@ -316,47 +315,37 @@ def _partials_compress(base: DataFrame) -> bool:
 
     The probe is itself a Spark job, so it only runs when the
     optimizer's size estimate says the input is big enough for the
-    exchange trade to matter (``spark.akumuli.aggregate.probeBytes``,
-    default 4 GiB — far above the local bench inputs, so bench plans
-    and timings are untouched; set -1 to disable, 0 to always probe).
-    Unknown size is not big: it keeps the measured-default two-level
-    path without a probe.  Routing never changes results: both paths
-    compute the same aggregates (up to the documented mean/sum ulp
-    grouping)."""
-    try:
-        thresh = int(base.sparkSession.conf.get(
-            _AGG_PROBE_BYTES_CONF, str(_AGG_PROBE_BYTES_DEFAULT)))
-        if thresh < 0:
-            return True
-        size = _estimated_bytes(base)
-        if thresh > 0 and (size is None or size < thresh):
-            # small input: two-level measured faster (r14 A/B)
-            return True
-        # The sample keeps WHOLE keys (a fixed-seed hash of the partial
-        # key picks them), so every duplicate of a kept key is kept and
-        # the sample's distinct/rows ratio estimates the input's.  A row
-        # sample would split duplicates and drift toward "unique" as it
-        # shrinks; a leading prefix would only see the first files, which
-        # on time-sorted data are not representative.  The 0-threshold
-        # test hook with unknown size reads everything.
-        key = F.xxhash64(F.lit(_AGG_PROBE_SEED), "metric", "tagstr", "ts_ns")
-        probe = base.select(key.alias("__k"))
-        frac = 1.0 if size is None else _AGG_PROBE_SAMPLE_BYTES / max(size, 1)
-        if frac < 1.0:
-            keep = int(frac * _AGG_PROBE_BUCKETS) + 1
-            probe = probe.filter(
-                F.pmod(F.col("__k"), F.lit(_AGG_PROBE_BUCKETS)) < keep)
-        row = probe.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.approx_count_distinct("__k").alias("__d"),
-        ).first()
-        # approx_count_distinct's default rsd is 5%: ratios near 1 mean
-        # the partials would not compress — use the one-level path
-        return bool(row["__n"]) and row["__d"] < 0.9 * row["__n"]
-    except Exception:
-        # malformed threshold or failed probe job: keep the
-        # measured-default two-level path
+    exchange trade to matter (``_AGG_PROBE_BYTES``, 4 GiB — far above
+    the local bench inputs, so bench plans and timings are untouched;
+    tests set it to 0 to always probe).  Unknown size is not big: it
+    keeps the measured-default two-level path without a probe.  Routing
+    never changes results: both paths compute the same aggregates (up
+    to the documented mean/sum ulp grouping)."""
+    size = _estimated_bytes(base)
+    if _AGG_PROBE_BYTES > 0 and (size is None or size < _AGG_PROBE_BYTES):
+        # small input: two-level measured faster (r14 A/B)
         return True
+    # The sample keeps WHOLE keys (a fixed-seed hash of the partial key
+    # picks them), so every duplicate of a kept key is kept and the
+    # sample's distinct/rows ratio estimates the input's.  A row sample
+    # would split duplicates and drift toward "unique" as it shrinks; a
+    # leading prefix would only see the first files, which on
+    # time-sorted data are not representative.  The 0-threshold test
+    # hook with unknown size reads everything.
+    key = F.xxhash64(F.lit(_AGG_PROBE_SEED), "metric", "tagstr", "ts_ns")
+    probe = base.select(key.alias("__k"))
+    frac = 1.0 if size is None else _AGG_PROBE_SAMPLE_BYTES / max(size, 1)
+    if frac < 1.0:
+        keep = int(frac * _AGG_PROBE_BUCKETS) + 1
+        probe = probe.filter(
+            F.pmod(F.col("__k"), F.lit(_AGG_PROBE_BUCKETS)) < keep)
+    row = probe.agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.approx_count_distinct("__k").alias("__d"),
+    ).first()
+    # approx_count_distinct's default rsd is 5%: ratios near 1 mean the
+    # partials would not compress — use the one-level path
+    return bool(row["__n"]) and row["__d"] < 0.9 * row["__n"]
 
 
 def _two_level_agg_expr(func: str) -> Column:

@@ -25,12 +25,14 @@ columns in a manifest.  A query then prunes at THREE levels:
 3. row groups + rows via pushed parquet predicates (unchanged).
 
 Scale contract: the manifest is itself a parquet table with one row per
-data file.  Pruning runs as a Spark filter over it; only the surviving
-file *names* are collected to the driver — the same driver-side model a
-Delta/Iceberg planner uses, ~100 bytes per selected file.  At 100 TB
-with 1 GB files the full manifest is ~100 k rows, trivially scannable;
-re-clustering is an O(data) maintenance job (one range-shuffle write +
-one stats scan), priced exactly like ``OPTIMIZE``.
+data file, ~100 bytes each.  A select holds the store's current manifest
+snapshot on the driver — collected once per snapshot, since a published
+snapshot dir never changes — and prunes it in Python, the driver-side
+model a Delta/Iceberg planner uses; a select on a snapshot already read
+builds with no Spark job.  At 100 TB with 1 GB files the full manifest
+is ~100 k rows, ~10 MB of driver memory per store; re-clustering is an
+O(data) maintenance job (one range-shuffle write + one stats scan),
+priced exactly like ``OPTIMIZE``.
 
 The manifest lives INSIDE the table directory (underscore-prefixed, so
 plain ``spark.read.parquet(path)`` of the data ignores it) and records
@@ -68,7 +70,9 @@ its first publish seeds version 1 from them.
 
 from __future__ import annotations
 
+import bisect
 import posixpath
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -82,8 +86,8 @@ from akumuli_spark.sources.layout import (
 #: bits per dimension; z = interleaved 2*ZBITS-bit key (fits a long)
 ZBITS = 16
 
-#: above this many requested series, zorder_select switches from
-#: per-series predicate arms (plan size ∝ list) to broadcast joins
+#: above this many names, an exact residual filter switches from an
+#: ``isin`` (plan size ∝ list) to a broadcast semi-join
 _SERIES_EXPR_CAP = 64
 
 MANIFEST_DIR = "_zmanifest"
@@ -96,6 +100,20 @@ _META_SCHEMA = ("layout_version int, bucket_ns long, bits int, "
                 "files_per_partition int")
 _CORPUS_META_SCHEMA = ("layout_version int, cat_col string, "
                        "num_col string, files_total int, bits int")
+
+#: the manifest row (one per data file) of each store kind
+_MANIFEST_SCHEMA = (
+    "file string, metric string, ts_bucket long, series_min string, "
+    "series_max string, ts_min long, ts_max long, rows long, epoch long"
+)
+_CORPUS_MANIFEST_SCHEMA = (
+    "file string, cat_min string, cat_max string, num_min long, "
+    "num_max long, rows long, epoch long"
+)
+
+#: the metrics store's partition columns, typed as written
+_PARTITIONS = (T.StructField("metric", T.StringType()),
+               T.StructField("ts_bucket", T.LongType()))
 
 ENGINE_SCHEMA = T.StructType([
     T.StructField("series", T.StringType()),
@@ -292,16 +310,13 @@ def _carry_committed_epochs(spark: SparkSession, fs, path: str) -> None:
     mpath = posixpath.join(path, MANIFEST_DIR)
     old_man = read_table_or_none(spark, _vtable_dir(fs, mpath))
     if old_man is not None and "epoch" in old_man.columns:
-        _ledger_add(spark, path, _appended_epochs(old_man))
+        _ledger_add(spark, path, _appended_epochs(
+            old_man.select("epoch").distinct().collect()))
 
 
-def _appended_epochs(man: DataFrame) -> set[int]:
-    """The append epochs (≥ 1) a manifest frame's rows carry —
-    manifest-sized collect."""
-    return {
-        r.epoch for r in man.select("epoch").distinct().collect()
-        if r.epoch is not None and r.epoch >= 1
-    }
+def _appended_epochs(rows) -> set[int]:
+    """The append epochs (≥ 1) that manifest ``rows`` carry."""
+    return {r.epoch for r in rows if r.epoch is not None and r.epoch >= 1}
 
 
 def _write_clustered(metrics: DataFrame, out_dir: str, bucket_ns: int,
@@ -669,7 +684,7 @@ def zorder_optimize(spark: SparkSession, path: str,
     if meta is None:
         raise ValueError(f"no z-store layout contract at {path}")
     mpath = posixpath.join(path, MANIFEST_DIR)
-    man = spark.read.parquet(_vtable_dir(fs, mpath))
+    snap = _snapshot(spark, path, _MANIFEST_SCHEMA, _PARTITIONS)
 
     if buckets is None:
         sel = zorder_erosion(spark, path).filter(
@@ -683,30 +698,16 @@ def zorder_optimize(spark: SparkSession, path: str,
                    for r in sel.select("metric", "ts_bucket").collect()]
     elif max_buckets is not None:
         buckets = buckets[:int(max_buckets)]
-    if not buckets:
-        return 0
-    if len(buckets) <= _SERIES_EXPR_CAP:
-        hit = F.lit(False)
-        for m, b in buckets:
-            hit = hit | ((F.col("metric") == m)
-                         & (F.col("ts_bucket") == int(b)))
-        target = man.filter(hit)
-    else:
-        # wide selections (a year of eroded daily buckets × metrics at
-        # lake scale) would build one OR-arm per bucket — the same plan
-        # blowup zorder_select guards against; join instead
-        bdf = F.broadcast(local_frame(spark,
-            [(m, int(b)) for m, b in buckets], "metric string, ts_bucket long"
-        ))
-        target = man.join(bdf, ["metric", "ts_bucket"], "left_semi")
-    # manifest-sized collects: the replaced files and their epochs
-    old_files = [r.file for r in target.select("file").collect()]
+    selected = {(m, int(b)) for m, b in buckets}
+    # the replaced files and their epochs, from the driver-side snapshot
+    target = [r for r in snap.rows if (r.metric, r.ts_bucket) in selected]
+    old_files = [r.file for r in target]
     if not old_files:
         return 0
     folded_epochs = _appended_epochs(target)
 
     subset = (
-        spark.read.option("basePath", path)
+        spark.read.schema(snap.schema).option("basePath", path)
         .parquet(*[posixpath.join(path, f) for f in old_files])
         .drop("ts_bucket")  # _write_clustered re-derives it from ts_ns
     )
@@ -720,23 +721,15 @@ def zorder_optimize(spark: SparkSession, path: str,
         if _race_hook is not None:  # test-only: interleave a writer here
             _race_hook()
 
-        def _keep_rows(fresh):
-            # FRESH manifest read at publish time: rows published by a
-            # concurrent append since our selection (even into selected
-            # buckets) are not in old_files and are carried forward
-            if len(old_files) <= _SERIES_EXPR_CAP:
-                return fresh.filter(~F.col("file").isin(old_files))
-            fdf = F.broadcast(local_frame(spark,
-                [(f,) for f in old_files], "file string"
-            ))
-            return fresh.join(fdf, "file", "left_anti")
-
         _move_in(fs, tmp, path)
         _ledger_add(spark, path, folded_epochs)
+        # the FRESH manifest at publish time: rows published by a
+        # concurrent append since our selection (even into selected
+        # buckets) are not in old_files and are carried forward
         _cas_publish_df(
             spark, fs, mpath,
-            lambda cur: new_rows if cur is None
-            else _keep_rows(cur).unionByName(new_rows),
+            lambda cur: new_rows if cur is None else _isin(
+                cur, "file", old_files, keep=False).unionByName(new_rows),
         )
     finally:
         fs.rmtree(tmp)
@@ -773,7 +766,8 @@ def zorder_retention(spark: SparkSession, path: str, keep_ns: int,
         buckets = exp.select("metric", "ts_bucket").distinct().count()
         if buckets == 0:
             return None
-        _ledger_add(spark, path, _appended_epochs(exp))
+        _ledger_add(spark, path, _appended_epochs(
+            exp.select("epoch").distinct().collect()))
         dropped[0] = buckets
         return cur.filter(F.col("ts_bucket") >= cutoff)
 
@@ -906,18 +900,13 @@ def _write_manifest(spark: SparkSession, table_dir: str,
     :func:`zorder_append` checks for exactly-once growth.  Costs one
     stats-only scan of the freshly written table — the same
     collect-statistics pass ``OPTIMIZE`` runs."""
-    manifest_schema = (
-        "file string, metric string, ts_bucket long, series_min string, "
-        "series_max string, ts_min long, ts_max long, rows long, "
-        "epoch long"
-    )
     df = read_table_or_none(spark, table_dir)
     probe = (
         None if df is None
         else df.select(F.input_file_name().alias("f")).first()
     )
     if probe is None:  # zero-row table: publish an empty manifest
-        local_frame(spark, [], manifest_schema).coalesce(1).write.mode(
+        local_frame(spark, [], _MANIFEST_SCHEMA).coalesce(1).write.mode(
             "overwrite").parquet(posixpath.join(table_dir, MANIFEST_DIR))
         return
     manifest = (
@@ -938,14 +927,94 @@ def _write_manifest(spark: SparkSession, table_dir: str,
     )
 
 
-def _prune(man: DataFrame, cond: Column) -> tuple[int, list[str]]:
-    """(manifest files, files whose rectangles meet ``cond``) from ONE
-    Spark job — the total is the pruning evidence ``stats`` reports."""
-    r = man.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_list(F.when(cond, F.col("file"))).alias("files"),
-    ).first()
-    return r.n, list(r.files)
+class _Snapshot(NamedTuple):
+    """One manifest snapshot of a store, held on the driver."""
+    dir: str  # the snapshot dir the rows were read from
+    rows: list  # one manifest Row per data file
+    schema: T.StructType | None  # the data files' read schema; None if empty
+
+
+#: the last snapshot read of each store path
+_SNAPSHOTS: dict[str, _Snapshot] = {}
+
+
+def manifest_dir(path: str) -> str:
+    """The store's current manifest snapshot dir — its snapshot token:
+    every publish names a new dir.  Filesystem reads, no Spark job."""
+    return _vtable_dir(get_fs(path), posixpath.join(path, MANIFEST_DIR))
+
+
+def _snapshot(spark: SparkSession, path: str, manifest_schema: str,
+              partitions: tuple = ()) -> _Snapshot:
+    """The store's current manifest snapshot, read once per snapshot
+    dir: a published dir is immutable (its name carries a uuid), so the
+    cached rows stay exact until the next publish replaces the entry.
+    The read schema is one listed file's footer plus the store's typed
+    ``partitions``, so reading kept files runs no inference job.  The
+    bare dir of a store written before the pointer log is not cached:
+    older writers rewrite it in place."""
+    d = manifest_dir(path)
+    snap = _SNAPSHOTS.get(path)
+    if snap is not None and snap.dir == d:
+        return snap
+    rows = spark.read.schema(manifest_schema).parquet(d).collect()
+    schema = None
+    if rows:
+        schema = spark.read.parquet(posixpath.join(path, rows[0].file)).schema
+        for f in partitions:
+            schema.add(f)
+    snap = _Snapshot(d, rows, schema)
+    if d != posixpath.join(path, MANIFEST_DIR):
+        _SNAPSHOTS[path] = snap
+    return snap
+
+
+def _select_files(rows: list, span: tuple[str, str], wanted: list | None,
+                  band: tuple[str, str], lo: int | None, hi: int | None,
+                  metrics: list[str] | None = None) -> list[str]:
+    """The files of manifest ``rows`` whose rectangles can hold a match:
+    ``metric`` among ``metrics``; some ``wanted`` name inside the
+    ``span`` stats' ``[min, max]``, found by one bisect over the sorted
+    names at any list width; and the ``band`` stats' ``[min, max]``
+    meeting ``[lo, hi)``.  A NULL in a compared stat drops the file, as
+    a SQL predicate over the manifest would."""
+    keep = None if metrics is None else set(metrics)
+    names = None if wanted is None else sorted(wanted)
+    (smin, smax), (bmin, bmax) = span, band
+    out = []
+    for r in rows:
+        if keep is not None and r.metric not in keep:
+            continue
+        if names is not None:
+            if r[smin] is None or r[smax] is None:
+                continue
+            i = bisect.bisect_left(names, r[smin])
+            if i == len(names) or names[i] > r[smax]:
+                continue
+        if lo is not None and (r[bmax] is None or r[bmax] < lo):
+            continue
+        if hi is not None and (r[bmin] is None or r[bmin] >= hi):
+            continue
+        out.append(r.file)
+    return out
+
+
+def _names(x: str | list[str] | None) -> list[str] | None:
+    return None if x is None else [x] if isinstance(x, str) else list(x)
+
+
+def _isin(df: DataFrame, col: str, names: list[str],
+          keep: bool = True) -> DataFrame:
+    """The rows of ``df`` whose ``col`` is (``keep``) or is not among
+    ``names``: an ``isin`` up to ``_SERIES_EXPR_CAP`` names, a broadcast
+    semi- or anti-join above it, so the plan stays small at any width."""
+    if len(names) <= _SERIES_EXPR_CAP:
+        hit = F.col(col).isin(names)
+        return df.filter(hit if keep else ~hit)
+    rhs = local_frame(df.sparkSession, [(s,) for s in names],
+                      f"`{col}` string")
+    return df.join(F.broadcast(rhs), col,
+                   "left_semi" if keep else "left_anti")
 
 
 def zorder_select(spark: SparkSession, path: str,
@@ -956,96 +1025,53 @@ def zorder_select(spark: SparkSession, path: str,
                   empty_schema: T.StructType | None = None) -> DataFrame:
     """Manifest-pruned read of a Z-ordered store, in engine schema.
 
-    File skipping: the manifest is filtered (in Spark) to files whose
+    File skipping: the store's manifest snapshot, held on the driver
+    (:func:`_snapshot`), is pruned in Python to the files whose
     (series, ts_ns) min/max rectangles can overlap the predicates, and
-    only the surviving relative paths are collected.  The residual exact
-    predicates are then applied to the pruned scan — the manifest is an
-    over-approximation by construction, never a source of truth for row
-    membership, so a stale-free read needs no locking: every snapshot
-    is immutable and names only files moved in before it published.
+    only those files are read, with the snapshot's schema — a select on
+    a snapshot already read builds with no Spark job.  The residual
+    exact predicates are then applied to the pruned scan — the manifest
+    is an over-approximation by construction, never a source of truth
+    for row membership, so a stale-free read needs no locking: every
+    snapshot is immutable and names only files moved in before it
+    published.
 
     ``ts_from``/``ts_to`` follow the engine's semi-open ``[from, to)``
     (queryprocessor framework, /root/reference/libakumuli/query_processing
     — same contract as ``range`` in :mod:`akumuli_spark.query.engine`).
     An absent store answers empty (the shared empty-store tolerance);
     a store without a manifest is a contract violation and raises.
-    ``metric`` and ``series`` each take one name or a list, so a
-    multi-metric query reads the manifest once.  ``stats``, when passed,
-    receives ``files_total``/``files_selected`` — the pruning evidence
-    tests and the plan audit assert on.
+    ``metric`` and ``series`` each take one name or a list of any
+    width.  ``stats``, when passed, receives ``files_total``/
+    ``files_selected`` — the pruning evidence tests and the plan audit
+    assert on.
     """
     recover_compaction(path)  # a rebuild by an older writer crashed mid-swap
     # absent/empty stores answer in the caller's frame shape — metrics
     # by default, the events shape (body payload) via empty_schema
     empty = local_frame(spark, [], empty_schema or ENGINE_SCHEMA)
-    fs = get_fs(path)
-    if not fs.exists(path):
+    if not get_fs(path).exists(path):
         if stats is not None:
             stats.update(files_total=0, files_selected=0)
         return empty
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    # resolve the current snapshot (pointer log, or the bare dir of a
-    # store written before it); raises if the manifest is missing
-    # entirely: broken store
-    man = spark.read.parquet(_vtable_dir(fs, mpath))
-
-    def names(x):
-        return None if x is None else [x] if isinstance(x, str) else list(x)
-
-    metrics, wanted = names(metric), names(series)
-    cond = F.lit(True)
-    if metrics is not None:
-        cond = cond & F.col("metric").isin(metrics)
-    if wanted is not None and len(wanted) <= _SERIES_EXPR_CAP:
-        hit = F.lit(False)
-        for s in wanted:
-            hit = hit | ((F.col("series_min") <= s) & (F.lit(s) <= F.col("series_max")))
-        cond = cond & hit
-    if ts_from is not None:
-        cond = cond & (F.col("ts_max") >= ts_from)
-    if ts_to is not None:
-        cond = cond & (F.col("ts_min") < ts_to)
-
-    wanted_df = None
-    if wanted is not None and len(wanted) > _SERIES_EXPR_CAP:
-        # wide series list: a Python OR-arm per series would blow up the
-        # plan-compile time and driver memory before any data is read
-        # (the reference brags 10⁵–10⁶-series cardinality) — prune via a
-        # broadcast range-overlap join against the manifest instead
-        wanted_df = local_frame(spark,
-            [(s,) for s in wanted], "__wanted_series string"
-        )
-        pruned = man.filter(cond).join(
-            F.broadcast(wanted_df),
-            (F.col("series_min") <= F.col("__wanted_series"))
-            & (F.col("__wanted_series") <= F.col("series_max")),
-            "left_semi",
-        )
-        total = man.count()
-        files = [r.file for r in pruned.select("file").collect()]
-    else:
-        total, files = _prune(man, cond)
+    # raises if the manifest is missing entirely: broken store
+    snap = _snapshot(spark, path, _MANIFEST_SCHEMA, _PARTITIONS)
+    metrics, wanted = _names(metric), _names(series)
+    files = _select_files(snap.rows, ("series_min", "series_max"), wanted,
+                          ("ts_min", "ts_max"), ts_from, ts_to, metrics)
     if stats is not None:
-        stats.update(files_total=total, files_selected=len(files))
+        stats.update(files_total=len(snap.rows), files_selected=len(files))
     if not files:
         return empty
 
     df = (
-        spark.read.option("basePath", path)
+        spark.read.schema(snap.schema).option("basePath", path)
         .parquet(*[posixpath.join(path, f) for f in files])
     )
     if metrics is not None:
         df = df.filter(F.col("metric").isin(metrics))
     if wanted is not None:
-        if len(wanted) <= _SERIES_EXPR_CAP:
-            df = df.filter(F.col("series").isin(wanted))
-        else:  # exact residual via broadcast semi-join, not a 10⁵-arm In
-            df = df.join(
-                F.broadcast(
-                    wanted_df.withColumnRenamed("__wanted_series", "series")
-                ),
-                "series", "left_semi",
-            )
+        df = _isin(df, "series", wanted)
     if ts_from is not None:
         df = df.filter(F.col("ts_ns") >= ts_from)
     if ts_to is not None:
@@ -1237,17 +1263,13 @@ def vacuum_zorder_corpus(spark: SparkSession, path: str,
 def _write_corpus_manifest(spark: SparkSession, table_dir: str,
                            cat_col: str, num_col: str,
                            epoch: int | None = 0) -> None:
-    schema = (
-        f"file string, cat_min string, cat_max string, "
-        f"num_min long, num_max long, rows long, epoch long"
-    )
     df = read_table_or_none(spark, table_dir)
     probe = (
         None if df is None
         else df.select(F.input_file_name().alias("f")).first()
     )
     if probe is None:
-        local_frame(spark, [], schema).coalesce(1).write.mode(
+        local_frame(spark, [], _CORPUS_MANIFEST_SCHEMA).coalesce(1).write.mode(
             "overwrite").parquet(posixpath.join(table_dir, MANIFEST_DIR))
         return
     (
@@ -1293,33 +1315,21 @@ def zorder_corpus_select(spark: SparkSession, path: str,
             f"({cat_col}, {num_col}) — the manifest rectangles would "
             "mis-prune; rebuild or pass the stored columns"
         )
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
-
-    cond = F.lit(True)
-    if cat is not None:
-        wanted = [cat] if isinstance(cat, str) else list(cat)
-        hit = F.lit(False)
-        for c in wanted:
-            hit = hit | ((F.col("cat_min") <= c) & (F.lit(c) <= F.col("cat_max")))
-        cond = cond & hit
-    if num_lo is not None:
-        cond = cond & (F.col("num_max") >= num_lo)
-    if num_hi is not None:
-        cond = cond & (F.col("num_min") < num_hi)
-
-    total, files = _prune(man, cond)
+    snap = _snapshot(spark, path, _CORPUS_MANIFEST_SCHEMA)
+    wanted = _names(cat)
+    files = _select_files(snap.rows, ("cat_min", "cat_max"), wanted,
+                          ("num_min", "num_max"), num_lo, num_hi)
     if stats is not None:
-        stats.update(files_total=total, files_selected=len(files))
+        stats.update(files_total=len(snap.rows), files_selected=len(files))
     if not files:
         # schema from one unpruned file set is unavailable; the store
         # always has ≥ 1 manifest row unless built empty — read the
         # table root for schema, filter to nothing
         return spark.read.parquet(path).limit(0)
-    df = spark.read.parquet(*[posixpath.join(path, f) for f in files])
-    if cat is not None:
-        wanted = [cat] if isinstance(cat, str) else list(cat)
-        df = df.filter(F.col(cat_col).isin(wanted))
+    df = spark.read.schema(snap.schema).parquet(
+        *[posixpath.join(path, f) for f in files])
+    if wanted is not None:
+        df = _isin(df, cat_col, wanted)
     if num_lo is not None:
         df = df.filter(F.col(num_col) >= num_lo)
     if num_hi is not None:

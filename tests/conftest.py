@@ -102,3 +102,20 @@ def drop_newest_snapshot(path: str, table: str = "_zmanifest") -> None:
     version, snapshot = log.current()
     fs.rmtree(snapshot)
     fs.remove(posixpath.join(log.log_dir, f"{version:020d}{log.PTR_SUFFIX}"))
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted in its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -8,10 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from akumuli_spark.query.engine import (
-    _AGG_PROBE_BYTES_CONF,
-    execute_query,
-)
+from akumuli_spark.query import engine
+from akumuli_spark.query.engine import execute_query
 
 NS = 10**9
 
@@ -44,15 +42,13 @@ def _is_two_level(df) -> bool:
     return "__mn" in df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_aggregate_probe_routes_ns_unique_to_one_level(spark):
-    spark.conf.set(_AGG_PROBE_BYTES_CONF, "0")  # always probe
-    try:
+def test_aggregate_probe_routes_ns_unique_to_one_level(spark, monkeypatch):
+    with monkeypatch.context() as m:
+        m.setattr(engine, "_AGG_PROBE_BYTES", 0)  # always probe
         unique = execute_query(spark, _AGG_Q, _metrics_frame(spark, 400, 1))
         assert not _is_two_level(unique)
         compress = execute_query(spark, _AGG_Q, _metrics_frame(spark, 80, 5))
         assert _is_two_level(compress)
-    finally:
-        spark.conf.unset(_AGG_PROBE_BYTES_CONF)
     # default threshold (4 GiB) far exceeds any local frame: no probe,
     # two-level stays the measured-default path even on ns-unique input
     assert _is_two_level(
@@ -60,7 +56,7 @@ def test_aggregate_probe_routes_ns_unique_to_one_level(spark):
     )
 
 
-def test_aggregate_paths_agree_on_ns_unique(spark):
+def test_aggregate_paths_agree_on_ns_unique(spark, monkeypatch):
     """When the probe routes a ns-unique input to the one-level path,
     the emitted rows must equal the two-level path's (exactly — the
     tie-break functions are integer/exact here)."""
@@ -68,16 +64,14 @@ def test_aggregate_paths_agree_on_ns_unique(spark):
     two = sorted(
         (r["series"], r["ts_ns"], r["value"])
         for r in execute_query(spark, _AGG_Q, frame).collect()
-    )  # default conf: no probe → two-level
-    spark.conf.set(_AGG_PROBE_BYTES_CONF, "0")
-    try:
+    )  # default threshold: no probe → two-level
+    with monkeypatch.context() as m:
+        m.setattr(engine, "_AGG_PROBE_BYTES", 0)
         one_df = execute_query(spark, _AGG_Q, frame)
         assert not _is_two_level(one_df)
         one = sorted(
             (r["series"], r["ts_ns"], r["value"]) for r in one_df.collect()
         )
-    finally:
-        spark.conf.unset(_AGG_PROBE_BYTES_CONF)
     assert one == two
 
 
@@ -88,7 +82,6 @@ def test_aggregate_probe_key_sample_keeps_duplicates(spark, tmp_path,
     sample a dup=2 input still routes two-level (a 10% row sample keeps
     a row's twin one time in ten and would read the input as unique),
     and an ns-unique input still routes one-level."""
-    from akumuli_spark.query import engine
 
     def parquet(n_ts, dup):
         path = str(tmp_path / f"m{n_ts}x{dup}")
@@ -98,12 +91,9 @@ def test_aggregate_probe_key_sample_keeps_duplicates(spark, tmp_path,
     compress, unique = parquet(4000, 2), parquet(4000, 1)
     monkeypatch.setattr(engine, "_AGG_PROBE_SAMPLE_BYTES",
                         engine._estimated_bytes(unique) // 10)
-    spark.conf.set(_AGG_PROBE_BYTES_CONF, "0")  # always probe
-    try:
-        assert _is_two_level(execute_query(spark, _AGG_Q, compress))
-        assert not _is_two_level(execute_query(spark, _AGG_Q, unique))
-    finally:
-        spark.conf.unset(_AGG_PROBE_BYTES_CONF)
+    monkeypatch.setattr(engine, "_AGG_PROBE_BYTES", 0)  # always probe
+    assert _is_two_level(execute_query(spark, _AGG_Q, compress))
+    assert not _is_two_level(execute_query(spark, _AGG_Q, unique))
 
 
 def test_gopher_keep_collision_rejected(spark):

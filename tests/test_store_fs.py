@@ -294,7 +294,7 @@ def test_metrics_rebuild_keeps_replay_exactly_once(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_change_token_flips_per_publish_not_per_mtime(spark, tmp_path):
-    """The snapshot token is the manifest pointer log's version, so it
+    """The snapshot token is the manifest's current snapshot dir, so it
     flips on every append, optimize and retention publish — also two
     publishes inside one coarse mtime tick (ADVICE r12: an mtime token
     aliased them and served a stale file list) — and no timestamp
@@ -305,23 +305,28 @@ def test_change_token_flips_per_publish_not_per_mtime(spark, tmp_path):
     zorder_metrics_table(spark, _metrics(spark, n_series=2, pts=10), path,
                          bucket_ns=DAY, files_per_partition=1)
     zdb = open_zorder_database(spark, path)
-    tokens = [zdb._store_token()]
+
+    def token():
+        zdb._refresh()
+        return zdb._snapshot_token
+
+    tokens = [token()]
     zorder_append(spark, _metrics(spark, n_series=1, pts=3, t0=5), path)
-    tokens.append(zdb._store_token())
+    tokens.append(token())
     zorder_append(spark, _metrics(spark, n_series=1, pts=3, t0=7), path)
-    tokens.append(zdb._store_token())
+    tokens.append(token())
     assert zorder_optimize(spark, path) >= 1
-    tokens.append(zdb._store_token())
+    tokens.append(token())
     assert zorder_retention(spark, path, keep_ns=DAY,
                             now_ns=2 * DAY + 1) >= 1
-    tokens.append(zdb._store_token())
+    tokens.append(token())
     assert len(set(tokens)) == len(tokens)
     # force IDENTICAL mtimes on every pointer and snapshot: the token is
-    # version-based, so it neither changes nor aliases
+    # the snapshot's name, so it neither changes nor aliases
     for root, dirs, files in os.walk(path):
         for name in dirs + files:
             os.utime(os.path.join(root, name), (1_000_000.0, 1_000_000.0))
-    assert zdb._store_token() == tokens[-1]
+    assert token() == tokens[-1]
 
 
 def _to_bare_layout(path):

@@ -5,17 +5,19 @@ contract."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from akumuli_spark.smallframe import local_frame
 from akumuli_spark.sources.zorder import (
     interleave_bits,
     zorder_metrics_table,
     zorder_select,
 )
-from tests.conftest import drop_newest_snapshot
+from tests.conftest import count_jobs, drop_newest_snapshot
 
 DAY = 86_400 * 10**9
 N_SERIES = 32
@@ -110,34 +112,17 @@ def test_tags_reconstructed_from_series_grammar(spark, store):
     assert row.tags == {"host": "07"}
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted in its own job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is fed asynchronously by the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_narrow_select_prunes_in_one_manifest_job(spark, store):
-    """``files_total`` and the kept file list come from ONE aggregate
-    over the manifest: a narrow select costs exactly the manifest read,
-    that aggregate and the pruned read's own setup — no separate
-    ``count`` — and its stats match the manifest."""
-    from akumuli_spark.sources.fs import get_fs
-    from akumuli_spark.sources.zorder import MANIFEST_DIR, _vtable_dir
+def test_narrow_select_prunes_in_one_manifest_job(spark, store, tmp_path):
+    """A select prunes the manifest snapshot held on the driver: on a
+    snapshot already read, a narrow select builds in 0 Spark jobs; the
+    first select after an append runs at most the manifest collect and
+    one schema read; and its stats match the manifest."""
+    from akumuli_spark.sources.zorder import (
+        _MANIFEST_SCHEMA, manifest_dir, zorder_append,
+    )
 
     path, rows = store
-    snapshot = _vtable_dir(get_fs(path), os.path.join(path, MANIFEST_DIR))
-    man = spark.read.parquet(snapshot)
+    man = spark.read.parquet(manifest_dir(path))
     kept = [r.file for r in man.filter(
         (F.col("series_min") <= "m.cpu host=03")
         & (F.col("series_max") >= "m.cpu host=03")
@@ -145,19 +130,147 @@ def test_narrow_select_prunes_in_one_manifest_job(spark, store):
     ).collect()]
     st: dict = {}
 
-    def select():
-        zorder_select(spark, path, metric="m.cpu", series="m.cpu host=03",
+    def select(p):
+        zorder_select(spark, p, metric="m.cpu", series="m.cpu host=03",
                       ts_from=DAY, ts_to=2 * DAY, stats=st)
 
-    select()  # warm per-process caches before counting
-    n_select = _jobs(spark, select)
-    n_read = _jobs(spark, lambda: spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, f) for f in kept]))
-    n_man = _jobs(spark, lambda: spark.read.parquet(snapshot))
-    n_agg = _jobs(spark, lambda: man.agg(F.count(F.lit(1))).first())
-    assert n_select == n_man + n_agg + n_read
+    select(path)  # reads the snapshot, if no earlier test did
+    assert count_jobs(spark, lambda: select(path)) == 0
     assert st == {"files_total": man.count(), "files_selected": len(kept)}
     assert 0 < len(kept) < man.count()
+
+    df, _ = _frame(spark)
+    grow = str(tmp_path / "grow")
+    zorder_metrics_table(spark, df.filter(F.col("ts_ns") < DAY), grow,
+                         bucket_ns=DAY, files_per_partition=2)
+    select(grow)
+    zorder_append(spark, df.filter(F.col("ts_ns").between(DAY, 2 * DAY)),
+                  grow)
+    n_first = count_jobs(spark, lambda: select(grow))
+    snapshot = manifest_dir(grow)
+    one = spark.read.parquet(snapshot).first().file
+    n_collect = count_jobs(spark, lambda: spark.read.schema(
+        _MANIFEST_SCHEMA).parquet(snapshot).collect())
+    n_schema = count_jobs(
+        spark, lambda: spark.read.parquet(os.path.join(grow, one)).schema)
+    assert n_first <= n_collect + n_schema
+    assert count_jobs(spark, lambda: select(grow)) == 0
+    assert 0 < st["files_selected"] < st["files_total"]
+
+
+def _spark_prune(spark, man, cases) -> list[list[str]]:
+    """The Spark predicate zorder_select pruned the manifest with before
+    it held the manifest on the driver — per-series OR arms up to 64
+    names, a broadcast range-overlap join above — evaluated for each
+    ``(metrics, wanted, ts_from, ts_to)`` case: the reference the
+    driver-side prune must match file for file.  The OR-arm cases share
+    one aggregate job."""
+    def cond(metrics, wanted, ts_from, ts_to):
+        c = F.lit(True)
+        if metrics is not None:
+            c = c & F.col("metric").isin(metrics)
+        if wanted is not None and len(wanted) <= 64:
+            hit = F.lit(False)
+            for s in wanted:
+                hit = hit | ((F.col("series_min") <= s)
+                             & (F.lit(s) <= F.col("series_max")))
+            c = c & hit
+        if ts_from is not None:
+            c = c & (F.col("ts_max") >= ts_from)
+        if ts_to is not None:
+            c = c & (F.col("ts_min") < ts_to)
+        return c
+
+    def joined(i, metrics, wanted, ts_from, ts_to):
+        wanted_df = local_frame(
+            spark, [(s,) for s in wanted], "__wanted_series string")
+        return man.filter(cond(metrics, None, ts_from, ts_to)).join(
+            F.broadcast(wanted_df),
+            (F.col("series_min") <= F.col("__wanted_series"))
+            & (F.col("__wanted_series") <= F.col("series_max")),
+            "left_semi",
+        ).select(F.lit(i).alias("case"), "file")
+
+    out = [[] for _ in cases]
+    arms = [i for i, c in enumerate(cases) if c[1] is None or len(c[1]) <= 64]
+    row = man.agg(*[
+        F.collect_list(F.when(cond(*cases[i]), F.col("file"))).alias(f"c{i}")
+        for i in arms
+    ]).first()
+    for i in arms:
+        out[i] = row[f"c{i}"]
+    joins = [joined(i, *c) for i, c in enumerate(cases) if i not in arms]
+    if joins:
+        for r in functools.reduce(DataFrame.unionAll, joins).collect():
+            out[r.case].append(r.file)
+    return [sorted(files) for files in out]
+
+
+def test_driver_prune_matches_spark_predicate(spark, store, tmp_path):
+    """The driver-side prune keeps exactly the files the Spark predicate
+    over the manifest kept: over NULL-stat rows (an empty file's stats;
+    any NULL compared stat drops the file), series lists of 1, 64, 65
+    and 1000 names, metric lists, and open and closed ``ts`` bounds.
+    Across appends the cache holds one snapshot per store, the current
+    one."""
+    import random
+
+    from akumuli_spark.sources import zorder as zmod
+
+    path, _ = store
+    real = spark.read.parquet(zmod.manifest_dir(path)).collect()
+    stats = ("metric", "series_min", "series_max", "ts_min", "ts_max")
+    crafted = [r.asDict() for r in real]
+    crafted += [dict(r.asDict(), metric="m.mem", file="mem-" + r.file)
+                for r in real]
+    for i, c in enumerate(stats):
+        for r in real[i::len(stats)]:
+            crafted.append(dict(r.asDict(), **{c: None},
+                                file=f"null-{c}-{r.file}"))
+    crafted.append(dict(real[0].asDict(), file="ghost.parquet",
+                        **{c: None for c in stats[1:]}))
+    crafted_dir = str(tmp_path / "crafted")
+    spark.createDataFrame(crafted, zmod._MANIFEST_SCHEMA).coalesce(1) \
+        .write.parquet(crafted_dir)
+    man = spark.read.parquet(crafted_dir)
+    rows = man.collect()
+
+    rng = random.Random(7)
+    pool = [f"m.cpu host={i:02d}" for i in range(100)]
+    pool += [f"m.cpu host={i}" for i in range(100, 1000)]
+    lists = [None, [], ["m.cpu host=07"], rng.sample(pool, 64),
+             rng.sample(pool, 65), pool]
+    assert [len(x) for x in lists[2:]] == [1, 64, 65, 1000]
+    bounds = [(None, None), (DAY, None), (None, 2 * DAY),
+              (DAY + 17, 2 * DAY), (3 * DAY, 3 * DAY)]
+    cases = [(None, w, lo, hi) for w in lists for lo, hi in bounds]
+    cases += [(["m.cpu"], w, DAY + 17, 2 * DAY) for w in lists]
+    cases += [(m, ["m.cpu host=05"], DAY, 2 * DAY)
+              for m in ([], ["m.mem"], ["m.cpu", "m.mem"], ["nope"])]
+    for case, exp in zip(cases, _spark_prune(spark, man, cases)):
+        metrics, wanted, lo, hi = case
+        got = zmod._select_files(rows, ("series_min", "series_max"), wanted,
+                                 ("ts_min", "ts_max"), lo, hi, metrics)
+        assert sorted(got) == exp, (metrics, wanted and len(wanted), lo, hi)
+
+    df, _ = _frame(spark)
+    grow = str(tmp_path / "cache")
+    zorder_metrics_table(spark, df.filter(F.col("ts_ns") < DAY), grow,
+                         bucket_ns=DAY, files_per_partition=1)
+    zorder_select(spark, grow)
+    n_cached = len(zmod._SNAPSHOTS)
+    for epoch in (1, 2):
+        day = df.filter(F.col("ts_ns").between(epoch * DAY,
+                                               (epoch + 1) * DAY - 1))
+        zmod.zorder_append(spark, day, grow, epoch=epoch)
+        st: dict = {}
+        zorder_select(spark, grow, series=lists[3], ts_from=DAY, stats=st)
+        man = spark.read.parquet(zmod.manifest_dir(grow))
+        [exp] = _spark_prune(spark, man, [(None, lists[3], DAY, None)])
+        assert st == {"files_total": man.count(),
+                      "files_selected": len(exp)} and exp
+    assert len(zmod._SNAPSHOTS) == n_cached
+    assert zmod._SNAPSHOTS[grow].dir == zmod.manifest_dir(grow)
 
 
 def test_absent_store_answers_empty(spark, tmp_path):
@@ -567,9 +680,9 @@ def test_optimize_restores_pruning_preserves_results_and_ledger(
 
 
 def test_wide_series_list_uses_join_path_same_answer(spark, store):
-    """A series list past _SERIES_EXPR_CAP prunes via the broadcast
-    range-overlap join (no per-series predicate arms) and filters the
-    residual via semi-join — same rows as the narrow path."""
+    """A series list past _SERIES_EXPR_CAP prunes files by the same
+    bisect as a narrow list and filters the residual via semi-join —
+    same rows as the narrow path."""
     path, rows = store
     wanted = [f"m.cpu host={i:02d}" for i in range(N_SERIES)]
     wanted += [f"m.cpu host=x{i}" for i in range(60)]  # absent: no rows
@@ -671,10 +784,10 @@ def test_corpus_erosion_report(spark, tmp_path):
 
 def test_optimize_wide_selection_join_path_and_max_buckets(
         spark, tmp_path, monkeypatch):
-    """Past _SERIES_EXPR_CAP selected buckets, optimize switches from
-    per-bucket predicate arms to broadcast joins (same guard as wide
-    series lists); max_buckets bounds one maintenance run to the most
-    eroded buckets and leaves the rest for the next."""
+    """Past _SERIES_EXPR_CAP replaced files, optimize's publish drops
+    them with a broadcast anti-join instead of an ``isin`` (same guard
+    as wide series lists); max_buckets bounds one maintenance run to the
+    most eroded buckets and leaves the rest for the next."""
     from akumuli_spark.sources import zorder as zmod
     from akumuli_spark.sources.zorder import (
         zorder_append,

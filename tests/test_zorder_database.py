@@ -14,7 +14,7 @@ from akumuli_spark.api import open_database, open_zorder_database
 from akumuli_spark.query.plan import parse_timestamp_ns
 from akumuli_spark.sources.testdata import app_metrics_view
 from akumuli_spark.sources.zorder import zorder_metrics_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 NS = 10**9
 DAY = 86_400 * NS
@@ -89,6 +89,20 @@ def test_narrow_range_prunes_files(dbs):
     assert _match(zdb.query(qjson), db.query(qjson))
     st = zdb.last_prune_stats
     assert st and 0 < st["files_selected"] < st["files_total"]
+
+
+def test_warm_narrow_where_select_runs_three_jobs(spark, dbs):
+    """A warm narrow ``where`` select runs no manifest job: the manifest
+    snapshot is held on the driver, so the request pays two jobs to
+    resolve the where to series names and one for the query itself."""
+    zdb, db = dbs
+    qjson = {"select": "app.click", "range": {"from": E0, "to": E0 + DAY},
+             "where": {"user": "3"}}
+    for _ in range(2):
+        zdb.query(qjson).toPandas()
+    assert count_jobs(spark, lambda: zdb.query(qjson).toPandas()) <= 3
+    st = zdb.last_prune_stats
+    assert 0 < st["files_selected"] < st["files_total"]
 
 
 def test_metadata_endpoints_unchanged(dbs):

@@ -1462,8 +1462,8 @@ def widewhere_smoke(spark, n_rows: int = 10_000_000,
     """Wide-`where` guard at reference-grade series cardinality (r12):
     a z-store over ``n_series`` series, probed two ways a naive
     implementation dies on — a 5 000-entry series LIST through
-    ``zorder_select`` (broadcast range-overlap join, no per-series
-    predicate arms) and a ``ZorderDatabase`` where-clause matching
+    ``zorder_select`` (driver-side bisect prune, broadcast semi-join
+    residual) and a ``ZorderDatabase`` where-clause matching
     every host (past WIDE_WHERE_CAP → metric+time pruning + ordinary
     column predicate).  Reports wall-clock (the claim: plan compile
     stays bounded) and asserts row parity with direct filters."""
