@@ -250,9 +250,8 @@ class ZorderDatabase(Database):
         coarse timestamp tick — ADVICE r12); requests between publishes
         pay its metadata reads, no Spark job.  Attached rollups stay
         attached."""
-        from akumuli_spark.sources.zorder import (
-            EVENTS_SCHEMA, manifest_dir, zorder_select,
-        )
+        from akumuli_spark.datamodel import EVENTS_SCHEMA
+        from akumuli_spark.sources.zorder import manifest_dir, zorder_select
 
         token = (manifest_dir(self._zpath),
                  self._ez_path and manifest_dir(self._ez_path))
@@ -290,7 +289,7 @@ class ZorderDatabase(Database):
         """Metrics queries read the metrics store, select-events the
         events store (event metric = '!name' partitions), each pruned by
         :meth:`_pruned`; events bound as a frame pass through."""
-        from akumuli_spark.sources.zorder import EVENTS_SCHEMA
+        from akumuli_spark.datamodel import EVENTS_SCHEMA
 
         if q.kind is not QueryKind.SELECT_EVENTS:
             return self._pruned(self._zpath, None, q), self.events
@@ -385,27 +384,28 @@ class ZorderCatalog:
     #: is generous and keeps the log from growing one dir per register)
     vacuum_grace_s: float = 3600.0
 
-    def _publish(self, merge_fn) -> None:
+    def _log(self):
         from akumuli_spark.sources.fs import CasLog, get_fs
-        from akumuli_spark.sources.zorder import _cas_publish_df
 
-        fs = get_fs(self.root)
-        fs.makedirs(self.root)
-        if _cas_publish_df(self.spark, fs, self._table, merge_fn):
+        return CasLog(get_fs(self.root), self._table)
+
+    def _publish(self, merge_fn) -> None:
+        def one_file(cur: DataFrame | None) -> DataFrame | None:
+            out = merge_fn(cur)
+            return None if out is None else out.coalesce(1)
+
+        log = self._log()
+        if log.publish(self.spark, one_file, self._SCHEMA):
             # without this every register/unregister would leak one
             # snapshot dir + pointer forever (r14 review)
-            CasLog(fs, self._table).vacuum(keep=2,
-                                           grace_s=self.vacuum_grace_s)
+            log.vacuum(keep=2, grace_s=self.vacuum_grace_s)
 
     def entries(self) -> DataFrame:
         """The current catalog snapshot (empty before any register)."""
-        from akumuli_spark.sources.fs import CasLog, get_fs
-
-        log = CasLog(get_fs(self.root), self._table)
-        _v, cur = log.current()
+        _v, cur = self._log().current()
         if cur is None:
             return local_frame(self.spark, [], self._SCHEMA)
-        return self.spark.read.parquet(cur)
+        return self.spark.read.schema(self._SCHEMA).parquet(cur)
 
     def register(self, name: str, path: str, kind: str = "metrics") -> None:
         """Add or replace one store under ``name``.  The store must

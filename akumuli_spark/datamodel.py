@@ -14,10 +14,9 @@ per series; the canonical *name* (a string column) is the series key so
 results hash-compare across engines without relying on interned ids.
 
     metrics(series string, metric string, tags map<string,string>,
-            ts_ns long, value double)
+            ts_ns long, value double)                   -- ENGINE_SCHEMA
     events (series string, metric string, tags map<string,string>,
-            ts_ns long, body string)
-    series_dim(series string, metric string, tags map<string,string>)
+            ts_ns long, body string)                    -- EVENTS_SCHEMA
 
 ``ts_ns`` is int64 nanoseconds since epoch — the reference's native
 resolution.  A ``TimestampType`` (µs) view can be derived where needed.
@@ -27,33 +26,24 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
-        T.StructField("ts_ns", T.LongType(), False),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
+#: the engine's metrics frame: what every reader serves and every
+#: query runs on (``tags`` is derived from ``series`` on read)
+ENGINE_SCHEMA = T.StructType([
+    T.StructField("series", T.StringType()),
+    T.StructField("metric", T.StringType()),
+    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+    T.StructField("ts_ns", T.LongType()),
+    T.StructField("value", T.DoubleType()),
+])
 
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
-        T.StructField("ts_ns", T.LongType(), False),
-        T.StructField("body", T.StringType(), True),
-    ]
-)
-
-SERIES_DIM_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
-    ]
-)
+#: the events frame shape (string body payload, metric starts with '!')
+EVENTS_SCHEMA = T.StructType([
+    T.StructField("series", T.StringType()),
+    T.StructField("metric", T.StringType()),
+    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+    T.StructField("ts_ns", T.LongType()),
+    T.StructField("body", T.StringType()),
+])
 
 # Reference limits (include/akumuli_def.h:116-125); enforced at parse time.
 MAX_TAGS = 32

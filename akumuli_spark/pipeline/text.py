@@ -1814,32 +1814,24 @@ def compact_bm25_index(spark, path: str) -> None:
     ``dfreq``, one global row in ``stats``, and the postings rewritten
     one file set per bucket (micro-batch appends fragment them — same
     economics as ``sources.layout.compact_metrics_table``).  Each table
-    is swapped in with the two-rename ``.compact-tmp``/``.compact-old``
-    protocol and self-heals via ``recover_compaction`` on the next
-    touch; readers between per-table swaps stay correct because
+    is swapped in with the two-rename protocol (``sources.fs.
+    swap_compact``) and self-heals via ``recover_compaction`` on the
+    next touch; readers between per-table swaps stay correct because
     compaction changes no logical content (the serve path always folds
     whatever partials it sees).  A serve DataFrame PLANNED before the
     swap pins the pre-compaction file listing — re-plan (call
     :func:`bm25_topk_from_index` again) after compacting, the same
     contract as ``sources.layout.compact_metrics_table``."""
-    from akumuli_spark.sources.fs import get_fs, swap_compact
-    from akumuli_spark.sources.layout import recover_compaction
+    from akumuli_spark.sources.fs import (
+        get_fs, recover_compaction, swap_compact,
+    )
 
     fs = get_fs(path)
 
     def swap(sub: str, df, partitioned: bool) -> None:
-        p = f"{path}/{sub}"
-        fs.rmtree(f"{p}.compact-tmp")
-        w = df.write.mode("overwrite")
-        if partitioned:
-            w = w.partitionBy("epoch", "term_bucket")
-        else:
-            w = w.partitionBy("epoch")
-        w.parquet(f"{p}.compact-tmp")
-        # two-rename publish through the portable seam; a concurrent
-        # reader's recover_compaction rolling the swap forward between
-        # the renames is tolerated (same as compact_metrics_table)
-        swap_compact(fs, p)
+        cols = ("epoch", "term_bucket") if partitioned else ("epoch",)
+        swap_compact(fs, f"{path}/{sub}",
+                     df.write.mode("overwrite").partitionBy(*cols).parquet)
 
     # positional layout read from the stored contract (Spark-visible,
     # not a driver-local fs probe — ADVICE r10); pre-meta indexes fall
@@ -1933,10 +1925,8 @@ def bm25_topk_from_index(spark, path: str,
     constant they were built with."""
     from pyspark.sql import Window
 
-    from akumuli_spark.sources.layout import (
-        read_table_or_none,
-        recover_compaction,
-    )
+    from akumuli_spark.sources.fs import recover_compaction
+    from akumuli_spark.sources.layout import read_table_or_none
 
     for sub in ("postings", "dfreq", "stats"):
         recover_compaction(f"{path}/{sub}")
@@ -2271,10 +2261,8 @@ def phrase_counts_from_index(spark, path: str,
     Bucket pruning uses the modulus recorded in the index's stored
     layout contract (``{path}/meta`` — see :func:`bm25_topk_from_index`;
     pre-meta indexes use the constant they were built with)."""
-    from akumuli_spark.sources.layout import (
-        read_table_or_none,
-        recover_compaction,
-    )
+    from akumuli_spark.sources.fs import recover_compaction
+    from akumuli_spark.sources.layout import read_table_or_none
 
     recover_compaction(f"{path}/positions")
     meta = _read_bm25_meta(spark, path)
@@ -2421,10 +2409,8 @@ def phrase_counts_relational_from_index(spark, path: str,
     The positional rows explode back to (doc_id, pos, term) only for
     the terms the join keeps — bounded by the matched terms' postings,
     never the corpus."""
-    from akumuli_spark.sources.layout import (
-        read_table_or_none,
-        recover_compaction,
-    )
+    from akumuli_spark.sources.fs import recover_compaction
+    from akumuli_spark.sources.layout import read_table_or_none
 
     if not isinstance(phrases, DataFrame):
         phrases = local_frame(spark,

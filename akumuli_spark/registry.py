@@ -4748,7 +4748,7 @@ def _zorder_cas_select(spark: SparkSession, sf: str) -> DataFrame:
 
 # Same probe again over a file:// store: a double-landed replay epoch,
 # a row lost in the optimize's carry-forward merge, or a stale snapshot
-# resolution in _vtable_dir would all show against the flat oracle.
+# resolution in CasLog.current would all show against the flat oracle.
 _register_pipeline(
     "zorder_cas_lifecycle_select",
     _zorder_cas_select,

@@ -33,10 +33,23 @@ and a caller opts into the portable path simply by addressing the
 store with a URI (the lifecycle tests run the full build/append/
 optimize/vacuum cycle over ``file://`` URIs through the Hadoop route).
 
-The module also hosts :func:`swap_compact`, the two-rename publish the
-layout, sketch, membership and index stores share, and :class:`CasLog`,
-the conditional-PUT pointer-log committer every z-store metadata table
-publishes through.
+The module is also the one home of every store write protocol built
+on those primitives; each store calls these instead of writing its own:
+
+* two-rename compaction — :func:`swap_compact` (clear
+  ``{path}.compact-tmp``, run the caller's writer, two renames) and its
+  heal :func:`recover_compaction`, for the layout table, the sketch
+  store, the Bloom store, the BM25 index tables and the IVF index root;
+* pointer-log publish — :meth:`CasLog.publish` (read the current
+  snapshot, merge, write, claim; re-merge on a lost claim), for the
+  z-store manifest/meta/ledger tables, the z-store catalog and the
+  ingest marks table;
+* staged move-in — :func:`stage_dir` names a writer's private
+  ``{path}.append-tmp-<uuid>`` sibling and :func:`move_in` moves its
+  data files in, for layout appends and every z-store write;
+* partition expiry — :func:`expire_buckets` drops ``ts_bucket=``
+  dirs through a ``{path}.trash`` sibling, for layout retention and
+  the sketch store's expiry.
 
 Object-store honesty: on S3/GCS, "rename" is copy+delete, so the
 two-rename swap is NOT an atomic publish there.  The production commit
@@ -575,23 +588,30 @@ def strip_scheme(path: str) -> str:
     return os.path.abspath(path)
 
 
-def swap_compact(fs: StoreFilesystem, path: str,
-                 tolerate_reader_heal: bool = True) -> None:
-    """The two-rename publish: assumes a complete table (``_SUCCESS``
-    present) at ``{path}.compact-tmp``; swaps it in atomically and
-    clears the ``.compact-old`` backup.  With ``tolerate_reader_heal``
-    a concurrent reader's :func:`~akumuli_spark.sources.layout.
-    recover_compaction` rolling the swap forward between the renames is
-    accepted (the shared tolerance every store committer had inline)."""
-    tmp, old = f"{path}.compact-tmp", f"{path}.compact-old"
+def compaction_dirs(path: str) -> tuple[str, str]:
+    """The ``(tmp, old)`` siblings of the two-rename swap of ``path``:
+    ``{path}.compact-tmp`` holds the rewrite, ``{path}.compact-old``
+    the replaced table between the renames."""
+    return f"{path}.compact-tmp", f"{path}.compact-old"
+
+
+def swap_compact(fs: StoreFilesystem, path: str, write):
+    """The two-rename publish every non-z-order store rewrites through.
+    Clears ``{path}.compact-tmp``, runs ``write(tmp)`` (which must leave
+    a complete table there, ``_SUCCESS`` marker included), then swaps
+    it in: rename ``path`` → ``.compact-old``, rename tmp → ``path``,
+    delete old.  A concurrent reader's :func:`recover_compaction`
+    rolling the swap forward between the renames is tolerated.  Returns
+    what ``write`` returns."""
+    tmp, old = compaction_dirs(path)
+    fs.rmtree(tmp)
+    out = write(tmp)
     fs.rmtree(old)
     if fs.exists(path):
         try:
             fs.rename(path, old)
             fs.rename(tmp, path)
         except OSError:
-            if not tolerate_reader_heal:
-                raise
             if not fs.exists(path) or fs.exists(
                 posixpath.join(tmp, "_SUCCESS")
             ):
@@ -599,11 +619,119 @@ def swap_compact(fs: StoreFilesystem, path: str,
         fs.rmtree(old)
     else:
         fs.rename(tmp, path)
+    return out
+
+
+def recover_compaction(path: str, gc: bool = False) -> None:
+    """Self-heal a :func:`swap_compact` that crashed between its two
+    renames.
+
+    A crash in that one-syscall window leaves no table at ``path``;
+    since the tmp dir only enters the swap after its Spark write
+    completed (it carries the ``_SUCCESS`` marker), recovery is
+    unambiguous: finish the swap if tmp is complete, else restore the
+    original.  A crash after the second rename just leaves a stale
+    ``old``/``tmp`` to garbage-collect.  Readers and compactors both
+    call it, so a table heals on next touch.
+
+    ``gc`` gates steady-state garbage collection of leftover tmp/old
+    dirs and must only be passed by the compactor: a *reader* that
+    deleted ``tmp`` while the table is healthy would delete a live
+    compactor's in-progress write.  Readers still clean up ``old``
+    when they themselves performed a heal.  Concurrency contract: any
+    number of readers vs at most one compactor."""
+    _recover(get_fs(path), path, gc)
+
+
+def _recover(fs: StoreFilesystem, path: str, gc: bool = False) -> None:
+    tmp, old = compaction_dirs(path)
+    if not fs.exists(path) and fs.exists(old):
+        try:
+            if fs.exists(posixpath.join(tmp, "_SUCCESS")):
+                fs.rename(tmp, path)  # roll forward: the rewrite is whole
+            else:
+                fs.rename(old, path)  # roll back: restore the original
+        except OSError:
+            # a concurrent recover/compactor won the rename race; the
+            # post-condition check below is what matters
+            pass
+        if fs.exists(path):
+            fs.rmtree(old)
+    if gc and fs.exists(path):
+        for stale in (tmp, old):
+            fs.rmtree(stale)
+
+
+def stage_dir(path: str) -> str:
+    """A fresh private staging sibling ``{path}.append-tmp-<uuid>`` for
+    one writer; a hard-crashed writer's leftover shows in
+    :func:`stage_dirs`."""
+    import uuid
+
+    return f"{path}.append-tmp-{uuid.uuid4().hex}"
+
+
+def stage_dirs(fs: StoreFilesystem, path: str) -> list[str]:
+    """Every staging sibling of ``path``, live or left by a crash."""
+    par = parent_dir(path)
+    base = posixpath.basename(path.rstrip("/"))
+    return [posixpath.join(par, rel)
+            for rel in fs.glob(par, f"{base}.append-tmp-*")]
+
+
+def move_in(fs: StoreFilesystem, tmp: str, path: str) -> None:
+    """Move a staged write's ``.parquet`` files into the table at
+    ``path``, keeping their relative paths.  Names carry the writing
+    job's UUID, so nothing collides, and each file moves whole.  Files
+    under ``_``-prefixed dirs (a z-store's metadata tables, which
+    publish through their own pointer logs) stay behind."""
+    made = set()
+    for rel in fs.walk_files(tmp):
+        if not rel.endswith(".parquet") or any(
+            p.startswith("_") for p in rel.split("/")[:-1]
+        ):
+            continue
+        dst = posixpath.join(path.rstrip("/"), rel)
+        d = posixpath.dirname(dst)
+        if d not in made:
+            fs.makedirs(d)
+            made.add(d)
+        fs.rename(posixpath.join(tmp, rel), dst)
+
+
+def expire_buckets(fs: StoreFilesystem, path: str, parents: tuple[str, ...],
+                   cutoff: int) -> int:
+    """Zero-scan partition expiry: every ``{parent}/ts_bucket=<n>`` dir
+    under ``path`` (``parent`` a glob like ``metric=*``) with
+    ``n < cutoff`` is renamed into the ``{path}.trash`` sibling, and the
+    trash is then deleted.  A reader that listed files just before a
+    rename may miss them for one query.  Returns the dirs dropped."""
+    import uuid
+
+    trash = f"{path}.trash"
+    fs.makedirs(trash)
+    dropped = 0
+    for parent in parents:
+        for rel in fs.glob(path, f"{parent}/ts_bucket=*"):
+            try:
+                bucket = int(posixpath.basename(rel).split("=", 1)[1])
+            except ValueError:  # pragma: no cover - foreign dirs left alone
+                continue
+            if bucket < cutoff:
+                fs.rename(posixpath.join(path, rel),
+                          posixpath.join(trash, uuid.uuid4().hex))
+                dropped += 1
+    fs.rmtree(trash)
+    return dropped
 
 
 # ---------------------------------------------------------------------------
 # Conditional-PUT pointer-log committer (the object-store manifest commit)
 # ---------------------------------------------------------------------------
+
+
+#: publish attempts before contention is reported as an error
+_PUBLISH_RETRIES = 64
 
 
 class CasLog:
@@ -624,8 +752,8 @@ class CasLog:
     name, then claims version N+1 with ONE ``create_exclusive`` of the
     pointer object — a conditional PUT.  Losing the create is a CAS
     CONFLICT: some other writer owns N+1, so the merge is stale; the
-    caller re-reads and re-merges (:func:`~akumuli_spark.sources.
-    zorder._cas_publish_df` loops exactly this way).  Readers take
+    caller re-reads and re-merges (:meth:`publish` loops exactly this
+    way).  Readers take
     the highest readable pointer — always a complete, immutable
     snapshot.  Crash matrix:
 
@@ -670,21 +798,31 @@ class CasLog:
                 continue
         return sorted(out)
 
-    def current(self) -> tuple[int, str | None]:
-        """(version, absolute current table dir).  (0, None) before the
-        first commit.  Walks DOWN from the highest pointer past any
-        empty/unreadable one (a commit that died between create and
-        close) — those versions are burned, never reused."""
+    def _readable(self):
+        """(version, pointer path, snapshot dir) of each readable
+        pointer, newest first and lazily — an empty/unreadable pointer
+        (a commit that died between create and close) is a burned
+        version, skipped."""
         for v, name in reversed(self.entries()):
+            ptr = posixpath.join(self.log_dir, name)
             try:
-                payload = self.fs.read_bytes(
-                    posixpath.join(self.log_dir, name)
-                ).decode("ascii", "replace").strip()
+                payload = self.fs.read_bytes(ptr).decode(
+                    "ascii", "replace").strip()
             except OSError:
                 continue
             if payload:
-                return v, f"{self.table}.{payload}"
-        return 0, None
+                yield v, ptr, f"{self.table}.{payload}"
+
+    def current(self) -> tuple[int, str | None]:
+        """(version, absolute current table dir): the highest readable
+        pointer's snapshot.  Before the first commit, the bare table dir
+        of a store written before the pointer log existed is version 0
+        (healed first of a two-rename swap an older writer crashed in);
+        (0, None) when there is no table at all."""
+        for v, _ptr, d in self._readable():
+            return v, d
+        _recover(self.fs, self.table)
+        return 0, (self.table if self.fs.exists(self.table) else None)
 
     def next_version(self) -> int:
         """1 + the highest version number EVER CLAIMED (readable or
@@ -704,6 +842,44 @@ class CasLog:
 
     def dir_for(self, vname: str) -> str:
         return f"{self.table}.{vname}"
+
+    def publish(self, spark, merge_fn, schema) -> bool:
+        """Optimistic conditional-PUT publish of one table version.
+
+        ``merge_fn(current_df_or_none) -> DataFrame | None`` recomputes
+        the desired table from the CURRENT snapshot, read with the
+        caller's ``schema`` (no inference job); ``None`` means "nothing
+        to publish" (e.g. the epoch is already committed) and aborts
+        cleanly.  Per attempt: read version V → merge → write the
+        returned frame as a new snapshot dir → :meth:`commit_above` V.
+        Losing the claim to a readable rival means the merge is stale:
+        the attempt dir is dropped, and the loop re-reads and re-merges
+        after a jittered backoff (without it every loser of N
+        concurrent publishers re-writes at once and N-1 of N attempts
+        burn a Spark write per round).  Exactly-once checks hold
+        because they re-run inside ``merge_fn`` on every retry.
+        Returns True when a version was committed, False when
+        ``merge_fn`` declined."""
+        import random
+
+        for attempt in range(_PUBLISH_RETRIES):
+            v_cur, cur_dir = self.current()
+            cur = (None if cur_dir is None
+                   else spark.read.schema(schema).parquet(cur_dir))
+            out = merge_fn(cur)
+            if out is None:
+                return False
+            vname = self.version_name(v_cur + 1)
+            out.write.mode("overwrite").parquet(self.dir_for(vname))
+            if self.commit_above(v_cur, vname):
+                return True
+            self.fs.rmtree(self.dir_for(vname))  # lost: orphan attempt
+            time.sleep(min(2.0, 0.05 * (1 << min(attempt, 5)))
+                       * (0.5 + random.random()))
+        raise RuntimeError(
+            f"CAS publish contention exceeded {_PUBLISH_RETRIES} "
+            f"retries: {self.table}"
+        )
 
     def try_commit(self, version: int, vname: str) -> bool:
         """Claim ``version`` for the (already fully written) dir
@@ -751,39 +927,6 @@ class CasLog:
 
     # -- maintenance --------------------------------------------------------
 
-    def retained(self, keep: int = 3) -> set[str]:
-        """Absolute dirs of the ``keep`` newest READABLE versions — the
-        snapshots vacuum must preserve (a reader may still be serving
-        any of them)."""
-        kept: set[str] = set()
-        for v, name in reversed(self.entries()):
-            if len(kept) >= keep:
-                break
-            try:
-                payload = self.fs.read_bytes(
-                    posixpath.join(self.log_dir, name)
-                ).decode("ascii", "replace").strip()
-            except OSError:
-                continue
-            if payload:
-                kept.add(f"{self.table}.{payload}")
-        return kept
-
-    def _readable(self) -> list[tuple[int, str, str]]:
-        """(version, pointer path, snapshot dir) ascending, readable
-        pointers only."""
-        out = []
-        for v, name in self.entries():
-            ptr = posixpath.join(self.log_dir, name)
-            try:
-                payload = self.fs.read_bytes(ptr).decode(
-                    "ascii", "replace").strip()
-            except OSError:
-                continue
-            if payload:
-                out.append((v, ptr, f"{self.table}.{payload}"))
-        return out
-
     def protected(self, keep: int = 3, grace_s: float = 86_400.0,
                   now_s: float | None = None) -> set[str]:
         """Snapshot dirs a reader may still legitimately be serving:
@@ -797,14 +940,12 @@ class CasLog:
         cycle's ``keep`` commits in seconds — creation-age would let
         vacuum reap it from under a reader mid-scan)."""
         now = time.time() if now_s is None else now_s
-        readable = self._readable()
-        prot = {d for _v, _p, d in readable[-keep:]}
-        for i, (_v, _ptr, d) in enumerate(readable):
-            if i + 1 >= len(readable):
-                prot.add(d)  # current: always protected
-                continue
+        readable = list(self._readable())
+        # the current snapshot is always protected
+        prot = {d for _v, _p, d in readable[:max(1, keep)]}
+        for (_v, _p, d), (_sv, succ, _sd) in zip(readable[1:], readable):
             try:
-                superseded_at = self.fs.getmtime(readable[i + 1][1])
+                superseded_at = self.fs.getmtime(succ)
             except OSError:
                 superseded_at = now  # successor raced away: conservative
             if now - superseded_at < grace_s:
@@ -823,8 +964,10 @@ class CasLog:
         touched."""
         now = time.time() if now_s is None else now_s
         keep_dirs = self.protected(keep, grace_s, now_s=now)
-        superseded = {d for _v, _p, d in self._readable()}
-        cur_v, _cur_dir = self.current()
+        readable = list(self._readable())
+        snapshot_of = {ptr: d for _v, ptr, d in readable}
+        readable_dirs = set(snapshot_of.values())
+        cur_v = readable[0][0] if readable else 0
         removed = 0
         base = parent_dir(self.table)
         tname = posixpath.basename(self.table)
@@ -834,7 +977,7 @@ class CasLog:
             d = posixpath.join(base, rel)
             if d in keep_dirs:
                 continue
-            if d not in superseded:
+            if d not in readable_dirs:
                 # orphan attempt: never readable, age by its own mtime
                 try:
                     if now - self.fs.getmtime(d) < grace_s:
@@ -852,13 +995,11 @@ class CasLog:
                 continue
             ptr = posixpath.join(self.log_dir, name)
             try:
-                payload = self.fs.read_bytes(ptr).decode(
-                    "ascii", "replace").strip()
                 if now - self.fs.getmtime(ptr) < grace_s:
                     continue
             except OSError:
                 continue
-            if payload and self.fs.exists(f"{self.table}.{payload}"):
+            if ptr in snapshot_of and self.fs.exists(snapshot_of[ptr]):
                 continue  # snapshot still retained
             with contextlib.suppress(OSError):
                 self.fs.remove(ptr)

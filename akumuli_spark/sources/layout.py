@@ -28,7 +28,12 @@ it unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from akumuli_spark.sources.fs import (
+    expire_buckets, get_fs, move_in, recover_compaction, stage_dir,
+    swap_compact,
+)
 
 DAY_NS = 86_400 * 10**9
 
@@ -50,52 +55,30 @@ def write_metrics_table(metrics: DataFrame, path: str,
     # boundary — and enforce_retention computes its cutoff with exact
     # integer `div`, so a down-rounded row would sit in the previous
     # partition and be evicted one bucket early (in-window data loss)
-    with_bucket = metrics.select(*cols).withColumn(
-        "ts_bucket", F.expr(f"ts_ns div {int(bucket_ns)}L")
+    write = (
+        metrics.select(*cols)
+        .withColumn("ts_bucket", F.expr(f"ts_ns div {int(bucket_ns)}L"))
+        .repartition("metric", "ts_bucket")
+        .sortWithinPartitions("series", "ts_ns")
+        .write.partitionBy("metric", "ts_bucket")
     )
-    if mode == "append":
-        # CONCURRENT-WRITER-SAFE append (the reference's multi-writer
-        # ingest contract, functests/test_concurrency.py): a direct
-        # `.mode("append")` stages under the shared `{path}/_temporary/0`
-        # (Hadoop committer, one attempt id per local job), so two
-        # concurrent appends GC each other's staging mid-commit.  Stage
-        # into a private sibling dir instead, then move the finished
-        # part files in — os.rename is atomic and filenames carry a
-        # job UUID, so readers see each file whole and never a
-        # collision; writers never touch each other's state.
-        _staged_append(with_bucket, path)
+    if mode != "append":
+        write.mode(mode).parquet(path)
         return
-    (
-        with_bucket.repartition("metric", "ts_bucket")
-        .sortWithinPartitions("series", "ts_ns")
-        .write.mode(mode)
-        .partitionBy("metric", "ts_bucket")
-        .parquet(path)
-    )
-
-
-def _staged_append(with_bucket: DataFrame, path: str) -> None:
-    import posixpath
-    import uuid
-
-    from akumuli_spark.sources.fs import get_fs
-
+    # CONCURRENT-WRITER-SAFE append (the reference's multi-writer
+    # ingest contract, functests/test_concurrency.py): a direct
+    # `.mode("append")` stages under the shared `{path}/_temporary/0`
+    # (Hadoop committer, one attempt id per local job), so two
+    # concurrent appends GC each other's staging mid-commit.  Stage
+    # into a private sibling dir instead, then move the finished part
+    # files in — filenames carry a job UUID, so readers see each file
+    # whole and never a collision; writers never touch each other's
+    # state.
     fs = get_fs(path)
-    tmp = f"{path}.append-tmp-{uuid.uuid4().hex}"
-    (
-        with_bucket.repartition("metric", "ts_bucket")
-        .sortWithinPartitions("series", "ts_ns")
-        .write.mode("overwrite")
-        .partitionBy("metric", "ts_bucket")
-        .parquet(tmp)
-    )
+    tmp = stage_dir(path)
     try:
-        for rel in fs.walk_files(tmp):
-            if not rel.endswith(".parquet"):
-                continue  # _SUCCESS etc. stay behind
-            dst = posixpath.join(path, rel)
-            fs.makedirs(posixpath.dirname(dst))
-            fs.rename(posixpath.join(tmp, rel), dst)
+        write.mode("overwrite").parquet(tmp)
+        move_in(fs, tmp, path)
     finally:
         fs.rmtree(tmp)
 
@@ -109,17 +92,34 @@ _ABSENT_TABLE_CONDITIONS = frozenset(
 )
 
 
+def is_absent_table(exc) -> bool:
+    """True when an ``AnalysisException`` from a parquet read means the
+    table is ABSENT or EMPTY: classified by the structured error
+    condition (``getCondition()``, with the pre-4.0 ``getErrorClass()``
+    as fallback) — never by substring-matching the rendered message,
+    whose wording is Spark-version-bound (ADVICE r10)."""
+    cond = None
+    for attr in ("getCondition", "getErrorClass"):
+        fn = getattr(exc, attr, None)
+        if fn is None:
+            continue
+        try:
+            cond = fn()
+        except Exception:
+            cond = None
+        if cond:
+            break
+    return cond in _ABSENT_TABLE_CONDITIONS
+
+
 def read_table_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     """``spark.read.parquet`` returning ``None`` when the table is
     ABSENT or EMPTY — the shared empty-store tolerance every index
     reader needs (an index over nothing answers nothing, a probe before
     the first append lands serves zero results, never a crash).
 
-    The two benign cases are classified by the STRUCTURED error
-    condition (``AnalysisException.getCondition()``, with the
-    pre-4.0 ``getErrorClass()`` as fallback) — never by substring-
-    matching the rendered message, whose wording is Spark-version-bound
-    (ADVICE r10).  Any other analysis failure re-raises.
+    The two benign cases are classified by :func:`is_absent_table`;
+    any other analysis failure re-raises.
 
     This is also the store-visible existence probe for optional layout
     tables: a driver-local ``os.path.exists`` is always False on
@@ -130,70 +130,9 @@ def read_table_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:
-        cond = None
-        for attr in ("getCondition", "getErrorClass"):
-            fn = getattr(exc, attr, None)
-            if fn is None:
-                continue
-            try:
-                cond = fn()
-            except Exception:
-                cond = None
-            if cond:
-                break
-        if cond not in _ABSENT_TABLE_CONDITIONS:
+        if not is_absent_table(exc):
             raise
         return None
-
-
-def recover_compaction(path: str, gc: bool = False) -> None:
-    """Self-heal a compaction swap that crashed between its two renames.
-
-    The swap is: write ``{path}.compact-tmp`` → rename path → old →
-    rename tmp → path → delete old.  A crash in the one-syscall window
-    between the renames leaves no table at ``path``; since the tmp dir
-    only enters the swap after its Spark write completed (it carries the
-    ``_SUCCESS`` marker), recovery is unambiguous: finish the swap if
-    tmp is complete, else restore the original.  Crash after the second
-    rename just leaves a stale ``old``/``tmp`` to garbage-collect.
-    Called by both the reader and the compactor, so the table heals on
-    next touch — the same self-healing contract as the ingest marks
-    table.
-
-    ``gc`` gates steady-state garbage collection of leftover tmp/old
-    dirs and must only be passed by the compactor: a *reader* that
-    rmtree's ``tmp`` while the table is healthy would delete a live
-    compactor's in-progress write.  Readers still clean up ``old``
-    when they themselves performed a heal — at that point the swap is
-    known-crashed (or the reader just won the roll-forward race, which
-    the compactor's swap tolerates).  Concurrency contract: any number
-    of readers vs at most one compactor.
-
-    Filesystem access goes through the portable seam
-    (:func:`akumuli_spark.sources.fs.get_fs`), so the heal works on any
-    Hadoop-reachable store, not just local POSIX paths."""
-    import posixpath
-
-    from akumuli_spark.sources.fs import get_fs
-
-    fs = get_fs(path)
-    tmp = f"{path}.compact-tmp"
-    old = f"{path}.compact-old"
-    if not fs.exists(path) and fs.exists(old):
-        try:
-            if fs.exists(posixpath.join(tmp, "_SUCCESS")):
-                fs.rename(tmp, path)  # roll forward: compacted table is whole
-            else:
-                fs.rename(old, path)  # roll back: restore the original
-        except OSError:
-            # a concurrent recover/compactor won the rename race; fall
-            # through — the post-condition check below is what matters
-            pass
-        if fs.exists(path):
-            fs.rmtree(old)
-    if gc and fs.exists(path):
-        for stale in (tmp, old):
-            fs.rmtree(stale)
 
 
 def compact_metrics_table(spark: SparkSession, path: str) -> None:
@@ -207,22 +146,18 @@ def compact_metrics_table(spark: SparkSession, path: str) -> None:
     management.  The rewrite lands in a sibling directory and is swapped
     in with two renames — the local-FS analogue of a transactional
     REPLACE; on a lake you'd run the same plan through Delta OPTIMIZE.
-    A crash mid-swap self-heals via :func:`recover_compaction` on the
-    next read or compaction.
+    A crash mid-swap self-heals via
+    :func:`~akumuli_spark.sources.fs.recover_compaction` on the next read
+    or compaction.
 
     Rows keep the engine schema stored on disk (no tags map — see module
     docstring); the sort restores tight row-group min/max stats that
     per-batch appends fragment.
     """
-    from akumuli_spark.sources.fs import get_fs, swap_compact
-
-    fs = get_fs(path)
     recover_compaction(path, gc=True)
     df = spark.read.parquet(path)
     cols = [c for c in df.columns if c not in ("metric", "ts_bucket")]
-    tmp = f"{path}.compact-tmp"
-    fs.rmtree(tmp)
-    (
+    swap_compact(get_fs(path), path, (
         df.select("metric", "ts_bucket", *cols)
         # hash-repartition on the partition keys: every (metric, bucket)
         # lands whole in one task → one file each, tasks still parallel
@@ -231,11 +166,7 @@ def compact_metrics_table(spark: SparkSession, path: str) -> None:
         .sortWithinPartitions("metric", "ts_bucket", "series", "ts_ns")
         .write.mode("overwrite")
         .partitionBy("metric", "ts_bucket")
-        .parquet(tmp)
-    )
-    # two-rename publish; a concurrent reader's recover_compaction
-    # rolling the swap forward between the renames is tolerated
-    swap_compact(fs, path)
+    ).parquet)
 
 
 def enforce_retention(path: str, keep_ns: int, now_ns: int,
@@ -249,13 +180,12 @@ def enforce_retention(path: str, keep_ns: int, now_ns: int,
 
     Buckets with index < (now_ns − keep_ns) div bucket_ns are expired
     (the cutoff bucket itself survives: it may still hold in-window
-    rows).  Each expired partition is atomically renamed into a
-    ``{path}.trash`` sibling first, then deleted — a reader that listed
-    files just before the rename may see missing files for one query;
-    run readers with ``spark.sql.files.ignoreMissingFiles`` (or retry)
-    when retention runs concurrently, the same contract Spark documents
-    for any external partition drop.  Returns the number of dropped
-    partitions.
+    rows); :func:`~akumuli_spark.sources.fs.expire_buckets` drops them —
+    a reader that listed files just before a drop may see missing files
+    for one query; run readers with ``spark.sql.files.ignoreMissingFiles``
+    (or retry) when retention runs concurrently, the same contract Spark
+    documents for any external partition drop.  Returns the number of
+    dropped partitions.
 
     Ordering contract with compaction: run retention and
     :func:`compact_metrics_table` from the same maintenance job,
@@ -263,27 +193,18 @@ def enforce_retention(path: str, keep_ns: int, now_ns: int,
     concurrent retention pass would faithfully rewrite (resurrect) the
     dropped buckets when its swap lands.
     """
-    import posixpath
-    import uuid
+    return expire_buckets(get_fs(path), path, ("metric=*",),
+                          (now_ns - keep_ns) // bucket_ns)
 
-    from akumuli_spark.sources.fs import get_fs
 
-    fs = get_fs(path)
-    cutoff = (now_ns - keep_ns) // bucket_ns
-    trash = f"{path}.trash"
-    fs.makedirs(trash)
-    dropped = 0
-    for rel in fs.glob(path, "metric=*/ts_bucket=*"):
-        try:
-            bucket = int(posixpath.basename(rel).split("=", 1)[1])
-        except ValueError:  # pragma: no cover - foreign dirs left alone
-            continue
-        if bucket < cutoff:
-            fs.rename(posixpath.join(path, rel),
-                      posixpath.join(trash, uuid.uuid4().hex))
-            dropped += 1
-    fs.rmtree(trash)
-    return dropped
+def series_tags() -> Column:
+    """The engine frame's ``tags`` map, derived from the ``series``
+    string per the series grammar (``metric k1=v1 k2=v2``) — how every
+    stored metrics or events table serves tags it does not store."""
+    return F.when(
+        F.instr(F.col("series"), " ") > 0,
+        F.expr("str_to_map(substring(series, instr(series, ' ') + 1), ' ', '=')"),
+    ).otherwise(F.expr("map()"))
 
 
 def read_metrics_table(spark: SparkSession, path: str) -> DataFrame:
@@ -292,10 +213,6 @@ def read_metrics_table(spark: SparkSession, path: str) -> DataFrame:
     grammar — pruned away by Catalyst unless the query references it."""
     recover_compaction(path)
     df = spark.read.parquet(path)
-    tags = F.when(
-        F.instr(F.col("series"), " ") > 0,
-        F.expr("str_to_map(substring(series, instr(series, ' ') + 1), ' ', '=')"),
-    ).otherwise(F.expr("map()"))
     return df.select(
-        "series", "metric", tags.alias("tags"), "ts_ns", "value"
+        "series", "metric", series_tags().alias("tags"), "ts_ns", "value"
     )

@@ -69,11 +69,10 @@ from akumuli_spark.operators.quantile_sketch import (
     log_histogram,
     quantiles_from_histogram,
 )
-from akumuli_spark.sources.layout import (
-    DAY_NS,
-    read_table_or_none,
-    recover_compaction,
+from akumuli_spark.sources.fs import (
+    expire_buckets, get_fs, recover_compaction, swap_compact,
 )
+from akumuli_spark.sources.layout import DAY_NS, read_table_or_none
 
 SKETCH_LAYOUT_VERSION = 1
 
@@ -210,14 +209,13 @@ def compact_sketch_store(spark: SparkSession, path: str) -> None:
     after many appends, the same economics as
     :func:`akumuli_spark.pipeline.text.compact_bm25_index`.  Each table
     is rewritten to a sibling and swapped in with the two-rename
-    protocol; a crash mid-swap self-heals on the next serve
-    (:func:`akumuli_spark.sources.layout.recover_compaction`).  Results
+    protocol (:func:`akumuli_spark.sources.fs.swap_compact`); a crash
+    mid-swap self-heals on the next serve
+    (:func:`akumuli_spark.sources.fs.recover_compaction`).  Results
     served before, during, and after are identical: the fold is the
     same merge the serve path applies.  Run from a single maintenance
     writer; restart streaming appends only AFTER compaction so
     restarted epoch ids cannot collide with live partitions."""
-    from akumuli_spark.sources.fs import get_fs, swap_compact
-
     fs = get_fs(path)
     merges = (
         ("hll", ["group", "bucket"], F.max("register").alias("register")),
@@ -229,21 +227,13 @@ def compact_sketch_store(spark: SparkSession, path: str) -> None:
         df = read_table_or_none(spark, p)
         if df is None:  # empty store: nothing to fold
             continue
-        folded = (
+        swap_compact(fs, p, (
             df.groupBy("ts_bucket", *keys).agg(merge_agg)
             .withColumn("epoch", F.lit(0))
-        )
-        tmp = f"{p}.compact-tmp"
-        fs.rmtree(tmp)
-        (
-            folded.repartition("ts_bucket")
+            .repartition("ts_bucket")
             .write.mode("overwrite")
             .partitionBy("epoch", "ts_bucket")
-            .parquet(tmp)
-        )
-        # two-rename publish; a concurrent reader's recover_compaction
-        # rolling the swap forward between the renames is tolerated
-        swap_compact(fs, p)
+        ).parquet)
 
 
 def _range_tiers(meta: dict, ts_from: int, ts_to: int,
@@ -391,21 +381,19 @@ def quantiles_over_range(spark: SparkSession, path: str, ts_from: int,
 
 
 def drop_expired_buckets(path: str, keep_ns: int, now_ns: int) -> int:
-    """Retention for the partials, same zero-scan directory-drop model
-    as :func:`akumuli_spark.sources.layout.enforce_retention`: partials
-    older than the window are whole ``ts_bucket=`` directories under
-    both sketch tables.  Returns dropped partition-dir count."""
+    """Retention for the partials, the zero-scan directory drop
+    :func:`akumuli_spark.sources.layout.enforce_retention` also runs
+    (:func:`akumuli_spark.sources.fs.expire_buckets`): partials older
+    than the window are whole ``ts_bucket=`` directories under both
+    sketch tables.  Returns dropped partition-dir count."""
     import io
     import posixpath
-    import uuid
 
     # bucket_ns lives in meta, but retention must not need a Spark
     # JOB: the one-row meta parquet is read via the seam's byte reader
     # + pyarrow (works on local paths without any session; URI stores
     # resolve their FileSystem through the active session's gateway)
     import pyarrow.parquet as pq
-
-    from akumuli_spark.sources.fs import get_fs
 
     fs = get_fs(path)
     meta_files = fs.glob(path, "meta/*.parquet")
@@ -414,19 +402,5 @@ def drop_expired_buckets(path: str, keep_ns: int, now_ns: int) -> int:
     meta_bytes = fs.read_bytes(posixpath.join(path, meta_files[0]))
     bucket_ns = pq.read_table(
         io.BytesIO(meta_bytes)).to_pylist()[0]["bucket_ns"]
-    cutoff = (now_ns - keep_ns) // bucket_ns
-    dropped = 0
-    trash = f"{path}.trash"
-    fs.makedirs(trash)
-    for table in ("hll", "hist"):
-        for rel in fs.glob(path, f"{table}/epoch=*/ts_bucket=*"):
-            try:
-                bucket = int(posixpath.basename(rel).split("=", 1)[1])
-            except ValueError:  # pragma: no cover - foreign dirs
-                continue
-            if bucket < cutoff:
-                fs.rename(posixpath.join(path, rel),
-                          posixpath.join(trash, uuid.uuid4().hex))
-                dropped += 1
-    fs.rmtree(trash)
-    return dropped
+    return expire_buckets(fs, path, ("hll/epoch=*", "hist/epoch=*"),
+                          (now_ns - keep_ns) // bucket_ns)

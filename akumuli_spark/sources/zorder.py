@@ -77,10 +77,14 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from akumuli_spark.datamodel import ENGINE_SCHEMA
 from akumuli_spark.smallframe import local_frame
-from akumuli_spark.sources.fs import CasLog, get_fs, parent_dir, strip_scheme
+from akumuli_spark.sources.fs import (
+    CasLog, get_fs, move_in, recover_compaction, stage_dir, stage_dirs,
+    strip_scheme,
+)
 from akumuli_spark.sources.layout import (
-    DAY_NS, read_table_or_none, recover_compaction,
+    DAY_NS, read_table_or_none, series_tags,
 )
 
 #: bits per dimension; z = interleaved 2*ZBITS-bit key (fits a long)
@@ -115,22 +119,8 @@ _CORPUS_MANIFEST_SCHEMA = (
 _PARTITIONS = (T.StructField("metric", T.StringType()),
                T.StructField("ts_bucket", T.LongType()))
 
-ENGINE_SCHEMA = T.StructType([
-    T.StructField("series", T.StringType()),
-    T.StructField("metric", T.StringType()),
-    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-    T.StructField("ts_ns", T.LongType()),
-    T.StructField("value", T.DoubleType()),
-])
-
-#: the events frame shape (string body payload, metric starts with '!')
-EVENTS_SCHEMA = T.StructType([
-    T.StructField("series", T.StringType()),
-    T.StructField("metric", T.StringType()),
-    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-    T.StructField("ts_ns", T.LongType()),
-    T.StructField("body", T.StringType()),
-])
+#: the one-column ``_zledger`` table
+_LEDGER_SCHEMA = "epoch long"
 
 
 def interleave_bits(a: str | Column, b: str | Column,
@@ -242,7 +232,8 @@ def zorder_metrics_table(spark: SparkSession, metrics: DataFrame, path: str,
         _write_clustered(metrics, tmp, bucket_ns, files_per_partition, bits)
         _write_manifest(spark, tmp)
 
-    _publish_build(spark, path, meta, _META_SCHEMA, old_meta, write)
+    _publish_build(spark, path, meta, _META_SCHEMA, _MANIFEST_SCHEMA,
+                   old_meta, write)
 
 
 def _refuse_layout_drift(path: str, old: dict | None, new: dict,
@@ -258,7 +249,8 @@ def _refuse_layout_drift(path: str, old: dict | None, new: dict,
 
 
 def _publish_build(spark: SparkSession, path: str, meta: dict,
-                   meta_schema: str, old_meta: dict | None, write) -> None:
+                   meta_schema: str, manifest_schema: str,
+                   old_meta: dict | None, write) -> None:
     """The one build/rebuild protocol both z-stores share.  ``write(tmp)``
     writes the clustered data and its manifest into a private staging
     sibling; then the old store's committed epochs fold into the ledger
@@ -267,29 +259,19 @@ def _publish_build(spark: SparkSession, path: str, meta: dict,
     move in (invisible), a changed layout contract publishes ``_zmeta``,
     and one manifest publish flips readers to the rebuilt file set."""
     fs = get_fs(path)
-    tmp = _stage_dir(path)
+    tmp = stage_dir(path)
     try:
         write(tmp)
         new_man = _staged_manifest(spark, tmp)
-        _carry_committed_epochs(spark, fs, path)
-        _move_in(fs, tmp, path)
+        _carry_committed_epochs(spark, path)
+        move_in(fs, tmp, path)
         if old_meta != meta:
             row = local_frame(spark, [tuple(meta.values())], meta_schema)
-            _cas_publish_df(spark, fs, posixpath.join(path, META_DIR),
-                            lambda cur: row)
-        _cas_publish_df(spark, fs, posixpath.join(path, MANIFEST_DIR),
-                        lambda cur: new_man)
+            _publish(spark, path, META_DIR, meta_schema, lambda cur: row)
+        _publish(spark, path, MANIFEST_DIR, manifest_schema,
+                 lambda cur: new_man)
     finally:
         fs.rmtree(tmp)
-
-
-def _stage_dir(path: str) -> str:
-    """A private staging sibling for one writer (build, append,
-    optimize); a hard-crashed writer's leftover is reclaimed by
-    :func:`vacuum_zorder` after its grace."""
-    import uuid
-
-    return f"{path}.append-tmp-{uuid.uuid4().hex}"
 
 
 def _staged_manifest(spark: SparkSession, tmp: str) -> DataFrame:
@@ -300,15 +282,14 @@ def _staged_manifest(spark: SparkSession, tmp: str) -> DataFrame:
     return local_frame(spark, rows.collect(), rows.schema)
 
 
-def _carry_committed_epochs(spark: SparkSession, fs, path: str) -> None:
+def _carry_committed_epochs(spark: SparkSession, path: str) -> None:
     """Fold the old store's committed epochs (manifest rows ≥ 1 ∪
     ledger) into the ledger BEFORE a rebuilt manifest publishes — the
     rebuild resets manifest epochs to 0, and a checkpointed caller
     replaying a committed epoch in (or after) that window must stay a
     no-op (ADVICE r12: the corpus rebuild silently duplicated replayed
     documents)."""
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    old_man = read_table_or_none(spark, _vtable_dir(fs, mpath))
+    old_man = _read_current(spark, path, MANIFEST_DIR)
     if old_man is not None and "epoch" in old_man.columns:
         _ledger_add(spark, path, _appended_epochs(
             old_man.select("epoch").distinct().collect()))
@@ -356,8 +337,7 @@ def _write_clustered(metrics: DataFrame, out_dir: str, bucket_ns: int,
 def _read_zmeta(spark: SparkSession, path: str) -> dict | None:
     """The store's layout contract row, or None for a path that was
     never built (one row — layout-sized, never data-sized)."""
-    meta = read_table_or_none(
-        spark, _vtable_dir(get_fs(path), posixpath.join(path, META_DIR)))
+    meta = _read_current(spark, path, META_DIR)
     rows = [] if meta is None else meta.collect()
     if not rows:
         return None
@@ -419,17 +399,16 @@ def zorder_append(spark: SparkSession, metrics: DataFrame,
                          meta["files_per_partition"], meta["bits"])
         _write_manifest(spark, tmp, epoch=epoch)
 
-    _append_batch(spark, path, epoch, write)
+    _append_batch(spark, path, epoch, _MANIFEST_SCHEMA, write)
 
 
 def _append_batch(spark: SparkSession, path: str, epoch: int | None,
-                  write) -> None:
+                  manifest_schema: str, write) -> None:
     """The one append protocol both z-stores share: ``write(tmp)``
     writes the clustered batch and its manifest into a private staging
     sibling; the files move in (invisible) and one pointer-log publish
     merges the batch's manifest rows into the current snapshot."""
     fs = get_fs(path)
-    mpath = posixpath.join(path, MANIFEST_DIR)
 
     def committed(man: DataFrame | None) -> bool:
         # committed = present in the manifest OR folded away by a later
@@ -444,20 +423,21 @@ def _append_batch(spark: SparkSession, path: str, epoch: int | None,
         if epoch < 1:
             raise ValueError("epoch 0 is reserved for build/re-cluster")
         # replayed batch: already landed
-        if committed(spark.read.parquet(_vtable_dir(fs, mpath))):
+        if committed(spark.read.schema(manifest_schema).parquet(
+                manifest_dir(path))):
             return
-    tmp = _stage_dir(path)
+    tmp = stage_dir(path)
     try:
         write(tmp)
         new_rows = _staged_manifest(spark, tmp)
-        _move_in(fs, tmp, path)
+        move_in(fs, tmp, path)
 
         def merge(cur):
             if epoch is not None and committed(cur):
                 return None  # lost a same-epoch race: exactly-once
             return new_rows if cur is None else cur.unionByName(new_rows)
 
-        _cas_publish_df(spark, fs, mpath, merge)
+        _publish(spark, path, MANIFEST_DIR, manifest_schema, merge)
     finally:
         fs.rmtree(tmp)
 
@@ -469,8 +449,7 @@ def _committed_epochs_ledger(spark: SparkSession, path: str) -> set[int]:
     rewrites: committed-ness is a fact about history, not about which
     files currently carry the rows.  Absent ledger (pre-r12 store) =
     empty."""
-    lp = posixpath.join(path, LEDGER_DIR)
-    led = read_table_or_none(spark, _vtable_dir(get_fs(path), lp))
+    led = _read_current(spark, path, LEDGER_DIR)
     if led is None:
         return set()
     return {r.epoch for r in led.select("epoch").collect()}
@@ -493,99 +472,35 @@ def _ledger_add(spark: SparkSession, path: str, epochs: set[int]) -> None:
         if want <= have:
             return None
         return local_frame(spark,
-            [(int(e),) for e in sorted(have | want)], "epoch long"
+            [(int(e),) for e in sorted(have | want)], _LEDGER_SCHEMA
         )
 
-    _cas_publish_df(spark, get_fs(path), posixpath.join(path, LEDGER_DIR),
-                    merge)
+    _publish(spark, path, LEDGER_DIR, _LEDGER_SCHEMA, merge)
 
 
-def _vtable_dir(fs, tpath: str) -> str:
-    """Resolve the CURRENT readable location of a versioned metadata
-    table (manifest / meta / ledger): the pointer log's current
-    snapshot directory, or — for a table written before the pointer
-    log existed — the bare table dir (:func:`_bare_dir`).  Every
-    metadata read in this module routes through here."""
-    _v, cur = CasLog(fs, tpath).current()
-    return cur if cur is not None else _bare_dir(tpath)
+def _log(path: str, table: str) -> CasLog:
+    """The pointer log of one metadata table (manifest / meta / ledger)
+    of the store at ``path``."""
+    return CasLog(get_fs(path), posixpath.join(path, table))
 
 
-def _bare_dir(tpath: str) -> str:
-    """The pre-pointer-log location of a metadata table: the bare dir,
-    healed first of a two-rename swap an older writer crashed in."""
-    recover_compaction(tpath)
-    return tpath
+def _read_current(spark: SparkSession, path: str,
+                  table: str) -> DataFrame | None:
+    """The current snapshot of one metadata table; None when absent."""
+    d = _log(path, table).current()[1]
+    return None if d is None else read_table_or_none(spark, d)
 
 
-def _cas_publish_df(spark, fs, tpath: str, merge_fn,
-                    retries: int = 64) -> bool:
-    """Optimistic conditional-PUT publish of one metadata table version.
+def _publish(spark: SparkSession, path: str, table: str, schema: str,
+             merge) -> None:
+    """Publish one metadata table through its pointer log
+    (:meth:`CasLog.publish`) as a one-file snapshot — every metadata
+    table is metadata-sized."""
+    def one_file(cur):
+        out = merge(cur)
+        return None if out is None else out.coalesce(1)
 
-    ``merge_fn(current_df_or_none) -> DataFrame | None`` recomputes the
-    desired table from the CURRENT snapshot; ``None`` means "nothing to
-    publish" (e.g. the epoch is already committed) and aborts cleanly.
-    Protocol per attempt: read the current snapshot at version V →
-    merge → write a COMPLETE new snapshot dir under a fresh unique
-    name → claim version V+1 with one atomic create of the pointer
-    object (the conditional PUT, :meth:`CasLog.commit_above`).  Losing
-    the claim to a READABLE rival means another writer committed above
-    V — the merge is stale by definition, so the attempt dir is
-    dropped and the loop re-reads and re-merges.  Claiming exactly V+1
-    (never ``max(claimed)+1``) is what makes the pointer create a true
-    linearization point: the r14 contention smoke caught the skipping
-    variant letting a stale merge land ABOVE a rival's commit and
-    silently erase its manifest rows.  Exactly-once append semantics
-    hold because the epoch check re-runs inside ``merge_fn`` on every
-    retry.  With an empty log, the current table is the bare dir a
-    store written before the pointer log left (:func:`_bare_dir`), so
-    version 1 carries its rows forward.  Returns True when a version
-    was committed, False when ``merge_fn`` declined."""
-    import random
-    import time
-
-    log = CasLog(fs, tpath)
-    for attempt in range(retries):
-        v_cur, cur_dir = log.current()
-        if cur_dir is None and fs.exists(_bare_dir(tpath)):
-            cur_dir = tpath
-        cur = None if cur_dir is None else spark.read.parquet(cur_dir)
-        out = merge_fn(cur)
-        if out is None:
-            return False
-        vname = log.version_name(v_cur + 1)
-        out.coalesce(1).write.mode("overwrite").parquet(log.dir_for(vname))
-        if log.commit_above(v_cur, vname):
-            return True
-        fs.rmtree(log.dir_for(vname))  # lost the race: orphan attempt
-        # jittered exponential backoff: under N concurrent publishers
-        # every loser otherwise re-writes a snapshot immediately and
-        # N-1 of N attempts burn a Spark write per round (the r14
-        # contention smoke measured 6× wasted writes without this)
-        time.sleep(min(2.0, 0.05 * (1 << min(attempt, 5)))
-                   * (0.5 + random.random()))
-    raise RuntimeError(
-        f"CAS publish contention exceeded {retries} retries: {tpath}"
-    )
-
-
-def _move_in(fs, tmp: str, path: str) -> None:
-    """Move a staged batch's DATA files into the table: names carry the
-    writing job's UUID so there are no collisions, and the files stay
-    invisible until a manifest snapshot names them — an object store's
-    non-atomic copy+delete "rename" is therefore safe here.  Metadata
-    subdirs (manifest/meta/ledger) stay behind: they publish through
-    their own pointer logs."""
-    skip = (MANIFEST_DIR, META_DIR, LEDGER_DIR)
-    root = path.rstrip("/")
-    fs.makedirs(root)  # fresh store: flat-layout files land at the root
-    for rel in fs.walk_files(tmp):
-        if rel.startswith(skip) or not rel.endswith(".parquet"):
-            continue
-        dst = posixpath.join(root, rel)
-        d = posixpath.dirname(dst)
-        if d != root:
-            fs.makedirs(d)
-        fs.rename(posixpath.join(tmp, rel), dst)
+    _log(path, table).publish(spark, one_file, schema)
 
 
 def zorder_erosion(spark: SparkSession, path: str) -> DataFrame:
@@ -616,8 +531,7 @@ def zorder_erosion(spark: SparkSession, path: str) -> DataFrame:
     bucket's metric — an all-NULL bucket reports ``time_overlap`` 0.0
     rather than silently dropping out of :func:`zorder_optimize`'s
     erosion ordering (VERDICT r12 Wrong #2)."""
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
+    man = spark.read.parquet(manifest_dir(path))
     return (
         man.groupBy("metric", "ts_bucket")
         .agg(
@@ -683,7 +597,6 @@ def zorder_optimize(spark: SparkSession, path: str,
     meta = _read_zmeta(spark, path)
     if meta is None:
         raise ValueError(f"no z-store layout contract at {path}")
-    mpath = posixpath.join(path, MANIFEST_DIR)
     snap = _snapshot(spark, path, _MANIFEST_SCHEMA, _PARTITIONS)
 
     if buckets is None:
@@ -711,7 +624,7 @@ def zorder_optimize(spark: SparkSession, path: str,
         .parquet(*[posixpath.join(path, f) for f in old_files])
         .drop("ts_bucket")  # _write_clustered re-derives it from ts_ns
     )
-    tmp = _stage_dir(path)
+    tmp = stage_dir(path)
     try:
         _write_clustered(subset, tmp, meta["bucket_ns"],
                          meta["files_per_partition"], meta["bits"])
@@ -721,13 +634,13 @@ def zorder_optimize(spark: SparkSession, path: str,
         if _race_hook is not None:  # test-only: interleave a writer here
             _race_hook()
 
-        _move_in(fs, tmp, path)
+        move_in(fs, tmp, path)
         _ledger_add(spark, path, folded_epochs)
         # the FRESH manifest at publish time: rows published by a
         # concurrent append since our selection (even into selected
         # buckets) are not in old_files and are carried forward
-        _cas_publish_df(
-            spark, fs, mpath,
+        _publish(
+            spark, path, MANIFEST_DIR, _MANIFEST_SCHEMA,
             lambda cur: new_rows if cur is None else _isin(
                 cur, "file", old_files, keep=False).unionByName(new_rows),
         )
@@ -771,8 +684,7 @@ def zorder_retention(spark: SparkSession, path: str, keep_ns: int,
         dropped[0] = buckets
         return cur.filter(F.col("ts_bucket") >= cutoff)
 
-    _cas_publish_df(spark, get_fs(path), posixpath.join(path, MANIFEST_DIR),
-                    merge)
+    _publish(spark, path, MANIFEST_DIR, _MANIFEST_SCHEMA, merge)
     return dropped[0]
 
 
@@ -798,8 +710,8 @@ def vacuum_zorder(spark: SparkSession, path: str,
 
     Concurrency: an IN-FLIGHT append's files are orphans until its
     publish, so deleting every unlisted file would race a live writer.
-    Only files, empty dirs and staging dirs (``{path}.append-tmp-*``
-    siblings) whose mtime is older than ``grace_s`` (default 24 h) are
+    Only files, empty dirs and staging siblings
+    (:func:`~akumuli_spark.sources.fs.stage_dirs`) whose mtime is older than ``grace_s`` (default 24 h) are
     deleted — safe to schedule alongside appends as long as no single
     append takes longer than the grace.  Pass ``grace_s=0`` (with
     ``snapshots_keep=1`` to drop every older snapshot) to reclaim
@@ -817,18 +729,16 @@ def _vacuum(spark: SparkSession, path: str, data_glob: str,
 
     fs = get_fs(path)
     now = time.time() if now_s is None else now_s
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    log = CasLog(fs, mpath)
+    log = _log(path, MANIFEST_DIR)
     # the protected set FIRST (the keep newest + everything superseded
     # < grace ago — grace counts from supersession, a reader may be
     # serving any of them), then expire the rest, then union the
     # protected snapshots' file refs: a data file is an orphan only if
     # NO protected snapshot references it.  A store written before the
     # pointer log has no snapshots yet: its bare manifest is the one.
-    dirs = log.protected(keep, grace_s, now_s=now) or {_bare_dir(mpath)}
+    dirs = log.protected(keep, grace_s, now_s=now) or {manifest_dir(path)}
     removed = sum(
-        CasLog(fs, posixpath.join(path, t)).vacuum(
-            keep=keep, grace_s=grace_s, now_s=now)
+        _log(path, t).vacuum(keep=keep, grace_s=grace_s, now_s=now)
         for t in (MANIFEST_DIR, META_DIR, LEDGER_DIR)
     )
     listed = set()
@@ -857,10 +767,7 @@ def _vacuum(spark: SparkSession, path: str, data_glob: str,
         d = posixpath.join(path, rel)
         if not fs.walk_files(d) and aged(d):
             fs.rmtree(d)
-    par = parent_dir(path)
-    base = posixpath.basename(path.rstrip("/"))
-    for rel in fs.glob(par, f"{base}.append-tmp-*"):
-        d = posixpath.join(par, rel)
+    for d in stage_dirs(fs, path):
         if aged(d):
             fs.rmtree(d)
             removed += 1
@@ -940,8 +847,11 @@ _SNAPSHOTS: dict[str, _Snapshot] = {}
 
 def manifest_dir(path: str) -> str:
     """The store's current manifest snapshot dir — its snapshot token:
-    every publish names a new dir.  Filesystem reads, no Spark job."""
-    return _vtable_dir(get_fs(path), posixpath.join(path, MANIFEST_DIR))
+    every publish names a new dir.  Filesystem reads, no Spark job.  A
+    store with no manifest at all names the bare dir, whose read
+    raises."""
+    return (_log(path, MANIFEST_DIR).current()[1]
+            or posixpath.join(path, MANIFEST_DIR))
 
 
 def _snapshot(spark: SparkSession, path: str, manifest_schema: str,
@@ -1080,13 +990,9 @@ def zorder_select(spark: SparkSession, path: str,
     # layout.read_metrics_table; the payload columns (value for metrics,
     # body for events) pass through in stored order, so the same store
     # machinery serves BOTH engine frame shapes
-    tags = F.when(
-        F.instr(F.col("series"), " ") > 0,
-        F.expr("str_to_map(substring(series, instr(series, ' ') + 1), ' ', '=')"),
-    ).otherwise(F.expr("map()"))
     rest = [c for c in df.columns
             if c not in ("series", "metric", "ts_bucket")]
-    return df.select("series", "metric", tags.alias("tags"), *rest)
+    return df.select("series", "metric", series_tags().alias("tags"), *rest)
 
 
 # ---------------------------------------------------------------------------
@@ -1138,7 +1044,8 @@ def zorder_corpus_table(spark: SparkSession, docs: DataFrame, path: str,
                                 bits)
         _write_corpus_manifest(spark, tmp, cat_col, num_col)
 
-    _publish_build(spark, path, meta, _CORPUS_META_SCHEMA, old_meta, write)
+    _publish_build(spark, path, meta, _CORPUS_META_SCHEMA,
+                   _CORPUS_MANIFEST_SCHEMA, old_meta, write)
 
 
 def _write_corpus_clustered(docs: DataFrame, out_dir: str, cat_col: str,
@@ -1218,7 +1125,7 @@ def zorder_corpus_append(spark: SparkSession, docs: DataFrame, path: str,
         _write_corpus_manifest(spark, tmp, meta["cat_col"],
                                meta["num_col"], epoch=epoch)
 
-    _append_batch(spark, path, epoch, write)
+    _append_batch(spark, path, epoch, _CORPUS_MANIFEST_SCHEMA, write)
 
 
 def zorder_corpus_erosion(spark: SparkSession, path: str) -> DataFrame:
@@ -1231,8 +1138,7 @@ def zorder_corpus_erosion(spark: SparkSession, path: str) -> DataFrame:
     OPTIMIZE is the flat rebuild (:func:`zorder_corpus_table`); this
     report is its evidence-driven trigger."""
     meta = _read_corpus_zmeta(spark, path)
-    mpath = posixpath.join(path, MANIFEST_DIR)
-    man = spark.read.parquet(_vtable_dir(get_fs(path), mpath))
+    man = spark.read.parquet(manifest_dir(path))
     agg = man.agg(
         F.count(F.lit(1)).alias("files"),
         F.sum("rows").alias("rows"),
@@ -1254,7 +1160,7 @@ def vacuum_zorder_corpus(spark: SparkSession, path: str,
                          now_s: float | None = None) -> int:
     """Corpus twin of :func:`vacuum_zorder` (same snapshot retention,
     keeping the newest 3 snapshots): delete root data files no retained
-    snapshot lists and stale ``.append-tmp-*`` staging siblings,
+    snapshot lists and stale staging siblings,
     sparing anything younger than ``grace_s`` (a possibly-live
     append)."""
     return _vacuum(spark, path, "*.parquet", grace_s, now_s, 3)

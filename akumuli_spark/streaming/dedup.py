@@ -97,7 +97,7 @@ def near_dup_batch_against_store(spark, batch: DataFrame, store_dir: str,
         minhash_lsh_pairs_incremental,
         minhash_signatures,
     )
-    from akumuli_spark.streaming.ingest import _is_path_missing
+    from akumuli_spark.sources.layout import is_absent_table
 
     batch = batch.select("doc_id", "text").localCheckpoint(eager=True)
     docs_path = f"{store_dir}/docs"
@@ -106,7 +106,7 @@ def near_dup_batch_against_store(spark, batch: DataFrame, store_dir: str,
         stored_sig = spark.read.parquet(sig_path)
         stored_docs = spark.read.parquet(docs_path)
     except AnalysisException as exc:
-        if not _is_path_missing(exc):
+        if not is_absent_table(exc):
             raise
         stored_sig = stored_docs = None
 

@@ -22,18 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from akumuli_spark.smallframe import local_frame
-
-def _read_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    from akumuli_spark.streaming.ingest import _is_path_missing
-
-    try:
-        return spark.read.parquet(store_dir)
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):
-            raise
-        return None
+from akumuli_spark.sources.layout import read_table_or_none
 
 
 def fingerprint_batch_against_store(spark: SparkSession, batch: DataFrame,
@@ -52,7 +41,7 @@ def fingerprint_batch_against_store(spark: SparkSession, batch: DataFrame,
     )
 
     batch = batch.select("id", "simhash").localCheckpoint(eager=True)
-    stored = _read_store(spark, store_dir)
+    stored = read_table_or_none(spark, store_dir)
     if stored is not None and epoch_id is not None:
         stored = stored.filter(F.col("epoch") != epoch_id)
     if stored is None:

@@ -34,16 +34,11 @@ from pyspark.errors import AnalysisException
 
 from akumuli_spark.smallframe import local_frame
 from akumuli_spark.sources.fs import CasLog, get_fs
+from akumuli_spark.sources.layout import is_absent_table, read_table_or_none
 from akumuli_spark.sources.resp import parse_resp_stage
 
-
-def _is_path_missing(exc: AnalysisException) -> bool:
-    """True only for the 'path does not exist' analysis error — the one
-    condition that legitimately means 'no table yet' rather than a
-    transient I/O or permission failure."""
-    cond = getattr(exc, "getCondition", None)
-    name = cond() if callable(cond) else None
-    return name == "PATH_NOT_FOUND"
+#: the marks side table: per-series high-water ts
+_MARKS_SCHEMA = "series string, __hw long"
 
 
 def parsed_stream_from_files(spark: SparkSession, input_dir: str,
@@ -105,17 +100,17 @@ class HighWaterState:
     lost), it is seeded from ONE scan of the committed sink; a restart
     with an intact side table needs ZERO sink scans.
 
-    Commit protocol — the conditional-PUT pointer log
-    (:class:`akumuli_spark.sources.fs.CasLog`): each commit writes a
-    fresh versioned parquet dir and claims the next pointer with one
-    exclusive create.  A crash at ANY point leaves the highest readable
-    pointer naming a complete epoch — same guarantee the previous
-    ``CURRENT``-file ``os.replace`` flip gave, but through the portable
-    filesystem seam, so a URI-addressed checkpoint (``hdfs://``,
-    ``s3a://``) works identically (VERDICT r13: streaming was the one
-    store path still making raw POSIX calls).  A pre-r14 marks dir (a
-    ``CURRENT`` pointer file naming an ``epoch-*`` dir) has no pointer
-    log, so it is re-seeded once from the sink like a lost side table.
+    Commit protocol — the conditional-PUT pointer log, through
+    :meth:`akumuli_spark.sources.fs.CasLog.publish`: each commit merges
+    against the current version, writes a fresh versioned parquet dir
+    and claims the next pointer with one exclusive create; a commit
+    that loses its claim to a concurrent writer re-reads and merges
+    again, so neither writer's maxima are lost.  A crash at ANY point
+    leaves the highest readable pointer naming a complete epoch, on any
+    filesystem the seam reaches (``hdfs://``, ``s3a://`` checkpoints
+    included).  A pre-r14 marks dir (a ``CURRENT`` pointer file naming
+    an ``epoch-*`` dir) has no pointer log, so it is re-seeded once
+    from the sink like a lost side table.
     """
 
     def __init__(self, marks_dir: str | None = None) -> None:
@@ -124,37 +119,33 @@ class HighWaterState:
 
     # -- internal ---------------------------------------------------------
 
-    def _fs(self):
-        return get_fs(self.marks_dir)
-
-    def _log(self, fs=None) -> CasLog:
-        return CasLog(fs or self._fs(),
+    def _log(self) -> CasLog:
+        return CasLog(get_fs(self.marks_dir),
                       posixpath.join(self.marks_dir, "marks"))
 
     def _current_epoch_dir(self) -> str | None:
         """Path of the committed epoch dir, or None if never committed
         (also None for a pre-pointer-layout dir: its stale parquet is
         simply re-seeded from the sink once — self-healing by design)."""
-        log = self._log()
-        return log.current()[1] if log.exists() else None
+        return self._log().current()[1]
 
     def _read(self, spark: SparkSession) -> DataFrame | None:
         cur = self._current_epoch_dir()
         if cur is None:
             return None
         try:
-            return spark.read.schema("series string, __hw long").parquet(cur)
+            return spark.read.schema(_MARKS_SCHEMA).parquet(cur)
         except AnalysisException as exc:
             # only "side table absent" may seed/skip — a transient read
             # failure must NOT be swallowed (it would silently rebuild or
             # disable the late-write gate)
-            if _is_path_missing(exc):
+            if is_absent_table(exc):
                 return None
             raise
 
-    def _commit(self, marks: DataFrame) -> None:
-        """Write a new versioned epoch dir and claim the next pointer
-        (one conditional-PUT create), then GC old versions.
+    def _commit(self, spark: SparkSession, merge_fn) -> None:
+        """Publish ``merge_fn(current marks or None)`` as the next
+        version (:meth:`CasLog.publish`), then GC old versions.
 
         GC retains the PREVIOUS version alongside the new one: a
         concurrent observer (the ``marks`` ops property, or any tool
@@ -162,29 +153,12 @@ class HighWaterState:
         named dir — deleting that dir the instant the pointer advances
         would fail any read that raced one commit.  With one generation
         retained, a reader is only broken if it falls TWO commits behind
-        mid-scan, which the single-writer batch cadence makes
-        pathological.  Disk cost: ≤ 2 epoch dirs of the compact
-        (series, __hw) table.  The marks table is single-writer (the
-        streaming query's foreachBatch), so a pointer conflict only
-        means a burned version number — the commit retries above it."""
-        fs = self._fs()
-        log = self._log(fs)
-        for _ in range(8):
-            v_cur, _cur = log.current()
-            vname = log.version_name(v_cur + 1)
-            marks.write.mode("overwrite").parquet(log.dir_for(vname))
-            if log.commit_above(v_cur, vname):
-                break
-            # a readable rival above our read: single-writer contract
-            # says this should not happen — re-read and retry anyway
-            fs.rmtree(log.dir_for(vname))
-        else:  # pragma: no cover - single-writer contract violated
-            raise RuntimeError(
-                f"marks commit lost 8 pointer races at {self.marks_dir}: "
-                "the side table has a second concurrent writer"
-            )
+        mid-scan, which the batch cadence makes pathological.  Disk
+        cost: ≤ 2 epoch dirs of the compact (series, __hw) table."""
+        log = self._log()
+        log.publish(spark, merge_fn, _MARKS_SCHEMA)
         # keep current + previous; reclaim older versions immediately
-        # (grace 0: single writer, and readers at most one commit behind)
+        # (grace 0: readers at most one commit behind)
         log.vacuum(keep=2, grace_s=0.0)
 
     # -- batch API --------------------------------------------------------
@@ -195,20 +169,17 @@ class HighWaterState:
         if cur is not None:
             return cur
         self.seed_scans += 1
-        try:
-            seeded = (
-                spark.read.parquet(out_dir)
-                .groupBy("series")
-                .agg(F.max("ts_ns").alias("__hw"))
-            )
-        except AnalysisException as exc:
-            if not _is_path_missing(exc):
-                # a transient failure reading a sink that DOES exist must
-                # not seed an empty marks table (that would disable the
-                # late-write gate for every committed series)
-                raise
-            seeded = local_frame(spark, [], "series string, __hw long")
-        self._commit(seeded)
+        # only an absent sink seeds an empty table: a transient failure
+        # reading a sink that DOES exist raises (an empty seed would
+        # disable the late-write gate for every committed series)
+        sink = read_table_or_none(spark, out_dir)
+        seeded = (
+            local_frame(spark, [], _MARKS_SCHEMA) if sink is None
+            else sink.groupBy("series").agg(F.max("ts_ns").alias("__hw"))
+        )
+        # a concurrent seeder that committed first wins: its table holds
+        # the same sink maxima
+        self._commit(spark, lambda cur: seeded if cur is None else None)
         return self._read(spark)
 
     def advance(self, spark: SparkSession, accepted: DataFrame) -> None:
@@ -221,16 +192,20 @@ class HighWaterState:
         batch_max = accepted.groupBy("series").agg(
             F.max("ts_ns").alias("__bm")
         )
-        cur = self._read(spark)
-        if cur is None:
-            # marks dir vanished between marks_df and advance (external
-            # deletion): merging against empty keeps this batch's maxima;
-            # older series re-seed from the sink on the next marks_df call
-            cur = local_frame(spark, [], "series string, __hw long")
-        merged = cur.join(batch_max, "series", "full").select(
-            "series", F.greatest(F.col("__hw"), F.col("__bm")).alias("__hw")
-        )
-        self._commit(merged)
+
+        def merge(cur: DataFrame | None) -> DataFrame:
+            if cur is None:
+                # marks dir vanished between marks_df and advance
+                # (external deletion): merging against empty keeps this
+                # batch's maxima; older series re-seed from the sink on
+                # the next marks_df call
+                cur = local_frame(spark, [], _MARKS_SCHEMA)
+            return cur.join(batch_max, "series", "full").select(
+                "series",
+                F.greatest(F.col("__hw"), F.col("__bm")).alias("__hw"),
+            )
+
+        self._commit(spark, merge)
 
     # -- observability (tests / operators; NOT on the batch hot path) -----
 
@@ -350,12 +325,9 @@ def replay_rejects(
     n = batch.count()
     re_rejects = f"{rejects_dir}.replay"
     gate_and_commit_batch(batch, out_dir, re_rejects, late_after_ns, hw_state)
-    try:
-        still_late = spark.read.parquet(re_rejects).count()
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):
-            raise
-        still_late = 0  # everything accepted: no re-rejects written
+    re_rejected = read_table_or_none(spark, re_rejects)
+    # everything accepted: no re-rejects written
+    still_late = 0 if re_rejected is None else re_rejected.count()
     fs.rmtree(consumed)
     return {"replayed": n, "still_late": still_late}
 

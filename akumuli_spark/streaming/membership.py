@@ -28,43 +28,10 @@ from akumuli_spark.pipeline.membership import (
     bloom_probe,
     build_bloom_filter,
 )
-
-
-def recover_bloom_compaction(store_dir: str, gc: bool = False) -> None:
-    """Self-heal a :func:`compact_bloom_store` swap that crashed between
-    its two renames — the same protocol as
-    ``sources.layout.recover_compaction``: the swap is write
-    ``{store}.compact-tmp`` → rename store → old → rename tmp → store →
-    delete old.  A crash in the window between the renames leaves no
-    store at ``store_dir``; without recovery the next
-    :func:`bloom_gate_batch` would read ``None`` and treat EVERY key as
-    never-seen, silently breaking the module's "no false negatives ever"
-    contract (ADVICE r8).  The tmp dir only enters the swap after its
-    Spark write completed (``_SUCCESS`` marker), so recovery is
-    unambiguous: roll forward if tmp is complete, else roll back.
-    ``gc`` (compactor-only) sweeps leftover tmp/old dirs.  Filesystem
-    access goes through the portable seam
-    (:func:`akumuli_spark.sources.fs.get_fs`)."""
-    import posixpath
-
-    from akumuli_spark.sources.fs import get_fs
-
-    fs = get_fs(store_dir)
-    tmp = f"{store_dir}.compact-tmp"
-    old = f"{store_dir}.compact-old"
-    if not fs.exists(store_dir) and fs.exists(old):
-        try:
-            if fs.exists(posixpath.join(tmp, "_SUCCESS")):
-                fs.rename(tmp, store_dir)  # roll forward: folded store whole
-            else:
-                fs.rename(old, store_dir)  # roll back: restore deltas
-        except OSError:
-            pass  # concurrent recover won the rename race; check below
-        if fs.exists(store_dir):
-            fs.rmtree(old)
-    if gc and fs.exists(store_dir):
-        for stale in (tmp, old):
-            fs.rmtree(stale)
+from akumuli_spark.sources.fs import (
+    compaction_dirs, get_fs, recover_compaction, swap_compact,
+)
+from akumuli_spark.sources.layout import read_table_or_none
 
 
 def _with_epoch(stored: DataFrame) -> DataFrame:
@@ -77,33 +44,26 @@ def _with_epoch(stored: DataFrame) -> DataFrame:
 
 
 def _read_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    from akumuli_spark.streaming.ingest import _is_path_missing
-
-    recover_bloom_compaction(store_dir)
-    try:
-        return spark.read.parquet(store_dir)
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):
-            raise
-        # a missing store with a crashed-swap sibling that recovery could
-        # not heal (e.g. tmp incomplete AND old already consumed) must
-        # fail loudly, not silently pass every key
-        from akumuli_spark.sources.fs import get_fs
-
-        fs = get_fs(store_dir)
-        sib = [
-            p for p in (f"{store_dir}.compact-tmp", f"{store_dir}.compact-old")
-            if fs.exists(p)
-        ]
-        if sib:
-            raise RuntimeError(
-                f"bloom store {store_dir} missing but compaction leftovers "
-                f"{sib} exist and are unrecoverable; refusing to treat all "
-                "keys as never-seen"
-            ) from exc
-        return None
+    """The stored delta rows, healed first of a crashed compaction swap
+    — without the heal a store missing between the swap's renames would
+    read as empty and pass EVERY key, breaking "no false negatives
+    ever" (ADVICE r8).  None for a store that was never written."""
+    recover_compaction(store_dir)
+    stored = read_table_or_none(spark, store_dir)
+    if stored is not None:
+        return stored
+    # a missing store with a crashed-swap sibling that recovery could
+    # not heal (e.g. tmp incomplete AND old already consumed) must fail
+    # loudly, not silently pass every key
+    fs = get_fs(store_dir)
+    sib = [p for p in compaction_dirs(store_dir) if fs.exists(p)]
+    if sib:
+        raise RuntimeError(
+            f"bloom store {store_dir} missing but compaction leftovers "
+            f"{sib} exist and are unrecoverable; refusing to treat all "
+            "keys as never-seen"
+        )
+    return None
 
 
 def bloom_gate_batch(spark: SparkSession, batch: DataFrame, store_dir: str,
@@ -198,11 +158,12 @@ def compact_bloom_store(spark: SparkSession, store_dir: str) -> int:
     """Fold the append-only delta rows down to one row per word_idx.
     Single-writer maintenance (run it between triggers, like the layout
     compactor): writes the folded rows to a sibling tmp dir, then swaps
-    with the crash-recoverable two-rename protocol — a crash mid-swap
-    self-heals via :func:`recover_bloom_compaction` on the next read or
-    compaction, so the gate can never silently restart empty.
-    Returns the compacted row count."""
-    recover_bloom_compaction(store_dir, gc=True)
+    with the crash-recoverable two-rename protocol
+    (:func:`~akumuli_spark.sources.fs.swap_compact`) — a crash mid-swap
+    self-heals via :func:`~akumuli_spark.sources.fs.recover_compaction`
+    on the next read or compaction, so the gate can never silently
+    restart empty.  Returns the compacted row count."""
+    recover_compaction(store_dir, gc=True)
     stored = _read_store(spark, store_dir)
     if stored is None:
         return 0
@@ -226,18 +187,12 @@ def compact_bloom_store(spark: SparkSession, store_dir: str) -> int:
         folded = stored.groupBy("word_idx").agg(
             F.expr("bit_or(bits)").alias("bits")
         )
-    from akumuli_spark.sources.fs import get_fs, swap_compact
 
-    fs = get_fs(store_dir)
-    tmp = f"{store_dir}.compact-tmp"
-    fs.rmtree(tmp)
-    writer = folded.write.mode("overwrite")
-    if epoch_mode:
-        writer = writer.partitionBy("epoch")
-    writer.parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    # two-rename publish through the portable seam; a concurrent
-    # reader's recover_bloom_compaction rolling the swap forward
-    # between the renames is tolerated
-    swap_compact(fs, store_dir)
-    return n
+    def write(tmp: str) -> int:
+        writer = folded.write.mode("overwrite")
+        if epoch_mode:
+            writer = writer.partitionBy("epoch")
+        writer.parquet(tmp)
+        return spark.read.parquet(tmp).count()
+
+    return swap_compact(get_fs(store_dir), store_dir, write)

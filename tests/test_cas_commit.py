@@ -158,7 +158,7 @@ def test_cas_double_publish_monotonic_history():
     fs.advance(1_000_000)
     log.vacuum(keep=2, grace_s=10, now_s=fs.now())
     assert log.current()[0] == 5
-    kept = log.retained(2)
+    kept = log.protected(2, grace_s=10, now_s=fs.now())
     assert cur_dir in kept and len(kept) == 2
 
 

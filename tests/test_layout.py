@@ -145,9 +145,9 @@ def test_reader_leaves_live_compactor_tmp_alone(spark, tmp_path):
     Spark write); only the compactor's own recovery path GCs."""
     import os as _os
 
+    from akumuli_spark.sources.fs import recover_compaction
     from akumuli_spark.sources.layout import (
         read_metrics_table,
-        recover_compaction,
         write_metrics_table,
     )
     from akumuli_spark.sources.testdata import metrics_view

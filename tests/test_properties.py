@@ -414,6 +414,7 @@ def test_compaction_recovery_interleavings(spark, crash, concurrent,
     import pytest as _pytest
 
     from akumuli_spark.sources import layout
+    from akumuli_spark.sources.fs import recover_compaction
 
     template, n = _compact_base(spark)
     work = tempfile.mkdtemp(prefix="compact_prop_ex_")
@@ -445,7 +446,7 @@ def test_compaction_recovery_interleavings(spark, crash, concurrent,
             def racing(src, dst, *a, **kw):
                 if not fired["done"] and dst == path:
                     fired["done"] = True
-                    layout.recover_compaction(path)
+                    recover_compaction(path)
                 return real_rename(src, dst, *a, **kw)
 
             _os.rename = racing
@@ -453,9 +454,9 @@ def test_compaction_recovery_interleavings(spark, crash, concurrent,
         gc_ran = False
         for who in recoverers:
             if who == "reader":
-                layout.recover_compaction(path)
+                recover_compaction(path)
             else:
-                layout.recover_compaction(path, gc=True)
+                recover_compaction(path, gc=True)
                 gc_ran = True
             _os.rename = real_rename  # race fires at most once
 

@@ -23,8 +23,6 @@ from akumuli_spark.sources.fs import (
 )
 from akumuli_spark.sources.zorder import (
     MANIFEST_DIR,
-    _cas_publish_df,
-    _vtable_dir,
     vacuum_zorder,
     vacuum_zorder_corpus,
     zorder_append,
@@ -191,7 +189,7 @@ def test_vacuum_grace_counts_from_replacement(spark, tmp_path):
     pre_files = [f for f in fs.glob(path, "metric=*/ts_bucket=*/*.parquet")]
     zorder_append(spark, _metrics(spark, n_series=1, pts=5), path, epoch=1)
     assert zorder_optimize(spark, path) >= 1
-    man = spark.read.parquet(_vtable_dir(fs, posixpath.join(path, MANIFEST_DIR)))
+    man = spark.read.parquet(CasLog(fs, posixpath.join(path, MANIFEST_DIR)).current()[1])
     listed = {r.file for r in man.select("file").collect()}
     replaced = [f for f in pre_files if f not in listed]
     assert replaced
@@ -216,7 +214,7 @@ def test_erosion_total_over_null_stats_rows(spark, tmp_path):
                          files_per_partition=2)
     fs = get_fs(path)
     mpath = posixpath.join(path, MANIFEST_DIR)
-    man = spark.read.parquet(_vtable_dir(fs, mpath))
+    man = spark.read.parquet(CasLog(fs, mpath).current()[1])
     man = spark.createDataFrame(man.collect(), man.schema)
     crafted = man.unionByName(
         man.limit(1).select(
@@ -229,7 +227,7 @@ def test_erosion_total_over_null_stats_rows(spark, tmp_path):
             F.lit(None).cast("long").alias("epoch"),
         )
     )
-    _cas_publish_df(spark, fs, mpath, lambda cur: crafted)
+    CasLog(fs, mpath).publish(spark, lambda cur: crafted, man.schema)
     rep = zorder_erosion(spark, path)
     rows = {(r.metric, r.ts_bucket): r for r in rep.collect()}
     assert all(r.time_overlap is not None for r in rows.values())

@@ -302,6 +302,36 @@ def test_marks_epoch_retention_keeps_one_generation(spark, tmp_path):
     assert hw.marks == {"s1": 3}
 
 
+def test_marks_advance_remerges_after_lost_pointer_claim(spark, tmp_path,
+                                                         monkeypatch):
+    """Two advances race for one pointer slot: the rival commits first,
+    so the other's claim is lost and its merge is stale.  The loser must
+    re-read the rival's version and merge again — writing its stale
+    merge above the rival would erase the rival's series."""
+    from akumuli_spark.sources.fs import CasLog
+
+    def batch(series, ts):
+        return spark.createDataFrame([(series, ts)],
+                                     "series string, ts_ns long")
+
+    hw = HighWaterState(str(tmp_path / "marks"))
+    real_commit_above = CasLog.commit_above
+    fired = []
+
+    def rival_commits_first(self, v_read, vname, *a, **kw):
+        if not fired:  # one-shot: the rival's own claim goes through
+            fired.append(v_read)
+            hw.advance(spark, batch("cpu host=b", 50))
+        return real_commit_above(self, v_read, vname, *a, **kw)
+
+    monkeypatch.setattr(CasLog, "commit_above", rival_commits_first)
+    hw.advance(spark, batch("cpu host=a", 100))
+    monkeypatch.undo()
+
+    assert fired == [0]
+    assert hw.marks == {"cpu host=a": 100, "cpu host=b": 50}
+
+
 def test_marks_lifecycle_over_file_uri(spark, tmp_path):
     """The streaming marks table over a ``file://`` URI through
     HadoopStoreFS — the last store path that made raw POSIX calls until

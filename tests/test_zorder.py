@@ -504,10 +504,9 @@ def test_vacuum_grace_spares_fresh_orphans_reclaims_old(spark, tmp_path):
     import glob
     import time
 
-    from akumuli_spark.sources.fs import get_fs
+    from akumuli_spark.sources.fs import CasLog, get_fs
     from akumuli_spark.sources.zorder import (
         MANIFEST_DIR,
-        _vtable_dir,
         vacuum_zorder,
         zorder_append,
     )
@@ -522,7 +521,7 @@ def test_vacuum_grace_spares_fresh_orphans_reclaims_old(spark, tmp_path):
     # crashed append: files landed, manifest publish rolled back
     zorder_append(spark, b, path)
     drop_newest_snapshot(path)
-    mpath = _vtable_dir(get_fs(path), os.path.join(path, MANIFEST_DIR))
+    mpath = CasLog(get_fs(path), os.path.join(path, MANIFEST_DIR)).current()[1]
     orphans = [
         f for f in glob.glob(
             os.path.join(path, "metric=*", "ts_bucket=*", "*.parquet"))
